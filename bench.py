@@ -10,7 +10,6 @@ measurements.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -18,62 +17,28 @@ import time
 
 from march_mania_spark_lakehouse_spark.plans import all_queries
 from march_mania_spark_lakehouse_spark.session import get_spark
+from perfbench.eventlog import parse_file
 
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _cpu_sec_by_group(logdir: str, app_id: str) -> dict[str, float]:
-    """Sum executor CPU seconds per job group from the Spark event log.
-
-    Round-14 bench hygiene (additions-only): wall clock on a shared
-    host tracks the neighbors; summed task CPU tracks the PLAN, so
-    BENCH_FULL carries both and a judge can tell host noise from a
-    plan change without a re-run. Returns {} on any parse trouble —
-    the timing surface must never fail on the metrics add-on."""
-    jobs_by_group: dict[str, set] = {}
-    stages_by_job: dict[int, set] = {}
-    cpu_by_stage: dict[int, int] = {}
+def _cpu_sec_by_group(logdir: str) -> dict[str, float]:
+    """Executor CPU seconds per job group from the Spark event logs in
+    ``logdir``, read by the benchmark's event-log parser
+    (`perfbench/eventlog.py`), which attributes each stage once, to the
+    job group that submitted it. Wall clock on a shared host tracks the
+    neighbors; summed task CPU tracks the PLAN, so BENCH_FULL carries
+    both. Returns {} on an unreadable log: the timing surface must
+    never fail on the metrics add-on."""
+    groups = {}
     try:
-        paths = sorted(
-            glob.glob(os.path.join(logdir, f"*{app_id}*", "events_*"))
-            + glob.glob(os.path.join(logdir, f"*{app_id}*"))
-        )
-        for path in paths:
-            if os.path.isdir(path):
-                continue
-            with open(path) as fh:
-                for line in fh:
-                    try:
-                        ev = json.loads(line)
-                    except ValueError:
-                        continue  # truncated in-progress tail line
-                    k = ev.get("Event")
-                    if k == "SparkListenerJobStart":
-                        grp = (ev.get("Properties") or {}).get(
-                            "spark.jobGroup.id", "?"
-                        )
-                        jobs_by_group.setdefault(grp, set()).add(ev["Job ID"])
-                        stages_by_job[ev["Job ID"]] = {
-                            s["Stage ID"] for s in ev.get("Stage Infos", [])
-                        }
-                    elif k == "SparkListenerTaskEnd":
-                        m = ev.get("Task Metrics") or {}
-                        cpu_by_stage[ev["Stage ID"]] = cpu_by_stage.get(
-                            ev["Stage ID"], 0
-                        ) + m.get("Executor CPU Time", 0)
+        for name in sorted(os.listdir(logdir)):
+            groups.update(parse_file(os.path.join(logdir, name)))
     except OSError:
         return {}
-    out: dict[str, float] = {}
-    for grp, jobs in jobs_by_group.items():
-        stages: set = set()
-        for j in jobs:
-            stages |= stages_by_job.get(j, set())
-        out[grp] = round(
-            sum(cpu_by_stage.get(s, 0) for s in stages) / 1e9, 3
-        )
-    return out
+    return {grp: m.cpu_ns / 1e9 for grp, m in groups.items()}
 
 
 def main() -> None:
@@ -94,6 +59,7 @@ def main() -> None:
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": eventlog_dir,
             "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
         },
     )
     # The driver records the tail of this process's output next to the
@@ -179,10 +145,9 @@ def main() -> None:
     # averaged over the query's sample runs): flush the event log by
     # stopping the session, then parse. Stopping before the final print
     # also keeps the captured stdout tail free of shutdown chatter.
-    app_id = spark.sparkContext.applicationId
     spark.stop()
     time.sleep(1)
-    grp_cpu = _cpu_sec_by_group(eventlog_dir, app_id)
+    grp_cpu = _cpu_sec_by_group(eventlog_dir)
     cpu_sec = {
         name: round(grp_cpu[name] / max(n_runs.get(name, 1), 1), 3)
         for name in timings

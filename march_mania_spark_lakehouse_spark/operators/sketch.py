@@ -124,8 +124,8 @@ def cms_frequency_estimates(
     rows = [(int(c), int(sk.estimateCount(c))) for c in candidates]
     from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 
-    # candidate-panel-sized result: input-sized slices, not one
-    # near-empty Python task per core (sources/local_rows.py)
+    # candidate-panel-sized result: a JVM LocalRelation, no Python
+    # worker per action (sources/local_rows.py)
     return local_df(spark, rows, "key long, est_count long")
 
 

@@ -1051,17 +1051,19 @@ def _scan_with_positions(
     files: Sequence[str],
     version: int,
     force_positions: bool = False,
+    extra_fields: "Sequence | None" = None,
 ) -> DataFrame:
     """Snapshot scan with the live add actions' DELETION VECTORS
     applied (broadcast anti-join on (file, position) — the
     merge-on-read read path). With ``force_positions`` (or whenever DVs
     exist) the result keeps ``__fp`` (normalized absolute file path)
     and ``__pos`` (physical row index) helper columns. Used by
-    `_read_files` (which drops the helpers) and `delete_where` (which
-    needs positions to build new DVs — and must not re-tombstone
-    already-deleted rows, which DV application here guarantees).
-    DV-free tables skip the `_metadata` projection entirely."""
-    schema = table_schema(table, version)
+    `_read_files` (which drops the helpers), the lineage reader
+    (``extra_fields``, see `_read_files_raw`), and `delete_where` /
+    `update_where` (which need positions to build new DVs — and must
+    not re-tombstone already-deleted rows, which DV application here
+    guarantees). DV-free tables skip the `_metadata` projection
+    entirely."""
     live = _replay(table, version)
     dv_entries = []
     for f in files:
@@ -1072,6 +1074,7 @@ def _scan_with_positions(
     df = _read_files_raw(
         spark, table, files, version,
         with_positions=bool(dv_entries) or force_positions,
+        extra_fields=extra_fields,
     )
     if dv_entries:
         dels = _dv_tombstones(spark, table, dv_entries)
@@ -1110,13 +1113,9 @@ def _dv_tombstones(
         (fp, json.dumps(new), json.dumps(old) if old else None)
         for fp, new, old in entries
     ]
-    # one bitmap decode per task when files allow — slice the local list
-    # directly instead of repartition()ing a default-parallelism spread
-    # (same fan-out, one Exchange fewer; sources/local_rows.py)
-    src = local_df(
-        spark, rows, "__fp string, __new string, __old string",
-        slices=len(rows),
-    )
+    # one bitmap decode per task when files allow: the local scan
+    # spreads rows over min(rows, cores) tasks (sources/local_rows.py)
+    src = local_df(spark, rows, "__fp string, __new string, __old string")
 
     def _explode(batches):
         from march_mania_spark_lakehouse_spark.sources import deletion_vectors
@@ -2792,8 +2791,6 @@ def read_delta_lineage(
     Deletion vectors are applied first, so dead rows' ids never
     surface; a surviving row's ``_row_id`` is STABLE across DV
     deletes, OPTIMIZE, and `update_where`'s carry."""
-    from pyspark.sql import types as T
-
     v = latest_version(table) if version is None else version
     if v is None:
         raise FileNotFoundError(f"{table} has no Delta log")
@@ -2802,35 +2799,32 @@ def read_delta_lineage(
             f"{table} does not have delta.enableRowTracking set — "
             "create(..., row_tracking=True)"
         )
+    return _lineage_scan(spark, table, v, files).drop("__fp", "__pos")
+
+
+def _lineage_scan(
+    spark: SparkSession,
+    table: str,
+    v: int,
+    files: "Sequence[str] | None" = None,
+) -> DataFrame:
+    """`read_delta_lineage`'s scan at version ``v`` (row tracking
+    already checked), keeping the ``__fp``/``__pos`` helpers so
+    `update_where` can take its DV hits from the same scan."""
+    from pyspark.sql import types as T
+
     live = _replay(table, v)
     # ``files`` restricts the read to a subset of the live set (the
     # targeted-rewrite input, e.g. reorg_purge) — lineage semantics
     # are per-file, so the subset read is exact
     scope = sorted(live) if files is None else sorted(files)
-    in_scope = set(scope)
     extra = [
         T.StructField(MATERIALIZED_ROW_ID_COL, T.LongType(), True),
         T.StructField(MATERIALIZED_ROW_COMMIT_COL, T.LongType(), True),
     ]
-    df = _read_files_raw(
-        spark, table, scope, v, with_positions=True,
-        extra_fields=extra,
+    df = _scan_with_positions(
+        spark, table, scope, v, force_positions=True, extra_fields=extra
     )
-    dvs = [
-        (
-            p if os.path.isabs(p) else os.path.abspath(
-                os.path.join(table, p)
-            ),
-            a["deletionVector"],
-            None,
-        )
-        for p, a in live.items()
-        if a.get("deletionVector") and p in in_scope
-    ]
-    if dvs:
-        df = df.join(
-            _dv_tombstones(spark, table, dvs), ["__fp", "__pos"], "left_anti"
-        )
     rows = [
         (
             p if os.path.isabs(p) else os.path.abspath(
@@ -2857,6 +2851,8 @@ def read_delta_lineage(
         *names,
         rid.alias("_row_id"),
         rcv.alias("_row_commit_version"),
+        "__fp",
+        "__pos",
     )
 
 
@@ -3026,29 +3022,54 @@ def delete_where(
     scheduler can leave an orphan (never-committed) sidecar, exactly
     like Delta data-file writers; VACUUM's unreferenced-file sweep is
     the standard cleanup. Returns the committed version (current
-    version when nothing matched)."""
-    from pyspark.sql import Column
+    version when nothing matched).
 
-    from march_mania_spark_lakehouse_spark.sources import deletion_vectors
+    This is the FIND half (scan + predicate); `_commit_dv_hits` is the
+    commit half, shared with `update_where`, which feeds it the hits of
+    its own single scan."""
+    from pyspark.sql import Column
 
     pred = F.expr(condition) if isinstance(condition, str) else condition
     assert isinstance(pred, Column)
     cur = latest_version(table)
     if cur is None:
         raise FileNotFoundError(f"{table} has no Delta log")
-    live = _replay(table, cur)
-    files = sorted(live)
-    scan = _scan_with_positions(spark, table, files, cur, force_positions=True)
+    scan = _scan_with_positions(
+        spark, table, snapshot_files(table, cur), cur, force_positions=True
+    )
     matched = scan.filter(pred)
-    cdf_on = _cdf_enabled(table, cur)
-    if cdf_on:
+    preimages = None
+    if _cdf_enabled(table, cur):
         # one table scan serves BOTH the DV build and the change-file
         # staging: the lazy checkpoint materializes on the first action
         # (the descriptor collect) and the preimage write reuses it
         matched = matched.localCheckpoint(eager=False)
-    hits = matched.select(
-        F.col("__fp").alias("fp"), F.col("__pos").alias("pos")
+        preimages = matched.select(
+            *[f.name for f in table_schema(table, cur).fields]
+        )
+    return _commit_dv_hits(
+        spark, table, cur, matched.select("__fp", "__pos"), preimages,
+        _op or ("DELETE", {"predicate": str(condition)}),
     )
+
+
+def _commit_dv_hits(
+    spark: SparkSession,
+    table: str,
+    cur: int,
+    hits: DataFrame,
+    preimages: "DataFrame | None",
+    op: "tuple[str, dict]",
+) -> int:
+    """The COMMIT half of a merge-on-read delete: DV-encode ``hits``
+    (``__fp``/``__pos`` of live rows read at version ``cur``), stage
+    ``preimages`` as change files when given (change data feed on), and
+    commit at ``cur + 1`` — read-dependent, so a concurrent commit
+    since ``cur`` fails it. ``op`` is the commitInfo (operation,
+    parameters); an UPDATE's preimages are labelled update_preimage.
+    Returns the committed version (``cur`` when ``hits`` is empty)."""
+    live = _replay(table, cur)
+    hits = hits.select(F.col("__fp").alias("fp"), F.col("__pos").alias("pos"))
     base = os.path.abspath(table)
     # files that already carry a DV: broadcast only the compact
     # descriptors; executors merge old positions in when re-encoding
@@ -3138,22 +3159,16 @@ def delete_where(
         for k in live
     }
     cdc_actions: list[dict] = []
-    if cdf_on:
+    if preimages is not None:
         # explicit change files (delta.enableChangeDataFeed): persist
         # the matched rows BEFORE the commit lands, from the SAME
         # checkpointed scan the DV build consumed; an UPDATE's delete
         # half labels them update_preimage
-        label = (
-            "update_preimage"
-            if (_op or ("DELETE", {}))[0] == "UPDATE"
-            else "delete"
-        )
-        names = [f.name for f in table_schema(table, cur).fields]
-        cdc_actions = _stage_cdc_file(matched.select(*names), table, label)
+        label = "update_preimage" if op[0] == "UPDATE" else "delete"
+        cdc_actions = _stage_cdc_file(preimages, table, label)
     ts = _now_ms()
-    op, op_params = _op or ("DELETE", {"predicate": str(condition)})
     actions: list[dict] = [
-        _commit_info(op, op_params),
+        _commit_info(*op),
         # feature-UNION: upgrading to deletionVectors must not drop
         # rowTracking (or any other) feature the table already carries
         {
@@ -3798,9 +3813,12 @@ def update_where(
     PRE-update row. Two commits (DELETE then WRITE), both tagged
     ``operation=UPDATE`` with a shared ``updateId`` so
     :func:`table_changes_cdf` reads the pair back as standard CDF
-    update_preimage/update_postimage rows; the updated images are
-    materialized against the pre-update version before the DV commit
-    lands. Returns the final version (unchanged on no match)."""
+    update_preimage/update_postimage rows. ONE scan of the table at
+    the read version is checkpointed with the updated images, the
+    matched rows' ``__fp``/``__pos`` (the DV hits) and, with the change
+    data feed on, their pre-images; the DV commit (`_commit_dv_hits`)
+    is conflict-checked against that version. Returns the final version
+    (unchanged on no match)."""
     pred = F.expr(condition) if isinstance(condition, str) else condition
     v = latest_version(table)
     schema = table_schema(table, v)
@@ -3818,11 +3836,14 @@ def update_where(
         # _row_id as a materialized column (same row, new version);
         # the write commit's defaultRowCommitVersion becomes their
         # _row_commit_version — exactly the spec's update contract
-        live = read_delta_lineage(spark, table, v).drop(
-            MATERIALIZED_ROW_COMMIT_COL
-        ).filter(pred)
+        scan = _lineage_scan(spark, table, v)
     else:
-        live = read_delta(spark, table, v).filter(pred)
+        files = snapshot_files(table, v)
+        if not files:
+            raise FileNotFoundError(f"{table} snapshot has no data files")
+        scan = _scan_with_positions(
+            spark, table, files, v, force_positions=True
+        )
     exprs = [
         (
             (F.expr(assignments[n]) if isinstance(assignments[n], str)
@@ -3834,16 +3855,32 @@ def update_where(
     ]
     if tracking:
         exprs.append(F.col(MATERIALIZED_ROW_ID_COL))
-    updated = live.select(*exprs).localCheckpoint()
-    if not updated.head(1):
+    # with the change data feed on, the checkpoint also carries the
+    # pre-images (the delete half's change file), under helper names
+    pre = (
+        [f"__pre{i}" for i in range(len(names))]
+        if _cdf_enabled(table, v)
+        else []
+    )
+    matched = scan.filter(pred).select(
+        *exprs, "__fp", "__pos",
+        *[F.col(n).alias(p) for n, p in zip(names, pre)],
+    ).localCheckpoint()
+    if not matched.head(1):
         return v
+    updated = matched.drop("__fp", "__pos", *pre)
     # constraints must reject BEFORE the delete commit lands, or a
     # violating UPDATE would half-apply (rows deleted, images refused)
     _enforce_constraints(updated, table, v)
     uid = uuid.uuid4().hex
-    delete_where(
-        spark, table, pred,
-        _op=("UPDATE", {
+    preimages = (
+        matched.select(*[F.col(p).alias(n) for n, p in zip(names, pre)])
+        if pre
+        else None
+    )
+    _commit_dv_hits(
+        spark, table, v, matched.select("__fp", "__pos"), preimages,
+        ("UPDATE", {
             "updateId": uid, "phase": "delete",
             "predicate": str(condition),
         }),

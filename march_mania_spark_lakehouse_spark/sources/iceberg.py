@@ -2160,8 +2160,7 @@ def _dv_tombstones(spark: SparkSession, dv_entries: "list[dict]") -> DataFrame:
     ]
     # one DV-blob decode per task when files allow (sources/local_rows.py)
     desc = local_df(
-        spark, rows, "puffin string, off long, length long, fp string",
-        slices=len(rows),
+        spark, rows, "puffin string, off long, length long, fp string"
     )
 
     def expand(batches):
@@ -2635,14 +2634,16 @@ def _read_files_lineage(
     sid: int,
     rel_files: "Sequence[str] | None",
     schema_id: int | None = None,
+    keep_positions: bool = False,
 ) -> "tuple[DataFrame, list[str]]":
     """Lineage-aware scan of ``rel_files`` (None = every live data
     file) at a snapshot: live rows (delete files applied) with
     ``_row_id`` and ``_last_updated_sequence_number`` resolved per the
     rules in :func:`read_lineage`. Returns (df, declared names) — the
-    df carries the two lineage columns after the declared ones. Shared
-    by the lineage reader and the rewrite paths that must MATERIALIZE
-    lineage into their output files (`optimize`/`compact`/
+    df carries the two lineage columns after the declared ones, then
+    ``__fp``/``__pos`` with ``keep_positions`` (`update_where`'s delete
+    hits). Shared by the lineage reader and the rewrite paths that must
+    MATERIALIZE lineage into their output files (`optimize`/`compact`/
     `update_where`)."""
     from pyspark.sql import types as T
 
@@ -2700,6 +2701,7 @@ def _read_files_lineage(
             *names,
             row_id.alias("_row_id"),
             lus.alias("_last_updated_sequence_number"),
+            *(["__fp", "__pos"] if keep_positions else []),
         ),
         names,
     )
@@ -3811,14 +3813,9 @@ def _scan_manifest_entries(
     `mapInPandas`). ``want_deletes`` filters by data-file content
     (False → data files, True → delete files, None → both)."""
     if not manifest_paths:
-        return spark.createDataFrame([], schema)
-    # one task per group of manifests: slice the local list directly —
-    # same fan-out as the old repartition(min(n, 32)), one Exchange and
-    # one default-parallelism spread fewer (sources/local_rows.py)
-    mdf = local_df(
-        spark, [(p,) for p in manifest_paths], "path string",
-        slices=min(len(manifest_paths), 32),
-    )
+        return local_df(spark, [], schema)
+    # one task per group of manifests (sources/local_rows.py)
+    mdf = local_df(spark, [(p,) for p in manifest_paths], "path string")
 
     def read_entries(batches):
         import json as _json
@@ -4008,11 +4005,8 @@ def metadata_table(
             for m in ml
         ]
         if not man_rows:
-            return spark.createDataFrame([], schema)
-        mdf = local_df(
-            spark, man_rows, "path string, added_snapshot_id long",
-            slices=min(len(man_rows), 32),
-        )
+            return local_df(spark, [], schema)
+        mdf = local_df(spark, man_rows, "path string, added_snapshot_id long")
 
         def read_all_entries(batches):
             import json as _json
@@ -4061,11 +4055,8 @@ def metadata_table(
     if kind == "position_deletes":
         mans = [m["manifest_path"] for m in ml if m.get("content", 0) != 0]
         if not mans:
-            return spark.createDataFrame([], schema)
-        mdf = local_df(
-            spark, [(p,) for p in mans], "path string",
-            slices=min(len(mans), 32),
-        )
+            return local_df(spark, [], schema)
+        mdf = local_df(spark, [(p,) for p in mans], "path string")
 
         def read_positions(batches):
             import pandas as pd
@@ -7789,14 +7780,11 @@ def delete_where(spark: SparkSession, table: str, condition) -> int:
     assert isinstance(pred, Column)
     meta = current_metadata(table)
     sid = meta["current-snapshot-id"]
-    snap = _snapshot(meta, sid)
-    v3 = int(meta.get("format-version", 2)) >= 3
     # a DELETE is a CURRENT-state operation: read under the CURRENT
     # schema-id (the same rule read_iceberg and update_where apply), not
     # the snapshot's stamped one — rename/drop are metadata-only (no new
     # snapshot), so a predicate naming a just-renamed column must still
     # resolve (and one naming a dropped column must fail analysis)
-    schema = meta["schemas"][meta["current-schema-id"]]
     df, _names = _read_raw(
         spark, table, meta, sid, snapshot_files(table, sid),
         meta["current-schema-id"],
@@ -7809,9 +7797,24 @@ def delete_where(spark: SparkSession, table: str, condition) -> int:
         .filter(pred)
         .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
     )
-    if v3:
-        return _commit_dv_delete(spark, table, meta, hits)
+    return _commit_delete_hits(spark, table, meta, hits)
 
+
+def _commit_delete_hits(
+    spark: SparkSession, table: str, meta: dict, hits: DataFrame
+) -> int:
+    """The COMMIT half of a merge-on-read delete: tombstone ``hits``
+    (``file_path``/``pos`` of live rows read at ``meta``'s current
+    snapshot) as deletion vectors on a v3 table, as position-delete
+    files otherwise. The commit builds on ``meta``, so a concurrent
+    commit since the read fails it. Shared by `delete_where` and
+    `update_where`, which feeds it the hits of its own single scan.
+    Returns the new snapshot id (the read one when ``hits`` is empty)."""
+    if int(meta.get("format-version", 2)) >= 3:
+        return _commit_dv_delete(spark, table, meta, hits)
+    sid = meta["current-snapshot-id"]
+    snap = _snapshot(meta, sid)
+    schema = meta["schemas"][meta["current-schema-id"]]
     staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
     hits.write.mode("overwrite").parquet(staging)
     import pyarrow.parquet as pq
@@ -8907,12 +8910,11 @@ def update_where(
     a branch (write_audit_publish) when readers must see it atomically.
     Returns the final snapshot id (unchanged when nothing matched).
 
-    The updated images are materialized (localCheckpoint) BEFORE the
-    delete commit: both plans resolve against the pre-update snapshot's
-    explicit file list, and materializing first makes that independence
-    obvious rather than an artifact of lazy evaluation."""
-    from pyspark.sql import Column
-
+    ONE scan of the pre-update snapshot is materialized
+    (localCheckpoint) with the updated images and the matched rows'
+    ``__fp``/``__pos``: the delete commit takes its hits from it
+    (`_commit_delete_hits`, built on the read metadata, so a concurrent
+    commit since the read fails it) and the append writes its images."""
     pred = F.expr(condition) if isinstance(condition, str) else condition
     meta = current_metadata(table)
     sid = meta["current-snapshot-id"]
@@ -8934,14 +8936,14 @@ def update_where(
         # and _last_updated_sequence_number falls out of the append
         # entry's own sequence — exactly the v3 update contract
         live, _ = _read_files_lineage(
-            spark, table, meta, sid, snapshot_files(table, sid), schema_id
+            spark, table, meta, sid, snapshot_files(table, sid), schema_id,
+            keep_positions=True,
         )
-        live = live.filter(pred)
     else:
         df, _ = _read_raw(
             spark, table, meta, sid, snapshot_files(table, sid), schema_id
         )
-        live = _apply_delete_files(spark, table, sid, df).filter(pred)
+        live = _apply_delete_files(spark, table, sid, df, keep_positions=True)
     exprs = []
     for n in names:
         if n in assignments:
@@ -8953,16 +8955,22 @@ def update_where(
             exprs.append(F.col(n))
     if v3:
         exprs.append(F.col("_row_id"))
-    updated = live.select(*exprs).localCheckpoint()
-    if not updated.head(1):
+    matched = (
+        live.filter(pred).select(*exprs, "__fp", "__pos").localCheckpoint()
+    )
+    if not matched.head(1):
         return sid  # nothing matched: no commits
-    delete_where(spark, table, pred)
+    hits = matched.select(
+        F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
+    )
+    _commit_delete_hits(spark, table, meta, hits)
+    updated = matched.drop("__fp", "__pos")
     if v3:
         meta2 = current_metadata(table)
         staged = _stage_data_files(
-        updated, table, _spec_info(meta2),
-        meta2["schemas"][meta2["current-schema-id"]],
-    )
+            updated, table, _spec_info(meta2),
+            meta2["schemas"][meta2["current-schema-id"]],
+        )
         return _commit_snapshot(
             None, table, meta2, "append", False, stat_cols, None, staged,
             assign_row_ids=False,

@@ -38,11 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
+
 
 def _empty_index(spark: SparkSession, id_col: str) -> DataFrame:
-    return spark.createDataFrame(
-        [], f"{id_col} long, band int, bh long"
-    )
+    return local_df(spark, [], f"{id_col} long, band int, bh long")
 
 
 def process_dedup_batch(

@@ -125,3 +125,81 @@ def test_compaction_auto_sizing(spark):
     assert got == min(par, 16)  # 16 = 128MB / 8MB floor
     # tiny table: no shattering
     assert _compaction_file_count(spark, 3 * mb, 128 * mb, None) == 1
+
+
+ROWS6 = ROWS + [(5, "b", 5.0), (6, "c", 6.0)]
+#: ROWS6 after `delete id = 3` then `update id % 2 = 0`
+WANT6 = sorted(
+    [(1, "a", 1.0), (2, "UP", 20.0), (4, "UP", 40.0), (5, "b", 5.0),
+     (6, "UP", 60.0)]
+)
+#: the UPDATE's change feed as (id, cat, val, _change_type)
+WANT6_FEED = sorted(
+    [(i, c, v, "update_preimage") for i, c, v in ROWS6 if i % 2 == 0]
+    + [(i, "UP", v * 10, "update_postimage") for i, _, v in ROWS6 if i % 2 == 0]
+)
+UPDATE6 = {"cat": "'UP'", "val": "val * 10"}
+
+
+def _count_calls(monkeypatch, module, name):
+    calls = []
+    real = getattr(module, name)
+
+    def counted(*args, **kwargs):
+        calls.append(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+def _feed(rows):
+    return sorted((r.id, r.cat, r.val, r._change_type) for r in rows)
+
+
+def test_iceberg_v3_update_scans_table_once(spark, tmp_path, monkeypatch):
+    """One driver-side scan build per UPDATE on a table that already
+    carries a deletion vector: the delete hits come from the same
+    checkpointed scan as the new images."""
+    t = str(tmp_path / "ice_v3_once")
+    iceberg.create(_df(spark, ROWS6), t, format_version=3)
+    iceberg.delete_where(spark, t, "id = 3")
+    assert iceberg.snapshot_dv_entries(t)
+    before = iceberg.current_metadata(t)["current-snapshot-id"]
+    scans = _count_calls(monkeypatch, iceberg, "_read_raw")
+    iceberg.update_where(spark, t, "id % 2 = 0", UPDATE6)
+    assert len(scans) == 1
+    monkeypatch.undo()
+    got = sorted(tuple(r) for r in iceberg.read_iceberg(spark, t).collect())
+    assert got == WANT6
+    assert sorted(i_indie.read_rows(t)) == WANT6
+    feed = iceberg.snapshot_diff_changelog(spark, t, before).collect()
+    assert _feed(feed) == WANT6_FEED
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+def test_delta_row_tracking_update_scans_table_once(
+    spark, tmp_path, monkeypatch, cdf
+):
+    t = str(tmp_path / f"delta_rt_once_{cdf}")
+    delta_log.create(
+        _df(spark, ROWS6), t, row_tracking=True,
+        configuration={"delta.enableChangeDataFeed": "true"} if cdf else None,
+    )
+    delta_log.delete_where(spark, t, "id = 3")
+    v = delta_log.latest_version(t)
+    assert any(
+        a.get("deletionVector") for a in delta_log._replay(t, v).values()
+    )
+    # the DV-applying scan, and the raw parquet read beneath every scan
+    scans = _count_calls(monkeypatch, delta_log, "_scan_with_positions")
+    reads = _count_calls(monkeypatch, delta_log, "_read_files_raw")
+    delta_log.update_where(spark, t, "id % 2 = 0", UPDATE6)
+    assert len(scans) == 1
+    assert len(reads) == 1
+    monkeypatch.undo()
+    got = sorted(tuple(r) for r in delta_log.read_delta(spark, t).collect())
+    assert got == WANT6
+    assert sorted(d_indie.read_rows(t)) == WANT6
+    feed = delta_log.table_changes_cdf(spark, t, 0).collect()
+    assert _feed(r for r in feed if r._commit_version > v) == WANT6_FEED
