@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from march_mania_spark_lakehouse_spark.session import ITER_STATE_ENV
+
 #: Small-graph fast path (optimization round 14, guide §2.2/§2.6): when
 #: the materialized iteration state is at most this many rows, the
 #: per-round shuffles are KB-to-MB-sized and the loop's cost is pure
@@ -92,11 +94,6 @@ def _scoped_conf(spark, conf: dict[str, str] | None):
 #:   behavior).
 _STATE_MODES = ("local", "disk", "reliable")
 
-#: Env override (e.g. the scale probe runs with
-#: SPARK_GRAFT_ITER_STATE=disk to fit the 100× graph probes in the
-#: default 8 GB local heap).
-_STATE_ENV = "SPARK_GRAFT_ITER_STATE"
-
 
 def _resolve_state_mode(df: DataFrame, state: str | None) -> str:
     """``state=None`` auto-selects: the env override if set, else
@@ -104,7 +101,7 @@ def _resolve_state_mode(df: DataFrame, state: str | None) -> str:
     opts in with one `sc.setCheckpointDir` line, no operator plumbing),
     else ``local``."""
     if state is None:
-        state = os.environ.get(_STATE_ENV)
+        state = os.environ.get(ITER_STATE_ENV)
     if state is None:
         sc = df.sparkSession.sparkContext
         state = (

@@ -61,6 +61,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from march_mania_spark_lakehouse_spark.sources.lineage_diff import lineage_changelog
 from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -2877,21 +2878,10 @@ def snapshot_diff_changelog(
     null-lineage rows (pre-enable files)."""
     v_new = latest_version(table) if to_version is None else to_version
     names = [f.name for f in table_schema(table, v_new).fields]
-    old = read_delta_lineage(spark, table, from_version).select(
-        *[F.col(n).alias(f"__old_{n}") for n in names],
-        F.col("_row_id"),
-        F.col("_row_commit_version").alias("__old_rcv"),
-    )
-    new = read_delta_lineage(spark, table, v_new).select(
-        *names, "_row_id",
-        F.col("_row_commit_version").alias("__new_rcv"),
-    )
-    both = new.join(old, "_row_id", "full_outer")
     # null ids are possible only when some live add lacks baseRowId —
     # and even then the parquet footer usually proves a materialized
     # `_row_id` with zero nulls (OPTIMIZE/update-carry output), which
-    # skips the row-level Spark job (optimization round 13; see the
-    # Iceberg twin)
+    # skips the row-level Spark job (see the Iceberg twin)
     def _may_have_null_ids(v: int) -> bool:
         for p, a in _replay(table, v).items():
             if a.get("baseRowId") is None and not footer_proves_nonnull(
@@ -2901,49 +2891,13 @@ def snapshot_diff_changelog(
                 return True
         return False
 
-    if _may_have_null_ids(from_version) or _may_have_null_ids(v_new):
-        if both.filter(F.col("_row_id").isNull()).limit(1).count() > 0:
-            raise ValueError(
-                "a version contains rows without row ids (written "
-                "before rowTracking); identity-keyed diffing needs "
-                "identities"
-            )
-    # single-pass classification — same rewrite as the Iceberg twin
-    # (optimization round 13, guide §2.4): one join, 0-2 change rows
-    # per joined row via a typed array + explode, instead of four
-    # copies of the join subtree in the physical plan.
-    def _new_row(ct: str):
-        return F.struct(
-            *[F.col(n).alias(n) for n in names],
-            F.col("_row_id").alias("_row_id"),
-            F.lit(ct).alias("_change_type"),
-        )
-
-    def _old_row(ct: str):
-        return F.struct(
-            *[F.col(f"__old_{n}").alias(n) for n in names],
-            F.col("_row_id").alias("_row_id"),
-            F.lit(ct).alias("_change_type"),
-        )
-
-    is_ins = F.col("__old_rcv").isNull()
-    is_del = F.col("__new_rcv").isNull()
-    is_upd = (
-        F.col("__old_rcv").isNotNull()
-        & F.col("__new_rcv").isNotNull()
-        & (F.col("__new_rcv") > F.col("__old_rcv"))
+    return lineage_changelog(
+        read_delta_lineage(spark, table, from_version),
+        read_delta_lineage(spark, table, v_new),
+        names,
+        "_row_commit_version",
+        _may_have_null_ids(from_version) or _may_have_null_ids(v_new),
     )
-    emit = F.array_compact(
-        F.array(
-            F.when(is_ins, _new_row("insert")).when(
-                is_upd, _new_row("update_postimage")
-            ),
-            F.when(is_del, _old_row("delete")).when(
-                is_upd, _old_row("update_preimage")
-            ),
-        )
-    )
-    return both.select(F.explode(emit).alias("__c")).select("__c.*")
 
 
 def _rebase_row_ids(

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark.sources import avro_ocf
+from march_mania_spark_lakehouse_spark.sources.lineage_diff import lineage_changelog
 from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 
 FORMAT_VERSION = 2
@@ -628,8 +629,9 @@ def _kv_counts_schema(name: str, kid: int, vid: int) -> dict:
 def _with_equality_ids(entry_schema: dict) -> dict:
     """A DEEP COPY of a manifest entry schema with the spec's
     equality_ids field (field-id 135) appended to the data_file record
-    — the one augmentation every DELETE-manifest writer needs (null
-    for position-delete entries). Shared so the Avro layout of this
+    — the augmentation a delete manifest holding equality deletes needs
+    (null for its position-delete and DV entries). Applied only by
+    :func:`_write_entries_manifest`, so the Avro layout of this
     spec-critical field can never diverge between writers."""
     import copy
 
@@ -1181,7 +1183,102 @@ def _file_bounds(path: str, schema: dict, stat_cols: Sequence[str]) -> tuple:
     return lowers or None, uppers or None, nulls or None
 
 
-def _write_manifest(
+def _added(snapshot_id: int, seq: int, data_file: dict) -> dict:
+    """A manifest entry ADDED (status 1) by snapshot ``snapshot_id`` at
+    sequence ``seq``."""
+    return {
+        "status": 1,
+        "snapshot_id": snapshot_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": data_file,
+    }
+
+
+def _existing(entry: dict) -> dict:
+    """``entry`` carried into a new manifest as EXISTING (status 0): it
+    keeps the snapshot that added it and its ORIGINAL sequence numbers,
+    which the equality-delete rule and the change feeds key on."""
+    return {
+        "status": 0,
+        "snapshot_id": entry.get("snapshot_id"),
+        "sequence_number": entry["sequence_number"],
+        "file_sequence_number": entry.get("file_sequence_number"),
+        "data_file": entry["data_file"],
+    }
+
+
+def _dv_entry(
+    snapshot_id: int,
+    seq: int,
+    puffin_path: str,
+    data_file: str,
+    offset: int,
+    length: int,
+    card: int,
+) -> dict:
+    """ADDED entry of one v3 deletion vector: the Puffin blob at
+    [offset, offset + length) of ``puffin_path``, masking ``card`` rows
+    of ``data_file``."""
+    return _added(
+        snapshot_id,
+        seq,
+        {
+            "content": 1,
+            "file_path": puffin_path,
+            "file_format": "PUFFIN",
+            "partition": {},
+            "record_count": card,
+            "file_size_in_bytes": os.path.getsize(puffin_path),
+            "referenced_data_file": data_file,
+            "content_offset": offset,
+            "content_size_in_bytes": length,
+        },
+    )
+
+
+def _write_framed_dvs(
+    table: str,
+    snapshot_id: int,
+    seq: int,
+    dvs: "list[tuple[str, bytes, int]]",
+) -> list[dict]:
+    """Write ``dvs`` — (data file, framed bitmap bytes, cardinality) —
+    as the blobs of ONE new Puffin file under ``data/`` and return
+    their ADDED entries. Delta's sidecar record framing equals Puffin's
+    ``deletion-vector-v1`` blob framing (deliberately, per both public
+    specs), so vectors migrated from Delta move verbatim and no bitmap
+    is ever decoded."""
+    from march_mania_spark_lakehouse_spark.sources import puffin
+
+    name = os.path.join(
+        os.path.abspath(table), "data", f"dv-{uuid.uuid4().hex}.puffin"
+    )
+    os.makedirs(os.path.dirname(name), exist_ok=True)
+    info = puffin.write_puffin(
+        name,
+        [
+            {
+                "type": "deletion-vector-v1",
+                "fields": [],
+                "snapshot-id": snapshot_id,
+                "sequence-number": seq,
+                "payload": framed,
+                "properties": {
+                    "referenced-data-file": fp,
+                    "cardinality": str(card),
+                },
+            }
+            for fp, framed, card in dvs
+        ],
+    )
+    return [
+        _dv_entry(snapshot_id, seq, name, fp, bm["offset"], bm["length"], card)
+        for (fp, _, card), bm in zip(dvs, info["blob-metadata"])
+    ]
+
+
+def _data_file_records(
     table: str,
     meta: dict,
     files: list[tuple[str, dict, int, int]],
@@ -1190,33 +1287,26 @@ def _write_manifest(
     stat_cols: Sequence[str] = (),
     first_row_id: "int | None" = None,
     explicit_row_ids: "Sequence[int | None] | None" = None,
-) -> tuple[str, int, int, int]:
-    """Write one manifest for ADDED files; returns (path, length,
-    n_files, n_rows). ``first_row_id``, when given (v3 row lineage),
-    assigns each file an explicit first_row_id: a running offset so
-    file k's rows own ids [offset, offset + record_count) — the
-    caller advances the table's ``next-row-id`` by the returned row
-    total. ``None`` keeps the files lineage-free: a file that
-    materializes its own ``_row_id`` column (compaction / UPDATE
-    carry) must NOT also inherit. ``explicit_row_ids`` (aligned with
+) -> list[dict]:
+    """ADDED entries for staged data ``files``. ``first_row_id``, when
+    given (v3 row lineage), assigns each file an explicit first_row_id:
+    a running offset so file k's rows own ids [offset, offset +
+    record_count). ``None`` keeps the files lineage-free: a file that
+    materializes its own ``_row_id`` column (compaction / UPDATE carry)
+    must NOT also inherit. ``explicit_row_ids`` (aligned with
     ``files``) overrides the running assignment — the cross-format
     carry path, where each file's first_row_id is the Delta add's
     baseRowId."""
     schema = meta["schemas"][meta["current-schema-id"]]
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    part_schema = _partition_record_schema(spec, schema)
-    entry_schema = _manifest_entry_schema(part_schema)
     records = []
     next_rid = first_row_id
     for i, (rel, pvals, n_rows, size) in enumerate(files):
         lo, hi, nulls = _file_bounds(os.path.join(table, rel), schema, stat_cols)
         records.append(
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
+            _added(
+                snapshot_id,
+                seq,
+                {
                     "content": 0,
                     "file_path": os.path.join(os.path.abspath(table), rel),
                     "file_format": "PARQUET",
@@ -1232,19 +1322,98 @@ def _write_manifest(
                         else next_rid
                     ),
                 },
-            }
+            )
         )
         if next_rid is not None:
             next_rid += n_rows
-    path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-    os.makedirs(_meta_dir(table), exist_ok=True)
-    avro_ocf.write_ocf(path, entry_schema, records)
-    return (
-        path,
-        os.path.getsize(path),
-        len(files),
-        sum(n for _, _, n, _ in files),
+    return records
+
+
+def _write_manifest(
+    table: str,
+    meta: dict,
+    files: list[tuple[str, dict, int, int]],
+    snapshot_id: int,
+    seq: int,
+    stat_cols: Sequence[str] = (),
+    first_row_id: "int | None" = None,
+    explicit_row_ids: "Sequence[int | None] | None" = None,
+) -> dict:
+    """One default-spec manifest of ADDED data ``files`` (see
+    :func:`_data_file_records`); returns its manifest-list entry."""
+    return _write_entries_manifest(
+        table, meta, meta["default-spec-id"], 0, snapshot_id, seq,
+        _data_file_records(
+            table, meta, files, snapshot_id, seq, stat_cols,
+            first_row_id, explicit_row_ids,
+        ),
     )
+
+
+def _write_entries_manifest(
+    table: str,
+    meta: dict,
+    spec_id: int,
+    content: int,
+    snapshot_id: int,
+    seq: int,
+    records: "list[dict]",
+) -> dict:
+    """Write ``records`` as ONE manifest of partition spec ``spec_id``
+    (``content`` 0 = data files, 1 = delete files) added by snapshot
+    ``snapshot_id`` at ``seq``, and return its manifest-list entry.
+
+    Every figure in the entry is DERIVED from the records, never
+    tallied by the caller: ``added_*`` counts from status-1 entries,
+    ``existing_*`` from status 0, ``deleted_*`` from status 2;
+    ``min_sequence_number`` is the lowest entry sequence (``seq`` for an
+    empty manifest) and ``manifest_length`` the written file's size.
+
+    The entry schema carries the spec's partition record; a delete
+    manifest holding an equality delete (content=2) also carries
+    ``equality_ids`` (spec field-id 135) — without it the key list
+    would silently drop and the sequence rule would apply to every
+    row."""
+    spec = next(
+        s["fields"] for s in meta["partition-specs"]
+        if s.get("spec-id", 0) == spec_id
+    )
+    entry_schema = _manifest_entry_schema(
+        _partition_record_schema(
+            spec, meta["schemas"][meta["current-schema-id"]]
+        )
+    )
+    if content == 1 and any(
+        r["data_file"].get("content", 0) == 2 for r in records
+    ):
+        entry_schema = _with_equality_ids(entry_schema)
+    os.makedirs(_meta_dir(table), exist_ok=True)
+    path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
+    avro_ocf.write_ocf(path, entry_schema, records)
+    by_status: "dict[int, list[dict]]" = {0: [], 1: [], 2: []}
+    for r in records:
+        by_status[r["status"]].append(r)
+
+    def rows(status: int) -> int:
+        return sum(r["data_file"]["record_count"] for r in by_status[status])
+
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": min(
+            (r["sequence_number"] for r in records), default=seq
+        ),
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": len(by_status[1]),
+        "existing_files_count": len(by_status[0]),
+        "deleted_files_count": len(by_status[2]),
+        "added_rows_count": rows(1),
+        "existing_rows_count": rows(0),
+        "deleted_rows_count": rows(2),
+    }
 
 
 def _write_manifest_list(
@@ -1257,6 +1426,96 @@ def _write_manifest_list(
     return path
 
 
+def _next_snapshot(meta: dict) -> "tuple[int, int]":
+    """(snapshot id, sequence number) of the next snapshot committed on
+    ``meta``. Writers allocate both before writing anything that names
+    them (manifest entries, deletion-vector blobs) and hand both to
+    :func:`_publish_snapshot`."""
+    return int(uuid.uuid4().int % (1 << 62)) + 1, meta["last-sequence-number"] + 1
+
+
+def _advance_main(meta: dict, snapshot_id: int, ts: int) -> None:
+    """Move main's head to ``snapshot_id`` in ``meta`` (in place).
+    ``current-snapshot-id``, ``refs.main`` and a new ``snapshot-log``
+    entry move TOGETHER: spec readers resolve the main ref,
+    `snapshot_as_of` walks the log and `expire_snapshots` retains from
+    the refs, so all three must name the same head."""
+    meta["current-snapshot-id"] = snapshot_id
+    meta["refs"] = {
+        **meta.get("refs", {}),
+        "main": {"snapshot-id": snapshot_id, "type": "branch"},
+    }
+    meta["last-updated-ms"] = ts
+    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
+        {"timestamp-ms": ts, "snapshot-id": snapshot_id}
+    ]
+
+
+def _publish_snapshot(
+    table: str,
+    meta: dict,
+    snapshot_id: int,
+    seq: int,
+    manifests: "list[dict]",
+    summary: dict,
+    *,
+    parent: "int | None",
+    schema_id: int,
+    first_row_id: "int | None" = None,
+    branch: str = "main",
+) -> int:
+    """Commit snapshot ``snapshot_id`` at ``seq`` (from
+    :func:`_next_snapshot`) over ``manifests``, the COMPLETE manifest
+    list (carried entries plus this commit's), on top of the metadata
+    ``meta`` the writer READ. Returns ``snapshot_id``. The one commit
+    path of every Iceberg writer; what it guarantees:
+
+    - the snapshot names ``parent`` (None on a table's first snapshot)
+      and ``schema_id`` (delete paths keep the read snapshot's), and
+      ``last-sequence-number`` becomes ``seq``;
+    - v3 lineage: ``first_row_id`` stamps the snapshot's
+      ``first-row-id`` and advances ``next-row-id`` past the rows this
+      commit's own data manifests ADDED. A writer that carries foreign
+      ids passes None and sets ``next-row-id`` in ``meta`` itself;
+    - ``branch="main"`` advances main through :func:`_advance_main`
+      (head, ``refs.main`` and ``snapshot-log`` in lockstep); any other
+      branch moves only its own ref and leaves main and the log alone;
+    - the metadata is written from ``meta`` as read, so the
+      put-if-absent commit in :func:`_write_metadata` lands at exactly
+      the read version + 1 (``__base-version__``): a writer that lost a
+      race to a concurrent commit fails instead of overwriting it."""
+    ts = _now_ms()
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        "sequence-number": seq,
+        "timestamp-ms": ts,
+        "manifest-list": _write_manifest_list(table, snapshot_id, manifests),
+        "summary": summary,
+        "schema-id": schema_id,
+    }
+    if parent is not None:
+        snapshot["parent-snapshot-id"] = parent
+    meta = dict(meta)
+    if first_row_id is not None:
+        snapshot["first-row-id"] = first_row_id
+        meta["next-row-id"] = first_row_id + sum(
+            m["added_rows_count"]
+            for m in manifests
+            if m.get("content", 0) == 0
+            and m.get("added_snapshot_id") == snapshot_id
+        )
+    meta["last-sequence-number"] = seq
+    meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
+    if branch == "main":
+        _advance_main(meta, snapshot_id, ts)
+    else:
+        meta["last-updated-ms"] = ts
+        meta["refs"] = {
+            **meta.get("refs", {}),
+            branch: {"snapshot-id": snapshot_id, "type": "branch"},
+        }
+    _write_metadata(table, meta)
+    return snapshot_id
 
 
 # --------------------------------------------------------------------------
@@ -1958,8 +2217,7 @@ def _commit_snapshot(
     the data they mask (the sequence rule: a DV at seq N applies to
     data files with seq <= N, so one atomic commit keeps every
     intermediate state consistent)."""
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id, seq = _next_snapshot(meta)
     files = (
         staged_files
         if staged_files is not None
@@ -1974,58 +2232,28 @@ def _commit_snapshot(
         if v3 and assign_row_ids and explicit_row_ids is None
         else None
     )
-    m_path, m_len, n_files, n_rows = _write_manifest(
-        table, meta, files, snapshot_id, seq, stat_cols,
-        first_row_id=first_rid, explicit_row_ids=explicit_row_ids,
-    )
-    new_entry = {
-        "manifest_path": m_path,
-        "manifest_length": m_len,
-        "partition_spec_id": meta["default-spec-id"],
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": n_files,
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = [new_entry]
-    if extra_manifests is not None:
-        manifests = manifests + list(extra_manifests(snapshot_id, seq))
-    if not replace and meta.get("current-snapshot-id", -1) != -1:
-        cur_snap = _snapshot(meta, meta["current-snapshot-id"])
-        manifests = avro_ocf.read_ocf(cur_snap["manifest-list"]) + manifests
-    ml_path = _write_manifest_list(table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {"operation": operation, **(summary or {})},
-        "schema-id": meta["current-schema-id"],
-    }
-    if meta.get("current-snapshot-id", -1) != -1:
-        snapshot["parent-snapshot-id"] = meta["current-snapshot-id"]
-    meta = dict(meta)
-    if first_rid is not None:
-        snapshot["first-row-id"] = first_rid
-        meta["next-row-id"] = first_rid + n_rows
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
+    manifests = [
+        _write_manifest(
+            table, meta, files, snapshot_id, seq, stat_cols,
+            first_row_id=first_rid, explicit_row_ids=explicit_row_ids,
+        )
     ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    _write_metadata(table, meta)
-    return snapshot_id
+    if extra_manifests is not None:
+        manifests += extra_manifests(snapshot_id, seq)
+    parent = meta.get("current-snapshot-id", -1)
+    parent = None if parent == -1 else parent
+    if not replace and parent is not None:
+        manifests = (
+            avro_ocf.read_ocf(_snapshot(meta, parent)["manifest-list"])
+            + manifests
+        )
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq, manifests,
+        {"operation": operation, **(summary or {})},
+        parent=parent,
+        schema_id=meta["current-schema-id"],
+        first_row_id=first_rid,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2743,26 +2971,10 @@ def snapshot_diff_changelog(
         f["name"]
         for f in meta["schemas"][meta["current-schema-id"]]["fields"]
     ]
-    old = read_lineage(spark, table, from_snapshot).select(
-        *[F.col(n).alias(f"__old_{n}") for n in names],
-        F.col("_row_id"),
-        F.col("_last_updated_sequence_number").alias("__old_lus"),
-    )
-    new = read_lineage(spark, table, sid_new).select(
-        *names, "_row_id",
-        F.col("_last_updated_sequence_number").alias("__new_lus"),
-    )
-    both = new.join(old, "_row_id", "full_outer")
-    # a null _row_id would silently split one row into a fake
-    # insert+delete pair; refuse. The validation pass only runs when
-    # the METADATA admits the possibility (some live entry inherits no
-    # id — pre-upgrade or materialized files); pure inherited-lineage
-    # tables skip it, so the common case costs exactly the two scans.
-    # For entries that DO inherit no id, the parquet footer usually
-    # proves a materialized `_row_id` column with zero nulls
-    # (compaction/update-carry output) — that proof replaces the
-    # row-level Spark job the old check ran on every changelog build
-    # (optimization round 13); only unprovable files fall back to it.
+    # the null-id check runs only when the METADATA admits rows without
+    # ids: some live entry inherits no id (pre-upgrade or materialized
+    # files) and its parquet footer does not prove a materialized
+    # `_row_id` column with zero nulls (compaction/update-carry output)
     from march_mania_spark_lakehouse_spark.sources.delta_log import (
         footer_proves_nonnull,
     )
@@ -2784,52 +2996,13 @@ def snapshot_diff_changelog(
                     return True
         return False
 
-    if _may_have_null_ids(from_snapshot) or _may_have_null_ids(sid_new):
-        if both.filter(F.col("_row_id").isNull()).limit(1).count() > 0:
-            raise ValueError(
-                "a snapshot contains rows without row ids (written "
-                "before the v3 upgrade); identity-keyed diffing needs "
-                "identities"
-            )
-    # SINGLE-PASS classification (optimization round 13, guide §2.4):
-    # the previous four filter-branches-of-one-join union made the
-    # physical plan contain four copies of the join subtree (eight
-    # lineage scans); composed into the IVM refreshes this compounded
-    # to 94-scan/240-Exchange plans (plans/r13/q232_before.txt). One
-    # row of `both` instead emits 0-2 change rows via a typed array +
-    # explode — identical row set, one join, two scans.
-    def _new_row(ct: str):
-        return F.struct(
-            *[F.col(n).alias(n) for n in names],
-            F.col("_row_id").alias("_row_id"),
-            F.lit(ct).alias("_change_type"),
-        )
-
-    def _old_row(ct: str):
-        return F.struct(
-            *[F.col(f"__old_{n}").alias(n) for n in names],
-            F.col("_row_id").alias("_row_id"),
-            F.lit(ct).alias("_change_type"),
-        )
-
-    is_ins = F.col("__old_lus").isNull()
-    is_del = F.col("__new_lus").isNull()
-    is_upd = (
-        F.col("__old_lus").isNotNull()
-        & F.col("__new_lus").isNotNull()
-        & (F.col("__new_lus") > F.col("__old_lus"))
+    return lineage_changelog(
+        read_lineage(spark, table, from_snapshot),
+        read_lineage(spark, table, sid_new),
+        names,
+        "_last_updated_sequence_number",
+        _may_have_null_ids(from_snapshot) or _may_have_null_ids(sid_new),
     )
-    emit = F.array_compact(
-        F.array(
-            F.when(is_ins, _new_row("insert")).when(
-                is_upd, _new_row("update_postimage")
-            ),
-            F.when(is_del, _old_row("delete")).when(
-                is_upd, _old_row("update_preimage")
-            ),
-        )
-    )
-    return both.select(F.explode(emit).alias("__c")).select("__c.*")
 
 
 def _apply_delete_files(
@@ -3421,8 +3594,6 @@ def optimize(
 
     Returns the new snapshot id (the current one when there is nothing
     to pack: fewer than two small files)."""
-    import math
-
     meta = current_metadata(table)
     sid = meta["current-snapshot-id"]
     snap = _snapshot(meta, sid)
@@ -3488,117 +3659,27 @@ def optimize(
         meta["schemas"][meta["current-schema-id"]],
     )
 
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    schema = meta["schemas"][meta["current-schema-id"]]
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    part_schema = _partition_record_schema(spec, schema)
-    entry_schema = _manifest_entry_schema(part_schema)
-    records = []
-    for rel, pvals, n_rows, size in staged:
-        lo, hi, nulls = _file_bounds(os.path.join(table, rel), schema, stat_cols)
-        records.append(
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": os.path.join(os.path.abspath(table), rel),
-                    "file_format": "PARQUET",
-                    "partition": _typed_partition(pvals, meta),
-                    "record_count": n_rows,
-                    "file_size_in_bytes": size,
-                    "null_value_counts": nulls,
-                    "lower_bounds": lo,
-                    "upper_bounds": hi,
-                },
-            }
-        )
+    snapshot_id, seq = _next_snapshot(meta)
     # EXISTING entries keep their original sequence numbers AND their
     # original spec: entries are grouped per source spec and written
     # into one manifest per spec (an evolved table's old-spec partition
     # tuples have a different Avro record shape)
     default_spec = meta["default-spec-id"]
-    for e in [e for s, e in big_entries if s == default_spec]:
-        records.append(
-            {
-                "status": 0,  # EXISTING — original sequence preserved
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e["sequence_number"],
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-            }
+    by_spec: "dict[int, list[dict]]" = {}
+    for s, e in big_entries:
+        by_spec.setdefault(s, []).append(_existing(e))
+    manifests = [
+        _write_entries_manifest(
+            table, meta, default_spec, 0, snapshot_id, seq,
+            _data_file_records(table, meta, staged, snapshot_id, seq, stat_cols)
+            + by_spec.pop(default_spec, []),
         )
-    m_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-    avro_ocf.write_ocf(m_path, entry_schema, records)
-    n_def_existing = sum(1 for s, _ in big_entries if s == default_spec)
-    new_entry = {
-        "manifest_path": m_path,
-        "manifest_length": os.path.getsize(m_path),
-        "partition_spec_id": default_spec,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": min(
-            [seq] + [e["sequence_number"] for s, e in big_entries
-                     if s == default_spec]
-        ),
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(staged),
-        "existing_files_count": n_def_existing,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(n for _, _, n, _ in staged),
-        "existing_rows_count": sum(
-            e["data_file"]["record_count"] for s, e in big_entries
-            if s == default_spec
-        ),
-        "deleted_rows_count": 0,
-    }
-    manifests = [new_entry]
-    other_specs = sorted({s for s, _ in big_entries if s != default_spec})
-    for spec_id in other_specs:
-        entries = [e for s, e in big_entries if s == spec_id]
-        spec_fields = next(
-            s["fields"] for s in meta["partition-specs"]
-            if s.get("spec-id", 0) == spec_id
+    ] + [
+        _write_entries_manifest(
+            table, meta, spec_id, 0, snapshot_id, seq, by_spec[spec_id]
         )
-        o_schema = _manifest_entry_schema(
-            _partition_record_schema(spec_fields, schema)
-        )
-        o_records = [
-            {
-                "status": 0,
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e["sequence_number"],
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-            }
-            for e in entries
-        ]
-        o_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-        avro_ocf.write_ocf(o_path, o_schema, o_records)
-        manifests.append(
-            {
-                "manifest_path": o_path,
-                "manifest_length": os.path.getsize(o_path),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    e["sequence_number"] for e in entries
-                ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": len(entries),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "deleted_rows_count": 0,
-            }
-        )
+        for spec_id in sorted(by_spec)
+    ]
     # delete manifests carry forward only while they still GOVERN a
     # live file: a DV / position-delete manifest whose every reference
     # was packed away (the rewrite materialized those tombstones) is
@@ -3636,88 +3717,24 @@ def optimize(
             return None
         if len(alive) == len(entries):
             return m
-        d_spec_id = m.get("partition_spec_id", 0)
-        d_fields = next(
-            s["fields"] for s in meta["partition-specs"]
-            if s.get("spec-id", 0) == d_spec_id
+        return _write_entries_manifest(
+            table, meta, m.get("partition_spec_id", 0), 1, snapshot_id, seq,
+            [_existing(e) for e in alive],
         )
-        d_schema = _manifest_entry_schema(
-            _partition_record_schema(d_fields, schema)
-        )
-        has_eq = any(
-            e["data_file"].get("content", 0) == 2 for e in alive
-        )
-        if has_eq:
-            d_schema = _with_equality_ids(d_schema)
-        d_records = [
-            {
-                "status": 0,  # EXISTING — original sequence preserved
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e["sequence_number"],
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": (
-                    {
-                        **e["data_file"],
-                        "equality_ids": e["data_file"].get("equality_ids"),
-                    }
-                    if has_eq
-                    else e["data_file"]
-                ),
-            }
-            for e in alive
-        ]
-        d_path = os.path.join(
-            _meta_dir(table), f"{uuid.uuid4().hex}-m0.avro"
-        )
-        avro_ocf.write_ocf(d_path, d_schema, d_records)
-        return {
-            **m,
-            "manifest_path": d_path,
-            "manifest_length": os.path.getsize(d_path),
-            "added_snapshot_id": snapshot_id,
-            "min_sequence_number": min(
-                e["sequence_number"] for e in alive
-            ),
-            "added_files_count": 0,
-            "existing_files_count": len(alive),
-            "deleted_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": sum(
-                e["data_file"]["record_count"] for e in alive
-            ),
-            "deleted_rows_count": 0,
-        }
 
-    manifests = manifests + [
+    manifests += [
         c for m in delete_ml if (c := _carry_delete_manifest(m)) is not None
     ]
-    ml_path = _write_manifest_list(table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq, manifests,
+        {
             "operation": "replace",
             "packed-files": str(len(small_entries)),
             "packed-into": str(len(staged)),
         },
-        "schema-id": meta["current-schema-id"],
-        "parent-snapshot-id": sid,
-    }
-    meta = dict(meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
-    ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    _write_metadata(table, meta)
-    return snapshot_id
+        parent=sid,
+        schema_id=meta["current-schema-id"],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4170,19 +4187,7 @@ def rollback_to_snapshot(table: str, snapshot_id: int) -> int:
     if snapshot_id == meta.get("current-snapshot-id"):
         return current_version(table)
     meta = dict(meta)
-    now = _now_ms()
-    meta["current-snapshot-id"] = snapshot_id
-    # keep refs["main"] in lockstep with current-snapshot-id (every
-    # commit path writes both): a spec reader resolving the main BRANCH
-    # REF must see the rolled-back head, not the rolled-off one — and
-    # expire_snapshots keys retention off the ref too
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    meta["last-updated-ms"] = now
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now, "snapshot-id": snapshot_id}
-    ]
+    _advance_main(meta, snapshot_id, _now_ms())
     return _write_metadata(table, meta)
 
 
@@ -4255,60 +4260,32 @@ def append_to_branch(
         raise IcebergRefError(f"{branch!r} is not a branch")
     head = refs[branch]["snapshot-id"]
     head_snap = _snapshot(meta, head)
-
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id, seq = _next_snapshot(meta)
     files = _stage_data_files(
         df, table, _spec_info(meta),
         meta["schemas"][meta["current-schema-id"]],
     )
-    v3 = int(meta.get("format-version", 2)) >= 3
-    first_rid = int(meta.get("next-row-id", 0)) if v3 else None
-    m_path, m_len, n_files, n_rows = _write_manifest(
-        table, meta, files, snapshot_id, seq, stat_cols,
-        first_row_id=first_rid,
+    # branch commits consume row ids too (spec: ids are assigned at
+    # commit, fast_forward publishes them unchanged)
+    first_rid = (
+        int(meta.get("next-row-id", 0))
+        if int(meta.get("format-version", 2)) >= 3
+        else None
     )
-    new_entry = {
-        "manifest_path": m_path,
-        "manifest_length": m_len,
-        "partition_spec_id": meta["default-spec-id"],
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": n_files,
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = avro_ocf.read_ocf(head_snap["manifest-list"]) + [new_entry]
-    ml_path = _write_manifest_list(table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {"operation": "append", "branch": branch},
-        "schema-id": meta["current-schema-id"],
-        "parent-snapshot-id": head,
-    }
-    meta = dict(meta)
-    if first_rid is not None:
-        # branch commits consume row ids too (spec: ids are assigned
-        # at commit, fast_forward publishes them unchanged)
-        snapshot["first-row-id"] = first_rid
-        meta["next-row-id"] = first_rid + n_rows
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    refs = dict(refs)
-    refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    # current-snapshot-id and snapshot-log deliberately unchanged
-    _write_metadata(table, meta)
-    return snapshot_id
+    manifests = avro_ocf.read_ocf(head_snap["manifest-list"]) + [
+        _write_manifest(
+            table, meta, files, snapshot_id, seq, stat_cols,
+            first_row_id=first_rid,
+        )
+    ]
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq, manifests,
+        {"operation": "append", "branch": branch},
+        parent=head,
+        schema_id=meta["current-schema-id"],
+        first_row_id=first_rid,
+        branch=branch,
+    )
 
 
 def fast_forward(table: str, branch: str) -> int:
@@ -4335,15 +4312,7 @@ def fast_forward(table: str, branch: str) -> int:
             f"{target}; cannot fast-forward"
         )
     meta = dict(meta)
-    meta["current-snapshot-id"] = target
-    ts = _now_ms()
-    meta["last-updated-ms"] = ts
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": ts, "snapshot-id": target}
-    ]
-    refs = dict(refs)
-    refs["main"] = {"snapshot-id": target, "type": "branch"}
-    meta["refs"] = refs
+    _advance_main(meta, target, _now_ms())
     _write_metadata(table, meta)
     return target
 
@@ -4631,7 +4600,9 @@ def clone(table: str, target: str) -> int:
         "format-version": FORMAT_VERSION,
         "table-uuid": str(uuid.uuid4()),
         "location": os.path.abspath(target),
-        "last-sequence-number": 0,
+        # the clone's one snapshot lands at the source's last sequence
+        # number, at or above every carried entry's
+        "last-sequence-number": max(meta["last-sequence-number"], 1) - 1,
         "last-updated-ms": _now_ms(),
         "last-column-id": meta["last-column-id"],
         "current-schema-id": 0,
@@ -4668,82 +4639,19 @@ def clone(table: str, target: str) -> int:
                 e["data_file"].get("content", 0) == 0
             ) else dels_by_spec
             kind.setdefault(m_spec, []).append(e)
-    clone_seq = max(meta["last-sequence-number"], 1)
-    clone_sid = int(uuid.uuid4().int % (1 << 62)) + 1
-    manifests = []
-    for content, by_spec in ((0, data_by_spec), (1, dels_by_spec)):
-        for spec_id in sorted(by_spec):
-            spec_fields = next(
-                s for s in specs if s.get("spec-id", 0) == spec_id
-            )["fields"]
-            entry_schema = _manifest_entry_schema(
-                _partition_record_schema(spec_fields, schema)
-            )
-            if content == 1:
-                # delete manifests can mix position and equality
-                # entries; the latter carry their key field-ids
-                entry_schema = _with_equality_ids(entry_schema)
-            records = [
-                {
-                    "status": 0,  # existing: carried, not re-added
-                    "snapshot_id": e.get("snapshot_id") or clone_sid,
-                    "sequence_number": e["sequence_number"],
-                    "file_sequence_number": e.get(
-                        "file_sequence_number", e["sequence_number"]
-                    ),
-                    "data_file": (
-                        {**e["data_file"],
-                         "equality_ids": e["data_file"].get("equality_ids")}
-                        if content == 1 else dict(e["data_file"])
-                    ),
-                }
-                for e in by_spec[spec_id]
-            ]
-            m_path = os.path.join(
-                _meta_dir(target), f"{uuid.uuid4().hex}-m0.avro"
-            )
-            avro_ocf.write_ocf(m_path, entry_schema, records)
-            manifests.append(
-                {
-                    "manifest_path": m_path,
-                    "manifest_length": os.path.getsize(m_path),
-                    "partition_spec_id": spec_id,
-                    "content": content,
-                    "sequence_number": clone_seq,
-                    "min_sequence_number": min(
-                        e["sequence_number"] for e in by_spec[spec_id]
-                    ),
-                    "added_snapshot_id": clone_sid,
-                    "added_files_count": 0,
-                    "existing_files_count": len(records),
-                    "deleted_files_count": 0,
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"]
-                        for e in by_spec[spec_id]
-                    ),
-                    "deleted_rows_count": 0,
-                }
-            )
-    ml_path = _write_manifest_list(target, clone_sid, manifests)
-    data_snapshot = {
-        "snapshot-id": clone_sid,
-        "sequence-number": clone_seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {"operation": "append"},
-        "schema-id": 0,
-    }
-    new_meta["last-sequence-number"] = clone_seq
-    new_meta["snapshots"] = [data_snapshot]
-    new_meta["current-snapshot-id"] = clone_sid
-    new_meta["snapshot-log"] = [
-        {"timestamp-ms": data_snapshot["timestamp-ms"],
-         "snapshot-id": clone_sid}
+    clone_sid, clone_seq = _next_snapshot(new_meta)
+    manifests = [
+        _write_entries_manifest(
+            target, new_meta, spec_id, content, clone_sid, clone_seq,
+            [_existing(e) for e in by_spec[spec_id]],
+        )
+        for content, by_spec in ((0, data_by_spec), (1, dels_by_spec))
+        for spec_id in sorted(by_spec)
     ]
-    new_meta["refs"] = {"main": {"snapshot-id": clone_sid, "type": "branch"}}
-    _write_metadata(target, new_meta)
-    return clone_sid
+    return _publish_snapshot(
+        target, new_meta, clone_sid, clone_seq, manifests,
+        {"operation": "append"}, parent=None, schema_id=0,
+    )
 
 
 def remove_orphan_files(
@@ -5104,80 +5012,14 @@ def convert_from_delta(delta_table: str, iceberg_table: str) -> int:
         operation = "delete"
 
         def extra(snapshot_id: int, seq: int) -> "list[dict]":
-            from march_mania_spark_lakehouse_spark.sources import (
-                puffin as _puffin,
-            )
-
-            name = os.path.join(
-                os.path.abspath(iceberg_table),
-                "data",
-                f"dv-{uuid.uuid4().hex}.puffin",
-            )
-            os.makedirs(os.path.dirname(name), exist_ok=True)
-            info = _puffin.write_puffin(
-                name,
-                [
-                    {
-                        "type": "deletion-vector-v1",
-                        "fields": [],
-                        "snapshot-id": snapshot_id,
-                        "sequence-number": seq,
-                        "payload": framed,
-                        "properties": {
-                            "referenced-data-file": fp,
-                            "cardinality": str(card),
-                        },
-                    }
-                    for fp, framed, card in dv_items
-                ],
-            )
-            entry_schema = _with_equality_ids(
-                _manifest_entry_schema(
-                    _partition_record_schema(spec_fields, schema)
-                )
-            )
-            records = [
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": name,
-                        "file_format": "PUFFIN",
-                        "partition": {},
-                        "record_count": card,
-                        "file_size_in_bytes": os.path.getsize(name),
-                        "referenced_data_file": fp,
-                        "content_offset": bm["offset"],
-                        "content_size_in_bytes": bm["length"],
-                    },
-                }
-                for (fp, framed, card), bm in zip(
-                    dv_items, info["blob-metadata"]
-                )
-            ]
-            m_path = os.path.join(
-                _meta_dir(iceberg_table), f"{uuid.uuid4().hex}-m0.avro"
-            )
-            avro_ocf.write_ocf(m_path, entry_schema, records)
             return [
-                {
-                    "manifest_path": m_path,
-                    "manifest_length": os.path.getsize(m_path),
-                    "partition_spec_id": meta["default-spec-id"],
-                    "content": 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(dv_items),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(c for _, _, c in dv_items),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
+                _write_entries_manifest(
+                    iceberg_table, meta, meta["default-spec-id"], 1,
+                    snapshot_id, seq,
+                    _write_framed_dvs(
+                        iceberg_table, snapshot_id, seq, dv_items
+                    ),
+                )
             ]
 
     if tracking:
@@ -5989,40 +5831,20 @@ def _rebase_over_foreign_iceberg_snapshots(
                 f"({s['snapshot-id']}) after its last sync; the mirror "
                 "has diverged — re-convert"
             )
-    manifests = avro_ocf.read_ocf(base["manifest-list"])
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    ml_path = _write_manifest_list(iceberg_table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {
+    snapshot_id, seq = _next_snapshot(meta)
+    _publish_snapshot(
+        iceberg_table, meta, snapshot_id, seq,
+        avro_ocf.read_ocf(base["manifest-list"]),
+        {
             "operation": "replace",
             "sync-rebase": "true",
             "undone-snapshots": ",".join(
                 str(s["snapshot-id"]) for s in foreign
             ),
         },
-        "schema-id": meta["current-schema-id"],
-        "parent-snapshot-id": meta["current-snapshot-id"],
-    }
-    meta = dict(meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    # keep refs["main"] pointing at the rebase head (spec readers
-    # resolve main via refs; leaving it on the superseded snapshot
-    # would let expire_snapshots strand the ref)
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
-    ]
-    _write_metadata(iceberg_table, meta)
+        parent=meta["current-snapshot-id"],
+        schema_id=meta["current-schema-id"],
+    )
 
 
 def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
@@ -6033,7 +5855,6 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     from march_mania_spark_lakehouse_spark.sources import (
         delta_log,
         deletion_vectors,
-        puffin as _puffin,
     )
 
     actions = delta_log._read_actions(delta_log._commit_path(delta_table, v))
@@ -6245,13 +6066,7 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     if dv_updates and int(meta.get("format-version", 2)) < 3:
         meta["format-version"] = 3  # first synced DV upgrades the mirror
 
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    schema = meta["schemas"][meta["current-schema-id"]]
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    entry_schema = _with_equality_ids(
-        _manifest_entry_schema(_partition_record_schema(spec, schema))
-    )
+    snapshot_id, seq = _next_snapshot(meta)
     manifests: list[dict] = []
 
     # data manifests: carried by reference unless they lose a file
@@ -6267,80 +6082,39 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
             manifests.append(m)
             continue
         survivors = [
-            {
-                "status": 0,
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e["sequence_number"],
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": {
-                    **e["data_file"],
-                    "equality_ids": e["data_file"].get("equality_ids"),
-                },
-            }
+            _existing(e)
             for e in entries
             if e["status"] in (0, 1)
             and e["data_file"]["file_path"] not in removed_fps
         ]
         if not survivors:
             continue  # the whole manifest was removed
-        m_path = os.path.join(
-            _meta_dir(iceberg_table), f"{uuid.uuid4().hex}-m0.avro"
-        )
-        avro_ocf.write_ocf(m_path, entry_schema, survivors)
         manifests.append(
-            {
-                "manifest_path": m_path,
-                "manifest_length": os.path.getsize(m_path),
-                "partition_spec_id": meta["default-spec-id"],
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    e["sequence_number"] for e in survivors
-                ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": len(survivors),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in survivors
-                ),
-                "deleted_rows_count": 0,
-            }
+            _write_entries_manifest(
+                iceberg_table, meta, m.get("partition_spec_id", 0), 0,
+                snapshot_id, seq, survivors,
+            )
         )
     sync_first_rid = (
         int(meta.get("next-row-id", 0))
-        if int(meta.get("format-version", 2)) >= 3 and not sync_tracking
+        if int(meta.get("format-version", 2)) >= 3
+        and not sync_tracking
+        and staged
         else None
     )
     if staged:
-        m_path, m_len, n_files, n_rows = _write_manifest(
-            iceberg_table, meta, staged, snapshot_id, seq,
-            first_row_id=sync_first_rid,
-            explicit_row_ids=carried_ids if sync_tracking else None,
-        )
         manifests.append(
-            {
-                "manifest_path": m_path,
-                "manifest_length": m_len,
-                "partition_spec_id": meta["default-spec-id"],
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": n_files,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
+            _write_manifest(
+                iceberg_table, meta, staged, snapshot_id, seq,
+                first_row_id=sync_first_rid,
+                explicit_row_ids=carried_ids if sync_tracking else None,
+            )
         )
 
     # delete manifests: consolidate (the _commit_dv_delete rule — new
     # DV replaces the file's previous one; removed files shed theirs)
     touched = {fp for fp, _, _ in dv_updates} | dv_drops | removed_fps
-    old_del_entries: list[dict] = []
+    records: list[dict] = []
     for m in prior_ml:
         if m.get("content", 0) != 1:
             continue
@@ -6351,134 +6125,39 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
             is_dv = (d.get("file_format") or "").upper() == "PUFFIN"
             if is_dv and d.get("referenced_data_file") in touched:
                 continue
-            old_del_entries.append(e)
-    if old_del_entries or dv_updates:
-        records = [
-            {
-                "status": 0,
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e["sequence_number"],
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": {
-                    **e["data_file"],
-                    "equality_ids": e["data_file"].get("equality_ids"),
-                },
-            }
-            for e in old_del_entries
-        ]
-        if dv_updates:
-            name = os.path.join(
-                os.path.abspath(iceberg_table),
-                "data",
-                f"dv-{uuid.uuid4().hex}.puffin",
-            )
-            os.makedirs(os.path.dirname(name), exist_ok=True)
-            info = _puffin.write_puffin(
-                name,
-                [
-                    {
-                        "type": "deletion-vector-v1",
-                        "fields": [],
-                        "snapshot-id": snapshot_id,
-                        "sequence-number": seq,
-                        "payload": framed,
-                        "properties": {
-                            "referenced-data-file": fp,
-                            "cardinality": str(card),
-                        },
-                    }
-                    for fp, framed, card in dv_updates
-                ],
-            )
-            for (fp, framed, card), bm in zip(
-                dv_updates, info["blob-metadata"]
-            ):
-                records.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": name,
-                            "file_format": "PUFFIN",
-                            "partition": {},
-                            "record_count": card,
-                            "file_size_in_bytes": os.path.getsize(name),
-                            "referenced_data_file": fp,
-                            "content_offset": bm["offset"],
-                            "content_size_in_bytes": bm["length"],
-                        },
-                    }
-                )
-        if records:
-            m_path = os.path.join(
-                _meta_dir(iceberg_table), f"{uuid.uuid4().hex}-m0.avro"
-            )
-            avro_ocf.write_ocf(m_path, entry_schema, records)
-            manifests.append(
-                {
-                    "manifest_path": m_path,
-                    "manifest_length": os.path.getsize(m_path),
-                    "partition_spec_id": meta["default-spec-id"],
-                    "content": 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(
-                        [seq] + [e["sequence_number"] for e in old_del_entries]
-                    ),
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(dv_updates),
-                    "existing_files_count": len(old_del_entries),
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(c for _, _, c in dv_updates),
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"]
-                        for e in old_del_entries
-                    ),
-                    "deleted_rows_count": 0,
-                }
-            )
-
-    ml_path = _write_manifest_list(iceberg_table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {
-            "operation": operation,
-            "delta-version": str(v),
-            "added-dvs": str(len(dv_updates)),
-        },
-        "schema-id": meta["current-schema-id"],
-        "parent-snapshot-id": sid,
-    }
-    if sync_first_rid is not None and staged:
-        snapshot["first-row-id"] = sync_first_rid
-        meta["next-row-id"] = sync_first_rid + sum(
-            n for _, _, n, _ in staged
+            records.append(_existing(e))
+    if dv_updates:
+        records += _write_framed_dvs(
+            iceberg_table, snapshot_id, seq, dv_updates
         )
-    elif sync_tracking:
+    if records:
+        manifests.append(
+            _write_entries_manifest(
+                iceberg_table, meta, meta["default-spec-id"], 1,
+                snapshot_id, seq, records,
+            )
+        )
+
+    if sync_tracking:
         # carried ids: the mirror's counter follows the SOURCE's mark
         meta["next-row-id"] = max(
             int(meta.get("next-row-id", 0)),
             delta_log._row_id_high_water_mark(delta_table, v) + 1,
         )
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
-    ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
     props = dict(meta.get("properties", {}))
     props["migrated-delta-version"] = str(v)
     meta["properties"] = props
-    _write_metadata(iceberg_table, meta)
+    _publish_snapshot(
+        iceberg_table, meta, snapshot_id, seq, manifests,
+        {
+            "operation": operation,
+            "delta-version": str(v),
+            "added-dvs": str(len(dv_updates)),
+        },
+        parent=sid,
+        schema_id=meta["current-schema-id"],
+        first_row_id=sync_first_rid,
+    )
 
 
 #: Iceberg primitive type → Delta schemaString type name
@@ -7539,8 +7218,7 @@ def _commit_dv_delete(
 
     sid = meta["current-snapshot-id"]
     snap = _snapshot(meta, sid)
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id, seq = _next_snapshot(meta)
     abs_table = os.path.abspath(table)
 
     existing = snapshot_dv_entries(table, sid)
@@ -7646,7 +7324,7 @@ def _commit_dv_delete(
 
     touched = {r["file_path"] for r in desc_rows}
     data_ml: list[dict] = []
-    old_entries: list[dict] = []
+    records: list[dict] = []
     for m in avro_ocf.read_ocf(snap["manifest-list"]):
         if m.get("content", 0) == 0:
             data_ml.append(m)
@@ -7666,97 +7344,26 @@ def _commit_dv_delete(
                 # the new DVs: the parquet entries die with this commit
                 continue
             if not replaced:
-                old_entries.append(e)
-    schema = meta["schemas"][meta["current-schema-id"]]
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    # equality-delete entries carried over as EXISTING keep their
-    # equality_ids (spec field-id 135) — re-encoding them with a plain
-    # entry schema would silently drop the key list and the sequence
-    # rule would apply to every column-free row (same trap the v2
-    # rewrite pins); null for DV entries is harmless
-    entry_schema = _with_equality_ids(
-        _manifest_entry_schema(_partition_record_schema(spec, schema))
-    )
-    records = [
-        {
-            "status": 0,  # EXISTING — original sequence preserved
-            "snapshot_id": e.get("snapshot_id"),
-            "sequence_number": e["sequence_number"],
-            "file_sequence_number": e.get("file_sequence_number"),
-            "data_file": {
-                **e["data_file"],
-                "equality_ids": e["data_file"].get("equality_ids"),
-            },
-        }
-        for e in old_entries
-    ]
-    for r in sorted(desc_rows, key=lambda r: r["file_path"]):
-        records.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 1,
-                    "file_path": r["puffin"],
-                    "file_format": "PUFFIN",
-                    "partition": {},
-                    "record_count": r["card"],
-                    "file_size_in_bytes": os.path.getsize(r["puffin"]),
-                    "referenced_data_file": r["file_path"],
-                    "content_offset": r["off"],
-                    "content_size_in_bytes": r["length"],
-                },
-            }
+                records.append(_existing(e))
+    records += [
+        _dv_entry(
+            snapshot_id, seq, r["puffin"], r["file_path"], r["off"],
+            r["length"], r["card"],
         )
-    m_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-    avro_ocf.write_ocf(m_path, entry_schema, records)
-    new_entry = {
-        "manifest_path": m_path,
-        "manifest_length": os.path.getsize(m_path),
-        "partition_spec_id": meta["default-spec-id"],
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": min(
-            [seq] + [e["sequence_number"] for e in old_entries]
-        ),
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(desc_rows),
-        "existing_files_count": len(old_entries),
-        "deleted_files_count": 0,
-        "added_rows_count": sum(r["card"] for r in desc_rows),
-        "existing_rows_count": sum(
-            e["data_file"]["record_count"] for e in old_entries
-        ),
-        "deleted_rows_count": 0,
-    }
-    ml_path = _write_manifest_list(table, snapshot_id, data_ml + [new_entry])
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {
-            "operation": operation,
-            "added-dvs": str(len(desc_rows)),
-        },
-        "schema-id": snap.get("schema-id", meta["current-schema-id"]),
-        "parent-snapshot-id": sid,
-    }
-    meta = dict(meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
+        for r in sorted(desc_rows, key=lambda r: r["file_path"])
     ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    _write_metadata(table, meta)
-    return snapshot_id
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq,
+        data_ml + [
+            _write_entries_manifest(
+                table, meta, meta["default-spec-id"], 1, snapshot_id, seq,
+                records,
+            )
+        ],
+        {"operation": operation, "added-dvs": str(len(desc_rows))},
+        parent=sid,
+        schema_id=snap.get("schema-id", meta["current-schema-id"]),
+    )
 
 
 def delete_where(spark: SparkSession, table: str, condition) -> int:
@@ -7814,7 +7421,6 @@ def _commit_delete_hits(
         return _commit_dv_delete(spark, table, meta, hits)
     sid = meta["current-snapshot-id"]
     snap = _snapshot(meta, sid)
-    schema = meta["schemas"][meta["current-schema-id"]]
     staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
     hits.write.mode("overwrite").parquet(staging)
     import pyarrow.parquet as pq
@@ -7839,71 +7445,34 @@ def _commit_delete_hits(
     if not del_files:
         return sid  # nothing matched: no commit
 
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    part_schema = _partition_record_schema(spec, schema)
-    entry_schema = _manifest_entry_schema(part_schema)
+    snapshot_id, seq = _next_snapshot(meta)
     records = [
-        {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
+        _added(
+            snapshot_id,
+            seq,
+            {
                 "content": 1,  # POSITION_DELETES
                 "file_path": os.path.abspath(path),
                 "file_format": "PARQUET",
                 "partition": {},
                 "record_count": n,
                 "file_size_in_bytes": size,
-                "lower_bounds": None,
-                "upper_bounds": None,
             },
-        }
+        )
         for path, n, size in del_files
     ]
-    m_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-    avro_ocf.write_ocf(m_path, entry_schema, records)
-    new_entry = {
-        "manifest_path": m_path,
-        "manifest_length": os.path.getsize(m_path),
-        "partition_spec_id": meta["default-spec-id"],
-        "content": 1,  # deletes manifest
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(del_files),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(n for _, n, _ in del_files),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = avro_ocf.read_ocf(snap["manifest-list"]) + [new_entry]
-    ml_path = _write_manifest_list(table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {"operation": "delete"},
-        "schema-id": snap.get("schema-id", meta["current-schema-id"]),
-        "parent-snapshot-id": sid,
-    }
-    meta = dict(meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
-    ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    _write_metadata(table, meta)
-    return snapshot_id
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq,
+        avro_ocf.read_ocf(snap["manifest-list"]) + [
+            _write_entries_manifest(
+                table, meta, meta["default-spec-id"], 1, snapshot_id, seq,
+                records,
+            )
+        ],
+        {"operation": "delete"},
+        parent=sid,
+        schema_id=snap.get("schema-id", meta["current-schema-id"]),
+    )
 
 
 def snapshot_equality_deletes(
@@ -8131,74 +7700,35 @@ def delete_by_equality(
     if not del_files:
         return sid
 
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    part_schema = _partition_record_schema(spec, schema)
-    entry_schema = _manifest_entry_schema(part_schema)
-    # equality_ids rides each entry (spec field-id 135)
-    entry_schema = _with_equality_ids(entry_schema)
+    snapshot_id, seq = _next_snapshot(meta)
     records = [
-        {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
+        _added(
+            snapshot_id,
+            seq,
+            {
                 "content": 2,  # EQUALITY_DELETES
                 "file_path": os.path.abspath(path),
                 "file_format": "PARQUET",
                 "partition": {},
                 "record_count": n,
                 "file_size_in_bytes": size,
-                "lower_bounds": None,
-                "upper_bounds": None,
                 "equality_ids": [by_name[c] for c in eq_cols],
             },
-        }
+        )
         for path, n, size in del_files
     ]
-    m_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-    avro_ocf.write_ocf(m_path, entry_schema, records)
-    new_entry = {
-        "manifest_path": m_path,
-        "manifest_length": os.path.getsize(m_path),
-        "partition_spec_id": meta["default-spec-id"],
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(del_files),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(n for _, n, _ in del_files),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = avro_ocf.read_ocf(snap["manifest-list"]) + [new_entry]
-    ml_path = _write_manifest_list(table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {"operation": "delete", **(summary or {})},
-        "schema-id": snap.get("schema-id", meta["current-schema-id"]),
-        "parent-snapshot-id": sid,
-    }
-    meta = dict(meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
-    ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    _write_metadata(table, meta)
-    return snapshot_id
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq,
+        avro_ocf.read_ocf(snap["manifest-list"]) + [
+            _write_entries_manifest(
+                table, meta, meta["default-spec-id"], 1, snapshot_id, seq,
+                records,
+            )
+        ],
+        {"operation": "delete", **(summary or {})},
+        parent=sid,
+        schema_id=snap.get("schema-id", meta["current-schema-id"]),
+    )
 
 
 def compact(spark: SparkSession, table: str) -> int:
@@ -9148,109 +8678,55 @@ def rewrite_position_deletes(spark: SparkSession, table: str) -> int:
                 out_path = dst
     shutil.rmtree(staging)
 
-    seq = meta["last-sequence-number"] + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    schema = meta["schemas"][snap.get("schema-id", meta["current-schema-id"])]
-    spec = meta["partition-specs"][meta["default-spec-id"]]["fields"]
-    part_schema = _partition_record_schema(spec, schema)
-    entry_schema = _manifest_entry_schema(part_schema)
-
+    snapshot_id, seq = _next_snapshot(meta)
     manifests = []
     for m in avro_ocf.read_ocf(snap["manifest-list"]):
         if m.get("content", 0) != 1:
             manifests.append(m)  # data manifests: untouched
             continue
-        entries = avro_ocf.read_ocf(m["manifest_path"])
+        # equality deletes carry over as EXISTING at their original
+        # sequence numbers; a manifest of only position deletes drops
         keep = [
-            e
-            for e in entries
+            _existing(e)
+            for e in avro_ocf.read_ocf(m["manifest_path"])
             if e["status"] in (0, 1)
-            and e["data_file"].get("content", 0) == 2  # equality deletes
+            and e["data_file"].get("content", 0) == 2
         ]
-        if not keep:
-            continue  # manifest held only position deletes: dropped
-        for e in keep:
-            e["status"] = 0  # EXISTING, original sequence numbers kept
-        # equality entries carry equality_ids (spec field-id 135) — the
-        # re-encoded manifest needs the same augmented schema or the
-        # column list silently drops and the sequence rule would apply
-        # to EVERY column-free row (pinned by test)
-        eq_schema = _with_equality_ids(entry_schema)
-        m2_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-        avro_ocf.write_ocf(m2_path, eq_schema, keep)
-        manifests.append(
-            {
-                **m,
-                "manifest_path": m2_path,
-                "manifest_length": os.path.getsize(m2_path),
-                "added_files_count": 0,
-                "existing_files_count": len(keep),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in keep
-                ),
-            }
-        )
+        if keep:
+            manifests.append(
+                _write_entries_manifest(
+                    table, meta, m.get("partition_spec_id", 0), 1,
+                    snapshot_id, seq, keep,
+                )
+            )
     if out_path is not None:
-        n_rows = pq.ParquetFile(out_path).metadata.num_rows
-        records = [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 1,
-                    "file_path": os.path.abspath(out_path),
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": n_rows,
-                    "file_size_in_bytes": os.path.getsize(out_path),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        ]
-        m_path = os.path.join(_meta_dir(table), f"{uuid.uuid4().hex}-m0.avro")
-        avro_ocf.write_ocf(m_path, entry_schema, records)
         manifests.append(
-            {
-                "manifest_path": m_path,
-                "manifest_length": os.path.getsize(m_path),
-                "partition_spec_id": meta["default-spec-id"],
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 1,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
+            _write_entries_manifest(
+                table, meta, meta["default-spec-id"], 1, snapshot_id, seq,
+                [
+                    _added(
+                        snapshot_id,
+                        seq,
+                        {
+                            "content": 1,
+                            "file_path": os.path.abspath(out_path),
+                            "file_format": "PARQUET",
+                            "partition": {},
+                            "record_count": pq.ParquetFile(
+                                out_path
+                            ).metadata.num_rows,
+                            "file_size_in_bytes": os.path.getsize(out_path),
+                        },
+                    )
+                ],
+            )
         )
-    ml_path = _write_manifest_list(table, snapshot_id, manifests)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": _now_ms(),
-        "manifest-list": ml_path,
-        "summary": {"operation": "replace", "rewritten-delete-files": str(len(pos_files))},
-        "schema-id": snap.get("schema-id", meta["current-schema-id"]),
-        "parent-snapshot-id": sid,
-    }
-    meta = dict(meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": snapshot["timestamp-ms"], "snapshot-id": snapshot_id}
-    ]
-    refs = dict(meta.get("refs", {}))
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    meta["refs"] = refs
-    _write_metadata(table, meta)
-    return snapshot_id
+    return _publish_snapshot(
+        table, meta, snapshot_id, seq, manifests,
+        {
+            "operation": "replace",
+            "rewritten-delete-files": str(len(pos_files)),
+        },
+        parent=sid,
+        schema_id=snap.get("schema-id", meta["current-schema-id"]),
+    )

@@ -103,24 +103,291 @@ def test_metadata_required_fields_and_versioning(spark, table):
     assert os.path.exists(os.path.join(table, "metadata", "v2.metadata.json"))
 
 
-def test_manifest_list_counts_match_manifests(spark, table):
-    iceberg.create(_df(spark, [(i, "a", float(i)) for i in range(20)]), table)
-    iceberg.append(_df(spark, [(i, "b", float(i)) for i in range(20, 30)]), table)
+# -- commit invariants, for every path that publishes a snapshot ---------
+#
+# Each case builds a table, then runs ONE writer and returns
+# (table, metadata before the write or None for a new table, ref the
+# write advances). The check reads everything through the independent
+# reader.
+
+
+def _rows(lo, hi, cat="a"):
+    return [(i, cat, float(i)) for i in range(lo, hi)]
+
+
+def _case_create(spark, root, v):
+    t = os.path.join(root, "t")
+    iceberg.create(_df(spark, _rows(0, 20)), t, format_version=v)
+    return t, None, "main"
+
+
+def _base(spark, root, v, parts=2):
+    t = os.path.join(root, "t")
+    iceberg.create(
+        _df(spark, _rows(0, 40)).repartitionByRange(parts, "id"), t,
+        format_version=v,
+    )
+    return t
+
+
+def _case_append(spark, root, v):
+    t = os.path.join(root, "t")
+    iceberg.create(_df(spark, _rows(0, 20)), t, format_version=v)
+    b = indep.table_metadata(t)
+    iceberg.append(_df(spark, _rows(20, 30, "b")), t)
+    return t, b, "main"
+
+
+def _case_overwrite(spark, root, v):
+    t = _base(spark, root, v)
+    b = indep.table_metadata(t)
+    iceberg.overwrite(_df(spark, _rows(100, 110)), t)
+    return t, b, "main"
+
+
+def _case_delete_where(spark, root, v):
+    t = _base(spark, root, v)
+    iceberg.delete_where(spark, t, "id % 7 = 0")
+    b = indep.table_metadata(t)
+    iceberg.delete_where(spark, t, "id % 5 = 0")
+    return t, b, "main"
+
+
+def _case_update_where(spark, root, v):
+    t = _base(spark, root, v)
+    iceberg.delete_where(spark, t, "id % 7 = 0")
+    b = indep.table_metadata(t)
+    iceberg.update_where(spark, t, "id % 3 = 0", {"val": "val + 1"})
+    return t, b, "main"
+
+
+def _case_delete_by_equality(spark, root, v):
+    t = _base(spark, root, v)
+    iceberg.delete_where(spark, t, "id % 7 = 0")
+    b = indep.table_metadata(t)
+    iceberg.delete_by_equality(
+        spark, t, spark.createDataFrame([(3,), (4,)], "id long")
+    )
+    return t, b, "main"
+
+
+def _case_optimize(spark, root, v):
+    """One big file plus small ones, with a delete manifest that
+    references both: the packed files' tombstones are materialized and
+    the delete manifest is carried for the big file only."""
+    t = os.path.join(root, "t")
+    iceberg.create(_df(spark, _rows(0, 4000)).coalesce(1), t, format_version=v)
+    iceberg.append(_df(spark, _rows(4000, 4010, "b")).coalesce(1), t)
+    iceberg.append(_df(spark, _rows(4010, 4020, "c")).coalesce(1), t)
+    iceberg.delete_where(spark, t, "id % 1000 = 1 OR id IN (4001, 4011)")
+    sizes = sorted(
+        os.path.getsize(os.path.join(t, f)) for f in iceberg.snapshot_files(t)
+    )
+    b = indep.table_metadata(t)
+    iceberg.optimize(spark, t, small_file_bytes=sizes[-2] + 1)
+    return t, b, "main"
+
+
+def _case_optimize_evolved_spec(spark, root, v):
+    """Live files under an older partition spec ride through optimize in
+    a manifest of their own spec."""
+    t = os.path.join(root, "t")
+    iceberg.create(_df(spark, _rows(0, 4000)).coalesce(1), t, format_version=v)
+    iceberg.evolve_partition_spec(t, ["bucket(4, id)"])
+    iceberg.append(_df(spark, _rows(4000, 4010, "b")).coalesce(1), t)
+    iceberg.append(_df(spark, _rows(4010, 4020, "b")).coalesce(1), t)
+    sizes = sorted(
+        os.path.getsize(os.path.join(t, f)) for f in iceberg.snapshot_files(t)
+    )
+    b = indep.table_metadata(t)
+    iceberg.optimize(spark, t, small_file_bytes=sizes[-2] + 1)
+    return t, b, "main"
+
+
+def _case_append_to_branch(spark, root, v):
+    t = _base(spark, root, v)
+    iceberg.create_branch(t, "audit")
+    iceberg.append_to_branch(_df(spark, _rows(40, 45)), t, "audit")
+    b = indep.table_metadata(t)
+    iceberg.append_to_branch(_df(spark, _rows(45, 50)), t, "audit")
+    return t, b, "audit"
+
+
+def _case_cherry_pick(spark, root, v):
+    t = _base(spark, root, v)
+    iceberg.create_branch(t, "audit")
+    picked = iceberg.append_to_branch(_df(spark, _rows(40, 45)), t, "audit")
+    iceberg.append(_df(spark, _rows(45, 50)), t)
+    b = indep.table_metadata(t)
+    iceberg.cherry_pick(t, picked)
+    return t, b, "main"
+
+
+def _case_clone(spark, root, v):
+    t = _base(spark, root, v)
+    iceberg.delete_where(spark, t, "id % 7 = 0")
+    iceberg.delete_by_equality(spark, t, spark.createDataFrame([(3,)], "id long"))
+    target = os.path.join(root, "clone")
+    iceberg.clone(t, target)
+    return target, None, "main"
+
+
+def _delta_source(spark, root, v):
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+
+    dt = os.path.join(root, "delta")
+    delta_log.create(
+        _df(spark, _rows(0, 40)).repartitionByRange(2, "id"), dt,
+        row_tracking=v == 3,
+    )
+    if v == 3:
+        delta_log.delete_where(spark, dt, "id % 7 = 0")  # deletion vectors
+    return dt
+
+
+def _case_convert_from_delta(spark, root, v):
+    dt = _delta_source(spark, root, v)
+    t = os.path.join(root, "t")
+    iceberg.convert_from_delta(dt, t)
+    assert int(indep.table_metadata(t)["format-version"]) == v
+    return t, None, "main"
+
+
+def _case_sync_from_delta(spark, root, v):
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+
+    dt = _delta_source(spark, root, v)
+    t = os.path.join(root, "t")
+    iceberg.convert_from_delta(dt, t)
+    b = indep.table_metadata(t)
+    delta_log.append(_df(spark, _rows(40, 50)), dt)
+    delta_log.delete_where(spark, dt, "id < 5")
+    # purges the one converted file carrying a DV: the mirror rewrites
+    # that data manifest with the survivor
+    delta_log.reorg_purge(spark, dt)
+    delta_log.overwrite(_df(spark, _rows(60, 70)), dt)
+    iceberg.sync_from_delta(dt, t)
+    return t, b, "main"
+
+
+def _case_sync_rebase(spark, root, v):
+    """A mirror-side compaction is superseded by one rebase snapshot
+    before the sync replays."""
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+
+    dt = _delta_source(spark, root, v)
+    t = os.path.join(root, "t")
+    iceberg.convert_from_delta(dt, t)
+    delta_log.append(_df(spark, _rows(40, 50)), dt)
+    iceberg.sync_from_delta(dt, t)
+    iceberg.optimize(spark, t, small_file_bytes=1 << 30)
+    b = indep.table_metadata(t)
+    delta_log.append(_df(spark, _rows(50, 55)), dt)
+    iceberg.sync_from_delta(dt, t)
+    return t, b, "main"
+
+
+def _case_rewrite_position_deletes(spark, root, v):
+    """v2 consolidates position-delete files (equality deletes carried);
+    v3 converts the inherited v2 position deletes into DVs."""
+    t = _base(spark, root, 2)
+    iceberg.delete_where(spark, t, "id % 7 = 0")
+    iceberg.delete_by_equality(spark, t, spark.createDataFrame([(3,)], "id long"))
+    iceberg.delete_where(spark, t, "id % 5 = 0")
+    if v == 3:
+        iceberg.upgrade_format_version(t, 3)
+    b = indep.table_metadata(t)
+    iceberg.rewrite_position_deletes(spark, t)
+    return t, b, "main"
+
+
+_COMMIT_CASES = {
+    "create": _case_create,
+    "append": _case_append,
+    "overwrite": _case_overwrite,
+    "delete_where": _case_delete_where,
+    "update_where": _case_update_where,
+    "delete_by_equality": _case_delete_by_equality,
+    "optimize": _case_optimize,
+    "optimize_evolved_spec": _case_optimize_evolved_spec,
+    "append_to_branch": _case_append_to_branch,
+    "cherry_pick": _case_cherry_pick,
+    "clone": _case_clone,
+    "convert_from_delta": _case_convert_from_delta,
+    "sync_from_delta": _case_sync_from_delta,
+    "sync_rebase": _case_sync_rebase,
+    "rewrite_position_deletes": _case_rewrite_position_deletes,
+}
+
+
+def _assert_manifest_matches_entries(m: dict) -> None:
+    entries = indep.read_avro(m["manifest_path"])
+    for status, kind in ((1, "added"), (0, "existing"), (2, "deleted")):
+        es = [e for e in entries if e["status"] == status]
+        assert m[f"{kind}_files_count"] == len(es), (kind, m)
+        assert m[f"{kind}_rows_count"] == sum(
+            e["data_file"]["record_count"] for e in es
+        ), (kind, m)
+    if entries:
+        assert m["min_sequence_number"] == min(
+            e["sequence_number"] for e in entries
+        ), m
+    assert m["manifest_length"] == os.path.getsize(m["manifest_path"])
+
+
+@pytest.mark.parametrize("version", [2, 3], ids=["v2", "v3"])
+@pytest.mark.parametrize("writer", list(_COMMIT_CASES))
+def test_manifest_list_counts_match_manifests(spark, tmp_path, writer, version):
+    """Every manifest of every snapshot the write published carries
+    counts, ``min_sequence_number`` and ``manifest_length`` that match
+    its entries, and the metadata moves the written ref and nothing
+    else: each new snapshot parents the previous head, main's head,
+    ``refs.main`` and the ``snapshot-log`` tail agree, and
+    ``last-sequence-number`` is the highest snapshot sequence."""
+    table, before, ref = _COMMIT_CASES[writer](spark, str(tmp_path), version)
     meta = indep.table_metadata(table)
-    snap = meta["snapshots"][-1]
-    total_rows = 0
-    for m in indep.read_avro(snap["manifest-list"]):
-        entries = indep.read_avro(m["manifest_path"])
-        live = [e for e in entries if e["status"] in (0, 1)]
-        assert m["added_files_count"] == sum(
-            1 for e in entries if e["status"] == 1
+    old = {s["snapshot-id"] for s in (before or {}).get("snapshots", [])}
+    new = [s for s in meta["snapshots"] if s["snapshot-id"] not in old]
+    assert new
+    head = None
+    if before is not None:
+        head = (
+            before["refs"][ref]["snapshot-id"]
+            if ref != "main"
+            else before["current-snapshot-id"]
         )
-        assert m["added_rows_count"] == sum(
-            e["data_file"]["record_count"] for e in entries if e["status"] == 1
-        )
-        assert m["manifest_length"] == os.path.getsize(m["manifest_path"])
-        total_rows += sum(e["data_file"]["record_count"] for e in live)
-    assert total_rows == 30
+    for s in new:
+        assert s.get("parent-snapshot-id") == head
+        head = s["snapshot-id"]
+        for m in indep.read_avro(s["manifest-list"]):
+            _assert_manifest_matches_entries(m)
+    assert meta["last-sequence-number"] == max(
+        s["sequence-number"] for s in meta["snapshots"]
+    )
+    assert meta["refs"][ref]["snapshot-id"] == head
+    main = meta["current-snapshot-id"]
+    assert meta["refs"]["main"]["snapshot-id"] == main
+    assert meta["snapshot-log"][-1]["snapshot-id"] == main
+    if ref == "main":
+        assert main == head
+    else:
+        assert main == before["current-snapshot-id"]
+        assert meta["snapshot-log"] == before["snapshot-log"]
+
+
+def test_head_moves_keep_main_ref_and_log_in_lockstep(spark, table):
+    """rollback and fast-forward move main without a new snapshot."""
+    s1 = iceberg.create(_df(spark, _rows(0, 10)), table)
+    iceberg.append(_df(spark, _rows(10, 20)), table)
+    iceberg.rollback_to_snapshot(table, s1)
+    iceberg.create_branch(table, "b")
+    head = iceberg.append_to_branch(_df(spark, _rows(20, 30)), table, "b")
+    for expected in (s1, head):
+        meta = indep.table_metadata(table)
+        assert meta["current-snapshot-id"] == expected
+        assert meta["refs"]["main"]["snapshot-id"] == expected
+        assert meta["snapshot-log"][-1]["snapshot-id"] == expected
+        iceberg.fast_forward(table, "b")
 
 
 def test_partitioned_table_identity_projection(spark, table):

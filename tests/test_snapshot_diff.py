@@ -234,3 +234,50 @@ def test_footer_proves_nonnull(spark, tmp_path):
         pa.table({"_row_id": pa.array([], "int64")}), empty
     )
     assert footer_proves_nonnull(empty, "_row_id") is True
+
+
+def _plan_nodes(plan) -> list:
+    nodes, kids = [plan], plan.children()
+    for i in range(kids.size()):
+        nodes += _plan_nodes(kids.apply(i))
+    return nodes
+
+
+@pytest.mark.parametrize("fmt", ["iceberg", "delta"])
+def test_diff_plans_one_join_over_two_scans(spark, tmp_path, fmt):
+    """`lineage_diff.lineage_changelog`'s plan claim, for both formats:
+    on a table without deletes the optimized plan holds ONE full-outer
+    join, over exactly two file scans (one per lineage read). The only
+    other joins broadcast the driver-built lineage maps
+    (LocalRelations) into each read."""
+    t = str(tmp_path / fmt)
+    if fmt == "iceberg":
+        iceberg.create(_df(spark, _rows(0, 20)), t, format_version=3)
+        first = iceberg.current_metadata(t)["current-snapshot-id"]
+        iceberg.append(_df(spark, _rows(20, 30)), t)
+        feed = iceberg.snapshot_diff_changelog(spark, t, first)
+    else:
+        dl.create(_df(spark, _rows(0, 20)), t, row_tracking=True)
+        dl.append(_df(spark, _rows(20, 30)), t)
+        feed = dl.snapshot_diff_changelog(spark, t, 0)
+    nodes = _plan_nodes(feed._jdf.queryExecution().optimizedPlan())
+
+    def scans(ns):
+        return [n for n in ns if n.nodeName() == "LogicalRelation"]
+
+    joins = [n for n in nodes if n.nodeName() == "Join"]
+    diff = [j for j in joins if j.joinType().toString() == "FullOuter"]
+    assert len(diff) == 1
+    assert len(scans(nodes)) == 2
+    assert len(scans(_plan_nodes(diff[0].left()))) == 1
+    assert len(scans(_plan_nodes(diff[0].right()))) == 1
+    for j in joins:
+        if j.joinType().toString() != "FullOuter":
+            assert {
+                n.nodeName()
+                for n in _plan_nodes(j.right())
+                if n.children().size() == 0
+            } == {"LocalRelation"}
+    assert _feed(feed) == Counter(
+        (i, i % 5, float(i), "insert") for i in range(20, 30)
+    )

@@ -1,6 +1,9 @@
 """Task-metrics probe: run a query's noop sink N times and report the
-SUMMED executor task metrics (run/CPU/GC/fetch-wait time, shuffle bytes,
-task/stage/job counts) parsed from the Spark event log.
+SUMMED executor task metrics per sample (run/CPU/GC time, Python-worker
+time, shuffle and spill bytes, task/stage/job counts), read from the
+Spark event log by `perfbench/eventlog.py` — the parser the benchmark
+and `bench.py` use, which attributes each stage once, to the job group
+that submitted it.
 
 Why this exists (optimization round 13): wall-clock on this host swings
 ±50 % run-to-run AND the sandbox provides ~16 effective cores while
@@ -21,11 +24,14 @@ Compare two trees by running once per tree (same host, back to back):
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 import time
+
+# after PYTHONPATH, so the tree under test still supplies the engine
+sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.eventlog import GroupMetrics, parse_file  # noqa: E402
 
 
 def main() -> None:
@@ -42,6 +48,8 @@ def main() -> None:
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": logdir,
             "spark.eventLog.compress": "false",
+            # one event file, <logdir>/<app id>, as perfbench/run.py does
+            "spark.eventLog.rolling.enabled": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -69,85 +77,21 @@ def main() -> None:
     spark.stop()  # flush the event log
     time.sleep(1)
 
-    jobs_by_group: dict[str, set] = {}
-    stages_by_job: dict[int, set] = {}
-    stage_metrics: dict[int, dict] = {}
-    lines: list[str] = []
-    for path in sorted(
-        glob.glob(os.path.join(logdir, f"*{app_id}*", "events_*"))
-        + glob.glob(os.path.join(logdir, f"*{app_id}*"))
-    ):
-        if os.path.isdir(path):
-            continue
-        with open(path) as fh:
-            lines.extend(fh.readlines())
-    for line in lines:
-        try:
-            ev = json.loads(line)
-        except ValueError:
-            continue  # truncated in-progress tail line / non-JSON noise
-        k = ev.get("Event")
-        if k == "SparkListenerJobStart":
-            grp = (ev.get("Properties") or {}).get("spark.jobGroup.id", "?")
-            jobs_by_group.setdefault(grp, set()).add(ev["Job ID"])
-            stages_by_job[ev["Job ID"]] = {
-                s["Stage ID"] for s in ev.get("Stage Infos", [])
-            }
-        elif k == "SparkListenerTaskEnd":
-            m = ev.get("Task Metrics") or {}
-            sm = stage_metrics.setdefault(
-                ev["Stage ID"],
-                {"run_ms": 0, "cpu_ms": 0, "sh_read": 0, "sh_write": 0,
-                 "tasks": 0, "gc_ms": 0, "fetch_ms": 0},
-            )
-            sm["run_ms"] += m.get("Executor Run Time", 0)
-            sm["cpu_ms"] += m.get("Executor CPU Time", 0) // 1_000_000
-            sm["gc_ms"] += m.get("JVM GC Time", 0)
-            srm = m.get("Shuffle Read Metrics") or {}
-            sm["fetch_ms"] += srm.get("Fetch Wait Time", 0)
-            sm["sh_read"] += srm.get("Remote Bytes Read", 0) + srm.get(
-                "Local Bytes Read", 0
-            )
-            sm["sh_write"] += (m.get("Shuffle Write Metrics") or {}).get(
-                "Shuffle Bytes Written", 0
-            )
-            sm["tasks"] += 1
+    groups = parse_file(os.path.join(logdir, app_id))
 
     print(f"{'group':8s} {'wall_s':>7s} {'run_s':>8s} {'cpu_s':>8s} "
-          f"{'gc_s':>6s} {'fetch_s':>7s} "
-          f"{'shMB':>7s} {'tasks':>6s} {'stages':>6s} {'jobs':>5s}")
-    last_stages: set = set()
+          f"{'gc_s':>6s} {'py_boot':>7s} {'py_init':>7s} {'py_run':>7s} "
+          f"{'shMB':>7s} {'spillMB':>7s} {'tasks':>6s} {'stages':>6s} "
+          f"{'jobs':>5s}")
     for i in range(samples):
-        grp = f"m{i}"
-        jobs = jobs_by_group.get(grp, set())
-        stages = (
-            set().union(*(stages_by_job.get(j, set()) for j in jobs))
-            if jobs
-            else set()
-        )
-        tot = {"run_ms": 0, "cpu_ms": 0, "sh_read": 0, "sh_write": 0,
-               "tasks": 0, "gc_ms": 0, "fetch_ms": 0}
-        for s in stages:
-            for kk, vv in stage_metrics.get(s, {}).items():
-                tot[kk] += vv
-        print(f"{grp:8s} {walls[i]:7.2f} {tot['run_ms']/1e3:8.2f} "
-              f"{tot['cpu_ms']/1e3:8.2f} {tot['gc_ms']/1e3:6.2f} "
-              f"{tot['fetch_ms']/1e3:7.2f} "
-              f"{(tot['sh_read']+tot['sh_write'])/1e6:7.1f} "
-              f"{tot['tasks']:6d} {len(stages):6d} {len(jobs):5d}")
-        last_stages = stages
-    print("-- top stages of last sample by run_ms:")
-    rows = sorted(
-        ((s, stage_metrics.get(s, {})) for s in last_stages),
-        key=lambda kv: -kv[1].get("run_ms", 0),
-    )[:12]
-    for s, m in rows:
-        print(f"  stage {s:5d} run={m.get('run_ms', 0)/1e3:7.2f} "
-              f"cpu={m.get('cpu_ms', 0)/1e3:7.2f} "
-              f"gc={m.get('gc_ms', 0)/1e3:5.2f} "
-              f"fetch={m.get('fetch_ms', 0)/1e3:5.2f} "
-              f"sh={(m.get('sh_read', 0)+m.get('sh_write', 0))/1e6:7.1f}MB "
-              f"tasks={m.get('tasks', 0)}")
+        g = groups.get(f"m{i}", GroupMetrics())
+        print(f"m{i:<7d} {walls[i]:7.2f} {g.run_ms/1e3:8.2f} "
+              f"{g.cpu_ns/1e9:8.2f} {g.gc_ms/1e3:6.2f} "
+              f"{g.python_boot_ms/1e3:7.2f} {g.python_init_ms/1e3:7.2f} "
+              f"{g.python_run_ms/1e3:7.2f} "
+              f"{(g.shuffle_read_bytes + g.shuffle_write_bytes)/1e6:7.1f} "
+              f"{g.spill_bytes/1e6:7.1f} "
+              f"{g.tasks:6d} {g.stages:6d} {g.jobs:5d}")
 
 
 if __name__ == "__main__":
