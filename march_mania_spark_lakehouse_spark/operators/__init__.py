@@ -4,9 +4,10 @@ Each module maps to a family in SURVEY.md §2:
 
 - ``core``       — projections, windows (causal rolling, latest-per-group,
                    top-k), distinct/dropna (P*, W*, §2.6)
-- ``joins``      — equi/broadcast/semi/anti join helpers (J*)
+- ``joins``      — semi/anti/star join helpers (J*)
 - ``setops``     — by-name unions / long-table explosion (U*)
-- ``fold``       — ordered per-group sequential folds via applyInPandas
+- ``fold``       — ordered per-group sequential folds over sorted
+                   partitions via mapInPandas
                    (UD1: Elo and generalizations)
 - ``dedup``      — exact + near-duplicate detection (E1, E2)
 - ``similarity`` — embedding cosine top-k, brute force + LSH path (E3)

@@ -1,9 +1,10 @@
-"""Join operators: equi / broadcast / semi / anti / star helpers.
+"""Join operators: semi / anti / star helpers.
 
 Reference parity: all reference joins are composite-key left equi-joins of
 a fact against small dimensions (`src/features/basketball_features.py:105-107`,
-`jobs/feature_helpers.py:29-32`; SURVEY.md §2.3 J1–J4). We add explicit
-broadcast, semi and anti variants (needed by dedup/similarity extensions).
+`jobs/feature_helpers.py:29-32`; SURVEY.md §2.3 J1–J4); plans write
+those as plain ``DataFrame.join``. We add semi and anti variants (needed by
+dedup/similarity extensions) and a star join that broadcasts each dim.
 
 Scale: dimension tables (region/nation/customer-sized) are broadcast so
 the fact side never shuffles for the join; Catalyst + AQE pick
@@ -17,18 +18,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def equi_join(
-    df: DataFrame,
-    other: DataFrame,
-    on: Sequence[str] | Column,
-    how: str = "left",
-    broadcast_other: bool = False,
-) -> DataFrame:
-    """Equi-join with optional explicit broadcast of the right side (J1–J3)."""
-    right = F.broadcast(other) if broadcast_other else other
-    return df.join(right, on=on, how=how)
 
 
 def semi_join(df: DataFrame, other: DataFrame, on: Sequence[str] | Column) -> DataFrame:

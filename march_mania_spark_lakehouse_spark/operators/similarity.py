@@ -84,30 +84,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_bucket_id(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id: bit j = [vec · plane_j ≥ 0]. Pure built-ins —
-    each plane is a literal array, so the projection stays in codegen."""
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (dot(vec, lit_plane) >= 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, j)
-    return bucket
-
-
-def _table_buckets(vec: Column, dim: int, n_planes: int, n_tables: int, seed: int) -> Column:
-    """array of (table, bucket) structs — one sign-LSH bucket per table."""
-    entries = []
-    for t in range(n_tables):
-        planes = random_hyperplanes(dim, n_planes, seed + 1000 * t)
-        entries.append(
-            F.struct(
-                F.lit(t).alias("tbl"), lsh_bucket_id(vec, planes).alias("bucket")
-            )
-        )
-    return F.array(*entries)
-
-
 def table_buckets_vectorized(
     dim: int, n_planes: int, n_tables: int, seed: int
 ):
@@ -663,8 +639,7 @@ def portable_lsh_buckets(
     aggregate (one shuffle on the id). The map-only form (one
     interpreted array fold per plane) re-inlines the fold per plane —
     measured 6× slower at sf0.1. The Gaussian-plane variant
-    (`lsh_bucket_id`, codegen literal arrays) stays the production
-    path; this family exists to make an APPROXIMATE ANN path
+    (`table_buckets_vectorized`) stays the production path; this family exists to make an APPROXIMATE ANN path
     value-verifiable end-to-end, the role the portable MinHash family
     plays for q28."""
     ex = rebalance_scan(df).select(

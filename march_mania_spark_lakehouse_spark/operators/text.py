@@ -408,19 +408,6 @@ def bigram_logprob_scores(
     )
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set to a documents table."""
-    c = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(c))
-        .withColumn("distinct_ratio", distinct_token_ratio(c))
-        .withColumn("stopword_ratio", en_stopword_ratio(c))
-        .withColumn("pred_lang", lang_id_en(c))
-        .withColumn("quality", quality_score(c))
-        .withColumn("fingerprint", rolling_fingerprint(c))
-    )
-
-
 def learn_bpe_merges(
     df: DataFrame,
     text_col: str = "text",

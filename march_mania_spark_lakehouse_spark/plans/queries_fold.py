@@ -1,5 +1,6 @@
 """Ordered per-group fold queries (SURVEY.md §2.10 UD1): the operators
-Catalyst cannot express relationally, run as grouped-map pandas UDFs.
+Catalyst cannot express relationally, run as pandas folds over
+JVM-sorted partitions (`operators.fold.ordered_fold`).
 
 q31 has a closed-form SQL oracle (decay fold ≡ Σ vᵢ·αⁿ⁻ⁱ, rounded);
 q32 (Elo) is genuinely non-SQL-expressible → rows-only + golden unit
@@ -33,7 +34,7 @@ GROUP BY user_id
 @query("q31_decayed_fold", oracle=_Q31_SQL, tags=("fold",))
 def q31(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential-decay running state per user (UD1 shape): the engine
-    runs a true sequential fold via applyInPandas; the oracle uses the
+    runs a true sequential fold (`fold.ordered_fold`); the oracle uses the
     closed form Σ vᵢ·αⁿ⁻ⁱ. Rounded to 3 digits (the two formulations
     differ only in ~1e-10 float association noise)."""
     ev = catalog.load(spark, "events", sf_dir).select(

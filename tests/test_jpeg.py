@@ -126,6 +126,65 @@ def test_hand_built_420_mcu_decodes_through_upsampling():
     assert (img == 136).all()
 
 
+def _dc_only_grey_scan(dc_values: list[int], restart: int = 0) -> bytes:
+    """Entropy data of DC-only 8×8 luma blocks (every AC band one EOB),
+    with an RSTn marker after every ``restart`` blocks when set — the DC
+    predictor restarts at 0 in each interval (T.81 F.1.1.5)."""
+    dc_t = jpeg._build_codes(jpeg.DC_LUMA_BITS, jpeg.DC_LUMA_VALS)
+    ac_t = jpeg._build_codes(jpeg.AC_LUMA_BITS, jpeg.AC_LUMA_VALS)
+    out, w, pred = b"", jpeg._BitWriter(), 0
+    for i, dc in enumerate(dc_values):
+        if restart and i and i % restart == 0:
+            out += w.flush() + bytes([0xFF, 0xD0 + (i // restart - 1) % 8])
+            w, pred = jpeg._BitWriter(), 0
+        cat, extra = jpeg._magnitude(dc - pred)
+        w.write(*dc_t[cat])
+        if cat:
+            w.write(extra, cat)
+        w.write(*ac_t[0x00])
+        pred = dc
+    return out + w.flush()
+
+
+def _grey_strip(n_blocks: int, scan: bytes, restart: int = 0) -> bytes:
+    """A baseline 8×(8·n) greyscale JPEG around ``scan``."""
+    dri = b"\xff\xdd" + struct.pack(">HH", 4, restart) if restart else b""
+    return (
+        b"\xff\xd8"
+        + _dqt_segment(0, jpeg.QT_LUMA)
+        + b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 8, 8 * n_blocks, 1)
+        + bytes([1, 0x11, 0])
+        + _dht_segment(0x00, jpeg.DC_LUMA_BITS, jpeg.DC_LUMA_VALS)
+        + _dht_segment(0x10, jpeg.AC_LUMA_BITS, jpeg.AC_LUMA_VALS)
+        + dri
+        + b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00])
+        + b"\x00\x3f\x00"
+        + scan
+        + b"\xff\xd9"
+    )
+
+
+@pytest.mark.parametrize("restart", [1, 2, 3])
+def test_restart_intervals_reset_the_dc_predictor(restart):
+    """DRI + RSTn markers: each interval's first DC is coded against 0.
+    Dequantized DC d·16 lifts a block by 2·d grey levels."""
+    dcs = [4, -4, 2, 0, 7, -1, 3]
+    img = jpeg.decode(_grey_strip(len(dcs), _dc_only_grey_scan(dcs, restart), restart))
+    assert img.shape == (8, 8 * len(dcs))
+    for i, dc in enumerate(dcs):
+        assert (img[:, 8 * i: 8 * i + 8] == 128 + 2 * dc).all(), (restart, i)
+
+
+def test_truncated_scan_keeps_the_decoded_blocks():
+    """Entropy data cut after the first two whole blocks: decode returns
+    the full frame, with those two blocks intact."""
+    scan = _dc_only_grey_scan([4, 4, -4, 4])
+    assert len(scan) > 2
+    img = jpeg.decode(_grey_strip(4, scan[:2]))  # '100100 1010' + '00 1010'
+    assert img.shape == (8, 32)
+    assert (img[:, :16] == 136).all()
+
+
 def test_solid_grey_roundtrip_bit_exact_all_levels():
     """Solid grey RGB round trips are bit-exact for EVERY grey level —
     the property q174's value oracle rests on."""
@@ -274,3 +333,48 @@ def test_property_random_images_roundtrip():
             assert dec.shape == px.shape, f"jpeg {shape}"
             err = np.abs(dec.astype(float) - px.astype(float)).mean()
             assert err < 8.0, (shape, err)  # white noise, still bounded
+
+
+def _encode_corpus():
+    """Encoder inputs whose output bytes are pinned by digest: q174's
+    solid greys at q174's per-doc dims, q174's 24×24 texture, seeded
+    random greyscale/RGB images of odd sizes at several qualities, and
+    progressive streams of noise and smooth content."""
+    for doc_id in range(256):
+        w, h = 8 + doc_id % 16, 8 + (doc_id * 7) % 16
+        yield jpeg.encode(np.full((h, w, 3), doc_id, dtype=np.uint8), quality=85)
+    yy, xx = np.mgrid[0:24, 0:24]
+    tx = (128 + 90 * np.sin(yy / 7.0) * np.cos(xx / 9.0)).astype(np.uint8)
+    yield jpeg.encode(np.stack([tx] * 3, -1), 85)
+    rng = np.random.default_rng(8)
+    for i in range(50):
+        h, w = (2 * int(v) + 1 for v in rng.integers(2, 20, 2))
+        shape = (h, w) if i % 2 == 0 else (h, w, 3)
+        px = rng.integers(0, 256, shape, dtype=np.uint8)
+        yield jpeg.encode(px, int(rng.choice([30, 60, 85, 95])))
+    for i in range(10):
+        h, w = (int(v) for v in rng.integers(9, 40, 2))
+        if i % 2:
+            yy, xx = np.mgrid[0:h, 0:w]
+            px = np.stack([(yy * 3 + xx * 2) % 256, (yy * 5) % 256, (xx * 7) % 256],
+                          axis=-1).astype(np.uint8)
+        else:
+            px = rng.integers(0, 256, (h, w), dtype=np.uint8)
+        yield jpeg.encode_progressive(px, int(rng.choice([35, 60, 85, 95])))
+
+
+def test_encoded_bytes_are_pinned():
+    """The encoders' output bytes for a fixed corpus hash to a committed
+    digest, so a speed change to the DCT, quantizer or entropy coder
+    that alters one bit of any stream fails here."""
+    import hashlib
+
+    digest = hashlib.sha256()
+    n = 0
+    for payload in _encode_corpus():
+        digest.update(len(payload).to_bytes(8, "big") + payload)
+        n += 1
+    assert n == 317
+    assert digest.hexdigest() == (
+        "b6d734ee95a756ccfc7747a5b716e0fef67d3183484f8068fb9734af984e0e39"
+    )
