@@ -7,12 +7,16 @@ same contract (declared output schema, total in-group ordering, each
 group folded whole) but:
 
 - plan it as a partition stream: a ``row_number`` window over (group,
-  order) flags each group's first row, and ``mapInPandas`` reads the
+  order) flags each group's first row, and ``mapInArrow`` reads the
   window's output, whose exchange and sort already deliver every
   partition grouped and in order. The Python side cuts each Arrow batch
   at the flags and hands ``fold_fn`` every whole group of the batch at
   once, so the per-group cost is array slicing, not a pandas round trip
   and sort per group;
+- convert each Arrow batch to pandas itself (pyarrow's defaults:
+  timestamps arrive UTC-aware), except that an integer key column
+  holding a null arrives as Python ints (``integer_object_nulls``), not
+  float64: keys beyond 2^53 come back exact;
 - carry the trailing group of a batch into the next one, so a group
   that straddles batch edges is still folded whole — this avoids the
   reference's latent chunk-state bug (`elo.py:98-113` keeps per-chunk,
@@ -36,8 +40,11 @@ from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 _FIRST = "__group_first"  # the JVM's flag on each group's first row
@@ -85,7 +92,22 @@ def ordered_fold(
         if carry:
             yield fold_fn(pd.concat(carry, ignore_index=True), np.zeros(1, np.int64))
 
-    return df.withColumn(_FIRST, first).mapInPandas(_stream, schema=output_schema)
+    out_schema = to_arrow_schema(T._parse_datatype_string(output_schema))
+
+    def _frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            pdf = batch.to_pandas()
+            for c in group_cols:
+                col = batch.column(c)
+                if col.null_count and pa.types.is_integer(col.type):
+                    pdf[c] = col.to_pandas(integer_object_nulls=True)
+            yield pdf
+
+    def _fold_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for out in _stream(_frames(batches)):
+            yield pa.RecordBatch.from_pandas(out, schema=out_schema, preserve_index=False)
+
+    return df.withColumn(_FIRST, first).mapInArrow(_fold_arrow, schema=output_schema)
 
 
 def exp_decay_fold(

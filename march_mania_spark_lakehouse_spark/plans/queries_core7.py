@@ -151,11 +151,11 @@ def q155(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a blocking job plus lost broadcast planning below the pin);
     # round 14 drops the pin and lets the two branches share the
     # partial-aggregate EXCHANGE instead: both carry the identical
-    # scan→join→partial-agg→Exchange(l_partkey) subtree. The committed
-    # plan dumps (plans/r14/q155_after*.txt) show it twice, with no
-    # ReusedExchange node; the single fact pass is AQE's runtime stage
-    # reuse, seen only in task metrics (OPTIMIZATION_r14.md), and no
-    # test guards it.
+    # scan→join→partial-agg→Exchange(l_partkey) subtree. The initial
+    # plan shows it twice; AQE's runtime stage reuse runs it once, and
+    # the final adaptive plan scans lineitem once and reads the shared
+    # exchange as a ReusedExchange (`tests/test_plans.py::
+    # test_q155_reads_lineitem_once`).
     vdec = base.groupBy("l_partkey").agg(
         F.sum(F.col("rev").cast(DEC)).alias("pv")
     )

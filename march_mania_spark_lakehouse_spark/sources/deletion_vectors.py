@@ -240,10 +240,19 @@ def deserialize_roaring64(data: bytes) -> "list[int]":
 
 def encode_dv(positions: "list[int]") -> bytes:
     """One DV's serialized data: u32 LE magic + portable 64-bit roaring
-    bitmap. This is the per-file unit of work the DELETE path runs ON
-    EXECUTORS — the driver never sees raw position lists, only these
-    compact blobs' descriptors."""
+    bitmap. Called once per touched data file by `dv_codec.encode`, on
+    the driver for small tables and inside executor tasks above its
+    size gate."""
     return struct.pack("<I", MAGIC) + serialize_roaring64(positions)
+
+
+def frame_dv(data: bytes) -> bytes:
+    """One DV's FRAMED record: ``u32 BE size + data + u32 BE CRC-32``.
+    The framing is byte-identical to an Iceberg Puffin
+    ``deletion-vector-v1`` blob (deliberately, per both public specs),
+    so the same record serves a Delta sidecar and a Puffin file."""
+    crc = zlib.crc32(data) & 0xFFFFFFFF
+    return struct.pack(">I", len(data)) + data + struct.pack(">I", crc)
 
 
 def write_dv_blobs(
@@ -251,10 +260,10 @@ def write_dv_blobs(
 ) -> "dict[str, dict]":
     """Write ONE deletion-vector sidecar holding the given pre-encoded
     blobs (``(key, encode_dv bytes, cardinality)``); returns {key:
-    descriptor dict} ready to ride in add actions. Called per TASK by
-    the distributed DELETE path (each task sidecars its own files — a
-    DELETE touching 10k data files costs O(tasks) new objects, not
-    10k) and once by the driver-side :func:`write_dv_file` wrapper."""
+    descriptor dict} ready to ride in add actions. `dv_codec.encode`
+    calls it once per DELETE on the driver path and once per TASK on
+    the executor path (a DELETE touching 10k data files costs
+    O(tasks) new objects, not 10k)."""
     u = _uuid.uuid4()
     name = f"deletion_vector_{u}.bin"
     descriptors: dict[str, dict] = {}
@@ -262,9 +271,7 @@ def write_dv_blobs(
         f.write(b"\x01")  # format version
         pos = 1
         for key, data, cardinality in items:
-            f.write(struct.pack(">I", len(data)))
-            f.write(data)
-            f.write(struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF))
+            f.write(frame_dv(data))
             descriptors[key] = {
                 "storageType": "u",
                 "pathOrInlineDv": z85_encode(u.bytes),
@@ -276,64 +283,32 @@ def write_dv_blobs(
     return descriptors
 
 
-def write_dv_file(table: str, dvs: "dict[str, list[int]]") -> "dict[str, dict]":
-    """Driver-side convenience wrapper over :func:`write_dv_blobs`:
-    encode + write a DV per entry of ``dvs`` (data-file relative path ->
-    deleted positions) into one sidecar. Kept for small metadata-scale
-    callers and tests; the DELETE/UPDATE hot path encodes executor-side
-    (see `delta_log.delete_where`) and never builds this dict."""
-    return write_dv_blobs(
-        table,
-        [(p, encode_dv(dvs[p]), len(set(dvs[p]))) for p in sorted(dvs)],
-    )
-
-
 def framed_dv_bytes(table: str, descriptor: dict) -> bytes:
-    """One DV's FRAMED record — ``u32 BE size + data + u32 BE CRC-32``
-    — exactly as it sits in the sidecar, CRC-verified. This framing is
-    byte-identical to an Iceberg Puffin ``deletion-vector-v1`` blob
-    (deliberately, per both public specs), so cross-format conversion
-    (`iceberg.convert_from_delta`) moves these bytes VERBATIM into a
-    Puffin file: the bitmap is never decoded or re-encoded. Inline
-    ("i") descriptors carry unframed data and are framed here."""
-    if descriptor["storageType"] == "i":
-        data = z85_decode(descriptor["pathOrInlineDv"])
-    else:
-        with open(dv_file_path(table, descriptor), "rb") as f:
-            f.seek(descriptor["offset"])
-            (size,) = struct.unpack(">I", f.read(4))
-            if size != descriptor["sizeInBytes"]:
-                raise ValueError(
-                    f"DV size {size} != descriptor sizeInBytes "
-                    f"{descriptor['sizeInBytes']}"
-                )
-            data = f.read(size)
-            (crc,) = struct.unpack(">I", f.read(4))
-            if crc != (zlib.crc32(data) & 0xFFFFFFFF):
-                raise ValueError("DV checksum mismatch")
-    (magic,) = struct.unpack_from("<I", data, 0)
-    if magic != MAGIC:
-        raise ValueError(f"bad DV magic {magic}")
-    return (
-        struct.pack(">I", len(data))
-        + data
-        + struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
-    )
+    """One DV's framed record (:func:`frame_dv`), CRC-verified.
+    Cross-format conversion (`iceberg.convert_from_delta`) moves these
+    bytes VERBATIM into a Puffin file: the bitmap is never decoded or
+    re-encoded. Inline ("i") descriptors carry unframed data and are
+    framed here."""
+    return frame_dv(read_record(locate(table, descriptor)))
 
 
-def unframe_dv(blob: bytes) -> bytes:
-    """Strip the ``size + CRC`` framing off one framed DV record (a
-    Delta sidecar record or — identically — an Iceberg Puffin
-    ``deletion-vector-v1`` blob), verifying the CRC and magic; returns
-    the raw data (magic + portable bitmap) ready for
-    :func:`write_dv_blobs`. The inverse of :func:`framed_dv_bytes` —
-    together they let `iceberg.convert_to_delta` move DV bitmaps
-    across formats without ever deserializing a position."""
-    (size,) = struct.unpack_from(">I", blob, 0)
+def unframe_dv(blob: bytes, size: int) -> bytes:
+    """Strip the framing off one framed DV record (a Delta sidecar
+    record or — identically — an Iceberg Puffin ``deletion-vector-v1``
+    blob), verifying the stated ``size``, the CRC and the magic;
+    returns the raw data (magic + portable bitmap). The inverse of
+    :func:`frame_dv`."""
+    (got,) = struct.unpack_from(">I", blob, 0)
+    if got != size:
+        raise ValueError(f"DV size {got} != descriptor size {size}")
     data = blob[4: 4 + size]
     (crc,) = struct.unpack_from(">I", blob, 4 + size)
     if crc != (zlib.crc32(data) & 0xFFFFFFFF):
         raise ValueError("DV checksum mismatch")
+    return _check_magic(data)
+
+
+def _check_magic(data: bytes) -> bytes:
     (magic,) = struct.unpack_from("<I", data, 0)
     if magic != MAGIC:
         raise ValueError(f"bad DV magic {magic}")
@@ -353,31 +328,49 @@ def dv_file_path(table: str, descriptor: dict) -> str:
     return os.path.join(table, prefix, f"deletion_vector_{u}.bin")
 
 
-def read_dv(table: str, descriptor: dict) -> "list[int]":
-    """Decode a descriptor into its deleted-position list, verifying
-    the magic and the CRC-32 (storage types u/p/i)."""
+def locate(table: str, descriptor: dict) -> dict:
+    """The LOCATOR of a Delta DV descriptor (storage types u/p/i). A
+    locator addresses one DV in either format: ``{"path", "offset",
+    "size", "cardinality"}`` for a framed record whose size field sits
+    at ``offset`` of ``path`` (a sidecar or a Puffin file), or
+    ``{"inline", "cardinality"}`` for a Delta inline DV. A locator
+    without ``cardinality`` skips the count check."""
     if descriptor["storageType"] == "i":
-        data = z85_decode(descriptor["pathOrInlineDv"])
-    else:
-        with open(dv_file_path(table, descriptor), "rb") as f:
-            f.seek(descriptor["offset"])
-            (size,) = struct.unpack(">I", f.read(4))
-            if size != descriptor["sizeInBytes"]:
-                raise ValueError(
-                    f"DV size {size} != descriptor sizeInBytes "
-                    f"{descriptor['sizeInBytes']}"
-                )
-            data = f.read(size)
-            (crc,) = struct.unpack(">I", f.read(4))
-            if crc != (zlib.crc32(data) & 0xFFFFFFFF):
-                raise ValueError("DV checksum mismatch")
-    (magic,) = struct.unpack_from("<I", data, 0)
-    if magic != MAGIC:
-        raise ValueError(f"bad DV magic {magic}")
-    out = deserialize_roaring64(data[4:])
-    if len(out) != descriptor["cardinality"]:
-        raise ValueError(
-            f"DV cardinality {len(out)} != descriptor "
-            f"{descriptor['cardinality']}"
-        )
+        return {
+            "inline": descriptor["pathOrInlineDv"],
+            "cardinality": descriptor["cardinality"],
+        }
+    return {
+        "path": dv_file_path(table, descriptor),
+        "offset": int(descriptor["offset"]),
+        "size": int(descriptor["sizeInBytes"]),
+        "cardinality": descriptor["cardinality"],
+    }
+
+
+def read_record(loc: dict) -> bytes:
+    """The verified raw data (magic + bitmap) a locator names."""
+    if "inline" in loc:
+        return _check_magic(z85_decode(loc["inline"]))
+    with open(loc["path"], "rb") as f:
+        f.seek(loc["offset"])
+        blob = f.read(loc["size"] + 8)
+    return unframe_dv(blob, loc["size"])
+
+
+def positions(loc: dict) -> "list[int]":
+    """Decode a locator into its deleted positions, verifying size,
+    CRC, magic and — when the locator states one — the cardinality
+    (Delta's descriptor ``cardinality``, Iceberg's manifest-entry
+    ``record_count``)."""
+    out = deserialize_roaring64(read_record(loc)[4:])
+    want = loc.get("cardinality")
+    if want is not None and len(out) != int(want):
+        raise ValueError(f"DV cardinality {len(out)} != descriptor {want}")
     return out
+
+
+def read_dv(table: str, descriptor: dict) -> "list[int]":
+    """Decode a Delta descriptor into its deleted-position list,
+    verifying the magic, the CRC-32 and the cardinality."""
+    return positions(locate(table, descriptor))

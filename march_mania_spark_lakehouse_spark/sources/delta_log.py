@@ -51,6 +51,7 @@ equivalent is a conditional PUT / DynamoDB lock per the spec).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -61,6 +62,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from march_mania_spark_lakehouse_spark.sources import deletion_vectors, dv_codec
 from march_mania_spark_lakehouse_spark.sources.lineage_diff import lineage_changelog
 from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 
@@ -1083,58 +1085,22 @@ def _scan_with_positions(
     return df
 
 
-#: Above this many total tombstoned positions (known from descriptor
-#: cardinalities WITHOUT decoding any bitmap) the tombstone table stops
-#: being broadcast and joins via shuffle instead: an 8-byte-per-position
-#: broadcast is ~80 MB at 10M rows, the practical executor-memory line.
-DV_BROADCAST_LIMIT = 10_000_000
-
-
 def _dv_tombstones(
     spark: SparkSession,
     table: str,
     entries: Sequence[tuple[str, dict, dict | None]],
 ) -> DataFrame:
     """(abs file path, DV descriptor, optional predecessor descriptor)
-    → distributed (__fp, __pos) tombstone table. Only the compact
-    descriptors (KBs each) leave the driver; the roaring bitmaps are
-    decoded and their positions exploded ON EXECUTORS via mapInPandas,
-    so driver memory never scales with deleted-row count — the property
-    that keeps merge-on-read reads alive when a 100 TB table carries
-    billions of tombstones. With a predecessor descriptor the emitted
-    positions are the diff (new − old), the CDC delete-row recovery.
-
-    Join-side strategy is decided from descriptor ``cardinality`` sums
-    alone: small DV sets broadcast (map-side anti-join, the common
-    case — deletes are a fraction of a table), huge ones fall back to a
-    shuffle join rather than an oversized broadcast."""
-    import pandas as pd
-
-    rows = [
-        (fp, json.dumps(new), json.dumps(old) if old else None)
-        for fp, new, old in entries
-    ]
-    # one bitmap decode per task when files allow: the local scan
-    # spreads rows over min(rows, cores) tasks (sources/local_rows.py)
-    src = local_df(spark, rows, "__fp string, __new string, __old string")
-
-    def _explode(batches):
-        from march_mania_spark_lakehouse_spark.sources import deletion_vectors
-
-        for pdf in batches:
-            for fp, nj, oj in pdf.itertuples(index=False):
-                new = deletion_vectors.read_dv(table, json.loads(nj))
-                if oj:
-                    old = set(deletion_vectors.read_dv(table, json.loads(oj)))
-                    new = [p for p in new if p not in old]
-                if new:
-                    yield pd.DataFrame(
-                        {"__fp": fp, "__pos": pd.array(new, dtype="int64")}
-                    )
-
-    dels = src.mapInPandas(_explode, "__fp string, __pos long")
-    total = sum(e[1].get("cardinality", 0) for e in entries)
-    return F.broadcast(dels) if total <= DV_BROADCAST_LIMIT else dels
+    → (__fp, __pos) tombstones through `dv_codec.decode`: decoded on
+    the driver for small DV sets, on executors above its gate, so
+    driver memory never scales with the tombstones of a 100 TB table.
+    With a predecessor descriptor the emitted positions are the diff
+    (new − old), the CDC delete-row recovery."""
+    loc = functools.partial(deletion_vectors.locate, table)
+    return dv_codec.decode(
+        spark,
+        [(fp, loc(new), loc(old) if old else None) for fp, new, old in entries],
+    )
 
 
 def _fp_norm() -> "Column":
@@ -1516,8 +1482,6 @@ def shallow_clone(table: str, target: str, version: int | None = None) -> int:
 
     Same shared-file retention caveat as the lake conversions: vacuum
     on either side must not assume sole ownership."""
-    from march_mania_spark_lakehouse_spark.sources import deletion_vectors
-
     v = latest_version(table) if version is None else version
     if v is None:
         raise FileNotFoundError(f"{table} has no Delta log")
@@ -2136,8 +2100,6 @@ def vacuum(table: str, retention_ms: int = 7 * 24 * 3600 * 1000) -> list[str]:
     # the referenced deletion-vector sidecars (which stay: old versions
     # within retention may still read them; unreferenced sidecars are
     # the debris of retried/crashed DELETE tasks)
-    from march_mania_spark_lakehouse_spark.sources import deletion_vectors
-
     tracked: set[str] = set(removed_at) | set(live)
     dv_referenced: set[str] = set()
 
@@ -2958,25 +2920,24 @@ def delete_where(
     _op: "tuple[str, dict] | None" = None,
 ) -> int:
     """Merge-on-read DELETE via the protocol's DELETION VECTORS: the
-    matched rows' physical positions are roaring-encoded ON EXECUTORS
-    (one task per group of touched files) and written as per-task
-    ``deletion_vector_<uuid>.bin`` sidecars (`sources/
-    deletion_vectors.py` — Z85 descriptor, portable 64-bit roaring,
-    CRC-framed blobs); each touched data file is re-committed as
-    remove+add with its DV descriptor attached. No data file is
-    rewritten, and — mirroring the read path's `_dv_tombstones` — the
-    driver only ever holds COMPACT DESCRIPTORS: a DELETE matching N
-    rows costs O(touched files) driver memory, never O(N), so a 10⁹-row
-    delete on a 100 TB table cannot OOM the driver. Readers pay one
-    broadcast anti-join. A second DELETE touching the same file merges
-    with its existing DV executor-side (the scan below reads through
-    DVs, so already-deleted rows can never re-match or
-    double-tombstone). The commit also upgrades the table protocol to
-    the deletionVectors table feature, per spec. A task retried by the
-    scheduler can leave an orphan (never-committed) sidecar, exactly
-    like Delta data-file writers; VACUUM's unreferenced-file sweep is
-    the standard cleanup. Returns the committed version (current
-    version when nothing matched).
+    matched rows' physical positions are roaring-encoded by
+    `dv_codec.encode` and written as ``deletion_vector_<uuid>.bin``
+    sidecars (`sources/deletion_vectors.py` — Z85 descriptor, portable
+    64-bit roaring, CRC-framed blobs); each touched data file is
+    re-committed as remove+add with its DV descriptor attached. No data
+    file is rewritten. The codec encodes on the driver when the table's
+    live rows (from the adds' ``numRecords``) are under its gate, and
+    on executors (one sidecar per task, the driver holding only
+    descriptors) above it, so a 10⁹-row delete on a 100 TB table
+    cannot OOM the driver. Readers pay one broadcast anti-join. A
+    second DELETE touching the same file merges with its existing DV
+    (the scan below reads through DVs, so already-deleted rows can
+    never re-match or double-tombstone). The commit also upgrades the
+    table protocol to the deletionVectors table feature, per spec. A
+    task retried by the scheduler can leave an orphan (never-committed)
+    sidecar, exactly like Delta data-file writers; VACUUM's
+    unreferenced-file sweep is the standard cleanup. Returns the
+    committed version (current version when nothing matched).
 
     This is the FIND half (scan + predicate); `_commit_dv_hits` is the
     commit half, shared with `update_where`, which feeds it the hits of
@@ -3007,6 +2968,19 @@ def delete_where(
     )
 
 
+def _write_dv_sidecar(table: str, items: "list[tuple]") -> "list[tuple]":
+    """`dv_codec.encode`'s container writer: ONE
+    ``deletion_vector_<uuid>.bin`` sidecar holding a DV per ``(data
+    file, encode_dv bytes, cardinality)``; returns (file, Z85 path,
+    offset, sizeInBytes, cardinality) per DV."""
+    descs = deletion_vectors.write_dv_blobs(table, items)
+    return [
+        (fp, descs[fp]["pathOrInlineDv"], descs[fp]["offset"],
+         descs[fp]["sizeInBytes"], n)
+        for fp, _, n in items
+    ]
+
+
 def _commit_dv_hits(
     spark: SparkSession,
     table: str,
@@ -3023,83 +2997,26 @@ def _commit_dv_hits(
     parameters); an UPDATE's preimages are labelled update_preimage.
     Returns the committed version (``cur`` when ``hits`` is empty)."""
     live = _replay(table, cur)
-    hits = hits.select(F.col("__fp").alias("fp"), F.col("__pos").alias("pos"))
     base = os.path.abspath(table)
-    # files that already carry a DV: broadcast only the compact
-    # descriptors; executors merge old positions in when re-encoding
-    old_by_fp: dict[str, str] = {}
+    # files that already carry a DV: the codec merges their positions in
+    old: dict[str, dict] = {}
+    rows_bound: "int | None" = 0
     for k, add in live.items():
+        n = json.loads((add or {}).get("stats") or "{}").get("numRecords")
+        rows_bound = None if rows_bound is None or n is None else rows_bound + n
         desc = (add or {}).get("deletionVector")
         if desc:
             fp = k if os.path.isabs(k) else os.path.abspath(
                 os.path.join(base, k)
             )
-            old_by_fp[fp] = json.dumps(desc)
-            old_by_fp[os.path.realpath(fp)] = old_by_fp[fp]
-
-    def _encode(batches):
-        """Executor-side DV construction (the mirror of the read path's
-        `_dv_tombstones`): stream the fp-clustered position rows, build
-        and roaring-encode each file's bitmap in the task, write ONE
-        sidecar per task via `write_dv_blobs`, and emit only the
-        compact descriptors. Driver memory is O(touched files), never
-        O(deleted rows) — a 1% delete of a 100 TB table is ~10⁹
-        positions, which must not transit the driver."""
-        import pandas as pd
-
-        from march_mania_spark_lakehouse_spark.sources import (
-            deletion_vectors as _dv,
-        )
-
-        groups: list[tuple[str, bytes, int]] = []
-        cur_fp: str | None = None
-        cur_pos: list[int] = []
-
-        def _flush() -> None:
-            nonlocal cur_fp, cur_pos
-            if cur_fp is None:
-                return
-            positions = cur_pos
-            oj = old_by_fp.get(cur_fp)
-            if oj:
-                positions = sorted(
-                    set(positions)
-                    | set(_dv.read_dv(table, json.loads(oj)))
-                )
-            groups.append((cur_fp, _dv.encode_dv(positions), len(positions)))
-            cur_fp, cur_pos = None, []
-
-        for pdf in batches:
-            for fp, pos in pdf.itertuples(index=False):
-                if fp != cur_fp:
-                    _flush()
-                    cur_fp = fp
-                cur_pos.append(int(pos))
-        _flush()
-        if not groups:
-            return
-        descs = _dv.write_dv_blobs(table, groups)
-        yield pd.DataFrame(
-            {
-                "fp": [fp for fp, _, _ in groups],
-                "dv": [descs[fp]["pathOrInlineDv"] for fp, _, _ in groups],
-                "offset": [descs[fp]["offset"] for fp, _, _ in groups],
-                "size": [descs[fp]["sizeInBytes"] for fp, _, _ in groups],
-                "cardinality": [c for _, _, c in groups],
-            }
-        )
-
-    # repartition on fp so one task owns each file's positions, sorted so
-    # files arrive contiguously; the collect carries one descriptor row
-    # per touched file (compact), the bitmaps stay in the sidecars
-    desc_rows = (
-        hits.repartition("fp")
-        .sortWithinPartitions("fp", "pos")
-        .mapInPandas(
-            _encode,
-            "fp string, dv string, offset long, size long, cardinality long",
-        )
-        .collect()
+            old[fp] = old[os.path.realpath(fp)] = deletion_vectors.locate(
+                table, desc
+            )
+    desc_rows = dv_codec.encode(
+        hits.select(F.col("__fp").alias("fp"), F.col("__pos").alias("pos")),
+        rows_bound,
+        old,
+        functools.partial(_write_dv_sidecar, table),
     )
     if not desc_rows:
         return cur
@@ -3134,11 +3051,11 @@ def _commit_dv_hits(
     ]
     rel_rows = []
     for r in desc_rows:
-        rel = by_real.get(os.path.realpath(r["fp"]))
+        rel = by_real.get(os.path.realpath(r[0]))
         if rel is None:
-            rel = os.path.relpath(r["fp"], base)
+            rel = os.path.relpath(r[0], base)
         rel_rows.append((rel, r))
-    for rel, r in sorted(rel_rows, key=lambda t: t[0]):
+    for rel, (_, dv, offset, size, card) in sorted(rel_rows):
         old = live[rel]
         actions.append(
             {
@@ -3152,10 +3069,10 @@ def _commit_dv_hits(
         new_add = {k: v for k, v in old.items()}
         new_add["deletionVector"] = {
             "storageType": "u",
-            "pathOrInlineDv": r["dv"],
-            "offset": int(r["offset"]),
-            "sizeInBytes": int(r["size"]),
-            "cardinality": int(r["cardinality"]),
+            "pathOrInlineDv": dv,
+            "offset": int(offset),
+            "sizeInBytes": int(size),
+            "cardinality": int(card),
         }
         new_add["dataChange"] = True
         new_add["modificationTime"] = ts

@@ -55,6 +55,7 @@ while queries keep filtering the SOURCE columns.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -66,7 +67,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from march_mania_spark_lakehouse_spark.sources import avro_ocf
+from march_mania_spark_lakehouse_spark.sources import (
+    avro_ocf,
+    deletion_vectors,
+    dv_codec,
+    puffin,
+)
 from march_mania_spark_lakehouse_spark.sources.lineage_diff import lineage_changelog
 from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 
@@ -1249,8 +1255,6 @@ def _write_framed_dvs(
     ``deletion-vector-v1`` blob framing (deliberately, per both public
     specs), so vectors migrated from Delta move verbatim and no bitmap
     is ever decoded."""
-    from march_mania_spark_lakehouse_spark.sources import puffin
-
     name = os.path.join(
         os.path.abspath(table), "data", f"dv-{uuid.uuid4().hex}.puffin"
     )
@@ -2346,60 +2350,50 @@ def snapshot_dv_entries(
     return sorted(out, key=lambda e: e["referenced_data_file"])
 
 
+def _dv_locator(e: dict) -> dict:
+    """`deletion_vectors` locator of a :func:`snapshot_dv_entries`
+    entry: the blob's ``length`` is the framed record (u32 BE size +
+    data + u32 BE CRC), and the entry's ``record_count`` is the
+    cardinality the decoded bitmap must match."""
+    return {
+        "path": e["puffin_path"],
+        "offset": int(e["offset"]),
+        "size": int(e["length"]) - 8,
+        "cardinality": e["cardinality"],
+    }
+
+
 def read_dv_blob(puffin_path: str, offset: int, length: int) -> "list[int]":
     """Decode one ``deletion-vector-v1`` blob (Puffin spec): u32 BE
     combined length of magic+vector, the 4 magic bytes D1 D3 39 64,
     the portable 64-bit roaring bitmap, and a u32 BE CRC-32 of
-    magic+vector. The framing (and the bitmap serialization) is
-    byte-identical to the Delta DV sidecar record — deliberately, per
-    both specs — so the roaring codec in `sources/deletion_vectors.py`
-    is shared verbatim."""
-    import struct as _struct
-    import zlib as _zlib
-
-    from march_mania_spark_lakehouse_spark.sources import deletion_vectors
-
-    with open(puffin_path, "rb") as f:
-        f.seek(offset)
-        blob = f.read(length)
-    (size,) = _struct.unpack_from(">I", blob, 0)
-    data = blob[4 : 4 + size]
-    (crc,) = _struct.unpack_from(">I", blob, 4 + size)
-    if crc != (_zlib.crc32(data) & 0xFFFFFFFF):
-        raise ValueError(f"{puffin_path}@{offset}: DV blob CRC mismatch")
-    (magic,) = _struct.unpack_from("<I", data, 0)
-    if magic != deletion_vectors.MAGIC:
-        raise ValueError(f"{puffin_path}@{offset}: bad DV magic {magic}")
-    return deletion_vectors.deserialize_roaring64(data[4:])
+    magic+vector — byte-identical to the Delta DV sidecar record, so
+    `sources/deletion_vectors.py` parses both."""
+    loc = {"path": puffin_path, "offset": offset, "size": length - 8}
+    return deletion_vectors.positions(loc)
 
 
-def _dv_tombstones(spark: SparkSession, dv_entries: "list[dict]") -> DataFrame:
-    """(__fp, __pos) tombstones from DV entries, expanded ON EXECUTORS:
-    the driver ships O(DV count) descriptors; each task opens its
-    blobs' byte ranges and yields positions — a 10⁹-row DV table costs
-    the driver descriptor rows, never position lists (the same posture
-    as the Delta scan's `_dv_tombstones`)."""
-    import pandas as pd
-
-    rows = [
-        (e["puffin_path"], int(e["offset"]), int(e["length"]),
-         e["referenced_data_file"])
-        for e in dv_entries
-    ]
-    # one DV-blob decode per task when files allow (sources/local_rows.py)
-    desc = local_df(
-        spark, rows, "puffin string, off long, length long, fp string"
+def _dv_tombstones(
+    spark: SparkSession, dv_entries: "list[dict]", old: "dict | None" = None
+) -> DataFrame:
+    """(__fp, __pos) tombstones of DV entries through `dv_codec.decode`
+    (decoded on the driver for small DV sets, on executors above its
+    gate). ``old`` maps a data file to its predecessor DV entry, whose
+    positions are subtracted (the rows one commit's DV added)."""
+    old = old or {}
+    return dv_codec.decode(
+        spark,
+        [
+            (
+                e["referenced_data_file"],
+                _dv_locator(e),
+                _dv_locator(old[e["referenced_data_file"]])
+                if e["referenced_data_file"] in old
+                else None,
+            )
+            for e in dv_entries
+        ],
     )
-
-    def expand(batches):
-        for pdf in batches:
-            for p, o, ln, fp in zip(
-                pdf["puffin"], pdf["off"], pdf["length"], pdf["fp"]
-            ):
-                pos = read_dv_blob(p, int(o), int(ln))
-                yield pd.DataFrame({"__fp": [fp] * len(pos), "__pos": pos})
-
-    return desc.mapInPandas(expand, "__fp string, __pos long")
 
 
 #: normalize Spark's _metadata.file_path URI ("file:///abs") to the
@@ -3056,7 +3050,7 @@ def _apply_delete_files(
             dels = spark.read.parquet(*pos_dels).select(
                 F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
             )
-        if dv_entries:  # v3 deletion vectors: executor-side expansion
+        if dv_entries:  # v3 deletion vectors
             dv = _dv_tombstones(spark, dv_entries)
             dels = dv if dels is None else dels.unionByName(dv)
         df = df.join(F.broadcast(dels), ["__fp", "__pos"], "left_anti")
@@ -4878,10 +4872,7 @@ def convert_from_delta(delta_table: str, iceberg_table: str) -> int:
     (hard-linked layouts soften this: each layer owns its own name)."""
     import pyarrow.parquet as pq
 
-    from march_mania_spark_lakehouse_spark.sources import (
-        delta_log,
-        deletion_vectors,
-    )
+    from march_mania_spark_lakehouse_spark.sources import delta_log
 
     part_cols = delta_log.table_partition_columns(delta_table)
     if current_version(iceberg_table) is not None:
@@ -5061,10 +5052,7 @@ def convert_to_delta(iceberg_table: str, delta_table: str) -> int:
 
     from pyspark.sql import types as T
 
-    from march_mania_spark_lakehouse_spark.sources import (
-        delta_log,
-        deletion_vectors,
-    )
+    from march_mania_spark_lakehouse_spark.sources import delta_log
 
     meta = current_metadata(iceberg_table)
     sid = meta["current-snapshot-id"]
@@ -5090,11 +5078,8 @@ def convert_to_delta(iceberg_table: str, delta_table: str) -> int:
     # bitmaps never decoded, data files never touched
     dv_blobs: "dict[str, tuple[bytes, int]]" = {}
     for e in snapshot_dv_entries(iceberg_table, sid):
-        with open(e["puffin_path"], "rb") as f:
-            f.seek(int(e["offset"]))
-            framed = f.read(int(e["length"]))
         dv_blobs[e["referenced_data_file"]] = (
-            deletion_vectors.unframe_dv(framed),
+            deletion_vectors.read_record(_dv_locator(e)),
             int(e["cardinality"]),
         )
     if delta_log.latest_version(delta_table) is not None:
@@ -5852,10 +5837,7 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     :func:`sync_from_delta` for the mapping)."""
     import pyarrow.parquet as pq
 
-    from march_mania_spark_lakehouse_spark.sources import (
-        delta_log,
-        deletion_vectors,
-    )
+    from march_mania_spark_lakehouse_spark.sources import delta_log
 
     actions = delta_log._read_actions(delta_log._commit_path(delta_table, v))
     meta = dict(current_metadata(iceberg_table))
@@ -6752,10 +6734,7 @@ def _sync_iceberg_snapshot(
     state changed re-adds with a freshly roaring-encoded descriptor —
     cost bounded by the delete-file bytes, data files untouched.
     Equality deletes stay gated (no Delta analogue)."""
-    from march_mania_spark_lakehouse_spark.sources import (
-        delta_log,
-        deletion_vectors,
-    )
+    from march_mania_spark_lakehouse_spark.sources import delta_log
 
     sid = snap["snapshot-id"]
     compensating = base_sid is not _SYNC_BASE_PARENT
@@ -7055,15 +7034,14 @@ def _sync_iceberg_snapshot(
             ],
         )
     elif dv_changed:
-        items = []
-        for fp in dv_changed:
-            e = cur_dvs[fp]
-            with open(e["puffin_path"], "rb") as f:
-                f.seek(int(e["offset"]))
-                framed = f.read(int(e["length"]))
-            items.append(
-                (fp, deletion_vectors.unframe_dv(framed), int(e["cardinality"]))
+        items = [
+            (
+                fp,
+                deletion_vectors.read_record(_dv_locator(cur_dvs[fp])),
+                int(cur_dvs[fp]["cardinality"]),
             )
+            for fp in dv_changed
+        ]
         descriptors = deletion_vectors.write_dv_blobs(delta_table, items)
 
     ts = _now_ms()
@@ -7185,6 +7163,24 @@ def _sync_iceberg_snapshot(
     delta_log._write_commit(delta_table, v, actions)
 
 
+def _write_dv_puffin(
+    table: str, snapshot_id: int, seq: int, items: "list[tuple]"
+) -> "list[tuple]":
+    """`dv_codec.encode`'s container writer: :func:`_write_framed_dvs`
+    over ``(data file, encode_dv bytes, cardinality)`` items; returns
+    (file, puffin path, blob offset, blob length, cardinality) per
+    blob."""
+    entries = _write_framed_dvs(
+        table, snapshot_id, seq,
+        [(fp, deletion_vectors.frame_dv(data), n) for fp, data, n in items],
+    )
+    return [
+        (d["referenced_data_file"], d["file_path"], d["content_offset"],
+         d["content_size_in_bytes"], d["record_count"])
+        for d in (e["data_file"] for e in entries)
+    ]
+
+
 def _commit_dv_delete(
     spark: SparkSession,
     table: str,
@@ -7198,15 +7194,13 @@ def _commit_dv_delete(
     snapshot; a new DV MERGES and REPLACES the file's previous one —
     readers apply exactly one bitmap per file, never a chain).
 
-    Scale shape, mirroring `delta_log.delete_where`: the hit rows
-    shuffle ONCE on file_path; each task roaring-encodes its files'
-    positions and writes ONE ``.puffin`` sidecar holding all its blobs
-    (a DELETE touching 10k files costs O(tasks) new objects), and the
-    driver only ever collects COMPACT DESCRIPTORS — (file, offset,
-    length, cardinality) — never position lists, so a 10⁹-row delete
-    cannot OOM the driver. Existing DVs are merged EXECUTOR-side too:
-    each hit row carries its file's old-DV descriptor via a broadcast
-    join, and the task reads that blob's byte range directly.
+    The blobs are built by `dv_codec.encode`, gated on the snapshot's
+    live data rows (from the manifest list's row counts, an upper bound
+    on the hits): a small table encodes on the driver into one
+    ``.puffin`` file; above the gate each task encodes its files and
+    writes one ``.puffin`` sidecar, and the driver only collects
+    descriptors, so a 10⁹-row delete cannot OOM the driver. Either way
+    the file's previous DV is merged in.
 
     Commit: the previous delete manifests are consolidated into one
     manifest that keeps every surviving entry (eq-deletes, DVs of
@@ -7214,118 +7208,40 @@ def _commit_dv_delete(
     ORIGINAL sequence numbers and adds the new DVs as status-1 entries;
     replaced DV entries are dropped. Data manifests ride unchanged.
     """
-    import pandas as pd
-
     sid = meta["current-snapshot-id"]
     snap = _snapshot(meta, sid)
     snapshot_id, seq = _next_snapshot(meta)
-    abs_table = os.path.abspath(table)
-
-    existing = snapshot_dv_entries(table, sid)
-    if existing:
-        desc = local_df(
-            spark,
-            [
-                (
-                    e["referenced_data_file"],
-                    e["puffin_path"],
-                    int(e["offset"]),
-                    int(e["length"]),
-                )
-                for e in existing
-            ],
-            "file_path string, old_puffin string, old_off long, old_len long",
-        )
-        hits = hits.join(F.broadcast(desc), "file_path", "left")
-    else:
-        hits = hits.select(
-            "file_path",
-            "pos",
-            F.lit(None).cast("string").alias("old_puffin"),
-            F.lit(None).cast("long").alias("old_off"),
-            F.lit(None).cast("long").alias("old_len"),
-        )
-
-    def encode_task(batches):
-        import struct as _struct
-        import uuid as _uuid
-        import zlib as _zlib
-
-        from march_mania_spark_lakehouse_spark.sources import (
-            deletion_vectors,
-            puffin as _puffin,
-        )
-
-        acc: dict = {}  # fp -> [positions set, old blob triple | None]
-        for pdf in batches:
-            for fp, pos, op, oo, ol in zip(
-                pdf["file_path"], pdf["pos"], pdf["old_puffin"],
-                pdf["old_off"], pdf["old_len"],
-            ):
-                st = acc.setdefault(fp, [set(), None])
-                st[0].add(int(pos))
-                if isinstance(op, str):
-                    st[1] = (op, int(oo), int(ol))
-        if not acc:
-            return
-        blobs, cards = [], []
-        for fp in sorted(acc):
-            s, old = acc[fp]
-            if old is not None:
-                s |= set(read_dv_blob(*old))
-            data = deletion_vectors.encode_dv(sorted(s))
-            payload = (
-                _struct.pack(">I", len(data))
-                + data
-                + _struct.pack(">I", _zlib.crc32(data) & 0xFFFFFFFF)
-            )
-            blobs.append(
-                {
-                    "type": "deletion-vector-v1",
-                    "fields": [],
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "payload": payload,
-                    "properties": {
-                        "referenced-data-file": fp,
-                        "cardinality": str(len(s)),
-                    },
-                }
-            )
-            cards.append((fp, len(s)))
-        name = os.path.join(
-            abs_table, "data", f"dv-{_uuid.uuid4().hex}.puffin"
-        )
-        os.makedirs(os.path.dirname(name), exist_ok=True)
-        info = _puffin.write_puffin(name, blobs)
-        yield pd.DataFrame(
-            {
-                "file_path": [fp for fp, _ in cards],
-                "puffin": [name] * len(cards),
-                "off": [bm["offset"] for bm in info["blob-metadata"]],
-                "length": [bm["length"] for bm in info["blob-metadata"]],
-                "card": [c for _, c in cards],
-            }
-        )
-
-    desc_rows = (
-        hits.repartition("file_path")
-        .mapInPandas(
-            encode_task,
-            "file_path string, puffin string, off long, length long, "
-            "card long",
-        )
-        .collect()
+    manifests = avro_ocf.read_ocf(snap["manifest-list"])
+    counts = [
+        (m.get("added_rows_count"), m.get("existing_rows_count"))
+        for m in manifests
+        if m.get("content", 0) == 0
+    ]
+    bound = (
+        sum(a + e for a, e in counts)
+        if all(a is not None and e is not None for a, e in counts)
+        else None
+    )
+    desc_rows = dv_codec.encode(
+        hits.select(F.col("file_path").alias("fp"), "pos"),
+        bound,
+        {
+            e["referenced_data_file"]: _dv_locator(e)
+            for e in snapshot_dv_entries(table, sid)
+        },
+        functools.partial(
+            _write_dv_puffin, os.path.abspath(table), snapshot_id, seq
+        ),
     )
     if not desc_rows and not drop_position_deletes:
         return sid  # nothing matched: no commit
     # (a rewrite with zero live tombstones still commits: the stale
     # position-delete parquet entries must drop from the new snapshot)
 
-    touched = {r["file_path"] for r in desc_rows}
+    touched = {r[0] for r in desc_rows}
     data_ml: list[dict] = []
     records: list[dict] = []
-    for m in avro_ocf.read_ocf(snap["manifest-list"]):
+    for m in manifests:
         if m.get("content", 0) == 0:
             data_ml.append(m)
             continue
@@ -7346,11 +7262,8 @@ def _commit_dv_delete(
             if not replaced:
                 records.append(_existing(e))
     records += [
-        _dv_entry(
-            snapshot_id, seq, r["puffin"], r["file_path"], r["off"],
-            r["length"], r["card"],
-        )
-        for r in sorted(desc_rows, key=lambda r: r["file_path"])
+        _dv_entry(snapshot_id, seq, path, fp, off, length, card)
+        for fp, path, off, length, card in sorted(desc_rows)
     ]
     return _publish_snapshot(
         table, meta, snapshot_id, seq,
@@ -8021,9 +7934,8 @@ def table_changes(
     for dseq in sorted(dv_dels):
         # v3 deletion vectors: a DV REPLACES the file's previous DV, so
         # the rows THIS commit killed are (new positions − the parent
-        # snapshot's positions for the same file) — both sides expanded
-        # executor-side from descriptors, rows recovered from ONLY the
-        # referenced data files
+        # snapshot's positions for the same file), rows recovered from
+        # ONLY the referenced data files
         snap_s = next(
             s for s in meta["snapshots"] if s["sequence-number"] == dseq
         )
@@ -8042,19 +7954,11 @@ def table_changes(
                 "offset": d["content_offset"],
                 "length": d["content_size_in_bytes"],
                 "referenced_data_file": d["referenced_data_file"],
+                "cardinality": d["record_count"],
             }
             for d in dv_dels[dseq]
         ]
-        tomb = _dv_tombstones(spark, new_entries)
-        old = [
-            parent_dvs[d["referenced_data_file"]]
-            for d in dv_dels[dseq]
-            if d["referenced_data_file"] in parent_dvs
-        ]
-        if old:
-            tomb = tomb.join(
-                _dv_tombstones(spark, old), ["__fp", "__pos"], "left_anti"
-            )
+        tomb = _dv_tombstones(spark, new_entries, parent_dvs)
         ref_files = sorted(
             {
                 os.path.relpath(
@@ -8256,8 +8160,6 @@ def write_statistics(
     ``ndv`` blob property carrying the estimate, which is what engines
     read for CBO inputs without decoding the sketch. Metadata-only
     commit; returns the statistics entry written."""
-    from march_mania_spark_lakehouse_spark.sources import puffin
-
     meta = current_metadata(table)
     sid = meta["current-snapshot-id"] if snapshot_id is None else snapshot_id
     snap = _snapshot(meta, sid)
@@ -8339,8 +8241,6 @@ def inspect_statistics(spark: SparkSession, table: str) -> DataFrame:
     sketch payload itself — a reader that distrusts the property can
     check the blob. Columns: snapshot_id, column, blob_type, ndv,
     sketch_ndv, payload_bytes."""
-    from march_mania_spark_lakehouse_spark.sources import puffin
-
     meta = current_metadata(table)
     schema = meta["schemas"][meta["current-schema-id"]]
     by_id = {f["id"]: f["name"] for f in schema["fields"]}

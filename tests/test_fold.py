@@ -229,6 +229,22 @@ def test_keys_pandas_cannot_tell_apart_stay_separate(spark):
     assert sorted((r["n_rows"], r["decayed_value"]) for r in b) == [(1, 1.0), (2, 5.0)]
 
 
+def test_long_keys_beside_a_null_come_back_exact(spark):
+    """A long key column holding a null reaches the fold without a
+    float64 detour: keys 2^53 and 2^53+1 in the same batch as a null key
+    are emitted as themselves, not both as 9007199254740992."""
+    big = 2**53
+    longs = spark.createDataFrame(
+        [(big, 1, 1.0), (big + 1, 1, 2.0), (None, 1, 4.0)],
+        "g long, seq long, value double",
+    )
+    with _conf(spark, **{"spark.sql.shuffle.partitions": "1"}):
+        got = fold.exp_decay_fold(longs, ["g"], ["seq"], "value", 0.5).collect()
+    assert sorted(
+        ((r["g"] is None, r["g"] or 0), r["decayed_value"]) for r in got
+    ) == [((False, big), 1.0), ((False, big + 1), 2.0), ((True, 0), 4.0)]
+
+
 def test_null_order_values_sort_last(spark):
     """Rows with a null order value fold after every non-null one, in
     each order column in turn (pandas' mergesort put nulls last)."""
@@ -285,9 +301,9 @@ def test_unrounded_decay_is_bit_equal_to_polyval(spark, sf_dir):
 
 
 def test_q31_plan_streams_sorted_partitions(spark, sf_dir):
-    """q31's executed plan folds sorted partitions in one MapInPandas:
+    """q31's executed plan folds sorted partitions in one MapInArrow:
     no grouped-map operator, and exactly one Exchange and one Sort
-    beneath the MapInPandas (the per-group sort is the JVM's)."""
+    beneath the MapInArrow (the per-group sort is the JVM's)."""
     import re
 
     from march_mania_spark_lakehouse_spark.plans.queries_fold import q31
@@ -302,8 +318,8 @@ def test_q31_plan_streams_sorted_partitions(spark, sf_dir):
     ]
     names = [n for _, n in nodes]
     assert "FlatMapGroupsInPandas" not in names
-    assert names.count("MapInPandas") == 1
-    at = names.index("MapInPandas")
+    assert names.count("MapInArrow") == 1
+    at = names.index("MapInArrow")
     under = []
     for depth, name in nodes[at + 1:]:
         if depth <= nodes[at][0]:

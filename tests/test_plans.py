@@ -298,6 +298,20 @@ def test_tpch_completion_plan_shapes(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan21
 
 
+def test_q155_reads_lineitem_once(spark, sf_dir):
+    """q155's per-part and grand-total branches share one fact pass: in
+    the final adaptive plan lineitem is scanned once and the total's
+    branch reads the per-part partial-aggregate exchange as a
+    ReusedExchange (AQE's runtime stage reuse; the initial plan still
+    shows the subtree twice)."""
+    df = all_queries()["q155_tpch_q11_important_parts"].fn(spark, sf_dir)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("lineitem.parquet") == 1, final
+    assert "ReusedExchange" in final, final
+
+
 def test_metadata_files_table_reads_manifests_on_executors(
     spark, tmp_path
 ):

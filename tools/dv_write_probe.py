@@ -11,11 +11,12 @@ run `delete_where` matching ~10% of rows on each, and record
   the scan),
 - the DELETE's deleted-row count (from descriptor cardinalities — also
   cross-checks the commit), and
-- the driver's ru_maxrss HIGH-WATER growth across the K× delete. With
-  the old path (positions collected via applyInPandas, bitmaps
-  serialized on the driver) this grows by hundreds of MB at 6M
-  positions; with executor-side encoding it stays flat (the driver
-  sees one compact descriptor row per touched file).
+- the driver's ru_maxrss HIGH-WATER growth across the K× delete. The
+  K× table is above `dv_codec.SMALL_DV_ROWS`, so its DELETE encodes on
+  executors and the growth stays flat (the driver sees one compact
+  descriptor row per touched file); collecting 6M positions to the
+  driver instead grows it by hundreds of MB. The 1× table (150k rows)
+  is under the gate and encodes on the driver.
 
 Usage: python tools/dv_write_probe.py [--k K]
 Prints one JSON line.
