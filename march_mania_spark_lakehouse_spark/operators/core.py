@@ -21,7 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from march_mania_spark_lakehouse_spark.functions.numeric import DEC
+from march_mania_spark_lakehouse_spark.functions.numeric import exact_sum
 
 
 def _cols(cols: Sequence[Column | str]) -> list[Column]:
@@ -83,7 +83,7 @@ def causal_rolling_avg(
         .rowsBetween(-last_n, -1)
     )
     val = F.col(value_col)
-    rolling = F.sum(val.cast(DEC)).over(w).cast("double") / F.count(val).over(w)
+    rolling = exact_sum(val, w) / F.count(val).over(w)
     return df.withColumn(out_col, rolling)
 
 

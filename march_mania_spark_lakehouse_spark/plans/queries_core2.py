@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
-from march_mania_spark_lakehouse_spark.functions.numeric import DEC, dsum, sql_dsum
+from march_mania_spark_lakehouse_spark.functions.numeric import dsum, exact_sum, sql_dsum
 from march_mania_spark_lakehouse_spark.operators.core import rebalance_scan
 from march_mania_spark_lakehouse_spark.plans.registry import query
 
@@ -47,7 +47,7 @@ def q35(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dense_rank().over(w).alias("drnk"),
         F.lag("value").over(w).alias("prev_value"),
         F.lead("value").over(w).alias("next_value"),
-        F.sum(F.col("value").cast(DEC)).over(wcum).cast("double").alias("running_value"),
+        exact_sum("value", wcum).alias("running_value"),
     )
 
 
@@ -126,7 +126,7 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).cast("double"))
+        .agg(exact_sum("l_quantity"))
         .withColumnRenamed("O", "qty_O")
         .withColumnRenamed("F", "qty_F")
     )
@@ -303,7 +303,7 @@ def q44(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         "user_id",
-        F.sum(F.col("value").cast(DEC)).over(w).cast("double").alias("trailing_1h_value"),
+        exact_sum("value", w).alias("trailing_1h_value"),
     )
 
 

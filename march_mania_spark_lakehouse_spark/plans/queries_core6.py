@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
-from march_mania_spark_lakehouse_spark.functions.numeric import dsum, sql_dsum
+from march_mania_spark_lakehouse_spark.functions.numeric import dsum, exact_sum, sql_dsum
 from march_mania_spark_lakehouse_spark.plans.registry import query
 
 _Q123_SQL = f"""
@@ -118,10 +118,7 @@ def q127(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = (
         ev.filter(F.col("event_type") == "purchase")
         .withColumn("n_purchases", F.row_number().over(w))
-        .withColumn(
-            "cum_value",
-            F.sum(F.col("value").cast("decimal(28,6)")).over(w).cast("double"),
-        )
+        .withColumn("cum_value", exact_sum("value", w))
         .select(
             "user_id", F.col("ts").alias("valid_from"), "n_purchases", "cum_value"
         )

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
-from march_mania_spark_lakehouse_spark.functions.numeric import DEC, dsum, sql_dsum
+from march_mania_spark_lakehouse_spark.functions.numeric import DEC, dsum, exact_sum, sql_dsum
 from march_mania_spark_lakehouse_spark.plans.registry import query
 
 # --------------------------------------------------------------------------
@@ -290,8 +290,8 @@ def q158(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.lit(100.0)
-                * F.sum(promo.cast("decimal(28,6)")).cast("double")
-                / F.sum(rev.cast("decimal(28,6)")).cast("double")
+                * exact_sum(promo)
+                / exact_sum(rev)
             ).alias("promo_revenue_pct")
         )
     )

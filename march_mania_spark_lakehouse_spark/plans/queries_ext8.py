@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
+from march_mania_spark_lakehouse_spark.functions.numeric import davg, dsum
 from march_mania_spark_lakehouse_spark.operators import dedup, similarity
 from march_mania_spark_lakehouse_spark.plans.registry import query
 
@@ -558,11 +559,7 @@ def q168(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = emb.select(
         "label", F.posexplode(F.col("embedding")).alias("dim", "v")
     ).select("label", "dim", F.col("v").cast("double").alias("v"))
-    return ex.groupBy("label", "dim").agg(
-        (
-            F.sum(F.col("v").cast("decimal(28,6)")).cast("double") / F.count("v")
-        ).alias("centroid")
-    )
+    return ex.groupBy("label", "dim").agg(davg("v", "centroid"))
 
 
 # --------------------------------------------------------------------------
@@ -610,9 +607,7 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(28,6)"))
-            .cast("double")
-            .alias("revenue"),
+            dsum("o_totalprice", "revenue"),
             F.count("o_orderkey").alias("n_orders"),
         )
     )
@@ -620,7 +615,7 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = rev.withColumn("decile", F.ntile(10).over(w))
     return d.groupBy("decile").agg(
         F.count(F.lit(1)).alias("customers"),
-        F.sum(F.col("revenue").cast("decimal(28,6)")).cast("double").alias("decile_revenue"),
+        dsum("revenue", "decile_revenue"),
         F.sum("n_orders").alias("decile_orders"),
     )
 

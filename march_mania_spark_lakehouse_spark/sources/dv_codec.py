@@ -47,6 +47,11 @@ from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 #: 0.40 vs 1.04 s, 1.02 vs 1.48 s, 1.81 vs 1.72 s. The session's first
 #: ``mapInPandas`` adds 2.5–3.3 s of worker start, and the driver's
 #: max RSS grows ~40 MB per 500k positions. The paths cross near 500k.
+#: Re-measured for decode once ``local_df`` typed array columns per
+#: column instead of per element (same host and method): 0.33 vs 0.77 s
+#: at 200k, 0.40 vs 0.69 s at 500k, 0.68 vs 0.86 s at 1M, so decode
+#: alone now crosses above 1M. Encode, which does not build an array
+#: column, was not re-measured; the shared gate stays at its 500k.
 SMALL_DV_ROWS = 500_000
 
 #: Above this many decoded positions the tombstone frame is not

@@ -21,10 +21,18 @@ defaultParallelism)`` partitions, so callers that want one unit of
 executor work per row (one DV decode, one manifest read) get that
 fan-out without asking for it.
 
-Rows are checked with Spark's own row verifier and converted on the
-driver when the frame is built, so a malformed row (wrong arity, a
-value of the wrong type, a null in a non-nullable field) raises at the
-call site, not at the first action.
+Rows are checked and converted on the driver when the frame is built,
+so a malformed row (wrong arity, a value of the wrong type, a null in a
+non-nullable field) raises at the call site, not at the first action.
+Scalar fields go through Spark's own per-value verifier. Array fields of
+atomic elements are checked once per value (a list or tuple, or an
+allowed null) and once per column: Arrow infers the column's element
+type in C++, which must be of the schema's kind (integer, floating,
+string, bool, binary), and the cast to the schema type range-checks
+narrower integers. Spark's verifier calls Python per element: for 8 rows
+holding 500k positions in ``array<long>`` (``dv_codec.decode``'s driver
+path) a warm ``local_df`` call took 0.26 s with it and 0.07 s with the
+column check (4-core host).
 """
 
 from __future__ import annotations
@@ -33,9 +41,62 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def _column(values: list, field: T.StructField, arrow_type):
+def _element_kind(field: T.StructField):
+    """The Arrow type test an array field's elements must pass, or
+    None when the field is not an array of atomic elements."""
     import pyarrow as pa
 
+    if not isinstance(field.dataType, T.ArrayType):
+        return None
+    el = field.dataType.elementType
+    if isinstance(el, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return pa.types.is_integer
+    if isinstance(el, (T.FloatType, T.DoubleType)):
+        return pa.types.is_floating
+    return {
+        T.StringType: pa.types.is_string,
+        T.BooleanType: pa.types.is_boolean,
+        T.BinaryType: pa.types.is_binary,
+    }.get(type(el))
+
+
+def _check_array_value(field: T.StructField):
+    def check(v):
+        if v is None:
+            if not field.nullable:
+                raise ValueError(f"field {field.name}: not nullable, got None")
+        elif not isinstance(v, (list, tuple)):
+            raise TypeError(
+                f"field {field.name}: {field.dataType} can not accept {type(v)}"
+            )
+
+    return check
+
+
+def _array_column(values: list, field: T.StructField, arrow_type, kind):
+    """One Arrow conversion and one type check for a whole array column."""
+    import pyarrow as pa
+
+    try:
+        arr = pa.array(values)
+    except (pa.ArrowException, OverflowError) as e:
+        raise TypeError(f"field {field.name}: {e}") from e
+    got = arr.type.value_type if pa.types.is_list(arr.type) else pa.null()
+    if not (pa.types.is_null(got) or kind(got)):
+        raise TypeError(
+            f"field {field.name}: {field.dataType} can not accept elements of "
+            f"Arrow type {got}"
+        )
+    if not field.dataType.containsNull and arr.flatten().null_count:
+        raise ValueError(f"field {field.name}: elements are not nullable")
+    return arr.cast(arrow_type)
+
+
+def _column(values: list, field: T.StructField, arrow_type, kind):
+    import pyarrow as pa
+
+    if kind is not None:
+        return _array_column(values, field, arrow_type, kind)
     if isinstance(field.dataType, T.TimestampType):
         # Spark's own conversion (naive = local time, aware = its
         # offset), so values match ``createDataFrame(list)`` exactly
@@ -60,12 +121,22 @@ def local_df(
     )
     arrow_schema = to_arrow_schema(struct)
     rows = rows if isinstance(rows, list) else list(rows)
-    # the same per-row check ``createDataFrame(list, schema)`` runs
-    verify = T._make_type_verifier(struct)
+    # ``createDataFrame(list, schema)``'s per-row check, except that
+    # atomic-element arrays are typed per column in ``_array_column``
+    kinds = [_element_kind(f) for f in struct.fields]
+    checks = [
+        T._make_type_verifier(f.dataType, f.nullable, name=f"field {f.name}")
+        if kind is None
+        else _check_array_value(f)
+        for f, kind in zip(struct.fields, kinds)
+    ]
     for r in rows:
-        verify(r)
+        if len(r) != len(checks):
+            raise ValueError(f"row {r!r} has {len(r)} fields, schema has {len(checks)}")
+        for check, v in zip(checks, r):
+            check(v)
     columns = [
-        _column([r[i] for r in rows], f, arrow_schema.field(i).type)
+        _column([r[i] for r in rows], f, arrow_schema.field(i).type, kinds[i])
         for i, f in enumerate(struct.fields)
     ]
     table = pa.Table.from_arrays(columns, schema=arrow_schema)

@@ -9,6 +9,8 @@ bug even when results stay correct.
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
@@ -376,3 +378,25 @@ def test_q01_filter_pushdown_no_rebalance(spark, sf_dir):
     assert "LessThanOrEqual(l_shipdate" in plan
     assert "RoundRobinPartitioning" not in plan
     assert "l_comment" not in plan  # projection pruning intact
+
+
+def test_q01_sums_long_backed_unscaled_values(spark, sf_dir):
+    """q01's exact sums run through `functions/numeric`'s long-backed
+    kernel: every SUM adds `decimal(38,0)` millionths whose fast branch
+    is `rint` through a long, and the per-row `decimal(28,6)` cast (a
+    BigDecimal per row) appears only in the CASE fallback. A revert to
+    `F.sum(x.cast("decimal(28,6)"))` fails here."""
+    df = all_queries()["q01_pricing_summary"].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    sums = re.findall(r"sum\((\w+)", plan)
+    assert sums and set(sums) == {"CASE"}, sums
+    kernels = re.findall(r"sum\(CASE WHEN (.*?) THEN (.*?) ELSE (.*?) END\)", plan)
+    assert len(kernels) == len(sums) == 6
+    for cond, fast, fallback in kernels:
+        assert "rint(" in cond and "decimal" not in cond
+        assert fast.startswith("cast(cast(rint(") and fast.endswith(
+            "as bigint) as decimal(38,0))"
+        ), fast
+        assert "as decimal(28,6)" in fallback
+        assert fallback.endswith("as decimal(38,0))"), fallback
+    assert plan.count("as decimal(28,6)") == len(kernels)
