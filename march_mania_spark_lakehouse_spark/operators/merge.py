@@ -39,20 +39,15 @@ def merge_upsert(
         WHEN MATCHED THEN UPDATE SET *
         WHEN NOT MATCHED AND NOT changes.deleted THEN INSERT *
     """
-    if delete_col is not None:
-        live = changes.filter(~F.col(delete_col)).drop(delete_col)
-        dead_keys = changes.filter(F.col(delete_col)).select(*keys).distinct()
-    else:
-        live = changes
-        dead_keys = None
+    live = (
+        changes
+        if delete_col is None
+        else changes.filter(~F.col(delete_col)).drop(delete_col)
+    )
+    # every changeset key leaves `base`, tombstones included: a deleted
+    # key is then in neither side of the union
     touched = changes.select(*keys).distinct()
-    kept = base.join(touched, on=keys, how="left_anti")
-    out = kept.unionByName(live)
-    if dead_keys is not None:
-        # tombstoned keys were already excluded from `kept` via `touched`;
-        # nothing to add back — deletes are the rows in neither side.
-        pass
-    return out
+    return base.join(touched, on=keys, how="left_anti").unionByName(live)
 
 
 def scd2_apply(

@@ -459,19 +459,8 @@ def create(
     if latest_version(table) is not None:
         raise FileExistsError(f"{table} already has a Delta log")
     os.makedirs(table, exist_ok=True)
-    proto = dict(PROTOCOL)
-    if row_tracking:
-        # rowTracking (+ its domainMetadata dependency, per spec) with
-        # the materialized-column names recorded in configuration
-        proto = _merge_protocol(proto, ROW_TRACKING_PROTOCOL)
-        configuration = {
-            **(configuration or {}),
-            "delta.enableRowTracking": "true",
-            "delta.rowTracking.materializedRowIdColumnName":
-                MATERIALIZED_ROW_ID_COL,
-            "delta.rowTracking.materializedRowCommitVersionColumnName":
-                MATERIALIZED_ROW_COMMIT_COL,
-        }
+    proto, tracking_conf = _new_table_protocol(row_tracking)
+    configuration = {**(configuration or {}), **tracking_conf}
     files = _stage_data_files(df, table, partition_by)
     actions = [
         _commit_info("CREATE TABLE AS SELECT", {"mode": "ErrorIfExists"}),
@@ -2599,6 +2588,22 @@ def _merge_protocol(base: "dict | None", extra: dict) -> dict:
         if fs:
             out[k] = sorted(fs)
     return out
+
+
+def _new_table_protocol(row_tracking: bool) -> "tuple[dict, dict]":
+    """(protocol, configuration) of a new table: the base protocol, or
+    with ``row_tracking`` the rowTracking feature (+ its domainMetadata
+    dependency, per spec) and the materialized-column names recorded in
+    configuration."""
+    if not row_tracking:
+        return dict(PROTOCOL), {}
+    return _merge_protocol(PROTOCOL, ROW_TRACKING_PROTOCOL), {
+        "delta.enableRowTracking": "true",
+        "delta.rowTracking.materializedRowIdColumnName":
+            MATERIALIZED_ROW_ID_COL,
+        "delta.rowTracking.materializedRowCommitVersionColumnName":
+            MATERIALIZED_ROW_COMMIT_COL,
+    }
 
 
 def _row_tracking_enabled(table: str, version: int) -> bool:

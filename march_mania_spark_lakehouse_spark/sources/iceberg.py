@@ -63,6 +63,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1522,6 +1523,38 @@ def _publish_snapshot(
     return snapshot_id
 
 
+def _new_table_metadata(
+    table: str,
+    schema: dict,
+    spec_fields: "list[dict]",
+    properties: dict,
+    format_version: int = FORMAT_VERSION,
+) -> dict:
+    """Metadata of a new table at ``table`` before its first snapshot:
+    ``schema`` as schema 0, ``spec_fields`` as partition spec 0, no
+    sort order, and ``properties`` over the parquet write default."""
+    return {
+        "format-version": format_version,
+        "table-uuid": str(uuid.uuid4()),
+        "location": os.path.abspath(table),
+        "last-sequence-number": 0,
+        "last-updated-ms": _now_ms(),
+        "last-column-id": _max_field_id(schema),
+        "current-schema-id": 0,
+        "schemas": [schema],
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+        "last-partition-id": 999 + len(spec_fields),
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": {"write.format.default": "parquet", **properties},
+        "current-snapshot-id": -1,
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+    }
+
+
 # --------------------------------------------------------------------------
 # Public write API
 # --------------------------------------------------------------------------
@@ -1574,26 +1607,7 @@ def create(
         }
         for i, p in enumerate(parsed)
     ]
-    meta = {
-        "format-version": format_version,
-        "table-uuid": str(uuid.uuid4()),
-        "location": os.path.abspath(table),
-        "last-sequence-number": 0,
-        "last-updated-ms": _now_ms(),
-        "last-column-id": _max_field_id(schema),
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "last-partition-id": 999 + len(spec_fields),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"write.format.default": "parquet"},
-        "current-snapshot-id": -1,
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-    }
+    meta = _new_table_metadata(table, schema, spec_fields, {}, format_version)
     return _commit_snapshot(df, table, meta, "append", False, stat_cols, summary)
 
 
@@ -2202,7 +2216,6 @@ def _commit_snapshot(
     stat_cols: Sequence[str] = (),
     summary: dict | None = None,
     staged_files: "list[tuple[str, dict, int, int]] | None" = None,
-    extra_manifests=None,
     assign_row_ids: bool = True,
     explicit_row_ids: "Sequence[int | None] | None" = None,
 ) -> int:
@@ -2210,17 +2223,8 @@ def _commit_snapshot(
     commit's files — the rewrite paths use it when the staged parquet
     already MATERIALIZES ``_row_id`` (a file must inherit or
     materialize, never both). ``explicit_row_ids`` (aligned with
-    ``staged_files``) CARRIES foreign ids instead of assigning — the
-    cross-format conversion path; the caller is then responsible for
-    setting ``next-row-id`` in ``meta`` above the carried ids.
-
-    ``extra_manifests``, when given, is a callable
-    ``(snapshot_id, seq) -> list[manifest-list entry]`` invoked after
-    the data manifest is written — the hook `convert_from_delta` uses
-    to land migrated deletion-vector manifests in the SAME snapshot as
-    the data they mask (the sequence rule: a DV at seq N applies to
-    data files with seq <= N, so one atomic commit keeps every
-    intermediate state consistent)."""
+    ``staged_files``) CARRIES ids this table already allocated instead
+    of assigning (the `cherry_pick` path)."""
     snapshot_id, seq = _next_snapshot(meta)
     files = (
         staged_files
@@ -2242,8 +2246,6 @@ def _commit_snapshot(
             first_row_id=first_rid, explicit_row_ids=explicit_row_ids,
         )
     ]
-    if extra_manifests is not None:
-        manifests += extra_manifests(snapshot_id, seq)
     parent = meta.get("current-snapshot-id", -1)
     parent = None if parent == -1 else parent
     if not replace and parent is not None:
@@ -4590,32 +4592,23 @@ def clone(table: str, target: str) -> int:
         dict(s)
         for s in meta.get("partition-specs", [{"spec-id": 0, "fields": []}])
     ]
-    new_meta = {
-        "format-version": FORMAT_VERSION,
-        "table-uuid": str(uuid.uuid4()),
-        "location": os.path.abspath(target),
-        # the clone's one snapshot lands at the source's last sequence
-        # number, at or above every carried entry's
-        "last-sequence-number": max(meta["last-sequence-number"], 1) - 1,
-        "last-updated-ms": _now_ms(),
-        "last-column-id": meta["last-column-id"],
-        "current-schema-id": 0,
-        "schemas": [dict(schema, **{"schema-id": 0})],
-        "default-spec-id": meta.get("default-spec-id", 0),
-        "partition-specs": specs,
-        "last-partition-id": meta.get("last-partition-id", 999),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
-            "write.format.default": "parquet",
-            "cloned-from": os.path.abspath(table),
-            "cloned-snapshot-id": str(sid),
-        },
-        "current-snapshot-id": -1,
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-    }
+    new_meta = _new_table_metadata(
+        target,
+        dict(schema, **{"schema-id": 0}),
+        [],
+        {"cloned-from": os.path.abspath(table), "cloned-snapshot-id": str(sid)},
+    )
+    new_meta.update(
+        {
+            # the clone's one snapshot lands at the source's last
+            # sequence number, at or above every carried entry's
+            "last-sequence-number": max(meta["last-sequence-number"], 1) - 1,
+            "last-column-id": meta["last-column-id"],
+            "default-spec-id": meta.get("default-spec-id", 0),
+            "partition-specs": specs,
+            "last-partition-id": meta.get("last-partition-id", 999),
+        }
+    )
     snap = _snapshot(meta, sid)
     #: live entries grouped per source SPEC and kind (an evolved
     #: table's generations have different partition-tuple shapes, so
@@ -4838,50 +4831,33 @@ def _delta_linked_rel(part_cols, pv: dict, delta_rel: str) -> str:
 
 def convert_from_delta(delta_table: str, iceberg_table: str) -> int:
     """In-place metadata migration: register a Delta table's CURRENT
-    snapshot as a new Iceberg table WITHOUT copying or rewriting any
-    data file — the Iceberg manifests point at the Delta table's
-    existing parquet files (what real catalog-migration tools do; data
-    movement at 100 TB is the cost being avoided). Row counts come from
-    the Delta add-action stats when present, else the parquet footers.
+    snapshot as a new Iceberg table over the same data files, with zero
+    data bytes copied. Returns the snapshot id.
 
-    After conversion the two metadata layers coexist over the same
-    bytes: Delta time travel keeps working on the old log, and the
-    Iceberg head serves the same rows — pinned by the interop test
-    where BOTH independent clean-room readers must agree on the row
-    multiset. Unpartitioned sources are referenced IN PLACE (absolute
-    paths in the manifests); a hive-partitioned source maps to an
-    IDENTITY partition spec with its data files HARD-LINKED into the
-    Iceberg table's own hive layout — still zero data bytes copied
-    (same inodes), but basePath-driven partition restoration works on
-    both layers independently, and deleting either table's name for a
-    file cannot strand the other's.
+    Gates: ``iceberg_table`` has no Iceberg metadata yet, and no Delta
+    partition column is a timestamp (identity partitions on it are
+    unbounded, the `create` rule). The table gets an identity spec over
+    the Delta partition columns; a row-tracking source makes it v3.
 
-    Deletion vectors CONVERT (round-10): a source with live Delta DVs
-    becomes an Iceberg **v3** table whose data manifest and a Puffin
-    DV manifest land in ONE ``operation='delete'`` snapshot — the
-    sidecar-record framing is byte-identical to a Puffin
-    ``deletion-vector-v1`` blob (deliberately, per both public specs),
-    so the framed bitmap bytes move VERBATIM into a fresh Puffin file:
-    only sidecar + metadata objects are new, no data file is rewritten
-    and no bitmap is ever decoded.
+    The conversion is the mirror's FIRST SYNC: the head's live adds go
+    through the same mapping as every later commit (files in place or
+    hard-linked, DVs moved verbatim, row ids carried; see
+    :func:`sync_from_delta`), onto an empty table. Its snapshot is the
+    root of the synced history: no parent and no ``delta-version``.
 
     Retention caveat (inherent to dual-metadata tables, same as
     UniForm-style deployments): `expire_snapshots` on the converted
     table would delete shared data files the Delta log still
     references — coordinate vacuum/expiration across both layers
     (hard-linked layouts soften this: each layer owns its own name)."""
-    import pyarrow.parquet as pq
-
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
     part_cols = delta_log.table_partition_columns(delta_table)
     if current_version(iceberg_table) is not None:
         raise FileExistsError(f"{iceberg_table} already has Iceberg metadata")
-    struct = delta_log.table_schema(delta_table)
     v = delta_log.latest_version(delta_table)
-    live = delta_log._replay(delta_table, v)
-
-    schema = _schema_json_from_struct(struct)
+    tracking = delta_log._row_tracking_enabled(delta_table, v)
+    schema = _schema_json_from_struct(delta_log.table_schema(delta_table, v))
     by_name = {f["name"]: f for f in schema["fields"]}
     for c in part_cols:
         if by_name[c]["type"] == "timestamptz":
@@ -4889,169 +4865,49 @@ def convert_from_delta(delta_table: str, iceberg_table: str) -> int:
                 "timestamp identity partitions are unbounded-cardinality "
                 "(same rule as create())"
             )
-    spec_fields = [
-        {
-            "name": c,
-            "transform": "identity",
-            "source-id": by_name[c]["id"],
-            "field-id": 1000 + i,
-        }
-        for i, c in enumerate(part_cols)
-    ]
     os.makedirs(iceberg_table, exist_ok=True)
-    meta = {
-        "format-version": FORMAT_VERSION,
-        "table-uuid": str(uuid.uuid4()),
-        "location": os.path.abspath(iceberg_table),
-        "last-sequence-number": 0,
-        "last-updated-ms": _now_ms(),
-        "last-column-id": _max_field_id(schema),
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "last-partition-id": 999 + len(spec_fields),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
-            "write.format.default": "parquet",
+    meta = _new_table_metadata(
+        iceberg_table,
+        schema,
+        [
+            {
+                "name": c,
+                "transform": "identity",
+                "source-id": by_name[c]["id"],
+                "field-id": 1000 + i,
+            }
+            for i, c in enumerate(part_cols)
+        ],
+        {
             "migrated-from": os.path.abspath(delta_table),
             "migrated-delta-version": str(v),
         },
-        "current-snapshot-id": -1,
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-    }
-    staged = []
-    dv_items: "list[tuple[str, bytes, int]]" = []  # (data fp, framed, card)
-    # row-tracking sources: CARRY each add's baseRowId as the entry's
-    # first_row_id (same base+position model in both specs) and the
-    # high-water mark as next-row-id — _row_id is then IDENTICAL on
-    # both sides of the conversion; materialized id columns in shared
-    # files already use the same physical name on both layers
-    tracking = delta_log._row_tracking_enabled(delta_table, v)
-    carried_ids: "list[int | None]" = []
-    for rel, add in sorted(live.items()):
-        src = os.path.abspath(os.path.join(delta_table, rel))
-        stats = json.loads(add.get("stats") or "{}")
-        n_rows = stats.get("numRecords")
-        if n_rows is None:
-            n_rows = pq.ParquetFile(src).metadata.num_rows
-        pvals = delta_log._normalize_partition_values(
-            add.get("partitionValues")
-        )
-        if part_cols:
-            # hard-link into this table's own hive layout (zero bytes
-            # copied — same inodes) so basePath partition restoration
-            # works; raw Delta partitionValues are not URL-escaped, so
-            # values needing hive escaping are refused rather than
-            # silently corrupted on the dir round trip
-            for c in part_cols:
-                val = pvals.get(c)
-                if val is not None and any(
-                    ch in val for ch in "%=/\\:\n"
-                ):
-                    raise NotImplementedError(
-                        f"partition value {val!r} needs hive escaping"
-                    )
-            pv = {
-                c: (
-                    pvals[c]
-                    if pvals.get(c) is not None
-                    else "__HIVE_DEFAULT_PARTITION__"
-                )
-                for c in part_cols
-            }
-            dst_rel = _delta_linked_rel(part_cols, pv, rel)
-            dst = os.path.join(iceberg_table, dst_rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)  # cross-device fallback
-            staged.append((dst_rel, pv, int(n_rows), os.path.getsize(src)))
-            manifest_fp = os.path.join(os.path.abspath(iceberg_table), dst_rel)
-        else:
-            staged.append((src, {}, int(n_rows), os.path.getsize(src)))
-            manifest_fp = src
-        carried_ids.append(add.get("baseRowId") if tracking else None)
-        dvdesc = add.get("deletionVector")
-        if dvdesc:
-            # Delta sidecar record framing == Puffin deletion-vector-v1
-            # blob framing (deliberately, per both public specs): the
-            # framed bytes move VERBATIM — the bitmap is never decoded
-            dv_items.append(
-                (
-                    manifest_fp,
-                    deletion_vectors.framed_dv_bytes(delta_table, dvdesc),
-                    int(dvdesc["cardinality"]),
-                )
-            )
-
-    extra = None
-    operation = "append"
-    if dv_items:
-        # DVs need Iceberg v3; commit them in the SAME snapshot as the
-        # data files they mask (a DV at seq N applies to data at
-        # seq <= N — one atomic commit, no resurrected-rows state).
-        # The snapshot is operation='delete' so append-only change
-        # feeds honestly refuse it while include_deletes consumers
-        # decompose it as insert(all physical rows) + delete(masked) —
-        # net exactly the live rows, the CDC contract.
-        meta["format-version"] = 3
-        operation = "delete"
-
-        def extra(snapshot_id: int, seq: int) -> "list[dict]":
-            return [
-                _write_entries_manifest(
-                    iceberg_table, meta, meta["default-spec-id"], 1,
-                    snapshot_id, seq,
-                    _write_framed_dvs(
-                        iceberg_table, snapshot_id, seq, dv_items
-                    ),
-                )
-            ]
-
-    if tracking:
-        meta["format-version"] = 3
-        meta["next-row-id"] = (
-            delta_log._row_id_high_water_mark(delta_table, v) + 1
-        )
-    return _commit_snapshot(
-        None, iceberg_table, meta, operation, False, (), None, staged,
-        extra_manifests=extra,
-        explicit_row_ids=carried_ids if tracking else None,
+        3 if tracking else FORMAT_VERSION,  # carried row ids need v3
+    )
+    return _mirror_delta_actions(
+        delta_table, iceberg_table, meta, v,
+        [{"add": a} for a in delta_log._replay(delta_table, v).values()],
     )
 
 
 def convert_to_delta(iceberg_table: str, delta_table: str) -> int:
     """The reverse migration: register this Iceberg table's CURRENT
-    snapshot as a new Delta-format table over the SAME data files
-    (absolute paths in the add actions — spec-legal; zero bytes
-    copied). With `convert_from_delta` this makes the two metadata
-    layers fully interconvertible: a table can round-trip
-    Delta → Iceberg → Delta with every layer serving identical rows
-    (pinned by the interop test through both independent readers).
-    IDENTITY-partitioned tables map to hive-partitioned Delta with the
-    data files hard-linked into the Delta table's own layout (zero
-    bytes copied, per `convert_from_delta`'s argument); transform
-    specs (day/bucket/truncate) raise — Delta has no hidden
-    partitioning to map them onto. Same dual-metadata retention caveat
-    as `convert_from_delta`.
+    snapshot as version 0 of a new Delta table over the SAME data files
+    (zero bytes copied). Returns 0.
 
-    V3 deletion vectors CONVERT (round-10): each Puffin
-    ``deletion-vector-v1`` blob's framed bytes move verbatim into one
-    fresh Delta ``.bin`` sidecar (the framings are byte-identical per
-    both public specs — bitmaps never decoded) and ride the matching
-    add action as a ``deletionVector`` descriptor under the
-    deletionVectors protocol feature. Position/equality delete FILES
-    still raise — on a v3 table run `rewrite_position_deletes` first
-    to consolidate them into DVs."""
-    import datetime
+    Gates: the current partition spec is identity-only (Delta has no
+    hidden partitioning to map day/bucket/truncate onto), the snapshot
+    has no position or equality delete FILES (compact first, or on a v3
+    table `rewrite_position_deletes` them into DVs), and
+    ``delta_table`` has no Delta log yet. A v3 table with row lineage
+    makes a row-tracking Delta table.
 
-    from pyspark.sql import types as T
-
+    The conversion is the mirror's FIRST SYNC: the snapshot is mapped
+    by the same state diff as every later one (files in place or
+    hard-linked, DVs moved verbatim, row ids carried; see
+    :func:`sync_to_delta`), from an empty mirror, into one commit of the
+    ``CONVERT`` commitInfo, a protocol, the metaData and the adds. Same
+    dual-metadata retention caveat as `convert_from_delta`."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
     meta = current_metadata(iceberg_table)
@@ -5062,8 +4918,6 @@ def convert_to_delta(iceberg_table: str, delta_table: str) -> int:
             "Delta cannot represent transform partition specs "
             "(no hidden partitioning); identity specs convert"
         )
-    part_cols = [pf["source"] for pf in spec]
-    part_types = {pf["source"]: pf["source_type"] for pf in spec}
     if snapshot_delete_files(iceberg_table, sid) or snapshot_equality_deletes(
         iceberg_table, sid
     ):
@@ -5072,156 +4926,56 @@ def convert_to_delta(iceberg_table: str, delta_table: str) -> int:
             "represent them — compact first (or, on a v3 table, "
             "rewrite_position_deletes to consolidate them into DVs)"
         )
-    # v3 deletion vectors DO convert: the Puffin deletion-vector-v1
-    # blob framing is byte-identical to a Delta sidecar record, so the
-    # framed bytes move verbatim into one fresh Delta .bin sidecar —
-    # bitmaps never decoded, data files never touched
-    dv_blobs: "dict[str, tuple[bytes, int]]" = {}
-    for e in snapshot_dv_entries(iceberg_table, sid):
-        dv_blobs[e["referenced_data_file"]] = (
-            deletion_vectors.read_record(_dv_locator(e)),
-            int(e["cardinality"]),
-        )
     if delta_log.latest_version(delta_table) is not None:
         raise FileExistsError(f"{delta_table} already has a Delta log")
+    os.makedirs(delta_table, exist_ok=True)
     # v3 row lineage → Delta row tracking: ids carry 1:1
-    lineage = (
+    tracking = (
         int(meta.get("format-version", 2)) >= 3 and "next-row-id" in meta
     )
-    schema = meta["schemas"][meta["current-schema-id"]]
-    struct = _spark_schema(schema)  # nested types render recursively
-    os.makedirs(delta_table, exist_ok=True)
-
-    adds = []
-    dv_by_add_path: "dict[str, str]" = {}  # add-action path -> iceberg fp
+    protocol, configuration = delta_log._new_table_protocol(tracking)
+    metadata = {
+        "id": str(uuid.uuid4()),
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": _spark_schema(
+            meta["schemas"][meta["current-schema-id"]]
+        ).json(),
+        "partitionColumns": [pf["source"] for pf in spec],
+        "configuration": configuration,
+        "createdTime": _now_ms(),
+    }
     snap = _snapshot(meta, sid)
-    for m in avro_ocf.read_ocf(snap["manifest-list"]):
-        for entry in avro_ocf.read_ocf(m["manifest_path"]):
-            if entry["status"] not in (0, 1):
-                continue
-            df_rec = entry["data_file"]
-            if df_rec.get("content", 0) != 0:
-                continue  # delete manifests: DVs already gathered above
-            if part_cols:
-                pv = {
-                    c: _delta_pv_str(
-                        (df_rec.get("partition") or {}).get(c), part_types[c]
-                    )
-                    for c in part_cols
-                }
-                dirs = os.path.join(
-                    *(
-                        f"{c}={pv[c] if pv[c] is not None else '__HIVE_DEFAULT_PARTITION__'}"
-                        for c in part_cols
-                    )
-                )
-                # basename = digest of the SOURCE manifest path, so
-                # sync_to_delta maps later snapshot diffs statelessly
-                name = (
-                    hashlib.sha256(
-                        df_rec["file_path"].encode()
-                    ).hexdigest()[:32]
-                    + ".parquet"
-                )
-                rel = os.path.join(dirs, name)
-                dst = os.path.join(delta_table, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(df_rec["file_path"], dst)
-                except OSError:
-                    shutil.copy2(df_rec["file_path"], dst)
-                path, pvals = rel, pv
-            else:
-                path, pvals = df_rec["file_path"], {}  # absolute: shared bytes
-            add_act = {
-                "path": path,
-                "partitionValues": pvals,
-                "size": df_rec["file_size_in_bytes"],
-                "modificationTime": _now_ms(),
-                "dataChange": True,
-                "stats": json.dumps(
-                    {"numRecords": df_rec["record_count"]}
-                ),
-            }
-            # row-lineage carry: entry first_row_id → baseRowId (same
-            # base+position model in both specs); version clocks don't
-            # transfer, so the CONVERT commit (0) is the row version
-            if lineage and df_rec.get("first_row_id") is not None:
-                add_act["baseRowId"] = df_rec["first_row_id"]
-                add_act["defaultRowCommitVersion"] = 0
-            adds.append({"add": add_act})
-            if df_rec["file_path"] in dv_blobs:
-                dv_by_add_path[path] = df_rec["file_path"]
-    if dv_blobs:
-        descriptors = deletion_vectors.write_dv_blobs(
-            delta_table,
-            [
-                (fp, data, card)
-                for fp, (data, card) in sorted(dv_blobs.items())
-            ],
-        )
-        for a in adds:
-            fp = dv_by_add_path.get(a["add"]["path"])
-            if fp is not None:
-                a["add"]["deletionVector"] = descriptors[fp]
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "CONVERT",
-                "operationParameters": {
+    mapped = _iceberg_snapshot_actions(
+        iceberg_table, delta_table, meta, snap, None,
+        _DeltaMirror(metadata, protocol, tracking, {}, -1), 0, restate=True,
+    )
+    # the mapping re-states the protocol when DVs need their feature
+    # (and the metaData when the snapshot's files use another identity
+    # layout than the current spec); commit 0 holds one of each
+    header = {"protocol": protocol, "metaData": metadata}
+    for a in mapped:
+        header.update({k: a[k] for k in a if k in header})
+    delta_log._write_commit(
+        delta_table,
+        0,
+        [
+            delta_log._commit_info(
+                "CONVERT",
+                {
                     "source": os.path.abspath(iceberg_table),
-                    "sourceSnapshotId": str(sid),
+                    "sourceSnapshotId": sid,
                     # the sync cursor sync_to_delta resumes from
-                    "sourceSequence": str(snap["sequence-number"]),
+                    "sourceSequence": snap["sequence-number"],
                 },
-            }
-        },
-        {
-            "protocol": (
-                delta_log._merge_protocol(
-                    dict(
-                        delta_log.DV_PROTOCOL
-                        if dv_blobs
-                        else delta_log.PROTOCOL
-                    ),
-                    delta_log.ROW_TRACKING_PROTOCOL,
-                )
-                if lineage
-                else dict(
-                    delta_log.DV_PROTOCOL if dv_blobs else delta_log.PROTOCOL
-                )
-            )
-        },
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": struct.json(),
-                "partitionColumns": list(part_cols),
-                "configuration": (
-                    {
-                        "delta.enableRowTracking": "true",
-                        "delta.rowTracking.materializedRowIdColumnName":
-                            delta_log.MATERIALIZED_ROW_ID_COL,
-                        "delta.rowTracking."
-                        "materializedRowCommitVersionColumnName":
-                            delta_log.MATERIALIZED_ROW_COMMIT_COL,
-                    }
-                    if lineage
-                    else {}
-                ),
-                "createdTime": _now_ms(),
-            }
-        },
-        *sorted(adds, key=lambda a: a["add"]["path"]),
-    ]
-    if lineage:
-        # the mirror's own appends must allocate above the source's ids
-        actions.append(
-            delta_log._hwm_action(int(meta["next-row-id"]) - 1)
-        )
-    delta_log._write_commit(delta_table, 0, actions)
+            ),
+            *({k: v} for k, v in header.items()),
+            *sorted(
+                (a for a in mapped if "add" in a),
+                key=lambda a: a["add"]["path"],
+            ),
+            *(a for a in mapped if "domainMetadata" in a),
+        ],
+    )
     _pin_sync_cursor(iceberg_table, delta_table, sid)
     return 0
 
@@ -5712,8 +5466,12 @@ def sync_from_delta(delta_table: str, iceberg_table: str) -> int:
 
     - blind APPEND (adds only) → Iceberg ``append`` snapshot
       referencing the new files in place (unpartitioned) or by hard
-      link (partitioned — same deterministic digest layout as the
-      initial conversion, so remove/re-add actions map statelessly).
+      link (partitioned — zero bytes copied, named by a digest of the
+      Delta path so remove/re-add actions map statelessly; partition
+      values that need hive escaping are refused). Row-tracking
+      sources carry ``baseRowId`` → ``first_row_id`` and the
+      high-water mark → ``next-row-id``, so ``_row_id`` is identical
+      on both sides.
     - DV DELETE / UPDATE (``remove`` + re-``add`` of the same path
       carrying a deletionVector) → ``delete`` snapshot whose Puffin
       DVs are the Delta sidecar records' FRAMED BYTES moved verbatim
@@ -5736,7 +5494,9 @@ def sync_from_delta(delta_table: str, iceberg_table: str) -> int:
       :class:`DeltaSyncSchemaChangeError` (honest gate — replaying
       schema evolution needs field-id reconciliation).
 
-    The sync cursor is the mirror's ``migrated-delta-version``
+    :func:`convert_from_delta` is the first sync, from an empty
+    mirror, through the same mapper (`_mirror_delta_actions`). The sync
+    cursor is the mirror's ``migrated-delta-version``
     property, so calls are incremental and idempotent (a no-op sync
     writes nothing). Cost per sync is O(changed manifests + sidecar
     bytes): untouched data manifests are CARRIED by reference in the
@@ -5835,18 +5595,10 @@ def _rebase_over_foreign_iceberg_snapshots(
 def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     """Replay ONE Delta commit onto the mirror (see
     :func:`sync_from_delta` for the mapping)."""
-    import pyarrow.parquet as pq
-
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
     actions = delta_log._read_actions(delta_log._commit_path(delta_table, v))
     meta = dict(current_metadata(iceberg_table))
-
-    def _bump_cursor_only() -> None:
-        props = dict(meta.get("properties", {}))
-        props["migrated-delta-version"] = str(v)
-        meta["properties"] = props
-        _write_metadata(iceberg_table, meta)
 
     # ---- schema evolution REPLAYS (round 11); partition-layout
     # changes replay as Iceberg PARTITION EVOLUTION (round 12);
@@ -5878,13 +5630,44 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
         # the replay wrote metadata versions — re-read before building
         # the mirrored snapshot on top of them
         meta = dict(current_metadata(iceberg_table))
+    if _mirror_delta_actions(delta_table, iceberg_table, meta, v, actions) is None:
+        # config/protocol/txn-only commit or stats-refresh re-adds:
+        # nothing to mirror, only the cursor moves
+        props = dict(meta.get("properties", {}))
+        props["migrated-delta-version"] = str(v)
+        meta["properties"] = props
+        _write_metadata(iceberg_table, meta)
+
+
+def _mirror_delta_actions(
+    delta_table: str,
+    iceberg_table: str,
+    meta: dict,
+    v: int,
+    actions: "list[dict]",
+) -> "int | None":
+    """Map the ``add``/``remove`` ``actions`` of Delta version ``v`` onto
+    the Iceberg mirror whose metadata is ``meta`` and publish them as one
+    snapshot (the mapping is listed in :func:`sync_from_delta`); returns
+    its id, or None when they change nothing on the mirror.
+
+    A mirror with no snapshot is EMPTY — :func:`convert_from_delta`
+    feeding the head's live adds. Its snapshot always lands, as the
+    ROOT of the synced history: no parent, no ``delta-version`` in its
+    summary (`_rebase_over_foreign_iceberg_snapshots` stops there), and
+    a data change even when the adds say ``dataChange=false``."""
+    import pyarrow.parquet as pq
+
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+
     adds = {a["add"]["path"]: a["add"] for a in actions if "add" in a}
     removes = {
         a["remove"]["path"]: a["remove"] for a in actions if "remove" in a
     }
-    if not adds and not removes:
-        _bump_cursor_only()  # config/protocol/txn-only commit
-        return
+    sid = meta["current-snapshot-id"]
+    root = sid == -1
+    if not (adds or removes or root):
+        return None
 
     part_cols = delta_log.table_partition_columns(delta_table, v)
     # files already ON the mirror were linked under the layout of the
@@ -5893,12 +5676,12 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     # layout while the adds stage under the new one
     prev_part_cols = (
         delta_log.table_partition_columns(delta_table, v - 1)
-        if v > 0
+        if v > 0 and not root
         else part_cols
     )
-    sid = meta["current-snapshot-id"]
-    snap = _snapshot(meta, sid)
-    prior_ml = avro_ocf.read_ocf(snap["manifest-list"])
+    prior_ml = (
+        [] if root else avro_ocf.read_ocf(_snapshot(meta, sid)["manifest-list"])
+    )
 
     # live data entries of the mirror, for stateless path mapping
     live_by_fp: dict[str, dict] = {}
@@ -5909,6 +5692,16 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
             if e["status"] in (0, 1) and e["data_file"].get("content", 0) == 0:
                 live_by_fp[e["data_file"]["file_path"]] = e
     by_digest = {os.path.basename(fp): fp for fp in live_by_fp}
+    prior_deletes = [
+        e
+        for m in prior_ml
+        if m.get("content", 0) == 1
+        for e in avro_ocf.read_ocf(m["manifest_path"])
+        if e["status"] != 2
+    ]
+
+    def is_dv(e: dict) -> bool:
+        return (e["data_file"].get("file_format") or "").upper() == "PUFFIN"
 
     def fp_of_existing(rel: str) -> str:
         if not prev_part_cols:
@@ -5932,7 +5725,7 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     sync_tracking = delta_log._row_tracking_enabled(delta_table, v)
     carried_ids: "list[int | None]" = []
     removed_fps: set = set()
-    data_change = any(
+    data_change = root or any(
         x.get("dataChange", True)
         for x in list(adds.values()) + list(removes.values())
     )
@@ -5940,8 +5733,9 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
         if rel not in adds:
             removed_fps.add(fp_of_existing(rel))
     dv_fps_prior = {
-        e["referenced_data_file"]
-        for e in snapshot_dv_entries(iceberg_table, sid)
+        e["data_file"]["referenced_data_file"]
+        for e in prior_deletes
+        if is_dv(e)
     }
     for rel in sorted(adds):
         add = adds[rel]
@@ -5971,7 +5765,10 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
             elif fp in dv_fps_prior:
                 dv_drops.add(fp)  # delta dropped the file's vector
             continue
-        # genuinely new data file
+        # genuinely new data file: in place when unpartitioned,
+        # hard-linked (zero bytes copied) into the mirror's own hive
+        # layout when partitioned, so basePath partition restoration
+        # works on both layers
         src = (
             rel
             if os.path.isabs(rel)
@@ -5984,7 +5781,11 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
         pvals = delta_log._normalize_partition_values(
             add.get("partitionValues")
         )
+        fp = src
         if part_cols:
+            # raw Delta partitionValues are not URL-escaped: values
+            # needing hive escaping are refused rather than silently
+            # corrupted on the dir round trip
             for c in part_cols:
                 val = pvals.get(c)
                 if val is not None and any(ch in val for ch in "%=/\\:\n"):
@@ -6006,35 +5807,25 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
                 try:
                     os.link(src, dst)
                 except OSError:
-                    shutil.copy2(src, dst)
+                    shutil.copy2(src, dst)  # cross-device fallback
             staged.append((dst_rel, pv, int(n_rows), os.path.getsize(src)))
-            if desc:
-                dv_updates.append(
-                    (
-                        os.path.join(
-                            os.path.abspath(iceberg_table), dst_rel
-                        ),
-                        deletion_vectors.framed_dv_bytes(delta_table, desc),
-                        int(desc["cardinality"]),
-                    )
-                )
+            fp = os.path.join(os.path.abspath(iceberg_table), dst_rel)
         else:
             staged.append((src, {}, int(n_rows), os.path.getsize(src)))
-            if desc:
-                dv_updates.append(
-                    (
-                        src,
-                        deletion_vectors.framed_dv_bytes(delta_table, desc),
-                        int(desc["cardinality"]),
-                    )
+        if desc:
+            dv_updates.append(
+                (
+                    fp,
+                    deletion_vectors.framed_dv_bytes(delta_table, desc),
+                    int(desc["cardinality"]),
                 )
+            )
         carried_ids.append(
             add.get("baseRowId") if sync_tracking else None
         )
 
-    if not (staged or dv_updates or dv_drops or removed_fps):
-        _bump_cursor_only()  # stats-refresh re-adds: nothing to mirror
-        return
+    if not (staged or dv_updates or dv_drops or removed_fps or root):
+        return None  # stats-refresh re-adds: nothing to mirror
 
     # ---- build the mirrored snapshot ---------------------------------
     if not data_change:
@@ -6042,6 +5833,8 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     elif removed_fps:
         operation = "overwrite"
     elif dv_updates or dv_drops:
+        # include_deletes feeds decompose a DV snapshot as insert(all
+        # physical rows) + delete(masked); append-only feeds refuse it
         operation = "delete"
     else:
         operation = "append"
@@ -6081,10 +5874,10 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
         int(meta.get("next-row-id", 0))
         if int(meta.get("format-version", 2)) >= 3
         and not sync_tracking
-        and staged
+        and (staged or root)
         else None
     )
-    if staged:
+    if staged or root:
         manifests.append(
             _write_manifest(
                 iceberg_table, meta, staged, snapshot_id, seq,
@@ -6094,20 +5887,15 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
         )
 
     # delete manifests: consolidate (the _commit_dv_delete rule — new
-    # DV replaces the file's previous one; removed files shed theirs)
+    # DV replaces the file's previous one; removed files shed theirs).
+    # A DV lands in the SAME snapshot as the data it masks: a DV at seq
+    # N applies to data at seq <= N
     touched = {fp for fp, _, _ in dv_updates} | dv_drops | removed_fps
-    records: list[dict] = []
-    for m in prior_ml:
-        if m.get("content", 0) != 1:
-            continue
-        for e in avro_ocf.read_ocf(m["manifest_path"]):
-            if e["status"] == 2:
-                continue
-            d = e["data_file"]
-            is_dv = (d.get("file_format") or "").upper() == "PUFFIN"
-            if is_dv and d.get("referenced_data_file") in touched:
-                continue
-            records.append(_existing(e))
+    records = [
+        _existing(e)
+        for e in prior_deletes
+        if not (is_dv(e) and e["data_file"].get("referenced_data_file") in touched)
+    ]
     if dv_updates:
         records += _write_framed_dvs(
             iceberg_table, snapshot_id, seq, dv_updates
@@ -6129,14 +5917,14 @@ def _sync_delta_commit(delta_table: str, iceberg_table: str, v: int) -> None:
     props = dict(meta.get("properties", {}))
     props["migrated-delta-version"] = str(v)
     meta["properties"] = props
-    _publish_snapshot(
-        iceberg_table, meta, snapshot_id, seq, manifests,
-        {
-            "operation": operation,
-            "delta-version": str(v),
-            "added-dvs": str(len(dv_updates)),
-        },
-        parent=sid,
+    summary = {"operation": operation}
+    if not root:
+        summary.update(
+            {"delta-version": str(v), "added-dvs": str(len(dv_updates))}
+        )
+    return _publish_snapshot(
+        iceberg_table, meta, snapshot_id, seq, manifests, summary,
+        parent=None if root else sid,
         schema_id=meta["current-schema-id"],
         first_row_id=sync_first_rid,
     )
@@ -6533,7 +6321,9 @@ def sync_to_delta(
 
     - new data files → ``add`` actions (in place for unpartitioned
       sources; hard-linked under the deterministic digest layout for
-      identity-partitioned ones);
+      identity-partitioned ones); on a row-tracking mirror the entry's
+      ``first_row_id`` becomes ``baseRowId`` and ``next-row-id`` the
+      high-water mark;
     - files gone from the snapshot → ``remove`` actions;
     - a file whose DV changed → ``remove`` + re-``add`` with the new
       ``deletionVector`` descriptor — the Puffin blob's framed bytes
@@ -6555,7 +6345,9 @@ def sync_to_delta(
       and partition-spec changes raise (honest gates — Delta cannot
       represent them).
 
-    The sync cursor is the ``sourceSequence`` recorded in each synced
+    :func:`convert_to_delta` is the first sync, from an empty mirror,
+    through the same mapper (`_iceberg_snapshot_actions`). The sync
+    cursor is the ``sourceSequence`` recorded in each synced
     commit's commitInfo (seeded by `convert_to_delta`); a foreign
     commit on the mirror after the last sync raises — the mirror has
     ONE writer, the sync. Calls are incremental and idempotent.
@@ -6716,36 +6508,137 @@ def _iceberg_data_entries(meta: dict, snapshot_id: int) -> "dict[str, dict]":
 _SYNC_BASE_PARENT = object()  # sentinel: diff against snap's parent
 
 
+class _DeltaMirror(NamedTuple):
+    """The Delta mirror's state a snapshot's actions are built on, as a
+    value: its ``metaData`` action (schema, partition columns, physical
+    names), its protocol, whether it tracks row ids and, when it does,
+    its live adds and row-id high-water mark."""
+
+    metadata: dict
+    protocol: dict
+    tracking: bool
+    adds: "dict[str, dict]"
+    hwm: int
+
+    @classmethod
+    def at(cls, delta_table: str, version: int) -> "_DeltaMirror":
+        from march_mania_spark_lakehouse_spark.sources import delta_log
+
+        tracking = delta_log._row_tracking_enabled(delta_table, version)
+        return cls(
+            delta_log._latest_metadata(delta_table, version),
+            delta_log._effective_protocol(delta_table, version),
+            tracking,
+            delta_log._replay(delta_table, version) if tracking else {},
+            delta_log._row_id_high_water_mark(delta_table, version)
+            if tracking
+            else -1,
+        )
+
+
+class _MirrorNeedsIdMapping(Exception):
+    """Files to mirror store a renamed column under its new name; the
+    mirror must switch to ``columnMapping.mode=id`` first."""
+
+
 def _sync_iceberg_snapshot(
     iceberg_table: str, delta_table: str, meta: dict, snap: dict, v: int,
     base_sid=_SYNC_BASE_PARENT,
     rewrite: str = "strict",
 ) -> None:
-    """Replay ONE Iceberg snapshot onto the Delta mirror (see
-    :func:`sync_to_delta` for the mapping). ``base_sid`` overrides the
-    diff base (default: the snapshot's parent) — the COMPENSATING path
-    after a writer-side rollback diffs head against the off-ancestry
-    cursor snapshot instead, and forces ``dataChange=true`` (removing
-    rolled-off rows is a real row change whatever the head's own
-    operation was). ``rewrite='auto'`` converts POSITION-DELETE
+    """Replay ONE Iceberg snapshot onto the Delta mirror as version
+    ``v`` (see :func:`sync_to_delta` for the mapping). ``base_sid``
+    overrides the diff base (default: the snapshot's parent) — the
+    COMPENSATING path after a writer-side rollback diffs head against
+    the off-ancestry cursor snapshot instead (see
+    :func:`_iceberg_snapshot_actions`'s ``restate``)."""
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+
+    compensating = base_sid is not _SYNC_BASE_PARENT
+    base = base_sid if compensating else snap.get("parent-snapshot-id")
+
+    def build(v: int) -> "list[dict]":
+        return _iceberg_snapshot_actions(
+            iceberg_table, delta_table, meta, snap, base,
+            _DeltaMirror.at(delta_table, v - 1), v,
+            restate=compensating, rewrite=rewrite,
+        )
+
+    try:
+        mapped = build(v)
+    except _MirrorNeedsIdMapping:
+        _flip_mirror_to_id_mapping(
+            iceberg_table, delta_table, snap["sequence-number"] - 1
+        )
+        v = delta_log.latest_version(delta_table) + 1  # past the flip
+        mapped = build(v)
+    op = snap.get("summary", {}).get("operation")
+    commit_info = {
+        "commitInfo": {
+            "timestamp": _now_ms(),
+            "operation": "SYNC",
+            "operationParameters": {
+                "source": os.path.abspath(iceberg_table),
+                "sourceSnapshotId": str(snap["snapshot-id"]),
+                "sourceSequence": str(snap["sequence-number"]),
+                "sourceOperation": (
+                    "sync-compensate" if compensating else str(op)
+                ),
+                **(
+                    {"compensatedFromSnapshotId": str(base_sid)}
+                    if compensating
+                    else {}
+                ),
+            },
+        }
+    }
+    delta_log._write_commit(delta_table, v, [commit_info, *mapped])
+
+
+def _iceberg_snapshot_actions(
+    iceberg_table: str,
+    delta_table: str,
+    meta: dict,
+    snap: dict,
+    base: "int | None",
+    mirror: _DeltaMirror,
+    v: int,
+    *,
+    restate: bool = False,
+    rewrite: str = "strict",
+) -> "list[dict]":
+    """The Delta actions, all but ``commitInfo``, that move the mirror
+    at ``delta_table``, in state ``mirror``, from the image of snapshot
+    ``base`` (None: an empty table) to the image of ``snap`` as version
+    ``v``: the state diff :func:`sync_to_delta` lists. Data files are
+    linked and DV sidecars written on the way; the caller commits the
+    actions.
+
+    ``restate`` maps ``snap`` as a STATE reached from ``base`` rather
+    than as the commit it was: the current schema governs and every
+    action is a data change. The compensating sync after a rollback
+    uses it (removing rolled-off rows is a real row change whatever the
+    head's own operation was), and so does :func:`convert_to_delta`
+    from an empty mirror. ``rewrite='auto'`` converts POSITION-DELETE
     parquet to Delta deletion vectors in flight (round 12): each
     endpoint's per-file tombstone state is the union of its DV
     positions and its position-delete rows, and a file whose effective
     state changed re-adds with a freshly roaring-encoded descriptor —
     cost bounded by the delete-file bytes, data files untouched.
-    Equality deletes stay gated (no Delta analogue)."""
+    Equality deletes stay gated (no Delta analogue).
+
+    Raises :class:`_MirrorNeedsIdMapping` before writing anything when
+    the mirror must switch to id column mapping first."""
+    from pyspark.sql import types as T
+
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
     sid = snap["snapshot-id"]
-    compensating = base_sid is not _SYNC_BASE_PARENT
-    parent = (
-        snap.get("parent-snapshot-id") if not compensating else base_sid
-    )
     op = snap.get("summary", {}).get("operation")
     pos_cur = snapshot_delete_files(iceberg_table, sid)
     pos_prev = (
-        snapshot_delete_files(iceberg_table, parent)
-        if parent is not None
+        snapshot_delete_files(iceberg_table, base)
+        if base is not None
         else []
     )
     if pos_cur and rewrite != "auto":
@@ -6757,8 +6650,8 @@ def _sync_iceberg_snapshot(
         )
     eq_cur = snapshot_equality_deletes(iceberg_table, sid)
     eq_prev = (
-        snapshot_equality_deletes(iceberg_table, parent)
-        if parent is not None
+        snapshot_equality_deletes(iceberg_table, base)
+        if base is not None
         else []
     )
     if eq_cur and rewrite != "auto":
@@ -6769,17 +6662,17 @@ def _sync_iceberg_snapshot(
             "flight (bounded by the key-column scan of lower-sequence "
             "files)"
         )
-    # schema / spec gates against the mirror's declared state (the
-    # compensating path gates against the CURRENT schema: the head
+    # schema / spec gates against the mirror's declared state (a
+    # restated snapshot gates against the CURRENT schema: the head
     # snapshot may have been written before later metadata-only schema
     # commits, and a rolled-back head always reads under the current
     # schema)
     schema = meta["schemas"][
         meta["current-schema-id"]
-        if compensating
+        if restate
         else snap.get("schema-id", meta["current-schema-id"])
     ]
-    mirror_schema = delta_log.table_schema(delta_table)
+    mirror_schema = json.loads(mirror.metadata["schemaString"])
     # simpleString comparison: nullability-insensitive on both sides,
     # and nested types (struct/array/map) render recursively
     want = [
@@ -6787,7 +6680,8 @@ def _sync_iceberg_snapshot(
         for f in _spark_schema(schema).fields
     ]
     have = [
-        (f.name, f.dataType.simpleString()) for f in mirror_schema.fields
+        (f.name, f.dataType.simpleString())
+        for f in T.StructType.fromJson(mirror_schema).fields
     ]
     if want != have:
         raise DeltaSyncSchemaChangeError(
@@ -6810,7 +6704,7 @@ def _sync_iceberg_snapshot(
         raise NotImplementedError(
             "Delta cannot represent transform partition specs"
         )
-    prev_cols = delta_log.table_partition_columns(delta_table)
+    prev_cols = list(mirror.metadata.get("partitionColumns") or [])
     col_sets = {tuple(pf["source"] for pf in sp) for sp in specs}
     if len(col_sets) > 1:
         raise DeltaSyncSchemaChangeError(
@@ -6827,7 +6721,7 @@ def _sync_iceberg_snapshot(
     relayout = part_cols != prev_cols
 
     cur = _iceberg_data_entries(meta, sid)
-    prev = _iceberg_data_entries(meta, parent) if parent is not None else {}
+    prev = _iceberg_data_entries(meta, base) if base is not None else {}
     if relayout and set(cur) & set(prev):
         raise DeltaSyncSchemaChangeError(
             f"snapshot {sid} changes the partition layout but keeps "
@@ -6841,13 +6735,25 @@ def _sync_iceberg_snapshot(
     prev_dvs = (
         {
             e["referenced_data_file"]: e
-            for e in snapshot_dv_entries(iceberg_table, parent)
+            for e in snapshot_dv_entries(iceberg_table, base)
         }
-        if parent is not None
+        if base is not None
         else {}
     )
     added = sorted(set(cur) - set(prev))
     removed = sorted(set(prev) - set(cur))
+
+    # partitionValues (and the hive dirs) are keyed by the mirror's
+    # PHYSICAL names on column-mapped mirrors (Delta spec; what the
+    # reader's broadcast restoration looks up) — a relayout by a
+    # RENAMED column would otherwise write logical keys the reader
+    # can't resolve. metaData.partitionColumns stays the LOGICAL view.
+    pv_phys = {
+        f["name"]: (f.get("metadata") or {}).get(
+            "delta.columnMapping.physicalName", f["name"]
+        )
+        for f in mirror_schema["fields"]
+    }
 
     # post-rename generation guard: a mode=name mirror pins ONE
     # physical name per field, but Iceberg files written after a
@@ -6857,10 +6763,12 @@ def _sync_iceberg_snapshot(
     # already the Iceberg field ids, set by the schema reconcile) and
     # resolution becomes generation-proof; files without ids keep the
     # honest raise.
-    mapping = delta_log.column_mapping(delta_table) or {}
+    name_mapped = (mirror.metadata.get("configuration") or {}).get(
+        "delta.columnMapping.mode"
+    ) == "name"
     misnamed = {
-        log: phys for log, phys in mapping.items() if log != phys
-    }
+        log: phys for log, phys in pv_phys.items() if log != phys
+    } if name_mapped else {}
     if misnamed and added:
         import pyarrow.parquet as _pq
 
@@ -6889,20 +6797,14 @@ def _sync_iceberg_snapshot(
         if bad_files:
             probe = list(prev) + added
             if all(_ids_of(fp) is not None for fp in probe):
-                _flip_mirror_to_id_mapping(
-                    iceberg_table, delta_table,
-                    snap["sequence-number"] - 1,
-                )
-                # the flip consumed a mirror version
-                v = delta_log.latest_version(delta_table) + 1
-            else:
-                raise DeltaSyncSchemaChangeError(
-                    f"data file {os.path.basename(bad_files[0])} stores "
-                    "renamed column(s) under the NEW physical name and "
-                    "not every file carries parquet field ids; Delta "
-                    "cannot express per-generation physical names "
-                    "without id resolution — re-convert the mirror"
-                )
+                raise _MirrorNeedsIdMapping()
+            raise DeltaSyncSchemaChangeError(
+                f"data file {os.path.basename(bad_files[0])} stores "
+                "renamed column(s) under the NEW physical name and "
+                "not every file carries parquet field ids; Delta "
+                "cannot express per-generation physical names "
+                "without id resolution — re-convert the mirror"
+            )
 
     def _dv_key(e: dict) -> tuple:
         return (e["puffin_path"], int(e["offset"]), int(e["length"]))
@@ -6942,7 +6844,7 @@ def _sync_iceberg_snapshot(
 
         cur_pos = _positions_of(cur_dvs, pos_cur, sid if eq_cur else None)
         prev_pos = _positions_of(
-            prev_dvs, pos_prev, parent if eq_prev else None
+            prev_dvs, pos_prev, base if eq_prev else None
         )
         dv_changed = sorted(
             fp
@@ -6966,33 +6868,18 @@ def _sync_iceberg_snapshot(
             for fp in prev_dvs
             if fp in cur and fp not in cur_dvs
         )
-    data_change = True if compensating else (op != "replace")
-
-    # partitionValues (and the hive dirs) are keyed by the mirror's
-    # PHYSICAL names on column-mapped mirrors (Delta spec; what the
-    # reader's broadcast restoration looks up) — a relayout by a
-    # RENAMED column would otherwise write logical keys the reader
-    # can't resolve. metaData.partitionColumns stays the LOGICAL view.
-    pv_phys = {
-        f["name"]: (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        for f in json.loads(
-            delta_log._latest_metadata(
-                delta_table, delta_log.latest_version(delta_table)
-            )["schemaString"]
-        )["fields"]
-    }
+    data_change = restate or op != "replace"
 
     def delta_path(
         fp: str, df_rec: dict, cols: "list[str] | None" = None
     ) -> "tuple[str, dict]":
         """(add-action path, partitionValues) for an Iceberg data file
-        — in place when unpartitioned, digest-named hive layout when
-        partitioned (matching convert_to_delta's deterministic rule).
-        ``cols`` selects the layout: removes across a RELAYOUT commit
-        resolve under the mirror's pre-change columns, adds under the
-        snapshot's own."""
+        — in place when unpartitioned; when partitioned, a hard link
+        (zero bytes copied) in the mirror's hive layout whose basename
+        is a digest of the SOURCE path, so later diffs map onto it with
+        no stored state. ``cols`` selects the layout: removes across a
+        RELAYOUT commit resolve under the mirror's pre-change columns,
+        adds under the snapshot's own."""
         cols = part_cols if cols is None else cols
         if not cols:
             return fp, {}
@@ -7018,8 +6905,9 @@ def _sync_iceberg_snapshot(
 
     # one fresh sidecar per commit holding every changed DV's blob —
     # the framed bytes moved verbatim out of the Puffin file on the
-    # pure-DV path, roaring re-encoded from the effective position
-    # union on the rewrite='auto' path
+    # pure-DV path (both specs frame identically: the bitmap is never
+    # decoded), roaring re-encoded from the effective position union
+    # on the rewrite='auto' path
     descriptors: dict[str, dict] = {}
     if dv_changed and rewrite_positions:
         descriptors = deletion_vectors.write_dv_blobs(
@@ -7045,13 +6933,6 @@ def _sync_iceberg_snapshot(
         descriptors = deletion_vectors.write_dv_blobs(delta_table, items)
 
     ts = _now_ms()
-    # row-lineage carry: a row-tracking mirror keeps _row_id identical
-    # — re-adds copy the prior add's baseRowId/commit version (spec),
-    # new files take the Iceberg entry's first_row_id
-    mirror_tracking = delta_log._row_tracking_enabled(delta_table, v - 1)
-    prior_adds = (
-        delta_log._replay(delta_table, v - 1) if mirror_tracking else {}
-    )
 
     def add_action(fp: str, with_dv: bool) -> dict:
         df_rec = cur[fp]
@@ -7063,7 +6944,7 @@ def _sync_iceberg_snapshot(
                 try:
                     os.link(fp, dst)
                 except OSError:
-                    shutil.copy2(fp, dst)
+                    shutil.copy2(fp, dst)  # cross-device fallback
         add = {
             "path": path,
             "partitionValues": pv,
@@ -7072,8 +6953,11 @@ def _sync_iceberg_snapshot(
             "dataChange": data_change,
             "stats": json.dumps({"numRecords": df_rec["record_count"]}),
         }
-        if mirror_tracking:
-            prior = prior_adds.get(path)
+        if mirror.tracking:
+            # row-lineage carry: _row_id stays identical — re-adds copy
+            # the prior add's baseRowId/commit version (spec), new
+            # files take the Iceberg entry's first_row_id
+            prior = mirror.adds.get(path)
             if prior is not None and prior.get("baseRowId") is not None:
                 add["baseRowId"] = prior["baseRowId"]
                 add["defaultRowCommitVersion"] = prior.get(
@@ -7086,27 +6970,16 @@ def _sync_iceberg_snapshot(
             add["deletionVector"] = descriptors[fp]
         return add
 
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "SYNC",
-                "operationParameters": {
-                    "source": os.path.abspath(iceberg_table),
-                    "sourceSnapshotId": str(sid),
-                    "sourceSequence": str(snap["sequence-number"]),
-                    "sourceOperation": (
-                        "sync-compensate" if compensating else str(op)
-                    ),
-                    **(
-                        {"compensatedFromSnapshotId": str(base_sid)}
-                        if compensating
-                        else {}
-                    ),
-                },
+    def remove_action(path: str) -> dict:
+        return {
+            "remove": {
+                "path": path,
+                "deletionTimestamp": ts,
+                "dataChange": data_change,
             }
         }
-    ]
+
+    actions: list[dict] = []
     if dv_changed:
         # MERGE into the mirror's effective protocol (like
         # delete_where) — a bare DV_PROTOCOL would strip rowTracking/
@@ -7115,8 +6988,7 @@ def _sync_iceberg_snapshot(
         actions.append(
             {
                 "protocol": delta_log._merge_protocol(
-                    delta_log._effective_protocol(delta_table, v - 1),
-                    delta_log.DV_PROTOCOL,
+                    mirror.protocol, delta_log.DV_PROTOCOL
                 )
             }
         )
@@ -7125,42 +6997,27 @@ def _sync_iceberg_snapshot(
         # the only legal Delta shape for a layout change (mirrors
         # delta_log.repartition_table); removes resolve under the
         # mirror's PRE-change layout, adds under the snapshot's own
-        md = delta_log._latest_metadata(delta_table, v - 1)
-        actions.append(
-            {"metaData": {**md, "partitionColumns": list(part_cols)}}
-        )
-    for fp in removed:
-        path, _ = delta_path(fp, prev[fp], prev_cols)
         actions.append(
             {
-                "remove": {
-                    "path": path,
-                    "deletionTimestamp": ts,
-                    "dataChange": data_change,
+                "metaData": {
+                    **mirror.metadata, "partitionColumns": list(part_cols)
                 }
             }
         )
+    for fp in removed:
+        actions.append(remove_action(delta_path(fp, prev[fp], prev_cols)[0]))
     for fp in added:
         actions.append({"add": add_action(fp, with_dv=True)})
     for fp in dv_changed + dv_dropped:
         if fp in added:
             continue  # descriptor already rode the add
-        path, _ = delta_path(fp, cur[fp])
-        actions.append(
-            {
-                "remove": {
-                    "path": path,
-                    "deletionTimestamp": ts,
-                    "dataChange": data_change,
-                }
-            }
-        )
+        actions.append(remove_action(delta_path(fp, cur[fp])[0]))
         actions.append({"add": add_action(fp, with_dv=fp in dv_changed)})
-    if mirror_tracking and "next-row-id" in meta:
+    if mirror.tracking and "next-row-id" in meta:
         new_hwm = int(meta["next-row-id"]) - 1
-        if new_hwm > delta_log._row_id_high_water_mark(delta_table, v - 1):
+        if new_hwm > mirror.hwm:
             actions.append(delta_log._hwm_action(new_hwm))
-    delta_log._write_commit(delta_table, v, actions)
+    return actions
 
 
 def _write_dv_puffin(
@@ -7332,48 +7189,76 @@ def _commit_delete_hits(
     Returns the new snapshot id (the read one when ``hits`` is empty)."""
     if int(meta.get("format-version", 2)) >= 3:
         return _commit_dv_delete(spark, table, meta, hits)
-    sid = meta["current-snapshot-id"]
-    snap = _snapshot(meta, sid)
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    hits.write.mode("overwrite").parquet(staging)
+    return _commit_delete_files(table, meta, hits, 1, {"operation": "delete"})
+
+
+def _write_delete_files(
+    table: str,
+    rows: DataFrame,
+    content: int,
+    snapshot_id: int,
+    seq: int,
+    equality_ids: "list[int] | None" = None,
+) -> "list[dict]":
+    """Write ``rows`` as v2 delete parquet under ``data/`` and return
+    the ADDED entries of the non-empty files: ``content`` 1 = position
+    deletes (``file_path``/``pos``), 2 = equality deletes keyed on
+    ``equality_ids``."""
     import pyarrow.parquet as pq
 
-    del_files = []
+    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
+    rows.write.mode("overwrite").parquet(staging)
+    prefix = "delete" if content == 1 else "eqdelete"
+    records = []
     for root, dirs, fs in os.walk(staging):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for fn in sorted(fs):
             if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
                 continue
             src = os.path.join(root, fn)
-            if pq.ParquetFile(src).metadata.num_rows == 0:
+            n = pq.ParquetFile(src).metadata.num_rows
+            if n == 0:
                 continue
-            rel = os.path.join("data", f"delete-{uuid.uuid4().hex}.parquet")
-            dst = os.path.join(table, rel)
+            dst = os.path.join(
+                os.path.abspath(table), "data",
+                f"{prefix}-{uuid.uuid4().hex}.parquet",
+            )
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.rename(src, dst)
-            del_files.append(
-                (dst, pq.ParquetFile(dst).metadata.num_rows, os.path.getsize(dst))
-            )
-    shutil.rmtree(staging)
-    if not del_files:
-        return sid  # nothing matched: no commit
-
-    snapshot_id, seq = _next_snapshot(meta)
-    records = [
-        _added(
-            snapshot_id,
-            seq,
-            {
-                "content": 1,  # POSITION_DELETES
-                "file_path": os.path.abspath(path),
+            data_file = {
+                "content": content,
+                "file_path": dst,
                 "file_format": "PARQUET",
                 "partition": {},
                 "record_count": n,
-                "file_size_in_bytes": size,
-            },
-        )
-        for path, n, size in del_files
-    ]
+                "file_size_in_bytes": os.path.getsize(dst),
+            }
+            if equality_ids is not None:
+                data_file["equality_ids"] = equality_ids
+            records.append(_added(snapshot_id, seq, data_file))
+    shutil.rmtree(staging)
+    return records
+
+
+def _commit_delete_files(
+    table: str,
+    meta: dict,
+    rows: DataFrame,
+    content: int,
+    summary: dict,
+    equality_ids: "list[int] | None" = None,
+) -> int:
+    """Commit ``rows`` as delete files (see :func:`_write_delete_files`)
+    in one snapshot on top of ``meta``'s current one. Returns the new
+    snapshot id, or the current one when ``rows`` is empty."""
+    sid = meta["current-snapshot-id"]
+    snap = _snapshot(meta, sid)
+    snapshot_id, seq = _next_snapshot(meta)
+    records = _write_delete_files(
+        table, rows, content, snapshot_id, seq, equality_ids
+    )
+    if not records:
+        return sid  # nothing matched: no commit
     return _publish_snapshot(
         table, meta, snapshot_id, seq,
         avro_ocf.read_ocf(snap["manifest-list"]) + [
@@ -7382,7 +7267,7 @@ def _commit_delete_hits(
                 records,
             )
         ],
-        {"operation": "delete"},
+        summary,
         parent=sid,
         schema_id=snap.get("schema-id", meta["current-schema-id"]),
     )
@@ -7589,58 +7474,10 @@ def delete_by_equality(
     if missing:
         raise ValueError(f"equality columns {missing} not in table schema")
 
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    keys.distinct().coalesce(1).write.mode("overwrite").parquet(staging)
-    import pyarrow.parquet as pq
-
-    del_files = []
-    for root, dirs, fs in os.walk(staging):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fn in sorted(fs):
-            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                continue
-            src = os.path.join(root, fn)
-            if pq.ParquetFile(src).metadata.num_rows == 0:
-                continue
-            rel = os.path.join("data", f"eqdelete-{uuid.uuid4().hex}.parquet")
-            dst = os.path.join(table, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-            del_files.append(
-                (dst, pq.ParquetFile(dst).metadata.num_rows, os.path.getsize(dst))
-            )
-    shutil.rmtree(staging)
-    if not del_files:
-        return sid
-
-    snapshot_id, seq = _next_snapshot(meta)
-    records = [
-        _added(
-            snapshot_id,
-            seq,
-            {
-                "content": 2,  # EQUALITY_DELETES
-                "file_path": os.path.abspath(path),
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": n,
-                "file_size_in_bytes": size,
-                "equality_ids": [by_name[c] for c in eq_cols],
-            },
-        )
-        for path, n, size in del_files
-    ]
-    return _publish_snapshot(
-        table, meta, snapshot_id, seq,
-        avro_ocf.read_ocf(snap["manifest-list"]) + [
-            _write_entries_manifest(
-                table, meta, meta["default-spec-id"], 1, snapshot_id, seq,
-                records,
-            )
-        ],
+    return _commit_delete_files(
+        table, meta, keys.distinct().coalesce(1), 2,
         {"operation": "delete", **(summary or {})},
-        parent=sid,
-        schema_id=snap.get("schema-id", meta["current-schema-id"]),
+        equality_ids=[by_name[c] for c in eq_cols],
     )
 
 
@@ -8538,8 +8375,6 @@ def rewrite_position_deletes(spark: SparkSession, table: str) -> int:
     v3 = int(meta.get("format-version", 2)) >= 3
     if len(pos_files) <= (0 if v3 else 1):
         return sid
-    import pyarrow.parquet as pq
-
     live_df = local_df(
         spark,
         [(os.path.abspath(os.path.join(table, f)),) for f in snapshot_files(table, sid)],
@@ -8564,21 +8399,8 @@ def rewrite_position_deletes(spark: SparkSession, table: str) -> int:
         .join(F.broadcast(live_df), "file_path", "left_semi")
         .coalesce(1)
     )
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    merged.write.mode("overwrite").parquet(staging)
-    out_path = None
-    for root, dirs, fs in os.walk(staging):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fn in sorted(fs):
-            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                rel = os.path.join("data", f"delete-{uuid.uuid4().hex}.parquet")
-                dst = os.path.join(table, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(root, fn), dst)
-                out_path = dst
-    shutil.rmtree(staging)
-
     snapshot_id, seq = _next_snapshot(meta)
+    consolidated = _write_delete_files(table, merged, 1, snapshot_id, seq)
     manifests = []
     for m in avro_ocf.read_ocf(snap["manifest-list"]):
         if m.get("content", 0) != 1:
@@ -8599,26 +8421,11 @@ def rewrite_position_deletes(spark: SparkSession, table: str) -> int:
                     snapshot_id, seq, keep,
                 )
             )
-    if out_path is not None:
+    if consolidated:
         manifests.append(
             _write_entries_manifest(
                 table, meta, meta["default-spec-id"], 1, snapshot_id, seq,
-                [
-                    _added(
-                        snapshot_id,
-                        seq,
-                        {
-                            "content": 1,
-                            "file_path": os.path.abspath(out_path),
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": pq.ParquetFile(
-                                out_path
-                            ).metadata.num_rows,
-                            "file_size_in_bytes": os.path.getsize(out_path),
-                        },
-                    )
-                ],
+                consolidated,
             )
         )
     return _publish_snapshot(
