@@ -3185,15 +3185,18 @@ def _commit_row_changes(
     v: int,
     dv_state: "dict[str, dict | None]",
     include_deletes: bool,
-) -> "tuple[list, list, set]":
+) -> "tuple[list, list]":
     """One commit's row-level change plan against the carried DV state
-    (MUTATED in place): returns (added [(path, add-time dv)],
-    deleted_desc [(abs path, new dv, predecessor dv)], deleted_keys
-    {log keys}). Raises :class:`DeltaNonAppendChangeError` on commits
-    that rewrite data files. The shared walker under both
-    `table_changes` (range-aggregated) and `table_changes_cdf`
-    (per-commit): the DV state threads FORWARD, so an N-commit range
-    costs one log replay total, never one per commit."""
+    (MUTATED in place): returns (added [(log path, add-time dv,
+    partitionValues)], deleted [(log path, new dv, predecessor dv,
+    partitionValues)]). Raises :class:`DeltaNonAppendChangeError` on
+    commits that rewrite data files. The shared walker under
+    `table_changes` (range-aggregated), `table_changes_cdf`
+    (per-commit) and the streaming sources in `pydatasource`: the DV
+    state threads FORWARD, so an N-commit range costs one log replay
+    total, never one per commit. Paths stay the log's keys:
+    shallow-clone adds are absolute, and relpath-ing them back under a
+    foreign root breaks the scan's path handling."""
     p = _commit_path(table, v)
     if not os.path.exists(p):
         raise FileNotFoundError(f"missing commit {v} for {table}")
@@ -3215,9 +3218,11 @@ def _commit_row_changes(
         if include_deletes:
             for a in adds:
                 dv_state[a["path"]] = a.get("deletionVector")
-        return (
-            [(a["path"], a.get("deletionVector")) for a in adds], [], set()
-        )
+        return [
+            (a["path"], a.get("deletionVector"),
+             a.get("partitionValues") or {})
+            for a in adds
+        ], []
     readd = {a["path"]: a for a in adds}
     is_dv_delete = (
         include_deletes
@@ -3229,19 +3234,14 @@ def _commit_row_changes(
             f"commit {v} rewrites data files; this change feed "
             "cannot represent it as row-level changes"
         )
-    deleted_desc: list = []
-    deleted_keys: set = set()
+    deleted: list = []
     for path, a in readd.items():
-        abs_path = os.path.abspath(os.path.join(table, path))
-        deleted_desc.append(
-            (abs_path, a["deletionVector"], dv_state.get(path))
+        deleted.append(
+            (path, a["deletionVector"], dv_state.get(path),
+             a.get("partitionValues") or {})
         )
-        # keep the LOG key: shallow-clone adds are absolute, and
-        # relpath-ing them back under a foreign root breaks the
-        # scan's path handling
-        deleted_keys.add(path)
         dv_state[path] = a["deletionVector"]
-    return [], deleted_desc, deleted_keys
+    return [], deleted
 
 
 def _change_pieces(
@@ -3250,8 +3250,7 @@ def _change_pieces(
     hi: int,
     names: "list[str]",
     added: list,
-    deleted_desc: list,
-    deleted_keys: set,
+    deleted: list,
     ins_label: str,
     del_label: str,
 ) -> "list[DataFrame]":
@@ -3269,11 +3268,11 @@ def _change_pieces(
                 d,
                 None,
             )
-            for p, d in added
+            for p, d, _ in added
             if d
         ]
         ins = _read_files_raw(
-            spark, table, sorted(p for p, _ in added), hi,
+            spark, table, sorted(p for p, _, _ in added), hi,
             with_positions=bool(add_dvs),
         )
         if add_dvs:
@@ -3285,11 +3284,19 @@ def _change_pieces(
         pieces.append(
             ins.select(*names).withColumn("_change_type", F.lit(ins_label))
         )
-    if deleted_desc:
+    if deleted:
         raw = _read_files_raw(
-            spark, table, sorted(deleted_keys), hi, with_positions=True
+            spark, table, sorted({p for p, _, _, _ in deleted}), hi,
+            with_positions=True,
         )
-        tomb = _dv_tombstones(spark, table, deleted_desc)
+        tomb = _dv_tombstones(
+            spark,
+            table,
+            [
+                (os.path.abspath(os.path.join(table, p)), new, old)
+                for p, new, old, _ in deleted
+            ],
+        )
         dead = raw.join(tomb, ["__fp", "__pos"])
         pieces.append(
             dead.select(*names).withColumn("_change_type", F.lit(del_label))
@@ -3336,24 +3343,21 @@ def table_changes(
             p: a.get("deletionVector")
             for p, a in _replay(table, from_version).items()
         }
-    added: list[tuple[str, dict | None]] = []
-    deleted_desc: list[tuple[str, dict, dict | None]] = []
-    deleted_keys: set[str] = set()
+    added: list = []
+    deleted: list = []
     for v in range(from_version + 1, hi + 1):
-        a2, d2, k2 = _commit_row_changes(table, v, dv_state, include_deletes)
+        a2, d2 = _commit_row_changes(table, v, dv_state, include_deletes)
         added.extend(a2)
-        deleted_desc.extend(d2)
-        deleted_keys |= k2
+        deleted.extend(d2)
     if not include_deletes:
         if not added:
             return read_delta(spark, table, hi).filter(F.lit(False))
         # _read_files applies the snapshot's live DVs, so add-time
         # tombstones (clone v0) are correctly excluded here
-        return _read_files(spark, table, sorted(p for p, _ in added), hi)
+        return _read_files(spark, table, sorted(p for p, _, _ in added), hi)
     names = [f.name for f in table_schema(table, hi).fields]
     pieces = _change_pieces(
-        spark, table, hi, names, added, deleted_desc, deleted_keys,
-        "insert", "delete",
+        spark, table, hi, names, added, deleted, "insert", "delete"
     )
     if not pieces:
         return read_delta(spark, table, hi).filter(F.lit(False)).withColumn(
@@ -3429,7 +3433,7 @@ def table_changes_cdf(
         # IS a plain delete at this version, an unpaired
         # update_postimage IS a plain insert (no commit stages both
         # halves — update_where is two commits).
-        a2, d2, k2 = _commit_row_changes(table, v, dv_state, True)
+        a2, d2 = _commit_row_changes(table, v, dv_state, True)
         rels = _cdc_files_of(table, v)
         if rels:
             ps = _cdc_pieces(spark, table, hi, rels)
@@ -3451,7 +3455,7 @@ def table_changes_cdf(
                 ]
             return ps
         return _change_pieces(
-            spark, table, hi, names, a2, d2, k2, ins_label, del_label
+            spark, table, hi, names, a2, d2, ins_label, del_label
         )
 
     pieces: list[DataFrame] = []

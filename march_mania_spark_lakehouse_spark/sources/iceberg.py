@@ -2339,17 +2339,21 @@ def snapshot_dv_entries(
             if entry["status"] in (0, 1) and d.get("content", 0) == 1 and (
                 (d.get("file_format") or "").upper() == "PUFFIN"
             ):
-                out.append(
-                    {
-                        "puffin_path": d["file_path"],
-                        "offset": d["content_offset"],
-                        "length": d["content_size_in_bytes"],
-                        "referenced_data_file": d["referenced_data_file"],
-                        "cardinality": d["record_count"],
-                        "sequence_number": entry["sequence_number"],
-                    }
-                )
+                out.append(_dv_of(d, entry["sequence_number"]))
     return sorted(out, key=lambda e: e["referenced_data_file"])
+
+
+def _dv_of(d: dict, seq: "int | None" = None) -> dict:
+    """The :func:`snapshot_dv_entries` dict of a DV manifest
+    ``data_file`` ``d`` committed at ``seq``."""
+    return {
+        "puffin_path": d["file_path"],
+        "offset": d["content_offset"],
+        "length": d["content_size_in_bytes"],
+        "referenced_data_file": d["referenced_data_file"],
+        "cardinality": d["record_count"],
+        "sequence_number": seq,
+    }
 
 
 def _dv_locator(e: dict) -> dict:
@@ -2365,14 +2369,12 @@ def _dv_locator(e: dict) -> dict:
     }
 
 
-def read_dv_blob(puffin_path: str, offset: int, length: int) -> "list[int]":
-    """Decode one ``deletion-vector-v1`` blob (Puffin spec): u32 BE
-    combined length of magic+vector, the 4 magic bytes D1 D3 39 64,
-    the portable 64-bit roaring bitmap, and a u32 BE CRC-32 of
-    magic+vector — byte-identical to the Delta DV sidecar record, so
-    `sources/deletion_vectors.py` parses both."""
-    loc = {"path": puffin_path, "offset": offset, "size": length - 8}
-    return deletion_vectors.positions(loc)
+def _dv_positions(d: dict) -> "list[int]":
+    """Deleted positions of a DV manifest ``data_file``: its Puffin
+    ``deletion-vector-v1`` blob decoded by `deletion_vectors.positions`
+    (the record is byte-identical to a Delta DV sidecar's), checked
+    against the entry's ``record_count``."""
+    return deletion_vectors.positions(_dv_locator(_dv_of(d)))
 
 
 def _dv_tombstones(
@@ -4079,7 +4081,7 @@ def metadata_table(
                 avro_ocf as _avro,
             )
             from march_mania_spark_lakehouse_spark.sources.iceberg import (
-                read_dv_blob,
+                _dv_positions,
             )
 
             cols = [
@@ -4097,13 +4099,7 @@ def metadata_table(
                         seq = e["sequence_number"]
                         if (d.get("file_format") or "").upper() == "PUFFIN":
                             ref = d["referenced_data_file"]
-                            for pos in sorted(
-                                read_dv_blob(
-                                    d["file_path"],
-                                    d["content_offset"],
-                                    d["content_size_in_bytes"],
-                                )
-                            ):
+                            for pos in sorted(_dv_positions(d)):
                                 rows.append(
                                     (ref, pos, d["file_path"], seq)
                                 )
@@ -4581,7 +4577,9 @@ def clone(table: str, target: str) -> int:
     clone too). One trade, stated: the clone's sequence numbers below
     its single snapshot have no retained snapshots, so the change
     feeds refuse to stream the PRE-clone range (the clone point is the
-    feed's epoch), exactly as they refuse expired history."""
+    feed's epoch), exactly as they refuse expired history. The clone
+    keeps the source's format version and, on v3, its ``next-row-id``,
+    so carried DVs and row ids stay meaningful."""
     meta = current_metadata(table)
     sid = meta["current-snapshot-id"]
     if current_version(target) is not None:
@@ -4597,7 +4595,12 @@ def clone(table: str, target: str) -> int:
         dict(schema, **{"schema-id": 0}),
         [],
         {"cloned-from": os.path.abspath(table), "cloned-snapshot-id": str(sid)},
+        # a v3 source's DV entries and row ids need a v3 clone: later
+        # deletes write DVs and appends allocate ids past the source's
+        format_version=int(meta.get("format-version", FORMAT_VERSION)),
     )
+    if "next-row-id" in meta:
+        new_meta["next-row-id"] = meta["next-row-id"]
     new_meta.update(
         {
             # the clone's one snapshot lands at the source's last
@@ -6824,9 +6827,7 @@ def _iceberg_snapshot_actions(
             out: dict[str, set] = {}
             for e in dvs.values():
                 out.setdefault(e["referenced_data_file"], set()).update(
-                    read_dv_blob(
-                        e["puffin_path"], e["offset"], e["length"]
-                    )
+                    deletion_vectors.positions(_dv_locator(e))
                 )
             for p in pos_files:
                 t = _pq.read_table(p, columns=["file_path", "pos"])
@@ -7785,17 +7786,9 @@ def table_changes(
                 else []
             )
         }
-        new_entries = [
-            {
-                "puffin_path": d["file_path"],
-                "offset": d["content_offset"],
-                "length": d["content_size_in_bytes"],
-                "referenced_data_file": d["referenced_data_file"],
-                "cardinality": d["record_count"],
-            }
-            for d in dv_dels[dseq]
-        ]
-        tomb = _dv_tombstones(spark, new_entries, parent_dvs)
+        tomb = _dv_tombstones(
+            spark, [_dv_of(d) for d in dv_dels[dseq]], parent_dvs
+        )
         ref_files = sorted(
             {
                 os.path.relpath(

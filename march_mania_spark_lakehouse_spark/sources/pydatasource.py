@@ -1,17 +1,29 @@
-"""Custom connector via the Python Data Source API (Spark 4).
+"""Custom connectors via the Python Data Source API (Spark 4).
 
-The reference's only custom "connector" behavior is registry-routed CSV
-ingest (`jobs/01_ingest_bronze.py:43-63`); this shows the engine-native
-way to add a NEW source format: a `DataSource` subclass whose reader
-declares its own partitioning, so Spark schedules one task per input
-split exactly like a file scan — the pattern for wrapping any external
-system (an API, a queue, a proprietary store) as a first-class table.
+Two kinds of source live here:
 
-The implementation here is a deterministic synthetic documents
-generator (seeded per partition, no RNG state shared across tasks):
-useful for tests and load generation, and honest about the scale
-contract — partitions() defines parallelism, read() streams rows
-without materializing the partition.
+- ``synthetic_docs`` / ``synthetic_docs_stream``: a deterministic
+  synthetic documents generator (seeded per partition, no RNG state
+  shared across tasks). The batch reader declares its own partitioning,
+  so Spark schedules one task per split exactly like a file scan — the
+  pattern for wrapping any external system as a first-class table.
+- four streaming sources over the lake tables: ``delta_table_stream``
+  and ``iceberg_table_stream`` (append-only) and ``delta_table_cdc``
+  and ``iceberg_table_cdc`` (row-level changes in ``_change_type``).
+  Offsets are Delta versions or Iceberg sequence numbers.
+
+The table sources are ``SimpleDataSourceStreamReader``s: Spark runs
+them in its Python data-source worker, which has no SparkSession, so a
+micro-batch is materialized with pyarrow — the documented fit for
+control-plane-rate streams, traded against the batch change feeds'
+executor scans. What they share with batch is the planning: Delta
+commits are walked by `delta_log._commit_row_changes` (the walker
+under `delta_log.table_changes`), Iceberg ranges by
+`iceberg.change_feed_entries`, and deletion vectors decode through
+`deletion_vectors`. Each format turns a data file into rows in one
+function (`_DeltaFiles.rows`, `_iceberg_rows`, both over `_file_rows`),
+and one row-id diff (`_rid_diff`) serves both formats' lineage
+recovery.
 """
 
 from __future__ import annotations
@@ -115,17 +127,91 @@ class SyntheticDocsStreamDataSource(DataSource):
 
 
 # --------------------------------------------------------------------------
-# Streaming FROM a Delta-format table: the transaction log is already a
-# replayable ordered change log, so a stream source falls out of it —
-# offsets are table versions, a micro-batch is the rows added by the
-# commits since the checkpointed version (append-only contract, same as
-# `delta_log.table_changes`), and replay is deterministic because
-# committed versions are immutable. Data files are read driver-side
-# with pyarrow (the simple-reader contract; no SparkSession needed) —
-# the documented fit for control-plane-rate streams. Partitioned and
-# column-mapped tables compose: partition columns restore from each
-# add's partitionValues, data columns read under physical names.
+# Streaming FROM lake tables. Offsets are Delta table versions or Iceberg
+# sequence numbers; committed versions and snapshots are immutable, so a
+# replayed range is deterministic. A micro-batch is the batch change plan
+# (`delta_log._commit_row_changes`, `iceberg.change_feed_entries`)
+# materialized row by row: these readers run in Spark's Python
+# data-source worker, which has no SparkSession, so each format turns a
+# data file into rows with pyarrow through `_file_rows`.
 # --------------------------------------------------------------------------
+
+
+def _file_rows(
+    path: str,
+    cols: list,
+    fills: "dict | None" = None,
+    phys: "dict | None" = None,
+    dead=(),
+    want=None,
+):
+    """(position, value tuple) for each row of one data file, in file
+    order: ``cols`` read under their physical names ``phys`` (Delta
+    column mapping), partition columns from ``fills``, a column the
+    file lacks as null. Positions in ``dead`` are skipped; ``want``
+    emits only those positions, in its order."""
+    import pyarrow.parquet as pq
+
+    fills, phys = fills or {}, phys or {}
+    recs = pq.read_table(path).to_pylist()
+    for pos in range(len(recs)) if want is None else want:
+        if pos not in dead:
+            rec = recs[pos]
+            yield pos, tuple(
+                fills[c] if c in fills else rec.get(phys.get(c, c))
+                for c in cols
+            )
+
+
+def _rid_diff(old: list, new: list) -> list:
+    """delete/insert batch between two [(vals, row id, row version)]
+    states keyed by row id: a row whose version moved is an update and
+    emits its pre- and post-image."""
+    old_by = {rid: (ver, vals) for vals, rid, ver in old}
+    new_by = {rid: (ver, vals) for vals, rid, ver in new}
+    rows = []
+    for rid, (ver, vals) in sorted(old_by.items()):
+        if rid not in new_by or new_by[rid][0] > ver:
+            rows.append(vals + ("delete",))
+    for rid, (ver, vals) in sorted(new_by.items()):
+        if rid not in old_by or ver > old_by[rid][0]:
+            rows.append(vals + ("insert",))
+    return rows
+
+
+def _starting_mode(options: dict, key: str) -> str:
+    """The CDC sources' expired-history policy (option ``key``):
+    'earliest' (default) replays the full retained history and RAISES
+    on an expired range; 'latest' starts a fresh checkpoint at the
+    current high-water mark (no backfill); 'retained' re-bootstraps on
+    expiry — when the next range is no longer replayable (log cleanup /
+    expire_snapshots outran the checkpoint), the batch degrades to the
+    FULL CURRENT SNAPSHOT tagged ``_change_type='bootstrap_insert'``
+    and the stream continues from the head. Downstream state must treat
+    a bootstrap batch as a RESET (replace, not merge) — that is the
+    production recovery contract: rebuild from the snapshot, then
+    resume incremental."""
+    mode = (options.get(key) or "earliest").lower()
+    if mode not in ("earliest", "latest", "retained"):
+        raise ValueError(
+            f"option {key} must be 'earliest', 'latest' or 'retained'; "
+            f"got {mode!r}"
+        )
+    return mode
+
+
+def _decimal(v, type_name: str):
+    """``v`` as a Decimal quantized to the DECLARED scale of
+    ``type_name`` (the batch scan's rule: a log string or manifest value
+    is canonical but may drop trailing zeros)."""
+    import decimal
+    import re
+
+    m = re.match(r"decimal\((\d+),\s*(-?\d+)\)", type_name)
+    d = decimal.Decimal(v)
+    if m:
+        d = d.quantize(decimal.Decimal(1).scaleb(-int(m.group(2))))
+    return d
 
 
 def _cast_pv(s: "str | None", spark_type_name: str):
@@ -151,110 +237,66 @@ def _cast_pv(s: "str | None", spark_type_name: str):
     if spark_type_name == "string":
         return s
     if spark_type_name.startswith("decimal"):
-        import decimal
-        import re
-
-        # quantize to the DECLARED scale (the batch scan's rule: the
-        # log string is canonical but may drop trailing zeros)
-        m = re.match(r"decimal\((\d+),\s*(-?\d+)\)", spark_type_name)
-        d = decimal.Decimal(s)
-        if m:
-            d = d.quantize(decimal.Decimal(1).scaleb(-int(m.group(2))))
-        return d
+        return _decimal(s, spark_type_name)
     raise NotImplementedError(
         f"partition type {spark_type_name!r} in a streaming source"
     )
 
 
-def _iceberg_spark_type(type_name: str):
-    """Iceberg schema type name → Spark type for the streaming
-    DataSources' declared schemas (decimal parsed by precision/scale;
-    plain ntz timestamps must NOT map to TimestampType or naive values
-    get session-timezone-shifted)."""
-    import re
+class _DeltaFiles:
+    """Rows of a Delta table's data files under version ``v``'s declared
+    columns: data columns read under their physical names (column
+    mapping), partition columns restored from each add's
+    partitionValues, keyed by physical name too."""
 
-    from pyspark.sql import types as T
+    def __init__(self, table: str, v: int) -> None:
+        from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    if type_name.startswith("decimal"):
-        p, s = re.findall(r"-?\d+", type_name)
-        return T.DecimalType(int(p), int(s))
-    return {
-        "long": T.LongType(), "int": T.IntegerType(),
-        "string": T.StringType(), "double": T.DoubleType(),
-        "float": T.FloatType(), "boolean": T.BooleanType(),
-        "date": T.DateType(), "timestamptz": T.TimestampType(),
-        "timestamp": T.TimestampNTZType(),
-        "binary": T.BinaryType(),
-    }[type_name]
+        schema = delta_log.table_schema(table, v)
+        mapping = delta_log.column_mapping(table, v) or {}
+        parts = set(delta_log.table_partition_columns(table, v))
+        self.table = table
+        self.cols = [f.name for f in schema.fields]
+        self.phys = {c: mapping.get(c, c) for c in self.cols}
+        self.part_types = {
+            f.name: f.dataType.simpleString()
+            for f in schema.fields
+            if f.name in parts
+        }
+
+    def rows(self, rel: str, pv: "dict | None", dv=None, want=None, extra=()):
+        """`_file_rows` of log path ``rel``, its add-time deletion vector
+        ``dv`` applied; ``pv`` None reads partition columns from the
+        file itself (change files carry them inline)."""
+        from march_mania_spark_lakehouse_spark.sources import deletion_vectors
+
+        fills = (
+            {}
+            if pv is None
+            else {
+                c: _cast_pv(pv.get(self.phys[c]), t)
+                for c, t in self.part_types.items()
+            }
+        )
+        return _file_rows(
+            os.path.join(self.table, rel),
+            self.cols + list(extra),
+            fills,
+            self.phys,
+            set(deletion_vectors.read_dv(self.table, dv)) if dv else (),
+            want,
+        )
 
 
-class _DeltaTableStreamReader:
+class _DeltaStreamReader:
+    """Offsets are Delta versions; ``_batch(lo, hi)`` is the micro-batch
+    for the commits in (lo, hi]."""
+
     def __init__(self, options: dict) -> None:
         self.table = options["path"]
 
     def initialOffset(self) -> dict:
         return {"version": -1}
-
-    def _added_files(self, lo: int, hi: int) -> list:
-        from march_mania_spark_lakehouse_spark.sources import delta_log
-
-        files = []
-        for v in range(lo + 1, hi + 1):
-            p = delta_log._commit_path(self.table, v)
-            if not os.path.exists(p):
-                raise FileNotFoundError(f"missing commit {v} for {self.table}")
-            for a in delta_log._read_actions(p):
-                if "remove" in a and a["remove"].get("dataChange", True):
-                    raise delta_log.DeltaNonAppendChangeError(
-                        f"commit {v} rewrites files; cannot stream it as appends"
-                    )
-                if "add" in a and a["add"].get("dataChange", True):
-                    files.append(
-                        (
-                            a["add"]["path"],
-                            a["add"].get("partitionValues") or {},
-                            a["add"].get("deletionVector"),
-                        )
-                    )
-        return files
-
-    def _rows(self, files: list):
-        import pyarrow.parquet as pq
-
-        from march_mania_spark_lakehouse_spark.sources import (
-            deletion_vectors,
-            delta_log,
-        )
-
-        schema = delta_log.table_schema(self.table)
-        part_cols = set(delta_log.table_partition_columns(self.table))
-        mapping = delta_log.column_mapping(self.table) or {}
-        cols = [f.name for f in schema.fields]
-        # column-mapped tables store PHYSICAL names in files and key
-        # partitionValues by them; one lookup per field translates
-        phys = {c: mapping.get(c, c) for c in cols}
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        for rel, pv, dv in files:
-            t = pq.read_table(os.path.join(self.table, rel))
-            names = set(t.column_names)
-            fills = {
-                c: _cast_pv(pv.get(phys[c]), types[c])
-                for c in cols
-                if c in part_cols
-            }
-            # an add carrying a deletion vector (shallow-clone v0 /
-            # RESTORE re-add) enters the stream WITHOUT its dead rows
-            dead = (
-                set(deletion_vectors.read_dv(self.table, dv)) if dv else set()
-            )
-            for pos, batch in enumerate(t.to_pylist()):
-                if pos in dead:
-                    continue
-                yield tuple(
-                    fills[c] if c in fills
-                    else (batch.get(phys[c]) if phys[c] in names else None)
-                    for c in cols
-                )
 
     def read(self, start: dict):
         from march_mania_spark_lakehouse_spark.sources import delta_log
@@ -265,27 +307,54 @@ class _DeltaTableStreamReader:
             return (iter(()), {"version": lo})
         # materialized list, not a generator: Spark's runner pickles the
         # returned iterable for prefetch bookkeeping
-        return (
-            list(self._rows(self._added_files(lo, hi))),
-            {"version": hi},
-        )
+        return (self._batch(lo, hi), {"version": hi})
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # restart replays bypass the prefetch cache and hand this value
         # straight to the runner, which requires an ITERATOR (lists fail
         # the DATA_SOURCE_INVALID_RETURN_TYPE check)
-        return iter(
-            list(
-                self._rows(
-                    self._added_files(
-                        int(start["version"]), int(end["version"])
-                    )
-                )
-            )
-        )
+        return iter(self._batch(int(start["version"]), int(end["version"])))
 
     def commit(self, end: dict) -> None:
         pass  # committed versions are immutable — the log IS the ack
+
+
+class _DeltaTableStreamReader(_DeltaStreamReader):
+    """The rows appended since the checkpointed version (append-only,
+    as `delta_log.table_changes`): any commit removing data raises; an
+    add carrying a deletion vector (shallow-clone v0 / RESTORE re-add)
+    enters without its dead rows."""
+
+    def _batch(self, lo: int, hi: int) -> list:
+        from march_mania_spark_lakehouse_spark.sources import delta_log
+
+        added = [
+            a
+            for v in range(lo + 1, hi + 1)
+            for a in delta_log._commit_row_changes(self.table, v, {}, False)[0]
+        ]
+        files = _DeltaFiles(self.table, hi)
+        return [
+            vals for rel, dv, pv in added for _, vals in files.rows(rel, pv, dv)
+        ]
+
+
+def _plain_schema(fields, *extra):
+    """StructType of ``fields`` without field metadata, plus ``extra``:
+    metadata-bearing fields (columnMapping) trip the streaming sink's
+    schema assertions, and physical names are a reader concern."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, f.nullable) for f in fields]
+        + list(extra)
+    )
+
+
+def _change_type_field():
+    from pyspark.sql import types as T
+
+    return T.StructField("_change_type", T.StringType(), False)
 
 
 class DeltaTableStreamDataSource(DataSource):
@@ -298,61 +367,28 @@ class DeltaTableStreamDataSource(DataSource):
         return "delta_table_stream"
 
     def schema(self):
-        from pyspark.sql import types as T
-
         from march_mania_spark_lakehouse_spark.sources import delta_log
 
-        base = delta_log.table_schema(self.options["path"])
-        # strip columnMapping field metadata: physical names are a
-        # reader-side concern, and metadata-bearing fields trip the
-        # streaming sink's schema assertions
-        return T.StructType(
-            [T.StructField(f.name, f.dataType, f.nullable) for f in base.fields]
-        )
+        return _plain_schema(delta_log.table_schema(self.options["path"]).fields)
 
     def simpleStreamReader(self, schema):  # noqa: ARG002 (API signature)
         return _DeltaTableStreamReader(self.options)
 
 
-def _starting_mode(options: dict, key: str) -> str:
-    """The CDC sources' expired-history policy (option ``key``):
-    'earliest' (default) replays the full retained history and RAISES
-    on an expired range; 'latest' starts a fresh checkpoint at the
-    current high-water mark (no backfill); 'retained' re-bootstraps on
-    expiry — when the next range is no longer replayable (log cleanup /
-    expire_snapshots outran the checkpoint), the batch degrades to the
-    FULL CURRENT SNAPSHOT tagged ``_change_type='bootstrap_insert'``
-    and the stream continues from the head. Downstream state must treat
-    a bootstrap batch as a RESET (replace, not merge) — that is the
-    production recovery contract: rebuild from the snapshot, then
-    resume incremental."""
-    mode = (options.get(key) or "earliest").lower()
-    if mode not in ("earliest", "latest", "retained"):
-        raise ValueError(
-            f"option {key} must be 'earliest', 'latest' or 'retained'; "
-            f"got {mode!r}"
-        )
-    return mode
-
-
-class _DeltaTableCdcStreamReader:
-    """Row-level CDC micro-batches from a Delta table: appended rows as
-    inserts, DELETION-VECTOR delete commits decomposed into the
-    tombstoned rows as deletes (`_change_type` column) — the streaming
-    twin of `delta_log.table_changes(include_deletes=True)` and the
-    Delta mirror of `_IcebergTableCdcStreamReader`. A DV commit re-adds
-    each touched file with a grown bitmap, so its deleted rows are the
-    (new DV − predecessor DV) positions, recovered by reading ONLY the
-    touched files. True rewrites (overwrite/MERGE/RESTORE) raise;
-    OPTIMIZE commits (dataChange=false) are correctly invisible.
-    Partitioned and column-mapped tables compose: partition columns
-    restore from each add's partitionValues and files are read under
-    their physical names — the streaming mirror of the batch scan's
-    log-planned restoration. Driver-side pyarrow materialization is
-    the documented SimpleDataSourceStreamReader trade."""
+class _DeltaTableCdcStreamReader(_DeltaStreamReader):
+    """Row-level CDC micro-batches from a Delta table — the streaming
+    twin of `delta_log.table_changes(include_deletes=True)`, walking
+    the same `_commit_row_changes` plan, and the Delta mirror of
+    `_IcebergTableCdcStreamReader`. Appended rows are inserts; a
+    DELETION-VECTOR delete commit re-adds each touched file with a
+    grown bitmap, so its deleted rows are the (new DV − predecessor DV)
+    positions, read from ONLY the touched files. A commit carrying
+    explicit change files (delta.enableChangeDataFeed) feeds from them
+    alone. True rewrites (overwrite/MERGE/RESTORE) raise; OPTIMIZE
+    commits (dataChange=false) are invisible."""
 
     def __init__(self, options: dict) -> None:
-        self.table = options["path"]
+        super().__init__(options)
         self.starting = _starting_mode(options, "starting_version")
 
     def initialOffset(self) -> dict:
@@ -363,357 +399,145 @@ class _DeltaTableCdcStreamReader:
             return {"version": -1 if v is None else v}
         return {"version": -1}
 
-    def _bootstrap_rows(self, hi: int) -> list:
-        """The re-bootstrap batch: every row live at version ``hi``
-        (checkpoint-seeded replay + DV application), tagged
-        'bootstrap_insert' — a downstream state RESET, not a merge."""
-        import pyarrow.parquet as pq
-
-        from march_mania_spark_lakehouse_spark.sources import (
-            deletion_vectors,
-            delta_log,
-        )
-
-        schema = delta_log.table_schema(self.table, hi)
-        part_cols = set(delta_log.table_partition_columns(self.table, hi))
-        mapping = delta_log.column_mapping(self.table, hi) or {}
-        cols = [f.name for f in schema.fields]
-        phys = {c: mapping.get(c, c) for c in cols}
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        rows = []
-        for rel, add in sorted(delta_log._replay(self.table, hi).items()):
-            t = pq.read_table(os.path.join(self.table, rel))
-            names = set(t.column_names)
-            pv = add.get("partitionValues") or {}
-            fills = {
-                c: _cast_pv(pv.get(phys[c]), types[c])
-                for c in cols
-                if c in part_cols
-            }
-            dv = add.get("deletionVector")
-            dead = (
-                set(deletion_vectors.read_dv(self.table, dv)) if dv else set()
-            )
-            for pos, rec in enumerate(t.to_pylist()):
-                if pos in dead:
-                    continue
-                rows.append(
-                    tuple(
-                        fills[c] if c in fills
-                        else (rec.get(phys[c]) if phys[c] in names else None)
-                        for c in cols
-                    )
-                    + ("bootstrap_insert",)
-                )
-        return rows
+    def _live_rows(self, files: _DeltaFiles, live: dict) -> list:
+        """[(values, row id, row commit version)] of every row live in
+        ``live`` ({log path: add}), files in path order; ids and
+        versions per row tracking (a materialized column overrides
+        baseRowId / defaultRowCommitVersion), None where a row has
+        none."""
+        out = []
+        for rel, add in sorted(live.items()):
+            base = add.get("baseRowId")
+            for pos, vals in files.rows(
+                rel,
+                add.get("partitionValues") or {},
+                add.get("deletionVector"),
+                extra=("_row_id", "_row_commit_version"),
+            ):
+                rid, ver = vals[-2:]
+                if rid is None and base is not None:
+                    rid = base + pos
+                if ver is None:
+                    ver = add.get("defaultRowCommitVersion")
+                out.append((vals[:-2], rid, ver))
+        return out
 
     def _changes(self, lo: int, hi: int) -> list:
-        import pyarrow.parquet as pq
-
         from march_mania_spark_lakehouse_spark.sources import (
             deletion_vectors,
             delta_log,
         )
 
-        schema = delta_log.table_schema(self.table, hi)
-        part_cols = set(delta_log.table_partition_columns(self.table, hi))
-        mapping = delta_log.column_mapping(self.table, hi) or {}
-        cols = [f.name for f in schema.fields]
-        phys = {c: mapping.get(c, c) for c in cols}
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        dv_state: dict = (
-            {
-                p: a.get("deletionVector")
-                for p, a in delta_log._replay(self.table, lo).items()
-            }
-            if lo >= 0
-            else {}
-        )
-        added: list[tuple[str, dict, dict | None]] = []
-        deleted: list[tuple[str, dict, dict, dict | None]] = []
-        cdc_rels: list[str] = []
+        dv_state = {
+            p: a.get("deletionVector")
+            for p, a in delta_log._replay(self.table, lo).items()
+        }
+        added, deleted, cdc_rels = [], [], []
         for v in range(lo + 1, hi + 1):
-            p = delta_log._commit_path(self.table, v)
-            if not os.path.exists(p):
-                raise FileNotFoundError(f"missing commit {v} for {self.table}")
-            actions = delta_log._read_actions(p)
-            removes = {
-                a["remove"]["path"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            }
-            adds = [
-                a["add"] for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            ]
-            cdc = [a["cdc"] for a in actions if "cdc" in a]
-            if cdc:
-                # explicit change files (delta.enableChangeDataFeed):
-                # the spec rule — a commit WITH cdc actions feeds from
-                # them alone (labels incl. update_pre/postimage were
-                # written by the producing op); only the DV state
-                # threads forward for later derived commits
-                for a in adds:
-                    dv_state[a["path"]] = a.get("deletionVector")
-                cdc_rels.extend(c["path"] for c in cdc)
-                continue
-            if not removes:
-                added.extend(
-                    (
-                        a["path"],
-                        a.get("partitionValues") or {},
-                        a.get("deletionVector"),
-                    )
-                    for a in adds
-                )
-                for a in adds:
-                    dv_state[a["path"]] = a.get("deletionVector")
-                continue
-            readd = {a["path"]: a for a in adds}
-            if set(readd) != removes or not all(
-                a.get("deletionVector") for a in readd.values()
-            ):
-                raise delta_log.DeltaNonAppendChangeError(
-                    f"commit {v} rewrites data files; a CDC stream "
-                    "cannot represent it as row-level changes"
-                )
-            for path, a in readd.items():
-                deleted.append(
-                    (path, a.get("partitionValues") or {},
-                     a["deletionVector"], dv_state.get(path))
-                )
-                dv_state[path] = a["deletionVector"]
+            a2, d2 = delta_log._commit_row_changes(self.table, v, dv_state, True)
+            rels = delta_log._cdc_files_of(self.table, v)
+            if rels:
+                # the spec rule: a commit WITH change files feeds from
+                # them alone (the producing op wrote the labels, incl.
+                # update pre/post images); its DV state still threads
+                cdc_rels.extend(rels)
+            else:
+                added.extend(a2)
+                deleted.extend(d2)
+        files = _DeltaFiles(self.table, hi)
 
-        def _tuple(rec: dict, names: set, fills: dict) -> tuple:
-            return tuple(
-                fills[c] if c in fills
-                else (rec.get(phys[c]) if phys[c] in names else None)
-                for c in cols
-            )
+        def dv_set(dv) -> set:
+            return set(deletion_vectors.read_dv(self.table, dv)) if dv else set()
 
-        def _fills(pv: dict) -> dict:
-            return {
-                c: _cast_pv(pv.get(phys[c]), types[c])
-                for c in cols
-                if c in part_cols
-            }
-
-        rows: list[tuple] = []
-        for rel, pv, add_dv in sorted(added, key=lambda x: x[0]):
-            t = pq.read_table(os.path.join(self.table, rel))
-            names = set(t.column_names)
-            fills = _fills(pv)
-            # add-time tombstones (shallow-clone v0 / RESTORE re-add)
-            # were dead before the file entered the feed: not inserts
-            dead = (
-                set(deletion_vectors.read_dv(self.table, add_dv))
-                if add_dv
-                else set()
+        rows: list = []
+        for rel, dv, pv in sorted(added, key=lambda a: a[0]):
+            rows.extend(vals + ("insert",) for _, vals in files.rows(rel, pv, dv))
+        for rel, new, old, pv in sorted(deleted, key=lambda d: d[0]):
+            want = sorted(dv_set(new) - dv_set(old))
+            rows.extend(
+                vals + ("delete",) for _, vals in files.rows(rel, pv, want=want)
             )
-            for pos, rec in enumerate(t.to_pylist()):
-                if pos in dead:
-                    continue
-                rows.append(_tuple(rec, names, fills) + ("insert",))
-        for rel, pv, new_desc, old_desc in sorted(deleted, key=lambda x: x[0]):
-            new_pos = set(deletion_vectors.read_dv(self.table, new_desc))
-            old_pos = (
-                set(deletion_vectors.read_dv(self.table, old_desc))
-                if old_desc
-                else set()
-            )
-            t = pq.read_table(os.path.join(self.table, rel))
-            names = set(t.column_names)
-            fills = _fills(pv)
-            recs = t.to_pylist()
-            for pos in sorted(new_pos - old_pos):
-                rows.append(_tuple(recs[pos], names, fills) + ("delete",))
         for rel in sorted(cdc_rels):
-            # change files carry ALL columns inline (partition columns
-            # included) under physical names, plus _change_type
-            t = pq.read_table(os.path.join(self.table, rel))
-            names = set(t.column_names)
-            for rec in t.to_pylist():
-                rows.append(
-                    tuple(
-                        rec.get(phys[c]) if phys[c] in names else None
-                        for c in cols
-                    )
-                    + (rec.get("_change_type"),)
-                )
+            rows.extend(
+                vals for _, vals in files.rows(rel, None, extra=("_change_type",))
+            )
         return rows
 
     def _lineage_diff_rows(self, lo: int, hi: int) -> "list | None":
         """EXACT recovery across cleaned-up history via Delta ROW
-        TRACKING (round 11, the Iceberg reader's twin): when a
-        checkpoint was written AT the cursor version (checkpointing
-        the cursor is how a caller keeps a stream resumable past
-        `cleanup_log` — old checkpoint parquet survives cleanup), the
-        emitted batch is the row-id diff between cursor and head —
-        delete(old image) + insert(new image), exactly-once for the
-        consumer. None when unrecoverable (no row tracking, no cursor
-        checkpoint, or null-lineage rows) — the caller falls back to
+        TRACKING (the Iceberg reader's twin): when a checkpoint was
+        written AT the cursor version (checkpointing the cursor is how
+        a caller keeps a stream resumable past `cleanup_log` — old
+        checkpoint parquet survives cleanup), the emitted batch is the
+        row-id diff between cursor and head — delete(old image) +
+        insert(new image), exactly-once for the consumer. None when
+        unrecoverable (no row tracking, no cursor state, a cursor-side
+        file vacuumed, or null-lineage rows) — the caller falls back to
         the 'bootstrap_insert' reset."""
-        import pyarrow.parquet as pq
-
-        from march_mania_spark_lakehouse_spark.sources import (
-            deletion_vectors,
-            delta_log,
-        )
+        from march_mania_spark_lakehouse_spark.sources import delta_log
 
         if not delta_log._row_tracking_enabled(self.table, hi):
             return None
-        old_live = delta_log.replay_at_checkpoint(self.table, lo)
-        if old_live is None:
-            # the non-append recovery path (round 12): the range's
-            # commits are still READABLE (a RESTORE / overwrite raised
-            # DeltaNonAppendChangeError, not log cleanup), so the
-            # cursor state replays from the log directly
-            try:
+        files = _DeltaFiles(self.table, hi)
+        try:
+            # without a cursor checkpoint the range's commits may still
+            # be READABLE (a RESTORE / overwrite raised
+            # DeltaNonAppendChangeError, not log cleanup)
+            old_live = delta_log.replay_at_checkpoint(self.table, lo)
+            if old_live is None:
                 old_live = delta_log._replay(self.table, lo)
-            except FileNotFoundError:
-                return None
-        new_live = delta_log._replay(self.table, hi)
-        schema = delta_log.table_schema(self.table, hi)
-        part_cols = set(delta_log.table_partition_columns(self.table, hi))
-        mapping = delta_log.column_mapping(self.table, hi) or {}
-        cols = [f.name for f in schema.fields]
-        phys = {c: mapping.get(c, c) for c in cols}
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
-
-        def rows_of(live) -> "dict | None":
-            out: dict = {}
-            for rel, add in sorted(live.items()):
-                p = rel if os.path.isabs(rel) else os.path.join(
-                    self.table, rel
-                )
-                try:
-                    t = pq.read_table(p)
-                except FileNotFoundError:
-                    # a cursor-side file removed AND vacuumed between
-                    # cursor and head: the old image is unknowable —
-                    # signal unrecoverable so the caller falls back to
-                    # the bootstrap reset (which reads head files only)
-                    return None
-                names = set(t.column_names)
-                pv = add.get("partitionValues") or {}
-                fills = {
-                    c: _cast_pv(pv.get(phys[c]), types[c])
-                    for c in cols
-                    if c in part_cols
-                }
-                dv = add.get("deletionVector")
-                dead = (
-                    set(deletion_vectors.read_dv(self.table, dv))
-                    if dv
-                    else set()
-                )
-                base = add.get("baseRowId")
-                dcv = add.get("defaultRowCommitVersion")
-                mat_id = "_row_id" in names
-                mat_rcv = "_row_commit_version" in names
-                for pos, rec in enumerate(t.to_pylist()):
-                    if pos in dead:
-                        continue
-                    rid = rec.get("_row_id") if mat_id else None
-                    if rid is None and base is not None:
-                        rid = base + pos
-                    if rid is None:
-                        return None  # pre-enable file: refuse
-                    rcv = rec.get("_row_commit_version") if mat_rcv else None
-                    if rcv is None:
-                        rcv = dcv
-                    if rcv is None:
-                        return None  # id without a version clock: refuse
-                    out[rid] = (
-                        rcv,
-                        tuple(
-                            fills[c] if c in fills
-                            else (rec.get(phys[c]) if phys[c] in names else None)
-                            for c in cols
-                        ),
-                    )
-            return out
-
-        old_by = rows_of(old_live)
-        if old_by is None:
+            # a file removed AND vacuumed between cursor and head makes
+            # the old image unknowable
+            old = self._live_rows(files, old_live)
+            new = self._live_rows(files, delta_log._replay(self.table, hi))
+        except FileNotFoundError:
             return None
-        new_by = rows_of(new_live)
-        if new_by is None:
-            return None
-        rows = []
-        for rid, (rcv, vals) in sorted(old_by.items()):
-            if rid not in new_by or new_by[rid][0] > rcv:
-                rows.append(vals + ("delete",))
-        for rid, (rcv, vals) in sorted(new_by.items()):
-            if rid not in old_by or rcv > old_by[rid][0]:
-                rows.append(vals + ("insert",))
-        return rows
+        if any(rid is None or ver is None for _, rid, ver in old + new):
+            return None  # pre-enable file, or an id without a version
+        return _rid_diff(old, new)
+
+    def _bootstrap_rows(self, hi: int) -> list:
+        """The re-bootstrap batch: every row live at version ``hi``,
+        tagged 'bootstrap_insert' — a downstream state RESET."""
+        from march_mania_spark_lakehouse_spark.sources import delta_log
+
+        live = delta_log._replay(self.table, hi)
+        return [
+            vals + ("bootstrap_insert",)
+            for vals, _, _ in self._live_rows(_DeltaFiles(self.table, hi), live)
+        ]
 
     def _refuse_id_mapping(self, hi: int) -> None:
         from march_mania_spark_lakehouse_spark.sources import delta_log
 
-        md = delta_log._latest_metadata(self.table, hi)
+        md = delta_log._latest_metadata(self.table, hi) or {}
         if (md.get("configuration") or {}).get(
             "delta.columnMapping.mode"
         ) == "id":
             raise NotImplementedError(
                 "delta_table_cdc on a columnMapping.mode=id table: this "
-                "driver-side reader resolves columns by physical name; "
-                "read the table in batch (read_delta handles id "
-                "resolution)"
+                "reader resolves columns by physical name; read the "
+                "table in batch (read_delta handles id resolution)"
             )
 
-    def read(self, start: dict):
-        from march_mania_spark_lakehouse_spark.sources import delta_log
-
-        lo = int(start["version"])
-        hi = delta_log.latest_version(self.table)
-        if hi is None or hi <= lo:
-            return (iter(()), {"version": lo})
-        self._refuse_id_mapping(hi)
+    def _batch(self, lo: int, hi: int) -> list:
         from march_mania_spark_lakehouse_spark.sources.delta_log import (
             DeltaNonAppendChangeError,
         )
 
+        self._refuse_id_mapping(hi)
         try:
-            return (self._changes(lo, hi), {"version": hi})
+            return self._changes(lo, hi)
         except (FileNotFoundError, DeltaNonAppendChangeError):
             # commits in (lo, hi] were cleaned up past the checkpoint,
-            # OR a commit rewrites data files (RESTORE / overwrite)
-            # that the per-commit walk cannot decompose — with row
-            # tracking the resumed batch is the EXACT state diff
-            # cursor→head (delete/insert, update pre/post images), the
-            # same vocabulary, net-exact for the consumer
+            # OR a commit rewrites data files (RESTORE / overwrite) that
+            # the per-commit walk cannot decompose — with row tracking
+            # the batch is the EXACT state diff cursor→head, else the
+            # full snapshot as a reset
             if self.starting != "retained":
                 raise
             diff = self._lineage_diff_rows(lo, hi)
-            if diff is not None:
-                return (diff, {"version": hi})
-            return (self._bootstrap_rows(hi), {"version": hi})
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # iter(): restart replays hand this straight to the runner,
-        # which requires an ITERATOR
-        from march_mania_spark_lakehouse_spark.sources.delta_log import (
-            DeltaNonAppendChangeError,
-        )
-
-        try:
-            return iter(
-                self._changes(int(start["version"]), int(end["version"]))
-            )
-        except (FileNotFoundError, DeltaNonAppendChangeError):
-            if self.starting != "retained":
-                raise
-            diff = self._lineage_diff_rows(
-                int(start["version"]), int(end["version"])
-            )
-            if diff is not None:
-                return iter(diff)
-            return iter(self._bootstrap_rows(int(end["version"])))
-
-    def commit(self, end: dict) -> None:
-        pass  # committed versions are immutable — the log IS the ack
+            return diff if diff is not None else self._bootstrap_rows(hi)
 
 
 class DeltaTableCdcStreamDataSource(DataSource):
@@ -728,25 +552,21 @@ class DeltaTableCdcStreamDataSource(DataSource):
     cannot decompose: RESTORE / overwrite), 'latest' (fresh
     checkpoints start at the head), or 'retained' — an expired range
     or a non-decomposable commit recovers: with ROW TRACKING the
-    resumed batch is the EXACT state diff cursor→head (round 12 —
-    a mid-stream RESTORE retracts precisely), else the full current
-    snapshot re-emits tagged 'bootstrap_insert' (a downstream state
-    reset; see `_starting_mode`)."""
+    resumed batch is the EXACT state diff cursor→head (a mid-stream
+    RESTORE retracts precisely), else the full current snapshot
+    re-emits tagged 'bootstrap_insert' (a downstream state reset; see
+    `_starting_mode`)."""
 
     @classmethod
     def name(cls) -> str:
         return "delta_table_cdc"
 
     def schema(self):
-        from pyspark.sql import types as T
-
         from march_mania_spark_lakehouse_spark.sources import delta_log
 
-        base = delta_log.table_schema(self.options["path"])
-        # metadata stripped for the same reason as the append source
-        return T.StructType(
-            [T.StructField(f.name, f.dataType, f.nullable) for f in base.fields]
-            + [T.StructField("_change_type", T.StringType(), False)]
+        return _plain_schema(
+            delta_log.table_schema(self.options["path"]).fields,
+            _change_type_field(),
         )
 
     def simpleStreamReader(self, schema):  # noqa: ARG002 (API signature)
@@ -754,16 +574,13 @@ class DeltaTableCdcStreamDataSource(DataSource):
 
 
 # --------------------------------------------------------------------------
-# Streaming FROM an Iceberg-format table — the `delta_table_stream`
-# pattern on the second lake format: offsets are table SEQUENCE NUMBERS
-# (monotone per commit), a micro-batch is the data files whose manifest
-# entries carry sequence numbers in (checkpointed, latest], and replay
-# is deterministic because committed snapshots are immutable. Append-
-# only contract: a rewrite snapshot (overwrite/MERGE) in the range
-# raises rather than double-counting. Partitioned tables compose:
-# identity partition columns restore from the manifest entries' TYPED
-# partition tuples (transform fields need nothing — hidden
-# partitioning keeps their source columns in the files).
+# Iceberg: offsets are table SEQUENCE NUMBERS and each commit's files
+# come from its own manifest list (`iceberg.change_feed_entries`).
+# Identity partition columns restore from the manifest entries' TYPED
+# partition tuples, per entry: after a repartition_table the identity
+# set differs per generation, and a schema column present in a tuple is
+# an identity value by construction. Transform fields need nothing —
+# hidden partitioning keeps their source columns in the files.
 # --------------------------------------------------------------------------
 
 
@@ -782,18 +599,84 @@ def _iceberg_partition_value(v, type_name: str):
             microseconds=int(v)
         )
     if type_name.startswith("decimal"):
-        import decimal
-        import re
-
-        m = re.match(r"decimal\((\d+),\s*(-?\d+)\)", type_name)
-        d = decimal.Decimal(v)
-        if m:
-            d = d.quantize(decimal.Decimal(1).scaleb(-int(m.group(2))))
-        return d
+        return _decimal(v, type_name)
     return v
 
 
+def _iceberg_types(meta: dict) -> dict:
+    """{column: Iceberg type} of the current schema, in column order."""
+    schema = meta["schemas"][meta["current-schema-id"]]
+    return {f["name"]: f["type"] for f in schema["fields"]}
+
+
+def _iceberg_rows(path: str, types: dict, part: dict, dead=(), want=None, extra=()):
+    """`_file_rows` of one Iceberg data file with identity columns filled
+    from its manifest partition tuple ``part``."""
+    fills = {
+        c: _iceberg_partition_value(part[c], ty)
+        for c, ty in types.items()
+        if c in part
+    }
+    return _file_rows(path, list(types) + list(extra), fills, dead=dead, want=want)
+
+
+def _iceberg_schema(path: str, *extra):
+    """The declared schema from the batch reader's type map
+    (`iceberg._spark_schema`), every field nullable."""
+    from pyspark.sql import types as T
+
+    from march_mania_spark_lakehouse_spark.sources import iceberg
+
+    meta = iceberg.current_metadata(path)
+    base = iceberg._spark_schema(meta["schemas"][meta["current-schema-id"]])
+    return T.StructType(list(base.fields) + list(extra))
+
+
+def _position_deletes(paths, tomb: dict) -> dict:
+    """Add the rows of v2 position-delete files to ``tomb`` ({data
+    file: dead positions})."""
+    import pyarrow.parquet as pq
+
+    for p in sorted(paths):
+        t = pq.read_table(p, columns=["file_path", "pos"])
+        for fp, pos in zip(
+            t.column("file_path").to_pylist(), t.column("pos").to_pylist()
+        ):
+            tomb.setdefault(fp, set()).add(pos)
+    return tomb
+
+
+def _keyset(path: str, kcols: list) -> set:
+    """Key tuples of an equality-delete file (null-safe: Python tuple
+    equality matches None with None, the spec rule)."""
+    import pyarrow.parquet as pq
+
+    return {
+        tuple(r.get(c) for c in kcols)
+        for r in pq.read_table(path, columns=kcols).to_pylist()
+    }
+
+
+def _is_dv(d: dict) -> bool:
+    return (d.get("file_format") or "").upper() == "PUFFIN"
+
+
+def _ancestors(meta: dict, node) -> list:
+    """Snapshots from ``node`` back along its parent chain."""
+    by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
+    out = []
+    while node in by_id:
+        out.append(by_id[node])
+        node = by_id[node].get("parent-snapshot-id", -1)
+    return out
+
+
 class _IcebergTableStreamReader:
+    """The rows appended since the checkpointed sequence number
+    (append-only): compaction snapshots are skipped, a rewrite snapshot
+    (overwrite/MERGE) or an expired range in the pending range
+    raises."""
+
     def __init__(self, options: dict) -> None:
         self.table = options["path"]
 
@@ -804,12 +687,6 @@ class _IcebergTableStreamReader:
         from march_mania_spark_lakehouse_spark.sources import iceberg
 
         meta = iceberg.current_metadata(self.table)
-        # per-snapshot planning (iceberg.change_feed_entries): replace
-        # (compaction) snapshots are skipped — zero logical rows — and
-        # each commit's files come from its OWN manifest list, so a
-        # later OPTIMIZE can neither break the stream nor hide in-range
-        # appends; non-append row-changing commits and expired ranges
-        # raise as before
         entries = iceberg.change_feed_entries(
             meta, lo, hi, ("append",), err=ValueError
         )
@@ -819,38 +696,15 @@ class _IcebergTableStreamReader:
             if e["data_file"].get("content", 0) == 0
         )
 
-    def _rows(self, files: list):
-        import pyarrow.parquet as pq
-
+    def _batch(self, lo: int, hi: int) -> list:
         from march_mania_spark_lakehouse_spark.sources import iceberg
 
-        meta = iceberg.current_metadata(self.table)
-        schema = meta["schemas"][meta["current-schema-id"]]
-        cols = [f["name"] for f in schema["fields"]]
-        # identity-transform partition columns are physically absent
-        # from data files (hive layout); their TYPED values ride in the
-        # manifest entry's partition tuple — restore from there, PER
-        # ENTRY (after a repartition_table the identity set differs per
-        # generation; a schema column present in the tuple is an
-        # identity value by construction). Transform fields (ts_day /
-        # key_bucket) need nothing: their source columns stay in the
-        # files (hidden partitioning).
-        for path, part in files:
-            t = pq.read_table(path)
-            names = set(t.column_names)
-            fills = {
-                c: _iceberg_partition_value(part.get(c), ty)
-                for c, ty in (
-                    (f["name"], f["type"]) for f in schema["fields"]
-                )
-                if c in part
-            }
-            for rec in t.to_pylist():
-                yield tuple(
-                    fills[c] if c in fills
-                    else (rec.get(c) if c in names else None)
-                    for c in cols
-                )
+        types = _iceberg_types(iceberg.current_metadata(self.table))
+        return [
+            vals
+            for path, part in self._added_files(lo, hi)
+            for _, vals in _iceberg_rows(path, types, part)
+        ]
 
     def read(self, start: dict):
         from march_mania_spark_lakehouse_spark.sources import iceberg
@@ -861,14 +715,12 @@ class _IcebergTableStreamReader:
         hi = iceberg.current_metadata(self.table)["last-sequence-number"]
         if hi <= lo:
             return (iter(()), {"seq": lo})
-        return (list(self._rows(self._added_files(lo, hi))), {"seq": hi})
+        return (self._batch(lo, hi), {"seq": hi})
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # iter(): restart replays hand this straight to the runner,
         # which requires an ITERATOR
-        return iter(
-            list(self._rows(self._added_files(int(start["seq"]), int(end["seq"]))))
-        )
+        return iter(self._batch(int(start["seq"]), int(end["seq"])))
 
     def commit(self, end: dict) -> None:
         pass  # committed snapshots are immutable — the metadata IS the ack
@@ -884,37 +736,22 @@ class IcebergTableStreamDataSource(DataSource):
         return "iceberg_table_stream"
 
     def schema(self):
-        from pyspark.sql import types as T
-
-        from march_mania_spark_lakehouse_spark.sources import iceberg
-
-        meta = iceberg.current_metadata(self.options["path"])
-        schema = meta["schemas"][meta["current-schema-id"]]
-        return T.StructType(
-            [T.StructField(f["name"], _iceberg_spark_type(f["type"]), True)
-             for f in schema["fields"]]
-        )
+        return _iceberg_schema(self.options["path"])
 
     def simpleStreamReader(self, schema):  # noqa: ARG002 (API signature)
         return _IcebergTableStreamReader(self.options)
 
 
 class _IcebergTableCdcStreamReader:
-    """Row-level CDC micro-batches from an Iceberg table: appended rows
-    as inserts, merge-on-read position-delete commits decomposed into
-    the tombstoned rows as deletes (`_change_type` column), and —
-    round 8 — EQUALITY-delete commits (the Flink-style upsert shape)
-    decomposed the way batch `iceberg.table_changes` does: each
-    commit's dead rows are the rows alive at its PARENT snapshot
-    matching the delete file's key tuples null-safe, recovered by
-    replanning the parent snapshot inside the batch planner (strictly-
-    lower-sequence rule holds for free: every parent-live data file
-    precedes the delete commit). An `upsert` history therefore streams
-    as delete(old) + insert(new) — the streaming twin of
-    `iceberg.table_changes(include_deletes=True)`. Identity partition
-    columns restore from the manifest partition tuples (the
-    append-only reader's rule); driver-side pyarrow materialization is
-    the documented SimpleDataSourceStreamReader trade."""
+    """Row-level CDC micro-batches from an Iceberg table — the streaming
+    twin of `iceberg.table_changes(include_deletes=True)`: appended rows
+    as inserts; position-delete and v3 deletion-vector commits
+    decomposed into the tombstoned rows as deletes; EQUALITY-delete
+    commits (the Flink-style upsert shape) decomposed into the rows
+    alive at the commit's PARENT snapshot matching the delete files'
+    key tuples (every parent-live data file precedes the delete commit,
+    so the strictly-lower-sequence rule holds for free). An `upsert`
+    history therefore streams as delete(old) + insert(new)."""
 
     def __init__(self, options: dict) -> None:
         self.table = options["path"]
@@ -933,25 +770,16 @@ class _IcebergTableCdcStreamReader:
             }
         return {"seq": 0}
 
-    def _ancestry(self, meta: dict) -> "tuple[dict, set, set]":
-        """(id → snapshot, main-ancestry ids, main-ancestry seqs)."""
-        by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-        anc: set = set()
-        node = meta.get("current-snapshot-id", -1)
-        while node in by_id:
-            anc.add(node)
-            node = by_id[node].get("parent-snapshot-id", -1)
-        return by_id, anc, {by_id[i]["sequence-number"] for i in anc}
-
-    def _cursor_snap(self, meta: dict, lo: int, sid, by_id: dict):
+    def _cursor_snap(self, meta: dict, lo: int, sid):
         """The retained snapshot whose state the consumer holds, or
-        None. Offsets checkpoint the exact snapshot id (round 12); a
-        legacy sid-less cursor resolves by unique sequence number,
-        accepted only when the snapshot was once main (snapshot-log
-        membership) — a staged branch snapshot's state was never the
-        stream's."""
+        None. Offsets checkpoint the exact snapshot id; a legacy
+        sid-less cursor resolves by unique sequence number, accepted
+        only when the snapshot was once main (snapshot-log membership)
+        — a staged branch snapshot's state was never the stream's."""
         if sid is not None:
-            return by_id.get(sid)
+            return next(
+                (s for s in meta["snapshots"] if s["snapshot-id"] == sid), None
+            )
         s_lo = next(
             (s for s in meta["snapshots"] if s["sequence-number"] == lo),
             None,
@@ -966,21 +794,21 @@ class _IcebergTableCdcStreamReader:
     def _live_rows(self, meta: dict, snap: dict) -> list:
         """Live rows at ``snap`` as [(values tuple, _row_id, _lus)] —
         position deletes, deletion vectors, and the strictly-lower
-        equality-delete rule applied driver-side; lineage resolved per
+        equality-delete rule applied; lineage resolved per
         `iceberg.read_lineage`'s rule (materialized columns override
         entry-level ``first_row_id`` inheritance; a pre-upgrade file
         yields None)."""
-        import pyarrow.parquet as pq
-
         from march_mania_spark_lakehouse_spark.sources import avro_ocf, iceberg
 
-        schema = meta["schemas"][meta["current-schema-id"]]
-        cols = [f["name"] for f in schema["fields"]]
-        types = {f["name"]: f["type"] for f in schema["fields"]}
-        by_fid = {f["id"]: f["name"] for f in schema["fields"]}
+        types = _iceberg_types(meta)
+        ix = {c: i for i, c in enumerate(types)}
+        by_fid = {
+            f["id"]: f["name"]
+            for f in meta["schemas"][meta["current-schema-id"]]["fields"]
+        }
         datafiles: dict = {}  # path -> (eseq, fseq, first_row_id, part)
         tomb: dict = {}  # path -> set(dead positions)
-        eq: list = []  # (seq, key cols, keyset)
+        eq: list = []  # (seq, key column indexes, keyset)
         pos_files: list = []
         for m in avro_ocf.read_ocf(snap["manifest-list"]):
             for e in avro_ocf.read_ocf(m["manifest_path"]):
@@ -996,73 +824,42 @@ class _IcebergTableCdcStreamReader:
                         d.get("first_row_id"),
                         d.get("partition") or {},
                     )
+                elif c == 1 and _is_dv(d):
+                    tomb.setdefault(d["referenced_data_file"], set()).update(
+                        iceberg._dv_positions(d)
+                    )
                 elif c == 1:
-                    if (d.get("file_format") or "").upper() == "PUFFIN":
-                        tomb.setdefault(
-                            d["referenced_data_file"], set()
-                        ).update(
-                            iceberg.read_dv_blob(
-                                d["file_path"],
-                                d["content_offset"],
-                                d["content_size_in_bytes"],
-                            )
-                        )
-                    else:
-                        pos_files.append(d["file_path"])
+                    pos_files.append(d["file_path"])
                 else:
                     kcols = [by_fid[i] for i in d.get("equality_ids") or []]
-                    keyset = {
-                        tuple(r.get(kc) for kc in kcols)
-                        for r in pq.read_table(
-                            d["file_path"], columns=kcols
-                        ).to_pylist()
-                    }
-                    eq.append((e["sequence_number"], kcols, keyset))
-        for p in sorted(pos_files):
-            t = pq.read_table(p)
-            for fp, pos in zip(
-                t.column("file_path").to_pylist(), t.column("pos").to_pylist()
-            ):
-                tomb.setdefault(fp, set()).add(pos)
+                    eq.append(
+                        (
+                            e["sequence_number"],
+                            [ix[k] for k in kcols],
+                            _keyset(d["file_path"], kcols),
+                        )
+                    )
+        _position_deletes(pos_files, tomb)
         rows = []
         for fp in sorted(datafiles):
             dseq, fseq, first, part = datafiles[fp]
-            t = pq.read_table(fp)
-            names = set(t.column_names)
-            # per-entry tuple, not the current identity set: after a
-            # repartition_table the identity set differs per generation
-            fills = {
-                c: _iceberg_partition_value(part.get(c), types[c])
-                for c in cols
-                if c in part
-            }
-            gone = tomb.get(fp, ())
-            for pos, rec in enumerate(t.to_pylist()):
-                if pos in gone:
-                    continue
-                vals = {
-                    c: fills[c] if c in fills
-                    else (rec.get(c) if c in names else None)
-                    for c in cols
-                }
+            for pos, vals in _iceberg_rows(
+                fp, types, part, tomb.get(fp, ()),
+                extra=("_row_id", "_last_updated_sequence_number"),
+            ):
+                vals, (rid, lus) = vals[:-2], vals[-2:]
                 if any(
-                    dseq < s and tuple(vals.get(c) for c in kc) in ks
-                    for s, kc, ks in eq
+                    dseq < s and tuple(vals[i] for i in k) in ks
+                    for s, k, ks in eq
                 ):
                     continue
-                rid = rec.get("_row_id") if "_row_id" in names else None
                 if rid is None and first is not None:
                     rid = first + pos
-                lus = None
-                if rid is not None:
-                    lus = (
-                        rec.get("_last_updated_sequence_number")
-                        if "_last_updated_sequence_number" in names
-                        else None
-                    )
-                    if lus is None:
-                        lus = fseq
-                rows.append((tuple(vals[c] for c in cols), rid, lus))
+                if rid is None:
+                    lus = None
+                elif lus is None:
+                    lus = fseq
+                rows.append((vals, rid, lus))
         return rows
 
     def _bootstrap_rows(self, meta: dict) -> list:
@@ -1081,8 +878,8 @@ class _IcebergTableCdcStreamReader:
         ]
 
     def _lineage_diff_rows(self, meta: dict, lo: int, hi: int) -> "list | None":
-        """EXACT recovery across expired history via v3 row lineage
-        (round 11): when the cursor's snapshot itself is still retained
+        """EXACT recovery across expired history via v3 row lineage:
+        when the cursor's snapshot itself is still retained
         (tagged/branched through `expire_snapshots`, the resumable-
         stream pattern) the emitted batch is the lineage DIFF between
         cursor and head — delete(old image) + insert(new image), the
@@ -1100,13 +897,10 @@ class _IcebergTableCdcStreamReader:
         # cursor-retention pattern — expiry breaks the parent chain,
         # so the tagged cursor is only reachable directly). A branch
         # HEAD at the cursor sequence falls through to the bootstrap.
-        by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-        main: dict = {}
-        node = meta.get("current-snapshot-id", -1)
-        while node in by_id:
-            s = by_id[node]
-            main[s["sequence-number"]] = s
-            node = s.get("parent-snapshot-id", -1)
+        main = {
+            s["sequence-number"]: s
+            for s in _ancestors(meta, meta.get("current-snapshot-id", -1))
+        }
         tag_ids = {
             r["snapshot-id"]
             for r in (meta.get("refs") or {}).values()
@@ -1131,49 +925,26 @@ class _IcebergTableCdcStreamReader:
             return None
         old = self._live_rows(meta, old_snap)
         new = self._live_rows(meta, new_snap)
-        if any(rid is None for _, rid, _ in old) or any(
-            rid is None for _, rid, _ in new
-        ):
+        if any(rid is None for _, rid, _ in old + new):
             return None  # pre-upgrade rows: identity-keyed diff refuses
-        return self._rid_diff(old, new)
-
-    @staticmethod
-    def _rid_diff(old: list, new: list) -> list:
-        """delete/insert batch between two [(vals, rid, lus)] states,
-        keyed by row id (updates emit pre- and post-image)."""
-        old_by = {rid: (lus, vals) for vals, rid, lus in old}
-        new_by = {rid: (lus, vals) for vals, rid, lus in new}
-        rows = []
-        for rid, (lus, vals) in sorted(old_by.items()):
-            if rid not in new_by:
-                rows.append(vals + ("delete",))
-            elif new_by[rid][0] > lus:
-                rows.append(vals + ("delete",))  # update pre-image
-        for rid, (lus, vals) in sorted(new_by.items()):
-            if rid not in old_by:
-                rows.append(vals + ("insert",))
-            elif lus > old_by[rid][0]:
-                rows.append(vals + ("insert",))  # update post-image
-        return rows
+        return _rid_diff(old, new)
 
     def _state_diff_rows(self, meta: dict, old_snap: dict, new_snap: dict) -> list:
         """EXACT retraction/insertion batch between two RETAINED
-        snapshots — the non-linear-history recovery (round 12): when
-        the consumer's cursor snapshot was rolled off the main
-        ancestry (`rollback_to_snapshot`, or a fast-forward past one),
-        the emitted batch is the state diff cursor→head, so the
-        consumer's net state reconverges without a reset. Row-lineage
-        keyed when every row carries an id (v3, exactly-once update
-        pre/post images); value-multiset keyed otherwise — still an
-        exact net diff, the delete/insert vocabulary needs no ids."""
+        snapshots — the non-linear-history recovery: when the
+        consumer's cursor snapshot was rolled off the main ancestry
+        (`rollback_to_snapshot`, or a fast-forward past one), the
+        emitted batch is the state diff cursor→head, so the consumer's
+        net state reconverges without a reset. Row-lineage keyed when
+        every row carries an id (v3, exactly-once update pre/post
+        images); value-multiset keyed otherwise — still an exact net
+        diff, the delete/insert vocabulary needs no ids."""
         old = self._live_rows(meta, old_snap)
         new = self._live_rows(meta, new_snap)
-        if (
-            int(meta.get("format-version", 2)) >= 3
-            and all(rid is not None for _, rid, _ in old)
-            and all(rid is not None for _, rid, _ in new)
+        if int(meta.get("format-version", 2)) >= 3 and all(
+            rid is not None for _, rid, _ in old + new
         ):
-            return self._rid_diff(old, new)
+            return _rid_diff(old, new)
         from collections import Counter
 
         oc = Counter(vals for vals, _, _ in old)
@@ -1186,33 +957,35 @@ class _IcebergTableCdcStreamReader:
         return rows
 
     def _changes(self, lo: int, hi: int) -> list:
-        import pyarrow.parquet as pq
-
-        from march_mania_spark_lakehouse_spark.sources import avro_ocf, iceberg
+        from march_mania_spark_lakehouse_spark.sources import (
+            avro_ocf,
+            deletion_vectors,
+            iceberg,
+        )
 
         meta = iceberg.current_metadata(self.table)
         snap = iceberg._snapshot(meta, meta["current-snapshot-id"])
-        schema = meta["schemas"][meta["current-schema-id"]]
-        cols = [f["name"] for f in schema["fields"]]
-        types = {f["name"]: f["type"] for f in schema["fields"]}
-        by_fid = {f["id"]: f["name"] for f in schema["fields"]}
-        added, pos_dels = [], []
-        eq_by_seq: dict = {}  # commit seq -> [(path, equality col names)]
+        types = _iceberg_types(meta)
+        by_fid = {
+            f["id"]: f["name"]
+            for f in meta["schemas"][meta["current-schema-id"]]["fields"]
+        }
         part_of: dict = {}  # data file path -> partition tuple
         for m in avro_ocf.read_ocf(snap["manifest-list"]):
             for e in avro_ocf.read_ocf(m["manifest_path"]):
                 d = e["data_file"]
                 if d.get("content", 0) == 0:
-                    # remember EVERY live data file's partition tuple —
-                    # a delete in range can tombstone rows of a file
-                    # added before the range
+                    # EVERY data file's tuple: a delete in range can
+                    # tombstone rows of a file added before the range
                     part_of[d["file_path"]] = d.get("partition") or {}
         # per-snapshot planning (iceberg.change_feed_entries): replace
         # (compaction) snapshots skip — zero logical rows — so routine
         # OPTIMIZE never kills the CDC stream, and each commit's files
         # come from its OWN manifest list (a later rewrite cannot hide
         # them); row-changing rewrites and expired ranges still raise
+        added, pos_dels = [], []
         dv_by_seq: dict = {}  # commit seq -> [DV data_file dicts] (v3)
+        eq_by_seq: dict = {}  # commit seq -> [(path, equality col names)]
         for e in iceberg.change_feed_entries(
             meta, lo, hi, ("append", "delete"), err=ValueError
         ):
@@ -1221,57 +994,25 @@ class _IcebergTableCdcStreamReader:
             if content == 0:
                 added.append(d["file_path"])
                 # the file may have been compacted OUT of the current
-                # snapshot — its partition tuple still comes from the
-                # in-range entry itself
+                # snapshot — its tuple comes from the in-range entry
                 part_of.setdefault(d["file_path"], d.get("partition") or {})
+            elif content == 1 and _is_dv(d):
+                dv_by_seq.setdefault(e["sequence_number"], []).append(d)
             elif content == 1:
-                if (d.get("file_format") or "").upper() == "PUFFIN":
-                    dv_by_seq.setdefault(e["sequence_number"], []).append(d)
-                else:
-                    pos_dels.append(d["file_path"])
-            else:  # content == 2: equality delete (upsert CDC)
+                pos_dels.append(d["file_path"])
+            else:  # equality delete (upsert CDC)
                 eq_by_seq.setdefault(e["sequence_number"], []).append(
                     (
                         d["file_path"],
                         [by_fid[i] for i in d.get("equality_ids") or []],
                     )
                 )
-
-        def _fills(path: str) -> dict:
-            # fill from THIS entry's partition tuple (generation-proof:
-            # after a repartition_table the identity set differs across
-            # generations — a schema column present in the tuple is an
-            # identity value by construction, transform field names
-            # never collide with schema columns); files whose tuple
-            # lacks the column carry it physically
-            part = part_of.get(path) or {}
-            return {
-                c: _iceberg_partition_value(part.get(c), types[c])
-                for c in cols
-                if c in part
-            }
-
-        rows = []
-        for path in sorted(added):
-            t = pq.read_table(path)
-            names = set(t.column_names)
-            fills = _fills(path)
-            for rec in t.to_pylist():
-                rows.append(
-                    tuple(
-                        fills[c] if c in fills
-                        else (rec.get(c) if c in names else None)
-                        for c in cols
-                    )
-                    + ("insert",)
-                )
-        tomb: dict = {}
-        for path in sorted(pos_dels):
-            t = pq.read_table(path)
-            for fp, pos in zip(
-                t.column("file_path").to_pylist(), t.column("pos").to_pylist()
-            ):
-                tomb.setdefault(fp, set()).add(pos)
+        rows = [
+            vals + ("insert",)
+            for path in sorted(added)
+            for _, vals in _iceberg_rows(path, types, part_of.get(path) or {})
+        ]
+        tomb = _position_deletes(pos_dels, {})
         # v3 deletion vectors: this commit's kills are the new DV's
         # positions MINUS the parent snapshot's DV positions for the
         # same file (a DV replaces its predecessor, never chains)
@@ -1291,62 +1032,32 @@ class _IcebergTableCdcStreamReader:
             }
             for d in dv_by_seq[s]:
                 ref = d["referenced_data_file"]
-                pos = set(
-                    iceberg.read_dv_blob(
-                        d["file_path"],
-                        d["content_offset"],
-                        d["content_size_in_bytes"],
-                    )
-                )
+                pos = set(iceberg._dv_positions(d))
                 old = parent_dvs.get(ref)
                 if old is not None:
                     pos -= set(
-                        iceberg.read_dv_blob(
-                            old["puffin_path"], old["offset"], old["length"]
-                        )
+                        deletion_vectors.positions(iceberg._dv_locator(old))
                     )
                 if pos:
                     tomb.setdefault(ref, set()).update(pos)
         for fp in sorted(tomb):
-            t = pq.read_table(fp)
-            names = set(t.column_names)
-            fills = _fills(fp)
-            recs = t.to_pylist()
-            for pos in sorted(tomb[fp]):
-                rec = recs[pos]
-                rows.append(
-                    tuple(
-                        fills[c] if c in fills
-                        else (rec.get(c) if c in names else None)
-                        for c in cols
-                    )
-                    + ("delete",)
-                )
-        for s in sorted(eq_by_seq):
             rows.extend(
-                self._eq_dead_rows(
-                    meta, s, eq_by_seq[s], cols, types
+                vals + ("delete",)
+                for _, vals in _iceberg_rows(
+                    fp, types, part_of.get(fp) or {}, want=sorted(tomb[fp])
                 )
             )
+        for s in sorted(eq_by_seq):
+            rows.extend(self._eq_dead_rows(meta, s, eq_by_seq[s]))
         return rows
 
-    def _eq_dead_rows(
-        self, meta: dict, del_seq: int, files: list, cols: list,
-        types: dict,
-    ) -> list:
-        """Rows an equality-delete commit killed: alive at the commit's
-        PARENT snapshot, matching any delete file's key tuples —
-        null-safe via Python tuple equality (None == None matches, the
-        spec rule). Every data file live at the parent has a sequence
-        number < del_seq, so the strictly-lower ordering rule holds by
-        construction. Mirrors the batch `iceberg.table_changes`
-        decomposition with this reader's driver-side pyarrow
-        materialization: the parent's OWN deletes (position and
-        earlier equality tombstones) are applied first, so rows already
-        dead before this commit are never re-emitted."""
-        import pyarrow.parquet as pq
-
-        from march_mania_spark_lakehouse_spark.sources import avro_ocf, iceberg
+    def _eq_dead_rows(self, meta: dict, del_seq: int, files: list) -> list:
+        """Rows the equality-delete commit at ``del_seq`` killed: the
+        rows live at its PARENT snapshot (`_live_rows`, so rows already
+        dead before this commit are never re-emitted) matching any
+        delete file's key tuples. Mirrors the batch
+        `iceberg.table_changes` decomposition."""
+        from march_mania_spark_lakehouse_spark.sources import iceberg
 
         del_snap = next(
             (s for s in meta["snapshots"] if s["sequence-number"] == del_seq),
@@ -1371,94 +1082,41 @@ class _IcebergTableCdcStreamReader:
                 f"commit at seq {del_seq} was expired; its pre-image "
                 "rows are unrecoverable"
             )
-        schema = meta["schemas"][
-            psnap.get("schema-id", meta["current-schema-id"])
+        ix = {c: i for i, c in enumerate(_iceberg_types(meta))}
+        kill = [([ix[c] for c in kcols], _keyset(p, kcols)) for p, kcols in files]
+        return [
+            vals + ("delete",)
+            for vals, _, _ in self._live_rows(meta, psnap)
+            if any(tuple(vals[i] for i in k) in ks for k, ks in kill)
         ]
-        pby_fid = {f["id"]: f["name"] for f in schema["fields"]}
-        datafiles: dict = {}  # path -> (seq, partition tuple)
-        pos_files: list = []
-        dv_tomb: dict = {}  # path -> set(positions) from parent v3 DVs
-        parent_eq: list = []  # (seq, cols, path)
-        for m in avro_ocf.read_ocf(psnap["manifest-list"]):
-            for e in avro_ocf.read_ocf(m["manifest_path"]):
-                if e["status"] == 2:
-                    continue
-                d = e["data_file"]
-                c = d.get("content", 0)
-                if c == 0:
-                    datafiles[d["file_path"]] = (
-                        e["sequence_number"], d.get("partition") or {}
-                    )
-                elif c == 1:
-                    if (d.get("file_format") or "").upper() == "PUFFIN":
-                        # parent carries v3 deletion vectors: decode
-                        # the blob, never pq.read_table a Puffin file
-                        dv_tomb.setdefault(
-                            d["referenced_data_file"], set()
-                        ).update(
-                            iceberg.read_dv_blob(
-                                d["file_path"],
-                                d["content_offset"],
-                                d["content_size_in_bytes"],
-                            )
-                        )
-                    else:
-                        pos_files.append(d["file_path"])
-                else:
-                    parent_eq.append(
-                        (
-                            e["sequence_number"],
-                            [pby_fid[i] for i in d.get("equality_ids") or []],
-                            d["file_path"],
-                        )
-                    )
-        tomb: dict = dv_tomb
-        for p in sorted(pos_files):
-            t = pq.read_table(p)
-            for fp, pos in zip(
-                t.column("file_path").to_pylist(), t.column("pos").to_pylist()
-            ):
-                tomb.setdefault(fp, set()).add(pos)
 
-        def _keyset(path: str, kcols: list) -> set:
-            return {
-                tuple(r.get(c) for c in kcols)
-                for r in pq.read_table(path, columns=kcols).to_pylist()
-            }
+    def _batch(self, lo: int, hi: int) -> list:
+        from march_mania_spark_lakehouse_spark.sources import iceberg
 
-        kill = [(kcols, _keyset(p, kcols)) for p, kcols in files]
-        dead_before = [
-            (s, kcols, _keyset(p, kcols)) for s, kcols, p in parent_eq
-        ]
-        out = []
-        for fp in sorted(datafiles):
-            dseq, part = datafiles[fp]
-            t = pq.read_table(fp)
-            names = set(t.column_names)
-            fills = {
-                c: _iceberg_partition_value(part.get(c), types[c])
-                for c in cols
-                if c in part
-            }
-            gone = tomb.get(fp, ())
-            for pos, rec in enumerate(t.to_pylist()):
-                if pos in gone:
-                    continue
-                vals = {
-                    c: fills[c] if c in fills
-                    else (rec.get(c) if c in names else None)
-                    for c in cols
-                }
-                if any(
-                    dseq < s and tuple(vals.get(c) for c in kc) in ks
-                    for s, kc, ks in dead_before
-                ):
-                    continue  # already dead before this commit
-                if any(
-                    tuple(vals.get(c) for c in kc) in ks for kc, ks in kill
-                ):
-                    out.append(tuple(vals[c] for c in cols) + ("delete",))
-        return out
+        try:
+            return self._changes(lo, hi)
+        except ValueError:
+            # snapshots in (lo, hi] were expired past the checkpoint
+            if self.starting != "retained":
+                raise
+            meta = iceberg.current_metadata(self.table)
+            diff = self._lineage_diff_rows(meta, lo, hi)
+            return diff if diff is not None else self._bootstrap_rows(meta)
+
+    def _compensate(self, meta: dict, old_snap, new_snap, err: str) -> list:
+        """The batch for a cursor rolled off the main ancestry: the exact
+        state diff when both endpoint snapshots are retained, else the
+        bootstrap reset ('retained') or ``err``."""
+        if (
+            old_snap is not None
+            and new_snap is not None
+            and os.path.exists(old_snap["manifest-list"])
+            and os.path.exists(new_snap["manifest-list"])
+        ):
+            return self._state_diff_rows(meta, old_snap, new_snap)
+        if self.starting == "retained":
+            return self._bootstrap_rows(meta)
+        raise ValueError(err)
 
     def read(self, start: dict):
         from march_mania_spark_lakehouse_spark.sources import iceberg
@@ -1469,47 +1127,33 @@ class _IcebergTableCdcStreamReader:
             return (iter(()), dict(start))
         meta = iceberg.current_metadata(self.table)
         hi = meta["last-sequence-number"]
-        by_id, anc_ids, anc_seqs = self._ancestry(meta)
         head_id = meta.get("current-snapshot-id", -1)
-        # non-linear history first (round 12): a cursor whose snapshot
-        # is no longer on the head's ancestry (rollback_to_snapshot /
+        anc = _ancestors(meta, head_id)
+        new_off = {"seq": hi, "sid": head_id}
+        # non-linear history first: a cursor whose snapshot is no
+        # longer on the head's ancestry (rollback_to_snapshot /
         # fast-forward past one) must NOT continue the linear walk —
         # that silently skips the retractions. This fires even when the
         # sequence high-water mark did not move (a bare rollback).
-        linear = lo == 0 or (
-            sid in anc_ids if sid is not None else lo in anc_seqs
-        )
-        if not linear:
-            old_snap = self._cursor_snap(meta, lo, sid, by_id)
-            new_off = {"seq": hi, "sid": head_id}
-            if (
-                old_snap is not None
-                and head_id in by_id
-                and os.path.exists(old_snap["manifest-list"])
-            ):
-                return (
-                    self._state_diff_rows(meta, old_snap, by_id[head_id]),
-                    new_off,
-                )
-            if self.starting == "retained":
-                return (self._bootstrap_rows(meta), new_off)
-            raise ValueError(
-                "the cursor snapshot was rolled off the main ancestry "
-                "and is no longer retained; the retraction batch is "
-                "unknowable — restart with starting_sequence='retained'"
+        if lo != 0 and (
+            sid not in {s["snapshot-id"] for s in anc}
+            if sid is not None
+            else lo not in {s["sequence-number"] for s in anc}
+        ):
+            return (
+                self._compensate(
+                    meta,
+                    self._cursor_snap(meta, lo, sid),
+                    anc[0] if anc else None,
+                    "the cursor snapshot was rolled off the main ancestry "
+                    "and is no longer retained; the retraction batch is "
+                    "unknowable — restart with starting_sequence='retained'",
+                ),
+                new_off,
             )
         if hi <= lo:
             return (iter(()), dict(start))
-        try:
-            return (self._changes(lo, hi), {"seq": hi, "sid": head_id})
-        except ValueError:
-            # snapshots in (lo, hi] were expired past the checkpoint
-            if self.starting != "retained":
-                raise
-            diff = self._lineage_diff_rows(meta, lo, hi)
-            if diff is not None:
-                return (diff, {"seq": hi, "sid": head_id})
-            return (self._bootstrap_rows(meta), {"seq": hi, "sid": head_id})
+        return (self._batch(lo, hi), new_off)
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # iter(): restart replays hand this straight to the runner,
@@ -1519,43 +1163,20 @@ class _IcebergTableCdcStreamReader:
         s_sid, e_sid = start.get("sid"), end.get("sid")
         if s_sid is not None and e_sid is not None and s_sid != e_sid:
             meta = iceberg.current_metadata(self.table)
-            by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-            anc: set = set()
-            node = e_sid
-            while node in by_id:
-                anc.add(node)
-                node = by_id[node].get("parent-snapshot-id", -1)
-            if s_sid not in anc:
+            anc = _ancestors(meta, e_sid)
+            if s_sid not in {s["snapshot-id"] for s in anc}:
                 # replay of a compensating (non-linear) batch: the
                 # exact diff between the two checkpointed snapshots
-                old_snap, new_snap = by_id.get(s_sid), by_id.get(e_sid)
-                if (
-                    old_snap is not None
-                    and new_snap is not None
-                    and os.path.exists(old_snap["manifest-list"])
-                    and os.path.exists(new_snap["manifest-list"])
-                ):
-                    return iter(
-                        self._state_diff_rows(meta, old_snap, new_snap)
+                return iter(
+                    self._compensate(
+                        meta,
+                        self._cursor_snap(meta, 0, s_sid),
+                        anc[0] if anc else None,
+                        "cannot replay the compensating batch: one of its "
+                        "endpoint snapshots is no longer retained",
                     )
-                if self.starting == "retained":
-                    return iter(self._bootstrap_rows(meta))
-                raise ValueError(
-                    "cannot replay the compensating batch: one of its "
-                    "endpoint snapshots is no longer retained"
                 )
-        try:
-            return iter(self._changes(int(start["seq"]), int(end["seq"])))
-        except ValueError:
-            if self.starting != "retained":
-                raise
-            meta = iceberg.current_metadata(self.table)
-            diff = self._lineage_diff_rows(
-                meta, int(start["seq"]), int(end["seq"])
-            )
-            if diff is not None:
-                return iter(diff)
-            return iter(self._bootstrap_rows(meta))
+        return iter(self._batch(int(start["seq"]), int(end["seq"])))
 
     def commit(self, end: dict) -> None:
         pass
@@ -1578,17 +1199,7 @@ class IcebergTableCdcStreamDataSource(DataSource):
         return "iceberg_table_cdc"
 
     def schema(self):
-        from pyspark.sql import types as T
-
-        from march_mania_spark_lakehouse_spark.sources import iceberg
-
-        meta = iceberg.current_metadata(self.options["path"])
-        schema = meta["schemas"][meta["current-schema-id"]]
-        return T.StructType(
-            [T.StructField(f["name"], _iceberg_spark_type(f["type"]), True)
-             for f in schema["fields"]]
-            + [T.StructField("_change_type", T.StringType(), False)]
-        )
+        return _iceberg_schema(self.options["path"], _change_type_field())
 
     def simpleStreamReader(self, schema):  # noqa: ARG002 (API signature)
         return _IcebergTableCdcStreamReader(self.options)

@@ -44,7 +44,7 @@ def _dv_state(fmt: str, table: str) -> dict:
     if fmt == "iceberg":
         return {
             _first_id(e["referenced_data_file"]): sorted(
-                iceberg.read_dv_blob(e["puffin_path"], e["offset"], e["length"])
+                deletion_vectors.positions(iceberg._dv_locator(e))
             )
             for e in iceberg.snapshot_dv_entries(table)
         }
@@ -193,3 +193,33 @@ def test_cardinality_mismatch_raises(spark, tmp_path, monkeypatch, fmt, gate):
     monkeypatch.setattr(dv_codec, "SMALL_DV_ROWS", gate)
     with pytest.raises(Exception, match="DV cardinality"):
         read(spark, table).collect()
+
+
+def test_iceberg_dv_data_file_checks_record_count(spark, tmp_path):
+    """A DV manifest ``data_file`` decodes through one helper that checks
+    the bitmap against its ``record_count``; the streaming source and
+    the ``position_deletes`` metadata table read through it."""
+    from march_mania_spark_lakehouse_spark.sources.pydatasource import (
+        _IcebergTableCdcStreamReader,
+    )
+
+    table = str(tmp_path / "t")
+    iceberg.create(_df(spark, _rows(20)), table, format_version=3)
+    iceberg.delete_where(spark, table, "k = 0")
+    meta = iceberg.current_metadata(table)
+    snap = iceberg._snapshot(meta, meta["current-snapshot-id"])
+    d = next(
+        e["data_file"]
+        for m in avro_ocf.read_ocf(snap["manifest-list"])
+        for e in avro_ocf.read_ocf(m["manifest_path"])
+        if e["data_file"].get("content", 0) == 1
+    )
+    assert len(iceberg._dv_positions(d)) == d["record_count"] > 0
+    with pytest.raises(ValueError, match="DV cardinality"):
+        iceberg._dv_positions(dict(d, record_count=d["record_count"] + 1))
+    _corrupt_iceberg_record_count(table)
+    reader = _IcebergTableCdcStreamReader({"path": table})
+    with pytest.raises(ValueError, match="DV cardinality"):
+        reader._bootstrap_rows(iceberg.current_metadata(table))
+    with pytest.raises(Exception, match="DV cardinality"):
+        iceberg.metadata_table(spark, table, "position_deletes").collect()

@@ -13,7 +13,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from march_mania_spark_lakehouse_spark.sources import iceberg
+from march_mania_spark_lakehouse_spark.sources import deletion_vectors, iceberg
 from tests import iceberg_reader_independent as indep
 
 
@@ -89,13 +89,11 @@ def test_v3_dv_delete_merge_and_replace_both_readers(spark, table):
     first_by_ref = {e["referenced_data_file"]: e for e in first}
     merged_any = False
     for e in head:
-        pos = iceberg.read_dv_blob(e["puffin_path"], e["offset"], e["length"])
+        pos = deletion_vectors.positions(iceberg._dv_locator(e))
         assert pos == sorted(set(pos))
         old = first_by_ref.get(e["referenced_data_file"])
         if old is not None and e["sequence_number"] > old["sequence_number"]:
-            old_pos = iceberg.read_dv_blob(
-                old["puffin_path"], old["offset"], old["length"]
-            )
+            old_pos = deletion_vectors.positions(iceberg._dv_locator(old))
             assert set(old_pos) <= set(pos)  # merged, not chained
             merged_any = len(pos) > len(old_pos) or merged_any
     assert merged_any  # the overlap really exercised the merge path
@@ -236,6 +234,113 @@ def test_v3_dv_streaming_cdc_matches_batch_feed(spark, table, tmp_path):
         for r in iceberg.read_iceberg(spark, table).collect()
     )
     assert +state == head
+
+
+def test_delta_cdc_stream_matches_batch_feed(spark, tmp_path):
+    """The Delta twin of the test above: the streaming CDC source plans
+    through the same commit walker as
+    `delta_log.table_changes(include_deletes=True)`, so over create →
+    two overlapping DV deletes → append, and over a shallow clone whose
+    adds carry those DVs, the streamed feed equals the batch feed
+    row for row and folds to the head snapshot."""
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+    from march_mania_spark_lakehouse_spark.sources.pydatasource import (
+        DeltaTableCdcStreamDataSource,
+    )
+
+    spark.dataSource.register(DeltaTableCdcStreamDataSource)
+
+    def drain(t: str) -> list:
+        sink = f"{t}_sink"
+        q = (
+            spark.readStream.format("delta_table_cdc")
+            .option("path", t).load()
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", f"{t}_ckpt")
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        return spark.read.parquet(sink).collect()
+
+    def feed(t: str, start: int) -> Counter:
+        return Counter(
+            (r.id, r.k, r.val, r._change_type)
+            for r in delta_log.table_changes(
+                spark, t, start, include_deletes=True
+            ).collect()
+        )
+
+    def fold(rows) -> Counter:
+        state = Counter()
+        for r in rows:
+            state[(r.id, r.k, r.val)] += 1 if r._change_type == "insert" else -1
+        return +state
+
+    def head(t: str) -> Counter:
+        return Counter(tuple(r) for r in delta_log.read_delta(spark, t).collect())
+
+    src = str(tmp_path / "src")
+    delta_log.create(_df(spark, _rows(30)).repartitionByRange(3, "id"), src)
+    assert len(drain(src)) == 30
+    delta_log.delete_where(spark, src, "k = 1")     # DV commit 1
+    delta_log.delete_where(spark, src, "id < 8")    # DV commit 2, overlaps
+    delta_log.append(_df(spark, [(200, 1, 5.0)]), src)
+    rows = drain(src)
+    streamed = Counter(
+        (r.id, r.k, r.val, r._change_type) for r in rows
+    ) - Counter((i, i % 5, float(i), "insert") for i in range(30))
+    assert streamed == feed(src, 0)
+    assert sorted(r.id for r in rows if r._change_type == "delete") == [
+        0, 1, 2, 3, 4, 5, 6, 7, 11, 16, 21, 26,
+    ]
+    assert fold(rows) == head(src)
+
+    # v0 of the clone re-adds the source's files WITH their DVs (absolute
+    # paths): those rows were dead before the clone, so they never stream
+    clone = str(tmp_path / "clone")
+    delta_log.shallow_clone(src, clone)
+    delta_log.delete_where(spark, clone, "id % 7 = 0")  # extends clone DVs
+    delta_log.append(_df(spark, [(300, 2, 3.0)]), clone)
+    rows = drain(clone)
+    assert Counter(
+        (r.id, r.k, r.val, r._change_type) for r in rows
+    ) == feed(clone, -1)
+    assert sorted(r.id for r in rows if r._change_type == "delete") == [14, 28]
+    assert fold(rows) == head(clone)
+
+
+def test_clone_of_v3_table_keeps_format_and_row_ids(spark, tmp_path):
+    """A clone of a v3 table with DVs is v3: it reads the same lineage,
+    a delete on it writes a DV (never a position-delete file), and an
+    append assigns row ids from the source's ``next-row-id``."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    iceberg.create(
+        _df(spark, _rows(40)).repartitionByRange(4, "id"), src, format_version=3
+    )
+    iceberg.delete_where(spark, src, "k = 1")
+    iceberg.clone(src, dst)
+
+    def lineage(t: str) -> list:
+        return sorted(tuple(r) for r in iceberg.read_lineage(spark, t).collect())
+
+    before = lineage(src)
+    meta = iceberg.current_metadata(dst)
+    assert meta["format-version"] == 3
+    assert meta["next-row-id"] == iceberg.current_metadata(src)["next-row-id"] == 40
+    assert lineage(dst) == before
+
+    iceberg.delete_where(spark, dst, "id < 5")
+    _no_position_delete_parquet(dst)
+    assert iceberg.snapshot_delete_files(dst) == []
+    assert sorted(r[0] for r in _spark_rows(spark, dst)) == [
+        i for i in range(5, 40) if i % 5 != 1
+    ]
+    iceberg.append(_df(spark, [(100, 0, 1.0), (101, 0, 2.0)]), dst)
+    ids = {r.id: r._row_id for r in iceberg.read_lineage(spark, dst).collect()}
+    assert sorted((ids[100], ids[101])) == [40, 41]
+    assert iceberg.current_metadata(dst)["next-row-id"] == 42
+    assert lineage(src) == before
 
 
 # --------------------------------------------------------------------------
