@@ -3,12 +3,15 @@ windows, dedup, text analysis, similarity search, multimodal plumbing."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
 from march_mania_spark_lakehouse_spark.functions.numeric import sql_davg
 from march_mania_spark_lakehouse_spark.operators import dedup, multimodal, similarity, text
+from march_mania_spark_lakehouse_spark.plans.fixtures import published
 from march_mania_spark_lakehouse_spark.plans.registry import query
 from march_mania_spark_lakehouse_spark.streaming import events as ev_ops
 
@@ -629,51 +632,32 @@ WHERE doc_id % 3 <> 0
 """
 
 
-def _streaming_dedup_corpus(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
+@published
+def _streaming_dedup_corpus(spark: SparkSession, sf_dir: str, root: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
     from march_mania_spark_lakehouse_spark.streaming.dedup import (
         process_dedup_batch,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"sdedup214|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        .encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
     corpus_t = os.path.join(root, "corpus")
     index_t = os.path.join(root, "index")
-    # the publish is three commits (corpus v0, index v0, batch body:
-    # corpus v1 + index v1); guard on the TERMINAL state or a crash
-    # mid-publish would poison the cache (the q212 lesson) — anything
-    # short of terminal is wiped and rebuilt
-    if delta_log.latest_version(corpus_t) != 1:
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
-        docs = catalog.load(spark, "documents", sf_dir).select(
-            "doc_id", "text", "source", "n_chars"
-        )
-        corpus = docs.filter(F.col("doc_id") % 3 != 0)
-        delta_log.create(corpus, corpus_t)
-        index0 = dedup.minhash_band_index(
-            corpus, "doc_id", "text", 3, _Q28_K, 4
-        ).withColumn("pb", F.pmod("bh", F.lit(32)))
-        delta_log.create(
-            index0.repartition("band", "pb"), index_t,
-            stat_cols=["bh"], partition_by=["band", "pb"],
-            configuration={"streamingDedup.indexBuckets": "32"},
-        )
-        process_dedup_batch(
-            spark, docs.filter(F.col("doc_id") % 3 == 0), 0,
-            corpus_t, index_t, n=3, num_hashes=_Q28_K, bands=4,
-        )
-    return corpus_t
+    docs = catalog.load(spark, "documents", sf_dir).select(
+        "doc_id", "text", "source", "n_chars"
+    )
+    corpus = docs.filter(F.col("doc_id") % 3 != 0)
+    delta_log.create(corpus, corpus_t)
+    index0 = dedup.minhash_band_index(
+        corpus, "doc_id", "text", 3, _Q28_K, 4
+    ).withColumn("pb", F.pmod("bh", F.lit(32)))
+    delta_log.create(
+        index0.repartition("band", "pb"), index_t,
+        stat_cols=["bh"], partition_by=["band", "pb"],
+        configuration={"streamingDedup.indexBuckets": "32"},
+    )
+    process_dedup_batch(
+        spark, docs.filter(F.col("doc_id") % 3 == 0), 0,
+        corpus_t, index_t, n=3, num_hashes=_Q28_K, bands=4,
+    )
 
 
 @query("q214_streaming_dedup_loop", oracle=_Q214_SQL, tags=("dedup", "lake"))
@@ -687,7 +671,7 @@ def q214(spark: SparkSession, sf_dir: str) -> DataFrame:
     this checks the PERSISTED, PRUNED loop around it."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    corpus_t = _streaming_dedup_corpus(spark, sf_dir)
+    corpus_t = os.path.join(_streaming_dedup_corpus(spark, sf_dir), "corpus")
     return delta_log.read_delta(spark, corpus_t).select(
         "doc_id", "source", "n_chars"
     )

@@ -18,6 +18,7 @@ from march_mania_spark_lakehouse_spark import catalog
 from march_mania_spark_lakehouse_spark.functions.numeric import dsum, sql_dsum
 from march_mania_spark_lakehouse_spark.operators.graph import connected_components
 from march_mania_spark_lakehouse_spark.operators.merge import merge_upsert, scd2_apply
+from march_mania_spark_lakehouse_spark.plans.fixtures import published
 from march_mania_spark_lakehouse_spark.plans.registry import query
 from march_mania_spark_lakehouse_spark.sources import maintenance
 
@@ -327,31 +328,15 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_lake_root(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent per-fixture publish of the clustered orders snapshot.
-
-    The lake root is keyed by the source fixture's identity (path +
-    mtime + size), so a driver-regenerated fixture gets a fresh publish
-    instead of stale files — and repeated bench runs reuse the existing
-    version instead of republishing.
-    """
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_lake", fp)
-    if maintenance.latest_version(root) is None:
-        clustered = (
-            catalog.load(spark, "orders", sf_dir)
-            .repartitionByRange(8, "o_orderkey")
-            .sortWithinPartitions("o_orderkey")
-        )
-        maintenance.write_snapshot(clustered, root, stat_cols=["o_orderkey"])
-    return root
+@published
+def _orders_lake_root(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """The clustered orders snapshot with an o_orderkey manifest."""
+    clustered = (
+        catalog.load(spark, "orders", sf_dir)
+        .repartitionByRange(8, "o_orderkey")
+        .sortWithinPartitions("o_orderkey")
+    )
+    maintenance.write_snapshot(clustered, root, stat_cols=["o_orderkey"])
 
 
 @query("q129_manifest_pruned_scan", oracle=_Q129_SQL, tags=("lake", "agg"))
@@ -401,32 +386,21 @@ FROM v1 LEFT JOIN v0 USING (o_orderstatus)
 """
 
 
-def _orders_delta_table(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent per-fixture Delta publish (same fingerprint scheme as
-    `_orders_lake_root`): v0 = orders with key%3=0, v1 appends key%3=1."""
-    import hashlib
-    import tempfile
-
+@published
+def _orders_delta_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Delta publish: v0 = orders with key%3=0, v1 appends key%3=1."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0), table,
-            stat_cols=["o_orderkey"],
-        )
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 3 == 1), table,
-            stat_cols=["o_orderkey"],
-        )
-        delta_log.checkpoint(table)  # future replays: checkpoint + tail
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0), table,
+        stat_cols=["o_orderkey"],
+    )
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 3 == 1), table,
+        stat_cols=["o_orderkey"],
+    )
+    delta_log.checkpoint(table)  # future replays: checkpoint + tail
 
 
 @query("q131_delta_time_travel", oracle=_Q131_SQL, tags=("lake", "agg"))
@@ -483,26 +457,16 @@ GROUP BY 1
 """
 
 
-def _orders_delta_partitioned(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
+@published
+def _orders_delta_partitioned(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-part|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        delta_log.create(
-            catalog.load(spark, "orders", sf_dir),
-            table,
-            stat_cols=["o_orderkey"],
-            partition_by=["o_orderstatus"],
-        )
-    return table
+    delta_log.create(
+        catalog.load(spark, "orders", sf_dir),
+        table,
+        stat_cols=["o_orderkey"],
+        partition_by=["o_orderstatus"],
+    )
 
 
 @query("q143_delta_partition_scan", oracle=_Q143_SQL, tags=("lake", "agg"))
@@ -539,23 +503,13 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_delta_incremental(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
+@published
+def _orders_delta_incremental(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-incr|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(orders.filter(F.col("o_orderkey") % 4 != 0), table)
-        delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 0), table)
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(orders.filter(F.col("o_orderkey") % 4 != 0), table)
+    delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 0), table)
 
 
 @query("q145_delta_incremental_refresh", oracle=_Q145_SQL, tags=("lake", "ivm"))
@@ -612,26 +566,15 @@ FROM s2 LEFT JOIN s1 USING (o_orderstatus)
 """
 
 
-def _orders_iceberg_table(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent per-fixture Iceberg publish (fingerprint caching, the
-    q131 scheme): snapshot 1 = orders with key%3=0, snapshot 2 appends
-    key%3=1."""
-    import hashlib
-    import tempfile
-
+@published
+def _orders_iceberg_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Iceberg publish: snapshot 1 = orders with key%3=0, snapshot 2
+    appends key%3=1."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
 
 
 @query("q177_iceberg_time_travel", oracle=_Q177_SQL, tags=("lake", "agg"))
@@ -689,36 +632,26 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_stats_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_stats_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     """Like `_orders_iceberg_table` but range-partitioned on the key
     with per-file o_orderkey bounds recorded — the data-skipping shape
     (files cover disjoint key ranges, so a range scan prunes most)."""
-    import hashlib
-    import tempfile
-
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-stats|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0)
-            .repartitionByRange(8, "o_orderkey"),
-            table,
-            stat_cols=("o_orderkey",),
-        )
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 3 == 1)
-            .repartitionByRange(8, "o_orderkey"),
-            table,
-            stat_cols=("o_orderkey",),
-        )
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0)
+        .repartitionByRange(8, "o_orderkey"),
+        table,
+        stat_cols=("o_orderkey",),
+    )
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 3 == 1)
+        .repartitionByRange(8, "o_orderkey"),
+        table,
+        stat_cols=("o_orderkey",),
+    )
 
 
 @query("q178_iceberg_pruned_scan", oracle=_Q178_SQL, tags=("lake", "agg"))
@@ -758,25 +691,15 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_mor_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders with key%3=0,
-    snapshot 2 = merge-on-read DELETE of key%9=0 (tombstones only)."""
-    import hashlib
-    import tempfile
-
+@published
+def _orders_iceberg_mor_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Snapshot 1 = orders with key%3=0, snapshot 2 = merge-on-read
+    DELETE of key%9=0 (tombstones only)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-mor|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
 
 
 @query("q180_iceberg_merge_on_read", oracle=_Q180_SQL, tags=("lake", "agg"))
@@ -826,36 +749,26 @@ FROM allrows GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_cdc_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders key%3=0 (3 cols),
-    then one CDC upsert batch — re-priced key%9=0 rows (update) plus
-    key-shifted copies of key%9=1&%3=1 rows (insert)."""
-    import hashlib
-    import tempfile
-
+@published
+def _orders_iceberg_cdc_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Snapshot 1 = orders key%3=0 (3 cols), then one CDC upsert batch —
+    re-priced key%9=0 rows (update) plus key-shifted copies of
+    key%9=1&%3=1 rows (insert)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-cdc|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        updates = (
-            orders.filter((F.col("o_orderkey") % 3 == 0) & (F.col("o_orderkey") % 9 == 0))
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-        )
-        inserts = (
-            orders.filter((F.col("o_orderkey") % 3 == 1) & (F.col("o_orderkey") % 9 == 1))
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(1_000_000_000))
-        )
-        iceberg.upsert(spark, table, updates.unionByName(inserts), ["o_orderkey"])
-    return table
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    updates = (
+        orders.filter((F.col("o_orderkey") % 3 == 0) & (F.col("o_orderkey") % 9 == 0))
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
+    )
+    inserts = (
+        orders.filter((F.col("o_orderkey") % 3 == 1) & (F.col("o_orderkey") % 9 == 1))
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(1_000_000_000))
+    )
+    iceberg.upsert(spark, table, updates.unionByName(inserts), ["o_orderkey"])
 
 
 @query("q181_iceberg_cdc_upsert", oracle=_Q181_SQL, tags=("lake", "agg"))
@@ -899,28 +812,18 @@ GROUP BY event_type
 """
 
 
-def _events_iceberg_day_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish of events under a day(ts) partition
-    spec (two appends, exercising multi-snapshot planning)."""
-    import hashlib
-    import tempfile
-
+@published
+def _events_iceberg_day_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Events under a day(ts) partition spec (two appends, exercising
+    multi-snapshot planning)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-day|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
-        events = catalog.load(spark, "events", sf_dir)
-        iceberg.create(
-            events.filter(F.col("event_id") % 4 == 0), table,
-            partition_by=["day(ts)"],
-        )
-        iceberg.append(events.filter(F.col("event_id") % 4 == 2), table)
-    return table
+    events = catalog.load(spark, "events", sf_dir)
+    iceberg.create(
+        events.filter(F.col("event_id") % 4 == 0), table,
+        partition_by=["day(ts)"],
+    )
+    iceberg.append(events.filter(F.col("event_id") % 4 == 2), table)
 
 
 @query("q182_iceberg_day_transform_scan", oracle=_Q182_SQL, tags=("lake", "agg"))
@@ -966,22 +869,12 @@ GROUP BY o_custkey
 """
 
 
-def _orders_iceberg_bucket_table(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
+@published
+def _orders_iceberg_bucket_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-bucket|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(orders, table, partition_by=["bucket(8, o_custkey)"])
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(orders, table, partition_by=["bucket(8, o_custkey)"])
 
 
 @query("q183_iceberg_bucket_transform_lookup", oracle=_Q183_SQL, tags=("lake", "agg"))
@@ -1028,25 +921,15 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_delta_dv_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v0 = orders with key%3=0, v1 =
-    deletion-vector DELETE of key%9=0 (bitmap sidecar only)."""
-    import hashlib
-    import tempfile
-
+@published
+def _orders_delta_dv_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """v0 = orders with key%3=0, v1 = deletion-vector DELETE of key%9=0
+    (bitmap sidecar only)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-dv|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        delta_log.delete_where(spark, table, "o_orderkey % 9 = 0")
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    delta_log.delete_where(spark, table, "o_orderkey % 9 = 0")
 
 
 @query("q184_delta_deletion_vectors", oracle=_Q184_SQL, tags=("lake", "agg"))
@@ -1088,25 +971,16 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_delta_cdc_table(spark: SparkSession, sf_dir: str) -> str:
-    """v0 = orders key%4!=0, v1 appends key%4=0, v2 DV-deletes key%5=0."""
-    import hashlib
-    import tempfile
-
+@published
+def _orders_delta_cdc_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """v0 = orders key%4!=0, v1 appends key%4=0, v2 DV-deletes
+    key%5=0."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-cdc|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(orders.filter(F.col("o_orderkey") % 4 != 0), table)
-        delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 0), table)
-        delta_log.delete_where(spark, table, "o_orderkey % 5 = 0")
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(orders.filter(F.col("o_orderkey") % 4 != 0), table)
+    delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 0), table)
+    delta_log.delete_where(spark, table, "o_orderkey % 5 = 0")
 
 
 @query("q185_delta_cdc_refresh_with_deletes", oracle=_Q185_SQL, tags=("lake", "ivm"))
@@ -1222,40 +1096,22 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_v3_dv_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders key%3=0 on a
-    format_version=3 table, snapshot 2 = DV delete of key%9=0,
-    snapshot 3 = DV delete of key%5=0 (overlaps snapshot 2 at %45=0 —
-    exercising the executor-side merge of the previous DV). Guarded on
-    the TERMINAL snapshot count, not mere existence: a crash
-    mid-publish must rebuild, never poison the cache."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _orders_iceberg_v3_dv_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Snapshot 1 = orders key%3=0 on a format_version=3 table, snapshot
+    2 = DV delete of key%9=0, snapshot 3 = DV delete of key%5=0
+    (overlaps snapshot 2 at %45=0 — exercising the executor-side merge
+    of the previous DV)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-v3-dv|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 3
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0),
-            table,
-            format_version=3,
-        )
-        iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
-        iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0),
+        table,
+        format_version=3,
+    )
+    iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
+    iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
 
 
 @query("q216_iceberg_v3_deletion_vectors", oracle=_Q216_SQL, tags=("lake", "agg"))
@@ -1301,38 +1157,22 @@ GROUP BY o_orderstatus
 """
 
 
-def _dv_interop_roundtrip_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta table of orders key%3=1, a DV
-    delete of key%7=0, then convert_from_delta → Iceberg v3 →
-    convert_to_delta. Returns the round-tripped Delta table. Guarded on
-    the TERMINAL artifact (the round-tripped log exists); a crash
-    mid-publish rebuilds from scratch."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _dv_interop_roundtrip_table(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Delta table of orders key%3=1, a DV delete of key%7=0, then
+    convert_from_delta → Iceberg v3 → convert_to_delta."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"dv-interop|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_dv_interop", fp)
     d1 = os.path.join(root, "delta_src")
     ice = os.path.join(root, "ice_mid")
     d2 = os.path.join(root, "delta_back")
-    if os.path.exists(root) and delta_log.latest_version(d2) is None:
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if delta_log.latest_version(d2) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 3 == 1), d1
-        )
-        delta_log.delete_where(spark, d1, "o_orderkey % 7 = 0")
-        iceberg.convert_from_delta(d1, ice)
-        iceberg.convert_to_delta(ice, d2)
-    return d2
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 3 == 1), d1
+    )
+    delta_log.delete_where(spark, d1, "o_orderkey % 7 = 0")
+    iceberg.convert_from_delta(d1, ice)
+    iceberg.convert_to_delta(ice, d2)
 
 
 @query("q217_cross_format_dv_interop", oracle=_Q217_SQL, tags=("lake", "agg"))
@@ -1343,7 +1183,7 @@ def q217(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-filtered relational aggregate."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _dv_interop_roundtrip_table(spark, sf_dir)
+    table = os.path.join(_dv_interop_roundtrip_table(spark, sf_dir), "delta_back")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -1378,44 +1218,20 @@ GROUP BY o_orderstatus
 """
 
 
-def _delta_sync_mirror_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta v0 = orders key%4=1 →
-    convert_from_delta → Delta v1 append of key%4=2 → Delta v2 DV
-    delete of key%5=0 → sync_from_delta. Returns the Iceberg mirror.
-    Guarded on the TERMINAL sync cursor (migrated-delta-version == 2);
-    a crash mid-publish rebuilds from scratch."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _delta_sync_mirror_table(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Delta v0 = orders key%4=1 → convert_from_delta → Delta v1 append
+    of key%4=2 → Delta v2 DV delete of key%5=0 → sync_from_delta."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_delta_sync", fp)
     dt = os.path.join(root, "delta_src")
     it = os.path.join(root, "ice_mirror")
-
-    def _cursor() -> "str | None":
-        if iceberg.current_version(it) is None:
-            return None
-        return iceberg.current_metadata(it)["properties"].get(
-            "migrated-delta-version"
-        )
-
-    if os.path.exists(root) and _cursor() != "2":
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(orders.filter(F.col("o_orderkey") % 4 == 1), dt)
-        iceberg.convert_from_delta(dt, it)
-        delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 2), dt)
-        delta_log.delete_where(spark, dt, "o_orderkey % 5 = 0")
-        iceberg.sync_from_delta(dt, it)
-    return it
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(orders.filter(F.col("o_orderkey") % 4 == 1), dt)
+    iceberg.convert_from_delta(dt, it)
+    delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 2), dt)
+    delta_log.delete_where(spark, dt, "o_orderkey % 5 = 0")
+    iceberg.sync_from_delta(dt, it)
 
 
 @query("q218_delta_to_iceberg_continuous_sync", oracle=_Q218_SQL, tags=("lake", "agg"))
@@ -1426,7 +1242,7 @@ def q218(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the plain double-filtered aggregate."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _delta_sync_mirror_table(spark, sf_dir)
+    table = os.path.join(_delta_sync_mirror_table(spark, sf_dir), "ice_mirror")
     return (
         iceberg.read_iceberg(spark, table)
         .groupBy("o_orderstatus")
@@ -1459,45 +1275,30 @@ GROUP BY o_orderstatus
 """
 
 
-def _iceberg_sync_mirror_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Iceberg v3 snapshot 1 = orders
-    key%4=3 → convert_to_delta → snapshot 2 append of key%4=0 (key>0) →
-    snapshot 3 DV delete of key%7=0 → sync_to_delta. Returns the Delta
-    mirror. Guarded on the TERMINAL mirror version (one commit per
-    synced snapshot: CONVERT + 2 = version 2)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _iceberg_sync_mirror_table(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Iceberg v3 snapshot 1 = orders key%4=3 → convert_to_delta →
+    snapshot 2 append of key%4=0 (key>0) → snapshot 3 DV delete of
+    key%7=0 → sync_to_delta."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg_sync", fp)
     it = os.path.join(root, "ice_src")
     dt = os.path.join(root, "delta_mirror")
-    if os.path.exists(root) and delta_log.latest_version(dt) != 2:
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 3),
-            it,
-            format_version=3,
-        )
-        iceberg.convert_to_delta(it, dt)
-        iceberg.append(
-            orders.filter(
-                (F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0)
-            ),
-            it,
-        )
-        iceberg.delete_where(spark, it, "o_orderkey % 7 = 0")
-        iceberg.sync_to_delta(it, dt)
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 3),
+        it,
+        format_version=3,
+    )
+    iceberg.convert_to_delta(it, dt)
+    iceberg.append(
+        orders.filter(
+            (F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0)
+        ),
+        it,
+    )
+    iceberg.delete_where(spark, it, "o_orderkey % 7 = 0")
+    iceberg.sync_to_delta(it, dt)
 
 
 @query("q219_iceberg_to_delta_continuous_sync", oracle=_Q219_SQL, tags=("lake", "agg"))
@@ -1507,7 +1308,7 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
     sync_to_delta): the mirror must serve exactly the Iceberg head."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _iceberg_sync_mirror_table(spark, sf_dir)
+    table = os.path.join(_iceberg_sync_mirror_table(spark, sf_dir), "delta_mirror")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -1545,43 +1346,24 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_lineage_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 snapshot 1 = orders key%3=2,
-    snapshot 2 = DV delete of key%5=0, snapshots 3+4 = update_where
-    (delete+append pair) bumping o_totalprice for key%7=0. Guarded on
-    the TERMINAL snapshot count (4)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _orders_lineage_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """v3 snapshot 1 = orders key%3=2, snapshot 2 = DV delete of
+    key%5=0, snapshots 3+4 = update_where (delete+append pair) bumping
+    o_totalprice for key%7=0."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-lineage|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_iceberg_lineage", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 3 == 2),
+        table,
+        format_version=3,
     )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 4
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 3 == 2),
-            table,
-            format_version=3,
-        )
-        iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
-        iceberg.update_where(
-            spark, table, "o_orderkey % 7 = 0",
-            {"o_totalprice": F.col("o_totalprice") + 1.0},
-        )
-    return table
+    iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
+    iceberg.update_where(
+        spark, table, "o_orderkey % 7 = 0",
+        {"o_totalprice": F.col("o_totalprice") + 1.0},
+    )
 
 
 @query("q220_iceberg_v3_row_lineage", oracle=_Q220_SQL, tags=("lake", "agg"))
@@ -1630,43 +1412,24 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_row_tracking_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta v0 = orders key%3=0 with
-    row_tracking=True, v1 = DV delete of key%5=0, v2+v3 = update_where
-    (delete+write pair) bumping o_totalprice for key%7=0. Guarded on
-    the TERMINAL version (3)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _orders_row_tracking_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Delta v0 = orders key%3=0 with row_tracking=True, v1 = DV delete
+    of key%5=0, v2+v3 = update_where (delete+write pair) bumping
+    o_totalprice for key%7=0."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-rowtracking|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_delta_rowtracking", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0),
+        table,
+        row_tracking=True,
     )
-    if (
-        delta_log.latest_version(table) is not None
-        and delta_log.latest_version(table) != 3
-    ):
-        shutil.rmtree(table)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0),
-            table,
-            row_tracking=True,
-        )
-        delta_log.delete_where(spark, table, "o_orderkey % 5 = 0")
-        delta_log.update_where(
-            spark, table, "o_orderkey % 7 = 0",
-            {"o_totalprice": "o_totalprice + 1.0"},
-        )
-    return table
+    delta_log.delete_where(spark, table, "o_orderkey % 5 = 0")
+    delta_log.update_where(
+        spark, table, "o_orderkey % 7 = 0",
+        {"o_totalprice": "o_totalprice + 1.0"},
+    )
 
 
 @query("q221_delta_row_tracking", oracle=_Q221_SQL, tags=("lake", "agg"))
@@ -1714,43 +1477,26 @@ GROUP BY o_orderstatus
 """
 
 
-def _lineage_interop_tables(spark: SparkSession, sf_dir: str) -> "tuple[str, str]":
-    """Fingerprint-cached publish: Delta row-tracking table of orders
-    key%3=1, DV delete of key%6=2, UPDATE of key%9=4 (carried ids),
-    then convert_from_delta. Returns (delta, iceberg). Guarded on the
-    TERMINAL artifact (the converted table's metadata exists)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _lineage_interop_tables(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Delta row-tracking table of orders key%3=1, DV delete of key%6=2,
+    UPDATE of key%9=4 (carried ids), then convert_from_delta."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"lineage-interop|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_lineage_interop", fp
-    )
     dt = os.path.join(root, "delta_src")
     it = os.path.join(root, "ice_dst")
-    if os.path.exists(root) and iceberg.current_version(it) is None:
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 3 == 1),
-            dt,
-            row_tracking=True,
-        )
-        delta_log.delete_where(spark, dt, "o_orderkey % 6 = 2")
-        delta_log.update_where(
-            spark, dt, "o_orderkey % 9 = 4",
-            {"o_totalprice": "o_totalprice + 1.0"},
-        )
-        iceberg.convert_from_delta(dt, it)
-    return dt, it
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 3 == 1),
+        dt,
+        row_tracking=True,
+    )
+    delta_log.delete_where(spark, dt, "o_orderkey % 6 = 2")
+    delta_log.update_where(
+        spark, dt, "o_orderkey % 9 = 4",
+        {"o_totalprice": "o_totalprice + 1.0"},
+    )
+    iceberg.convert_from_delta(dt, it)
 
 
 @query("q222_cross_format_row_id_carry", oracle=_Q222_SQL, tags=("lake", "agg"))
@@ -1761,7 +1507,8 @@ def q222(spark: SparkSession, sf_dir: str) -> DataFrame:
     side contributes one copy of every surviving row."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    dt, it = _lineage_interop_tables(spark, sf_dir)
+    root = _lineage_interop_tables(spark, sf_dir)
+    dt, it = os.path.join(root, "delta_src"), os.path.join(root, "ice_dst")
     cols = ["o_orderstatus", "o_orderkey", "_row_id"]
     both = (
         delta_log.read_delta_lineage(spark, dt).select(*cols)
@@ -1796,48 +1543,29 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_defaults_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 snapshot 1 = orders key%4=2
-    (3 columns), metadata-only add_column(score, default=7), snapshot 2
-    = orders key%4=3 WITH explicit score = key%100. Guarded on the
-    TERMINAL snapshot count (2)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _orders_defaults_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """v3 snapshot 1 = orders key%4=2 (3 columns), metadata-only
+    add_column(score, default=7), snapshot 2 = orders key%4=3 WITH
+    explicit score = key%100."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-defaults|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_iceberg_defaults", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*base_cols),
+        table,
+        format_version=3,
     )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 2
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*base_cols),
-            table,
-            format_version=3,
-        )
-        iceberg.add_column(table, "score", "long", default=7)
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3)
-            .select(
-                *base_cols,
-                (F.col("o_orderkey") % 100).cast("long").alias("score"),
-            ),
-            table,
-        )
-    return table
+    iceberg.add_column(table, "score", "long", default=7)
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3)
+        .select(
+            *base_cols,
+            (F.col("o_orderkey") % 100).cast("long").alias("score"),
+        ),
+        table,
+    )
 
 
 @query("q223_iceberg_v3_column_defaults", oracle=_Q223_SQL, tags=("lake", "agg"))
@@ -1896,51 +1624,29 @@ WHERE o_orderkey % 4 = 1 AND o_orderkey % 5 <> 0 AND o_orderkey % 9 = 3
 """
 
 
-def _snapshot_diff_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
-    """Fingerprint-cached publish: v3 snapshot 1 = orders key%4=1, then
-    DV delete key%5=0, update key%9=3 (+1 price), append key%4=0
-    (key>0). Returns (table, first snapshot id). Guarded on the
-    TERMINAL snapshot count (5: create, delete, update-delete,
-    update-append, append)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _snapshot_diff_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """v3 snapshot 1 = orders key%4=1, then DV delete key%5=0, update
+    key%9=3 (+1 price), append key%4=0 (key>0)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"snapshot-diff|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_snapshot_diff", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1),
+        table,
+        format_version=3,
     )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 5
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1),
-            table,
-            format_version=3,
-        )
-        iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
-        iceberg.update_where(
-            spark, table, "o_orderkey % 9 = 3",
-            {"o_totalprice": "o_totalprice + 1.0"},
-        )
-        iceberg.append(
-            orders.filter(
-                (F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0)
-            ),
-            table,
-        )
-    first = iceberg.snapshot_ids(table)[0]
-    return table, first
+    iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
+    iceberg.update_where(
+        spark, table, "o_orderkey % 9 = 3",
+        {"o_totalprice": "o_totalprice + 1.0"},
+    )
+    iceberg.append(
+        orders.filter(
+            (F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0)
+        ),
+        table,
+    )
 
 
 @query("q224_snapshot_diff_changelog", oracle=_Q224_SQL, tags=("lake", "agg"))
@@ -1950,7 +1656,8 @@ def q224(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational reconstruction."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table, first = _snapshot_diff_table(spark, sf_dir)
+    table = _snapshot_diff_table(spark, sf_dir)
+    first = iceberg.snapshot_ids(table)[0]
     feed = iceberg.snapshot_diff_changelog(spark, table, first)
     return feed.groupBy("_change_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1998,7 +1705,8 @@ def q225(spark: SparkSession, sf_dir: str) -> DataFrame:
     from march_mania_spark_lakehouse_spark.operators import ivm
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table, first = _snapshot_diff_table(spark, sf_dir)
+    table = _snapshot_diff_table(spark, sf_dir)
+    first = iceberg.snapshot_ids(table)[0]
     base = ivm.agg_state(
         iceberg.read_iceberg(spark, table, first).select(
             "o_orderstatus", "o_totalprice"
@@ -2042,50 +1750,32 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_delta_defaults_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta v0 = orders key%4=1
-    (3 columns), v1 = metadata-only add_column(score, write_default=7),
-    v2 = append key%4=2 OMITTING score (filled 7), v3 = append key%4=3
-    with explicit score = key%50. Guarded on the TERMINAL version (3)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _orders_delta_defaults_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Delta v0 = orders key%4=1 (3 columns), v1 = metadata-only
+    add_column(score, write_default=7), v2 = append key%4=2 OMITTING
+    score (filled 7), v3 = append key%4=3 with explicit score =
+    key%50."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-defaults|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_delta_defaults", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*base_cols),
+        table,
     )
-    if (
-        delta_log.latest_version(table) is not None
-        and delta_log.latest_version(table) != 3
-    ):
-        shutil.rmtree(table)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*base_cols),
-            table,
-        )
-        delta_log.add_column(table, "score", "bigint", write_default=7)
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*base_cols),
-            table,
-        )
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3).select(
-                *base_cols,
-                (F.col("o_orderkey") % 50).cast("long").alias("score"),
-            ),
-            table,
-        )
-    return table
+    delta_log.add_column(table, "score", "bigint", write_default=7)
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*base_cols),
+        table,
+    )
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3).select(
+            *base_cols,
+            (F.col("o_orderkey") % 50).cast("long").alias("score"),
+        ),
+        table,
+    )
 
 
 @query("q226_delta_write_time_defaults", oracle=_Q226_SQL, tags=("lake", "agg"))
@@ -2145,74 +1835,46 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price") + ",")
 
 
-def _sync_schema_pair(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish of a Delta writer + Iceberg mirror
-    pair whose sync range carries the full schema-evolution menu:
-    v0 create (key%4=1; bucket INT), v1 add score (write_default 5),
-    v2 append key%4=2 omitting score, v3 enable mapping + v4 rename
-    o_totalprice→price, v5 widen bucket int→long, v6 add flag (mapped:
-    col-<uuid> physical name), v7 append key%4=3 with explicit values
-    (bucket beyond int range). Returns the MIRROR path; guarded on the
-    terminal Delta version (7) and the mirror's sync cursor."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _sync_schema_pair(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """A Delta writer + Iceberg mirror pair whose sync range carries the
+    full schema-evolution menu: v0 create (key%4=1; bucket INT), v1 add
+    score (write_default 5), v2 append key%4=2 omitting score, v3 enable
+    mapping + v4 rename o_totalprice→price, v5 widen bucket int→long, v6
+    add flag (mapped: col-<uuid> physical name), v7 append key%4=3 with
+    explicit values (bucket beyond int range)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"sync-schema|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_sync_schema", fp
-    )
     dt = os.path.join(root, "delta")
     it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if delta_log.latest_version(dt) != 7:
-            return False
-        if iceberg.current_version(it) is None:
-            return False
-        props = iceberg.current_metadata(it).get("properties", {})
-        return props.get("migrated-delta-version") == "7"
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        base = orders.select(
+    orders = catalog.load(spark, "orders", sf_dir)
+    base = orders.select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        (F.col("o_orderkey") % 1000).cast("int").alias("bucket"),
+    )
+    delta_log.create(
+        base.filter(F.col("o_orderkey") % 4 == 1), dt
+    )
+    iceberg.convert_from_delta(dt, it)
+    delta_log.add_column(dt, "score", "bigint", write_default=5)
+    delta_log.append(base.filter(F.col("o_orderkey") % 4 == 2), dt)
+    delta_log.rename_column(dt, "o_totalprice", "price")
+    delta_log.widen_column(dt, "bucket", "long")
+    delta_log.add_column(dt, "flag", "bigint")
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3).select(
             "o_orderkey",
             "o_orderstatus",
-            "o_totalprice",
-            (F.col("o_orderkey") % 1000).cast("int").alias("bucket"),
-        )
-        delta_log.create(
-            base.filter(F.col("o_orderkey") % 4 == 1), dt
-        )
-        from march_mania_spark_lakehouse_spark.sources import iceberg as ice
-
-        ice.convert_from_delta(dt, it)
-        delta_log.add_column(dt, "score", "bigint", write_default=5)
-        delta_log.append(base.filter(F.col("o_orderkey") % 4 == 2), dt)
-        delta_log.rename_column(dt, "o_totalprice", "price")
-        delta_log.widen_column(dt, "bucket", "long")
-        delta_log.add_column(dt, "flag", "bigint")
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3).select(
-                "o_orderkey",
-                "o_orderstatus",
-                F.col("o_totalprice").alias("price"),
-                (F.col("o_orderkey") + 3000000000).alias("bucket"),
-                (F.col("o_orderkey") % 50).cast("long").alias("score"),
-                (F.col("o_orderkey") % 2).cast("long").alias("flag"),
-            ),
-            dt,
-        )
-        ice.sync_from_delta(dt, it)
-    return it
+            F.col("o_totalprice").alias("price"),
+            (F.col("o_orderkey") + 3000000000).alias("bucket"),
+            (F.col("o_orderkey") % 50).cast("long").alias("score"),
+            (F.col("o_orderkey") % 2).cast("long").alias("flag"),
+        ),
+        dt,
+    )
+    iceberg.sync_from_delta(dt, it)
 
 
 # --------------------------------------------------------------------------
@@ -2250,61 +1912,37 @@ GROUP BY o_orderstatus
 """
 
 
-def _migrated_ivm_pair(spark: SparkSession, sf_dir: str) -> "tuple[str, str, int]":
-    """Fingerprint-cached publish: Delta v0 = orders key%4=1 (row
-    tracking), v1 = DV delete key%10=7; `convert_from_delta` → Iceberg
-    snapshot 1; then ON ICEBERG: DV delete key%5=0, carried update
-    key%9=3 (+1 price), append key%4=0 (key>0). Returns (delta, ice,
-    conversion snapshot id). Guarded on the terminal snapshot count."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _migrated_ivm_pair(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Delta v0 = orders key%4=1 (row tracking), v1 = DV delete
+    key%10=7; `convert_from_delta` → Iceberg snapshot 1; then ON
+    ICEBERG: DV delete key%5=0, carried update key%9=3 (+1 price),
+    append key%4=0 (key>0)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"migrated-ivm|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_migrated_ivm", fp
-    )
     dt = os.path.join(root, "delta")
     it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        return (
-            delta_log.latest_version(dt) == 1
-            and iceberg.current_version(it) is not None
-            and len(iceberg.snapshot_ids(it)) == 5
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(
-                "o_orderkey", "o_orderstatus", "o_totalprice"
-            ),
-            dt,
-            row_tracking=True,
-        )
-        delta_log.delete_where(spark, dt, "o_orderkey % 10 = 7")
-        iceberg.convert_from_delta(dt, it)
-        iceberg.delete_where(spark, it, "o_orderkey % 5 = 0")
-        iceberg.update_where(
-            spark, it, "o_orderkey % 9 = 3",
-            {"o_totalprice": "o_totalprice + 1.0"},
-        )
-        iceberg.append(
-            orders.filter(
-                (F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0)
-            ).select("o_orderkey", "o_orderstatus", "o_totalprice"),
-            it,
-        )
-    return dt, it, iceberg.snapshot_ids(it)[0]
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        ),
+        dt,
+        row_tracking=True,
+    )
+    delta_log.delete_where(spark, dt, "o_orderkey % 10 = 7")
+    iceberg.convert_from_delta(dt, it)
+    iceberg.delete_where(spark, it, "o_orderkey % 5 = 0")
+    iceberg.update_where(
+        spark, it, "o_orderkey % 9 = 3",
+        {"o_totalprice": "o_totalprice + 1.0"},
+    )
+    iceberg.append(
+        orders.filter(
+            (F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0)
+        ).select("o_orderkey", "o_orderstatus", "o_totalprice"),
+        it,
+    )
 
 
 @query("q228_migrated_lineage_ivm", oracle=_Q228_SQL, tags=("lake", "agg"))
@@ -2315,7 +1953,9 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     from march_mania_spark_lakehouse_spark.operators import ivm
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    dt, it, first = _migrated_ivm_pair(spark, sf_dir)
+    root = _migrated_ivm_pair(spark, sf_dir)
+    dt, it = os.path.join(root, "delta"), os.path.join(root, "ice")
+    first = iceberg.snapshot_ids(it)[0]
     base = ivm.agg_state(
         delta_log.read_delta(spark, dt).select(
             "o_orderstatus", "o_totalprice"
@@ -2343,7 +1983,7 @@ def q227(spark: SparkSession, sf_dir: str) -> DataFrame:
     the relational CASE oracle."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _sync_schema_pair(spark, sf_dir)
+    table = os.path.join(_sync_schema_pair(spark, sf_dir), "ice")
     return (
         iceberg.read_iceberg(spark, table)
         .groupBy("o_orderstatus")
@@ -2380,45 +2020,26 @@ GROUP BY o_orderstatus
 """
 
 
-def _metadata_tables_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 table PARTITIONED by
-    o_orderstatus — snapshot 1 = create (key%4=1), snapshot 2 = append
-    (key%4=2), snapshot 3 = DV delete (key%10=3). Guarded on the
-    terminal snapshot count (3)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _metadata_tables_fixture(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """V3 table PARTITIONED by o_orderstatus — snapshot 1 = create
+    (key%4=1), snapshot 2 = append (key%4=2), snapshot 3 = DV delete
+    (key%10=3)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"meta-tables|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_meta_tables", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        table,
+        partition_by=("o_orderstatus",),
+        format_version=3,
     )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 3
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            table,
-            partition_by=("o_orderstatus",),
-            format_version=3,
-        )
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            table,
-        )
-        iceberg.delete_where(spark, table, "o_orderkey % 10 = 3")
-    return table
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        table,
+    )
+    iceberg.delete_where(spark, table, "o_orderkey % 10 = 3")
 
 
 @query("q229_metadata_partitions_table", oracle=_Q229_SQL, tags=("lake", "agg"))
@@ -2535,7 +2156,8 @@ def q232(spark: SparkSession, sf_dir: str) -> DataFrame:
     from march_mania_spark_lakehouse_spark.operators import ivm
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table, first = _snapshot_diff_table(spark, sf_dir)
+    table = _snapshot_diff_table(spark, sf_dir)
+    first = iceberg.snapshot_ids(table)[0]
     base = ivm.agg_state(
         iceberg.read_iceberg(spark, table, first).select(
             "o_orderstatus", "o_totalprice"
@@ -2585,61 +2207,35 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _id_mapped_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 Iceberg orders (key%4=1, price
-    under its original name), convert_to_delta, rename
-    o_totalprice→price on the WRITER, append key%4=2 (files store the
-    NEW physical name), sync — the mirror flips to mode=id. Returns
-    the DELTA MIRROR path; guarded on the mirror's mapping mode."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _id_mapped_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """V3 Iceberg orders (key%4=1, price under its original name),
+    convert_to_delta, rename o_totalprice→price on the WRITER, append
+    key%4=2 (files store the NEW physical name), sync — the mirror flips
+    to mode=id."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"id-mapped-mirror|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_id_mirror", fp
-    )
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None:
-            return False
-        md = delta_log._latest_metadata(dt, v)
-        return (md.get("configuration") or {}).get(
-            "delta.columnMapping.mode"
-        ) == "id"
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(
-                "o_orderkey", "o_orderstatus", "o_totalprice"
-            ),
-            it,
-            format_version=3,
-        )
-        iceberg.convert_to_delta(it, dt)
-        iceberg.rename_column(it, "o_totalprice", "price")
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(
-                "o_orderkey",
-                "o_orderstatus",
-                F.col("o_totalprice").alias("price"),
-            ),
-            it,
-        )
-        iceberg.sync_to_delta(it, dt)
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        ),
+        it,
+        format_version=3,
+    )
+    iceberg.convert_to_delta(it, dt)
+    iceberg.rename_column(it, "o_totalprice", "price")
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.col("o_totalprice").alias("price"),
+        ),
+        it,
+    )
+    iceberg.sync_to_delta(it, dt)
 
 
 @query("q233_id_mapped_mirror_read", oracle=_Q233_SQL, tags=("lake", "agg"))
@@ -2649,7 +2245,7 @@ def q233(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the relational oracle."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _id_mapped_mirror(spark, sf_dir)
+    table = os.path.join(_id_mapped_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -2679,59 +2275,30 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _rollback_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders key%4=1,
-    snapshot 2 = BAD append key%4=2, rollback to snapshot 1, snapshot 3
-    = append key%4=3 (parented on snapshot 1). Guarded on the terminal
-    shape (3 snapshots, head parented on the first)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _rollback_fixture(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Snapshot 1 = orders key%4=1, snapshot 2 = BAD append key%4=2,
+    rollback to snapshot 1, snapshot 3 = append key%4=3 (parented on
+    snapshot 1)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"rollback|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_rollback", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        table,
+        format_version=3,
     )
-
-    def _terminal() -> bool:
-        if iceberg.current_version(table) is None:
-            return False
-        meta = iceberg.current_metadata(table)
-        snaps = meta["snapshots"]
-        return (
-            len(snaps) == 3
-            and meta["current-snapshot-id"] == snaps[-1]["snapshot-id"]
-            and snaps[-1].get("parent-snapshot-id")
-            == snaps[0]["snapshot-id"]
-        )
-
-    if os.path.exists(table) and not _terminal():
-        shutil.rmtree(table)
-    if not os.path.exists(table):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            table,
-            format_version=3,
-        )
-        good = iceberg.current_metadata(table)["current-snapshot-id"]
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            table,
-        )
-        iceberg.rollback_to_snapshot(table, good)
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
-            table,
-        )
-    return table
+    good = iceberg.current_metadata(table)["current-snapshot-id"]
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        table,
+    )
+    iceberg.rollback_to_snapshot(table, good)
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
+        table,
+    )
 
 
 @query("q234_rollback_to_snapshot", oracle=_Q234_SQL, tags=("lake", "agg"))
@@ -2774,58 +2341,28 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _partition_evolved_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: unpartitioned Delta orders key%4=1
-    → convert_from_delta → writer REPLACEs PARTITIONED BY
-    (o_orderstatus) → appends key%4=2 under the new layout → sync.
-    Returns the ICEBERG MIRROR path; guarded on the mirror's evolved
-    default spec and terminal synced version."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _partition_evolved_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Unpartitioned Delta orders key%4=1 → convert_from_delta → writer
+    REPLACEs PARTITIONED BY (o_orderstatus) → appends key%4=2 under the
+    new layout → sync."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"part-evolved|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_part_evolve", fp
-    )
     dt = os.path.join(root, "delta")
     it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if iceberg.current_version(it) is None:
-            return False
-        v = delta_log.latest_version(dt)
-        meta = iceberg.current_metadata(it)
-        return (
-            v is not None
-            and meta.get("default-spec-id", 0) >= 1
-            and meta.get("properties", {}).get("migrated-delta-version")
-            == str(v)
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            dt,
-        )
-        iceberg.convert_from_delta(dt, it)
-        delta_log.repartition_table(spark, dt, ["o_orderstatus"])
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            dt,
-        )
-        iceberg.sync_from_delta(dt, it)
-    return it
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        dt,
+    )
+    iceberg.convert_from_delta(dt, it)
+    delta_log.repartition_table(spark, dt, ["o_orderstatus"])
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        dt,
+    )
+    iceberg.sync_from_delta(dt, it)
 
 
 @query(
@@ -2841,7 +2378,7 @@ def q235(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational oracle."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _partition_evolved_mirror(spark, sf_dir)
+    table = os.path.join(_partition_evolved_mirror(spark, sf_dir), "ice")
     return (
         iceberg.read_iceberg(spark, table)
         .groupBy("o_orderstatus")
@@ -2873,60 +2410,35 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _rollback_synced_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Iceberg orders key%4=1 →
-    convert_to_delta → append BAD key%4=2 → sync (cursor lands ON the
-    bad snapshot) → rollback → append GOOD key%4=3 → sync
-    (compensates). Returns the DELTA MIRROR path; guarded on the
-    terminal compensating commit."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _rollback_synced_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Iceberg orders key%4=1 → convert_to_delta → append BAD key%4=2 →
+    sync (cursor lands ON the bad snapshot) → rollback → append GOOD
+    key%4=3 → sync (compensates)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"rollback-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_rollback_sync", fp
-    )
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceOperation") == "sync-compensate"
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            it,
-            format_version=3,
-        )
-        good = iceberg.current_metadata(it)["current-snapshot-id"]
-        iceberg.convert_to_delta(it, dt)
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            it,
-        )
-        iceberg.sync_to_delta(it, dt)
-        iceberg.rollback_to_snapshot(it, good)
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
-            it,
-        )
-        iceberg.sync_to_delta(it, dt)
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        it,
+        format_version=3,
+    )
+    good = iceberg.current_metadata(it)["current-snapshot-id"]
+    iceberg.convert_to_delta(it, dt)
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        it,
+    )
+    iceberg.sync_to_delta(it, dt)
+    iceberg.rollback_to_snapshot(it, good)
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
+        it,
+    )
+    iceberg.sync_to_delta(it, dt)
 
 
 @query(
@@ -2941,7 +2453,7 @@ def q236(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be gone from the mirror."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _rollback_synced_mirror(spark, sf_dir)
+    table = os.path.join(_rollback_synced_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -3013,55 +2525,28 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _pos_delete_rewritten_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v2 Iceberg orders key%4=1 →
-    convert_to_delta → pos-delete key%10=7 → append key%4=2 →
-    sync_to_delta(rewrite='auto'). Returns the DELTA MIRROR path;
-    guarded on the terminal synced sequence."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _pos_delete_rewritten_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """V2 Iceberg orders key%4=1 → convert_to_delta → pos-delete
+    key%10=7 → append key%4=2 → sync_to_delta(rewrite='auto')."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"posdel-rewrite|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_posdel_rw", fp
-    )
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            it,
-            format_version=2,
-        )
-        iceberg.convert_to_delta(it, dt)
-        iceberg.delete_where(spark, it, "o_orderkey % 10 = 7")
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            it,
-        )
-        iceberg.sync_to_delta(it, dt, rewrite="auto")
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        it,
+        format_version=2,
+    )
+    iceberg.convert_to_delta(it, dt)
+    iceberg.delete_where(spark, it, "o_orderkey % 10 = 7")
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        it,
+    )
+    iceberg.sync_to_delta(it, dt, rewrite="auto")
 
 
 @query(
@@ -3076,7 +2561,7 @@ def q238(spark: SparkSession, sf_dir: str) -> DataFrame:
     population."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _pos_delete_rewritten_mirror(spark, sf_dir)
+    table = os.path.join(_pos_delete_rewritten_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -3106,52 +2591,29 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _restored_layout_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: unpartitioned Delta orders key%4=1
-    (v0) → REPLACE PARTITIONED BY o_orderstatus (v1) → append key%4=2
-    (v2) → RESTORE to v0 (v3 — layout and metadata travel back) →
-    append key%4=3 (v4). Guarded on the terminal version + layout."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _restored_layout_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Unpartitioned Delta orders key%4=1 (v0) → REPLACE PARTITIONED BY
+    o_orderstatus (v1) → append key%4=2 (v2) → RESTORE to v0 (v3 —
+    layout and metadata travel back) → append key%4=3 (v4)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"restored-layout|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_restored_layout", fp
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        table,
     )
-
-    def _terminal() -> bool:
-        return (
-            delta_log.latest_version(table) == 4
-            and delta_log.table_partition_columns(table) == []
-        )
-
-    if os.path.exists(table) and not _terminal():
-        shutil.rmtree(table)
-    if not os.path.exists(table):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            table,
-        )
-        delta_log.repartition_table(spark, table, ["o_orderstatus"])
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            table,
-        )
-        delta_log.restore(table, 0)
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
-            table,
-        )
-    return table
+    delta_log.repartition_table(spark, table, ["o_orderstatus"])
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        table,
+    )
+    delta_log.restore(table, 0)
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
+        table,
+    )
 
 
 @query(
@@ -3199,64 +2661,35 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _ice_relayout_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 Iceberg orders key%4=1
-    (unpartitioned) → convert_to_delta → repartition_table([status])
-    → append key%4=2 → sync → repartition_table([]) → append key%4=3
-    → sync. Returns the DELTA MIRROR path; guarded on the terminal
-    synced sequence + the flipped-back layout."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _ice_relayout_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """V3 Iceberg orders key%4=1 (unpartitioned) → convert_to_delta →
+    repartition_table([status]) → append key%4=2 → sync →
+    repartition_table([]) → append key%4=3 → sync."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"ice-relayout|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ice_relayout", fp
-    )
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return (
-            params.get("sourceSequence")
-            == str(iceberg.current_metadata(it)["last-sequence-number"])
-            and delta_log.table_partition_columns(dt) == []
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
-            it,
-            format_version=3,
-        )
-        iceberg.convert_to_delta(it, dt)
-        iceberg.repartition_table(spark, it, ["o_orderstatus"])
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
-            it,
-        )
-        iceberg.sync_to_delta(it, dt)
-        iceberg.repartition_table(spark, it, [])
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
-            it,
-        )
-        iceberg.sync_to_delta(it, dt)
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        it,
+        format_version=3,
+    )
+    iceberg.convert_to_delta(it, dt)
+    iceberg.repartition_table(spark, it, ["o_orderstatus"])
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 2).select(*cols),
+        it,
+    )
+    iceberg.sync_to_delta(it, dt)
+    iceberg.repartition_table(spark, it, [])
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
+        it,
+    )
+    iceberg.sync_to_delta(it, dt)
 
 
 @query(
@@ -3270,7 +2703,7 @@ def q240(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-match the relational oracle over all three batches."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _ice_relayout_mirror(spark, sf_dir)
+    table = os.path.join(_ice_relayout_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -3309,55 +2742,29 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _eq_delete_rewritten_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v2 Iceberg orders key%4=1 →
-    convert_to_delta → UPSERT (equality tombstone + append) bumping
-    key%10=3 prices by 1.0 → sync_to_delta(rewrite='auto'). Returns
-    the DELTA MIRROR path; guarded on the terminal synced sequence."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _eq_delete_rewritten_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """V2 Iceberg orders key%4=1 → convert_to_delta → UPSERT (equality
+    tombstone + append) bumping key%10=3 prices by 1.0 →
+    sync_to_delta(rewrite='auto')."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"eqdel-rewrite|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_eqdel_rw", fp
-    )
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        base = orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols)
-        iceberg.create(base, it, format_version=2)
-        iceberg.convert_to_delta(it, dt)
-        iceberg.upsert(
-            spark,
-            it,
-            base.filter(F.col("o_orderkey") % 10 == 3).withColumn(
-                "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
-            ),
-            ["o_orderkey"],
-        )
-        iceberg.sync_to_delta(it, dt, rewrite="auto")
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    base = orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols)
+    iceberg.create(base, it, format_version=2)
+    iceberg.convert_to_delta(it, dt)
+    iceberg.upsert(
+        spark,
+        it,
+        base.filter(F.col("o_orderkey") % 10 == 3).withColumn(
+            "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
+        ),
+        ["o_orderkey"],
+    )
+    iceberg.sync_to_delta(it, dt, rewrite="auto")
 
 
 @query(
@@ -3371,7 +2778,7 @@ def q241(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-match the oracle over the upserted population."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _eq_delete_rewritten_mirror(spark, sf_dir)
+    table = os.path.join(_eq_delete_rewritten_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -3403,57 +2810,30 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _expiry_synced_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 Iceberg orders key%4=1 →
-    convert_to_delta → three rounds of (append key%4=r, expire
-    keep_last=1, sync). Returns the DELTA MIRROR path; guarded on the
-    terminal synced sequence and single-digit retained snapshots."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _expiry_synced_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """V3 Iceberg orders key%4=1 → convert_to_delta → three rounds of
+    (append key%4=r, expire keep_last=1, sync)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"expiry-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_expiry_sync", fp
-    )
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-        pos = orders.filter(F.col("o_orderkey") > 0)
-        iceberg.create(
-            pos.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    pos = orders.filter(F.col("o_orderkey") > 0)
+    iceberg.create(
+        pos.filter(F.col("o_orderkey") % 4 == 1).select(*cols),
+        it,
+        format_version=3,
+    )
+    iceberg.convert_to_delta(it, dt)
+    for r in (2, 3, 0):
+        iceberg.append(
+            pos.filter(F.col("o_orderkey") % 4 == r).select(*cols),
             it,
-            format_version=3,
         )
-        iceberg.convert_to_delta(it, dt)
-        for r in (2, 3, 0):
-            iceberg.append(
-                pos.filter(F.col("o_orderkey") % 4 == r).select(*cols),
-                it,
-            )
-            iceberg.expire_snapshots(it, keep_last=1)
-            iceberg.sync_to_delta(it, dt)
-    return dt
+        iceberg.expire_snapshots(it, keep_last=1)
+        iceberg.sync_to_delta(it, dt)
 
 
 @query(
@@ -3468,7 +2848,7 @@ def q242(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced a re-convert."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _expiry_synced_mirror(spark, sf_dir)
+    table = os.path.join(_expiry_synced_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy("o_orderstatus")
@@ -3502,60 +2882,46 @@ GROUP BY o.o_orderstatus
 """.format(dsum=sql_dsum("l.l_quantity", "sum_qty"))
 
 
-def _nested_orders_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: orders key%8=1 joined to an
-    array<struct> of their line items plus a struct header, written as
-    ONE Iceberg table with nested field-ids. Returns the table path."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _nested_orders_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Orders key%8=1 joined to an array<struct> of their line items
+    plus a struct header, written as ONE Iceberg table with nested
+    field-ids."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"nested-orders|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_nested", fp)
-    it = os.path.join(root, "ice")
-    if os.path.exists(root) and iceberg.current_version(it) is None:
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir).filter(
-            F.col("o_orderkey") % 8 == 1
+    orders = catalog.load(spark, "orders", sf_dir).filter(
+        F.col("o_orderkey") % 8 == 1
+    )
+    items = (
+        catalog.load(spark, "lineitem", sf_dir)
+        .join(
+            orders.select("o_orderkey"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+            "inner",
         )
-        items = (
-            catalog.load(spark, "lineitem", sf_dir)
-            .join(
-                orders.select("o_orderkey"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-                "inner",
-            )
-            .groupBy("l_orderkey")
-            .agg(
-                F.collect_list(
-                    F.struct(
-                        F.col("l_linenumber").alias("ln"),
-                        F.col("l_quantity").alias("qty"),
-                    )
-                ).alias("items")
-            )
-        )
-        nested = (
-            orders.select("o_orderkey", "o_orderstatus", "o_orderpriority")
-            .join(items, F.col("o_orderkey") == items["l_orderkey"], "left")
-            .select(
-                "o_orderkey",
+        .groupBy("l_orderkey")
+        .agg(
+            F.collect_list(
                 F.struct(
-                    F.col("o_orderstatus").alias("status"),
-                    F.col("o_orderpriority").alias("prio"),
-                ).alias("info"),
-                "items",
-            )
+                    F.col("l_linenumber").alias("ln"),
+                    F.col("l_quantity").alias("qty"),
+                )
+            ).alias("items")
         )
-        iceberg.create(nested, it)
-    return it
+    )
+    nested = (
+        orders.select("o_orderkey", "o_orderstatus", "o_orderpriority")
+        .join(items, F.col("o_orderkey") == items["l_orderkey"], "left")
+        .select(
+            "o_orderkey",
+            F.struct(
+                F.col("o_orderstatus").alias("status"),
+                F.col("o_orderpriority").alias("prio"),
+            ).alias("info"),
+            "items",
+        )
+    )
+    iceberg.create(nested, table)
 
 
 @query(
@@ -3615,60 +2981,36 @@ GROUP BY t.status, t.prio_class
 """.format(dsum=sql_dsum("t.o_totalprice", "sum_price"))
 
 
-def _nested_evolution_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Iceberg orders key%4=2 with a
-    struct column → convert_to_delta → add_column('info.prio_class')
-    → append key%4=3 rows carrying it → sync. Returns the DELTA
-    MIRROR path; guarded on the terminal synced sequence."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _nested_evolution_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Iceberg orders key%4=2 with a struct column → convert_to_delta →
+    add_column('info.prio_class') → append key%4=3 rows carrying it →
+    sync."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"nested-evo|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_nested_evo", fp)
     it = os.path.join(root, "ice")
     dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        base = orders.filter(F.col("o_orderkey") % 4 == 2).select(
-            "o_orderkey",
-            F.struct(F.col("o_orderstatus").alias("status")).alias("info"),
-            "o_totalprice",
-        )
-        iceberg.create(base, it)
-        iceberg.convert_to_delta(it, dt)
-        iceberg.add_column(it, "info.prio_class", "string")
-        post = orders.filter(F.col("o_orderkey") % 4 == 3).select(
-            "o_orderkey",
-            F.struct(
-                F.col("o_orderstatus").alias("status"),
-                F.when(F.col("o_orderpriority") < "3", "HI")
-                .otherwise("LO")
-                .alias("prio_class"),
-            ).alias("info"),
-            "o_totalprice",
-        )
-        iceberg.append(post, it)
-        iceberg.sync_to_delta(it, dt)
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    base = orders.filter(F.col("o_orderkey") % 4 == 2).select(
+        "o_orderkey",
+        F.struct(F.col("o_orderstatus").alias("status")).alias("info"),
+        "o_totalprice",
+    )
+    iceberg.create(base, it)
+    iceberg.convert_to_delta(it, dt)
+    iceberg.add_column(it, "info.prio_class", "string")
+    post = orders.filter(F.col("o_orderkey") % 4 == 3).select(
+        "o_orderkey",
+        F.struct(
+            F.col("o_orderstatus").alias("status"),
+            F.when(F.col("o_orderpriority") < "3", "HI")
+            .otherwise("LO")
+            .alias("prio_class"),
+        ).alias("info"),
+        "o_totalprice",
+    )
+    iceberg.append(post, it)
+    iceberg.sync_to_delta(it, dt)
 
 
 @query(
@@ -3682,7 +3024,7 @@ def q244(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact price sums must hash-match the two-generation oracle."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _nested_evolution_mirror(spark, sf_dir)
+    table = os.path.join(_nested_evolution_mirror(spark, sf_dir), "delta")
     return (
         delta_log.read_delta(spark, table)
         .groupBy(
@@ -3721,38 +3063,24 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _nested_stats_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: orders key%6=1 as (o_orderkey,
-    info struct<price, status>), range-clustered on the nested price
-    and created with stat_cols=['info.price']."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _nested_stats_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Orders key%6=1 as (o_orderkey, info struct<price, status>),
+    range-clustered on the nested price and created with
+    stat_cols=['info.price']."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"nested-stats|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_nested_stats", fp)
-    it = os.path.join(root, "ice")
-    if os.path.exists(root) and iceberg.current_version(it) is None:
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir).filter(
-            F.col("o_orderkey") % 6 == 1
-        )
-        nested = orders.repartitionByRange(8, "o_totalprice").select(
-            "o_orderkey",
-            F.struct(
-                F.col("o_totalprice").alias("price"),
-                F.col("o_orderstatus").alias("status"),
-            ).alias("info"),
-        )
-        iceberg.create(nested, it, stat_cols=["info.price"])
-    return it
+    orders = catalog.load(spark, "orders", sf_dir).filter(
+        F.col("o_orderkey") % 6 == 1
+    )
+    nested = orders.repartitionByRange(8, "o_totalprice").select(
+        "o_orderkey",
+        F.struct(
+            F.col("o_totalprice").alias("price"),
+            F.col("o_orderstatus").alias("status"),
+        ).alias("info"),
+    )
+    iceberg.create(nested, table, stat_cols=["info.price"])
 
 
 @query(
@@ -3798,45 +3126,23 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _cherry_picked_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: base key%12=1 → branch append
-    key%12=5 (audit) → main append key%12=9 (divergence) →
-    cherry_pick(audit head). Guarded on the terminal sequence (4 data
-    commits: create, branch append, main append, cherry-pick)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _cherry_picked_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Base key%12=1 → branch append key%12=5 (audit) → main append
+    key%12=9 (divergence) → cherry_pick(audit head)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"cherry-pick|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_cherry", fp)
-    it = os.path.join(root, "ice")
+    orders = catalog.load(spark, "orders", sf_dir)
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
 
-    def _terminal() -> bool:
-        if iceberg.current_version(it) is None:
-            return False
-        return iceberg.current_metadata(it)["last-sequence-number"] == 4
+    def grp(r):
+        return orders.filter(F.col("o_orderkey") % 12 == r).select(*cols)
 
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-
-        def grp(r):
-            return orders.filter(F.col("o_orderkey") % 12 == r).select(*cols)
-
-        iceberg.create(grp(1), it)
-        iceberg.create_branch(it, "audit")
-        staged = iceberg.append_to_branch(grp(5), it, "audit")
-        iceberg.append(grp(9), it)  # main moves past the fork
-        iceberg.cherry_pick(it, staged)
-    return it
+    iceberg.create(grp(1), table)
+    iceberg.create_branch(table, "audit")
+    staged = iceberg.append_to_branch(grp(5), table, "audit")
+    iceberg.append(grp(9), table)  # main moves past the fork
+    iceberg.cherry_pick(table, staged)
 
 
 @query(
@@ -3880,46 +3186,21 @@ GROUP BY o_orderstatus
 """.format(dsum=sql_dsum("o_totalprice", "sum_price"))
 
 
-def _reorg_purged_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta orders key%6=2 (4 files) →
-    DV delete key%30=2 → reorg_purge. Guarded on the terminal version
-    AND a DV-free head."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _reorg_purged_table(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Delta orders key%6=2 (4 files) → DV delete key%30=2 →
+    reorg_purge."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"reorg-purge|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_reorg", fp)
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v != 2:
-            return False
-        return not any(
-            a.get("deletionVector")
-            for a in delta_log._replay(dt, v).values()
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir)
-        base = (
-            orders.filter(F.col("o_orderkey") % 6 == 2)
-            .select("o_orderkey", "o_orderstatus", "o_totalprice")
-            .repartition(4, "o_orderkey")
-        )
-        delta_log.create(base, dt)
-        delta_log.delete_where(spark, dt, "o_orderkey % 30 = 2")
-        delta_log.reorg_purge(spark, dt)
-    return dt
+    orders = catalog.load(spark, "orders", sf_dir)
+    base = (
+        orders.filter(F.col("o_orderkey") % 6 == 2)
+        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+        .repartition(4, "o_orderkey")
+    )
+    delta_log.create(base, table)
+    delta_log.delete_where(spark, table, "o_orderkey % 30 = 2")
+    delta_log.reorg_purge(spark, table)
 
 
 @query(
@@ -3972,64 +3253,38 @@ GROUP BY t.status, t.band
 """.format(dsum=sql_dsum("t.o_totalprice", "sum_price"))
 
 
-def _delta_nested_evolution_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta orders key%4=0 with a struct
-    column → convert_from_delta → delta add_column('info.band') →
-    append key%4=1 rows carrying it → sync_from_delta. Returns the
-    ICEBERG MIRROR path; guarded on the terminal synced version."""
-    import hashlib
-    import shutil
-    import tempfile
-
+@published
+def _delta_nested_evolution_mirror(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Delta orders key%4=0 with a struct column → convert_from_delta →
+    delta add_column('info.band') → append key%4=1 rows carrying it →
+    sync_from_delta."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-nested-evo|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_dnested_evo", fp
-    )
     dt = os.path.join(root, "delta")
     it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if iceberg.current_version(it) is None:
-            return False
-        v = delta_log.latest_version(dt)
-        if v is None:
-            return False
-        props = iceberg.current_metadata(it).get("properties") or {}
-        return props.get("migrated-delta-version") == str(v)
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
-        orders = catalog.load(spark, "orders", sf_dir).filter(
-            F.col("o_orderkey") > 0
-        )
-        base = orders.filter(F.col("o_orderkey") % 4 == 0).select(
-            "o_orderkey",
-            F.struct(F.col("o_orderstatus").alias("status")).alias("info"),
-            "o_totalprice",
-        )
-        delta_log.create(base, dt)
-        iceberg.convert_from_delta(dt, it)
-        delta_log.add_column(dt, "info.band", "string")
-        post = orders.filter(F.col("o_orderkey") % 4 == 1).select(
-            "o_orderkey",
-            F.struct(
-                F.col("o_orderstatus").alias("status"),
-                F.when(F.col("o_totalprice") >= 150000.0, "BIG")
-                .otherwise("SMALL")
-                .alias("band"),
-            ).alias("info"),
-            "o_totalprice",
-        )
-        delta_log.append(post, dt)
-        iceberg.sync_from_delta(dt, it)
-    return it
+    orders = catalog.load(spark, "orders", sf_dir).filter(
+        F.col("o_orderkey") > 0
+    )
+    base = orders.filter(F.col("o_orderkey") % 4 == 0).select(
+        "o_orderkey",
+        F.struct(F.col("o_orderstatus").alias("status")).alias("info"),
+        "o_totalprice",
+    )
+    delta_log.create(base, dt)
+    iceberg.convert_from_delta(dt, it)
+    delta_log.add_column(dt, "info.band", "string")
+    post = orders.filter(F.col("o_orderkey") % 4 == 1).select(
+        "o_orderkey",
+        F.struct(
+            F.col("o_orderstatus").alias("status"),
+            F.when(F.col("o_totalprice") >= 150000.0, "BIG")
+            .otherwise("SMALL")
+            .alias("band"),
+        ).alias("info"),
+        "o_totalprice",
+    )
+    delta_log.append(post, dt)
+    iceberg.sync_from_delta(dt, it)
 
 
 @query(
@@ -4043,7 +3298,7 @@ def q248(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact price sums must hash-match the two-generation oracle."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _delta_nested_evolution_mirror(spark, sf_dir)
+    table = os.path.join(_delta_nested_evolution_mirror(spark, sf_dir), "ice")
     return (
         iceberg.read_iceberg(spark, table)
         .groupBy(

@@ -8,16 +8,14 @@ PLAN, never the answer), so each oracle is the plain relational
 reconstruction over the source table — if the metadata machinery
 drops, duplicates, or resurrects a single row, the value hash breaks.
 
-Fixtures follow the queries_lake.py scheme: fingerprint-cached publish
-into tmp so repeated runs (bench, driver, pytest) reuse the published
-table, while a regenerated source fixture forces a fresh publish.
+Each fixture is a recipe published once through `plans.fixtures.published`,
+so repeated runs (`bench.py`, the parity tests) reuse the published tables,
+while a regenerated dataset or a code change publishes fresh.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,16 +23,8 @@ from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
 from march_mania_spark_lakehouse_spark.functions.numeric import dsum, sql_dsum
+from march_mania_spark_lakehouse_spark.plans.fixtures import published
 from march_mania_spark_lakehouse_spark.plans.registry import query
-
-
-def _cached_root(sf_dir: str, kind: str, src_table: str = "orders") -> str:
-    src = os.path.join(sf_dir, f"{src_table}.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{kind}|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
 
 
 # --------------------------------------------------------------------------
@@ -55,21 +45,19 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_optimized(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_optimized(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-optimize")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0).repartition(6), table
-        )
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 3 == 1).repartition(6), table
-        )
-        iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
-        iceberg.optimize(spark, table)  # 12 small files + tombstones → 1
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0).repartition(6), table
+    )
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 3 == 1).repartition(6), table
+    )
+    iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
+    iceberg.optimize(spark, table)  # 12 small files + tombstones → 1
 
 
 @query("q188_iceberg_optimize_scan", oracle=_Q188_SQL, tags=("lake", "agg"))
@@ -113,30 +101,28 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_nullstats(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_nullstats(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-nullstats")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            F.when(
-                F.col("o_orderkey") % 7 != 0, F.col("o_orderkey") % 7
-            ).alias("mod7"),  # null exactly when o_orderkey % 7 = 0
-        )
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 7 == 0).coalesce(1),
-            table,
-            stat_cols=("o_orderkey", "mod7"),
-        )
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 7 != 0).repartition(4),
-            table,
-            stat_cols=("o_orderkey", "mod7"),
-        )
-    return table
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 7 != 0, F.col("o_orderkey") % 7
+        ).alias("mod7"),  # null exactly when o_orderkey % 7 = 0
+    )
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 7 == 0).coalesce(1),
+        table,
+        stat_cols=("o_orderkey", "mod7"),
+    )
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 7 != 0).repartition(4),
+        table,
+        stat_cols=("o_orderkey", "mod7"),
+    )
 
 
 @query("q189_iceberg_null_pruned_scan", oracle=_Q189_SQL, tags=("lake", "agg"))
@@ -175,21 +161,14 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_delta_ts_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_delta_ts_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-ts|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        delta_log.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        time.sleep(0.05)  # distinct commit timestamps
-        delta_log.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    delta_log.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    time.sleep(0.05)  # distinct commit timestamps
+    delta_log.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
 
 
 def _v0_commit_ts(table: str) -> int:
@@ -228,16 +207,14 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q191_SQL = _Q190_SQL
 
 
-def _orders_iceberg_ts_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_ts_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-ts")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        time.sleep(0.05)
-        iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    time.sleep(0.05)
+    iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
 
 
 @query("q191_iceberg_timestamp_travel", oracle=_Q191_SQL, tags=("lake", "agg"))
@@ -278,29 +255,27 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_wap_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_wap_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-wap")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(orders.filter(F.col("o_orderkey") % 4 == 0), table)
-        n_base = orders.filter(F.col("o_orderkey") % 4 == 0).count()
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(orders.filter(F.col("o_orderkey") % 4 == 0), table)
+    n_base = orders.filter(F.col("o_orderkey") % 4 == 0).count()
+    iceberg.write_audit_publish(
+        orders.filter(F.col("o_orderkey") % 4 == 1),
+        table,
+        lambda staged: staged.count() > n_base
+        and staged.filter(F.col("o_orderkey").isNull()).count() == 0,
+    )
+    try:
         iceberg.write_audit_publish(
-            orders.filter(F.col("o_orderkey") % 4 == 1),
+            orders.filter(F.col("o_orderkey") % 4 == 2),
             table,
-            lambda staged: staged.count() > n_base
-            and staged.filter(F.col("o_orderkey").isNull()).count() == 0,
+            lambda staged: False,  # audit rejects: must not publish
         )
-        try:
-            iceberg.write_audit_publish(
-                orders.filter(F.col("o_orderkey") % 4 == 2),
-                table,
-                lambda staged: False,  # audit rejects: must not publish
-            )
-        except iceberg.IcebergAuditError:
-            pass
-    return table
+    except iceberg.IcebergAuditError:
+        pass
 
 
 @query("q192_iceberg_wap_publish", oracle=_Q192_SQL, tags=("lake", "agg"))
@@ -348,16 +323,14 @@ FROM head LEFT JOIN tagged USING (o_orderstatus)
 """
 
 
-def _orders_iceberg_tagged_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_tagged_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-tag")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir)
-        iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
-        iceberg.create_tag(table, "v1.0")
-        iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+    orders = catalog.load(spark, "orders", sf_dir)
+    iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
+    iceberg.create_tag(table, "v1.0")
+    iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
 
 
 @query("q193_iceberg_tag_diff", oracle=_Q193_SQL, tags=("lake", "agg"))
@@ -414,19 +387,17 @@ GROUP BY event_type
 """
 
 
-def _events_iceberg_evolved_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _events_iceberg_evolved_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-evolve", src_table="events")
-    if iceberg.current_version(table) is None:
-        events = catalog.load(spark, "events", sf_dir)
-        iceberg.create(
-            events.filter(F.col("event_id") % 4 == 0), table,
-            partition_by=["day(ts)"],
-        )
-        iceberg.evolve_partition_spec(table, ["hour(ts)"])
-        iceberg.append(events.filter(F.col("event_id") % 4 == 2), table)
-    return table
+    events = catalog.load(spark, "events", sf_dir)
+    iceberg.create(
+        events.filter(F.col("event_id") % 4 == 0), table,
+        partition_by=["day(ts)"],
+    )
+    iceberg.evolve_partition_spec(table, ["hour(ts)"])
+    iceberg.append(events.filter(F.col("event_id") % 4 == 2), table)
 
 
 @query("q195_iceberg_partition_evolution", oracle=_Q195_SQL, tags=("lake", "agg"))
@@ -538,35 +509,28 @@ def q197(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q198_SQL = _Q189_SQL
 
 
-def _orders_delta_nullstats(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_delta_nullstats(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-nullstats|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            F.when(
-                F.col("o_orderkey") % 7 != 0, F.col("o_orderkey") % 7
-            ).alias("mod7"),
-        )
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 7 == 0).coalesce(1),
-            table,
-            stat_cols=["o_orderkey", "mod7"],
-        )
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 7 != 0).repartition(4),
-            table,
-            stat_cols=["o_orderkey", "mod7"],
-        )
-    return table
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 7 != 0, F.col("o_orderkey") % 7
+        ).alias("mod7"),
+    )
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 7 == 0).coalesce(1),
+        table,
+        stat_cols=["o_orderkey", "mod7"],
+    )
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 7 != 0).repartition(4),
+        table,
+        stat_cols=["o_orderkey", "mod7"],
+    )
 
 
 @query("q198_delta_null_pruned_scan", oracle=_Q198_SQL, tags=("lake", "agg"))
@@ -690,36 +654,34 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_evolved(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_evolved(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = os.path.join(_cached_root(sf_dir, "evolved203"), "orders_ice")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderpriority",
-        )
-        # gen A under the original schema
-        iceberg.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0),
-            table,
-            stat_cols=["o_orderkey"],
-        )
-        # metadata-only surgery: rename + drop, zero files rewritten
-        iceberg.rename_column(table, "o_orderstatus", "status")
-        iceberg.drop_column(table, "o_orderpriority")
-        # gen B written under the CURRENT schema (new name, no dropped col)
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 3 != 0)
-            .withColumnRenamed("o_orderstatus", "status")
-            .drop("o_orderpriority"),
-            table,
-            stat_cols=["o_orderkey"],
-        )
-    return table
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "o_orderpriority",
+    )
+    # gen A under the original schema
+    iceberg.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0),
+        table,
+        stat_cols=["o_orderkey"],
+    )
+    # metadata-only surgery: rename + drop, zero files rewritten
+    iceberg.rename_column(table, "o_orderstatus", "status")
+    iceberg.drop_column(table, "o_orderpriority")
+    # gen B written under the CURRENT schema (new name, no dropped col)
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 3 != 0)
+        .withColumnRenamed("o_orderstatus", "status")
+        .drop("o_orderpriority"),
+        table,
+        stat_cols=["o_orderkey"],
+    )
 
 
 @query("q203_schema_evolution_read", oracle=_Q203_SQL, tags=("lake", "agg"))
@@ -754,36 +716,31 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q204_SQL = _Q203_SQL  # the evolution is semantically invisible
 
 
-def _orders_delta_mapped(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_delta_mapped(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    root = _cached_root(sf_dir, "mapped204").replace(
-        "spark_graft_iceberg", "spark_graft_delta"
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "o_orderpriority",
     )
-    table = os.path.join(root, "orders_delta")
-    if delta_log.latest_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderpriority",
-        )
-        delta_log.create(
-            orders.filter(F.col("o_orderkey") % 3 == 0),
-            table,
-            stat_cols=["o_orderkey"],
-        )
-        delta_log.rename_column(table, "o_orderstatus", "status")
-        delta_log.drop_column(table, "o_orderpriority")
-        delta_log.append(
-            orders.filter(F.col("o_orderkey") % 3 != 0)
-            .withColumnRenamed("o_orderstatus", "status")
-            .drop("o_orderpriority"),
-            table,
-            stat_cols=["o_orderkey"],
-        )
-    return table
+    delta_log.create(
+        orders.filter(F.col("o_orderkey") % 3 == 0),
+        table,
+        stat_cols=["o_orderkey"],
+    )
+    delta_log.rename_column(table, "o_orderstatus", "status")
+    delta_log.drop_column(table, "o_orderpriority")
+    delta_log.append(
+        orders.filter(F.col("o_orderkey") % 3 != 0)
+        .withColumnRenamed("o_orderstatus", "status")
+        .drop("o_orderpriority"),
+        table,
+        stat_cols=["o_orderkey"],
+    )
 
 
 @query("q204_delta_column_mapping_read", oracle=_Q204_SQL, tags=("lake", "agg"))
@@ -835,34 +792,36 @@ GROUP BY status
 """
 
 
-def _orders_updated(spark: SparkSession, sf_dir: str, layer: str) -> str:
-    from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
-
-    root = _cached_root(sf_dir, f"updated206_{layer}")
-    if layer == "delta":
-        root = root.replace("spark_graft_iceberg", "spark_graft_delta")
-    table = os.path.join(root, f"orders_{layer}")
-    mod = iceberg if layer == "iceberg" else delta_log
-    exists = (
-        iceberg.current_version(table)
-        if layer == "iceberg"
-        else delta_log.latest_version(table)
+def _update_orders(mod, spark: SparkSession, sf_dir: str, table: str) -> None:
+    """The q206/q207 recipe on either lake module (`iceberg` or
+    `delta_log`): every 7th order re-statused and re-priced."""
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    if exists is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        )
-        mod.create(orders, table, stat_cols=["o_orderkey"])
-        mod.update_where(
-            spark,
-            table,
-            "o_orderkey % 7 = 0",
-            {
-                "o_orderstatus": F.lit("U"),
-                "o_totalprice": F.col("o_totalprice") * F.lit(1.5),
-            },
-        )
-    return table
+    mod.create(orders, table, stat_cols=["o_orderkey"])
+    mod.update_where(
+        spark,
+        table,
+        "o_orderkey % 7 = 0",
+        {
+            "o_orderstatus": F.lit("U"),
+            "o_totalprice": F.col("o_totalprice") * F.lit(1.5),
+        },
+    )
+
+
+@published
+def _orders_updated_iceberg(spark: SparkSession, sf_dir: str, table: str) -> None:
+    from march_mania_spark_lakehouse_spark.sources import iceberg
+
+    _update_orders(iceberg, spark, sf_dir, table)
+
+
+@published
+def _orders_updated_delta(spark: SparkSession, sf_dir: str, table: str) -> None:
+    from march_mania_spark_lakehouse_spark.sources import delta_log
+
+    _update_orders(delta_log, spark, sf_dir, table)
 
 
 def _updated_agg(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -882,7 +841,7 @@ def q206(spark: SparkSession, sf_dir: str) -> DataFrame:
     the post-update aggregate must equal the row-function oracle."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _orders_updated(spark, sf_dir, "iceberg")
+    table = _orders_updated_iceberg(spark, sf_dir)
     return _updated_agg(spark, iceberg.read_iceberg(spark, table))
 
 
@@ -893,7 +852,7 @@ def q207(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pinned to identical semantics."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    table = _orders_updated(spark, sf_dir, "delta")
+    table = _orders_updated_delta(spark, sf_dir)
     return _updated_agg(spark, delta_log.read_delta(spark, table))
 
 
@@ -925,28 +884,26 @@ GROUP BY o_orderstatus
 """
 
 
-def _orders_iceberg_widened(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _orders_iceberg_widened(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = os.path.join(_cached_root(sf_dir, "widened208"), "orders_ice")
-    if iceberg.current_version(table) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        gen_a = orders.filter(F.col("o_orderkey") % 3 == 0).select(
-            F.col("o_orderkey").cast("int").alias("o_orderkey"),
-            "o_orderstatus",
-            F.col("o_totalprice").cast("float").alias("o_totalprice"),
-        )
-        iceberg.create(gen_a, table, stat_cols=["o_orderkey"])
-        iceberg.widen_column(table, "o_orderkey", "long")
-        iceberg.widen_column(table, "o_totalprice", "double")
-        iceberg.append(
-            orders.filter(F.col("o_orderkey") % 3 != 0),
-            table,
-            stat_cols=["o_orderkey"],
-        )
-    return table
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    gen_a = orders.filter(F.col("o_orderkey") % 3 == 0).select(
+        F.col("o_orderkey").cast("int").alias("o_orderkey"),
+        "o_orderstatus",
+        F.col("o_totalprice").cast("float").alias("o_totalprice"),
+    )
+    iceberg.create(gen_a, table, stat_cols=["o_orderkey"])
+    iceberg.widen_column(table, "o_orderkey", "long")
+    iceberg.widen_column(table, "o_totalprice", "double")
+    iceberg.append(
+        orders.filter(F.col("o_orderkey") % 3 != 0),
+        table,
+        stat_cols=["o_orderkey"],
+    )
 
 
 @query("q208_iceberg_type_widening", oracle=_Q208_SQL, tags=("lake", "agg"))
@@ -995,24 +952,22 @@ GROUP BY c.c_mktsegment
 """
 
 
-def _stats_join_tables(spark: SparkSession, sf_dir: str) -> "tuple[str, str]":
+@published
+def _stats_join_tables(spark: SparkSession, sf_dir: str, root: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    root = _cached_root(sf_dir, "statsjoin210", src_table="customer")
     ot = os.path.join(root, "orders_ice")
     ct = os.path.join(root, "cust_ice")
-    if iceberg.current_version(ot) is None:
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        cust = catalog.load(spark, "customer", sf_dir).select(
-            F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-        )
-        iceberg.create(orders, ot, stat_cols=["o_custkey"])
-        iceberg.create(cust, ct, stat_cols=["o_custkey"])
-        iceberg.write_statistics(spark, ot, ["o_custkey"], k=256)
-        iceberg.write_statistics(spark, ct, ["o_custkey"], k=256)
-    return ot, ct
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    cust = catalog.load(spark, "customer", sf_dir).select(
+        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+    )
+    iceberg.create(orders, ot, stat_cols=["o_custkey"])
+    iceberg.create(cust, ct, stat_cols=["o_custkey"])
+    iceberg.write_statistics(spark, ot, ["o_custkey"], k=256)
+    iceberg.write_statistics(spark, ct, ["o_custkey"], k=256)
 
 
 @query("q210_stats_driven_join", oracle=_Q210_SQL, tags=("lake", "join", "agg"))
@@ -1024,7 +979,8 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_puffin.py). Values must equal the plain relational join."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    ot, ct = _stats_join_tables(spark, sf_dir)
+    root = _stats_join_tables(spark, sf_dir)
+    ot, ct = os.path.join(root, "orders_ice"), os.path.join(root, "cust_ice")
     joined = iceberg.stats_join(spark, ot, ct, on="o_custkey")
     return joined.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
@@ -1055,35 +1011,24 @@ GROUP BY 1, 2
 """
 
 
-def _partitioned_clone_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: partitioned source (bucket-of-5 hive
-    layout) → rename o_totalprice→price and mod5→bucket5 → shallow
-    clone → DELETE partition '4' on the CLONE only. Returns the clone
-    path."""
+@published
+def _partitioned_clone_table(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Partitioned source (bucket-of-5 hive layout) → rename
+    o_totalprice→price and mod5→bucket5 → shallow clone → DELETE
+    partition '4' on the CLONE only."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    import shutil
-
-    root = _cached_root(sf_dir, "delta_part_clone")
     src, clone = os.path.join(root, "src"), os.path.join(root, "clone")
-    # the publish below is multi-step: guard on the TERMINAL state
-    # (clone v1 = clone commit + delete commit) and rebuild from
-    # scratch otherwise — a crash anywhere mid-publish (after
-    # create(src), or between clone and delete) must not leave a
-    # half-built cache that create() refuses or the oracle mismatches
-    if delta_log.latest_version(clone) != 1:
-        shutil.rmtree(root, ignore_errors=True)
-        orders = catalog.load(spark, "orders", sf_dir).filter(
-            F.col("o_orderkey") % 3 == 0
-        ).withColumn("mod5", (F.col("o_orderkey") % 5).cast("string"))
-        delta_log.create(
-            orders, src, partition_by=["mod5"], stat_cols=["o_orderkey"]
-        )
-        delta_log.rename_column(src, "o_totalprice", "price")
-        delta_log.rename_column(src, "mod5", "bucket5")
-        delta_log.shallow_clone(src, clone)
-        delta_log.delete_where(spark, clone, "bucket5 = '4'")
-    return clone
+    orders = catalog.load(spark, "orders", sf_dir).filter(
+        F.col("o_orderkey") % 3 == 0
+    ).withColumn("mod5", (F.col("o_orderkey") % 5).cast("string"))
+    delta_log.create(
+        orders, src, partition_by=["mod5"], stat_cols=["o_orderkey"]
+    )
+    delta_log.rename_column(src, "o_totalprice", "price")
+    delta_log.rename_column(src, "mod5", "bucket5")
+    delta_log.shallow_clone(src, clone)
+    delta_log.delete_where(spark, clone, "bucket5 = '4'")
 
 
 @query("q212_delta_partitioned_clone", oracle=_Q212_SQL, tags=("lake", "agg"))
@@ -1096,7 +1041,7 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
     side. Values must equal the plain relational reconstruction."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    clone = _partitioned_clone_table(spark, sf_dir)
+    clone = os.path.join(_partitioned_clone_table(spark, sf_dir), "clone")
     return delta_log.read_delta(spark, clone).groupBy(
         "bucket5", "o_orderstatus"
     ).agg(
@@ -1139,33 +1084,23 @@ GROUP BY change_type
 """
 
 
-def _cdf_updated_table(spark: SparkSession, sf_dir: str) -> str:
+@published
+def _cdf_updated_table(spark: SparkSession, sf_dir: str, table: str) -> None:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    root = _cached_root(sf_dir, "cdf213").replace(
-        "spark_graft_iceberg", "spark_graft_delta"
+    orders = catalog.load(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(root, "orders_cdf")
-    # terminal state is v2 (create + update_where's delete/write pair);
-    # a crash mid-publish must rebuild, not serve a half-updated cache
-    if delta_log.latest_version(table) != 2:
-        import shutil
-
-        shutil.rmtree(table, ignore_errors=True)
-        orders = catalog.load(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        )
-        delta_log.create(orders, table, stat_cols=["o_orderkey"])
-        delta_log.update_where(
-            spark,
-            table,
-            "o_orderkey % 7 = 0",
-            {
-                "o_orderstatus": F.lit("U"),
-                "o_totalprice": F.col("o_totalprice") * F.lit(1.5),
-            },
-        )
-    return table
+    delta_log.create(orders, table, stat_cols=["o_orderkey"])
+    delta_log.update_where(
+        spark,
+        table,
+        "o_orderkey % 7 = 0",
+        {
+            "o_orderstatus": F.lit("U"),
+            "o_totalprice": F.col("o_totalprice") * F.lit(1.5),
+        },
+    )
 
 
 @query("q213_delta_cdf_update_pairs", oracle=_Q213_SQL, tags=("lake", "agg"))

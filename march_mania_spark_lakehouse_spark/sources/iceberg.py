@@ -7700,7 +7700,8 @@ def table_changes(
     added: list[str] = []
     pos_del_paths: list[str] = []
     eq_dels: list[tuple[str, int, list[str]]] = []
-    schema = meta["schemas"][snap.get("schema-id", meta["current-schema-id"])]
+    schema_id = snap.get("schema-id", meta["current-schema-id"])
+    schema = meta["schemas"][schema_id]
     by_fid = {f["id"]: f["name"] for f in schema["fields"]}
     dv_dels: dict[int, list[dict]] = {}  # commit seq -> DV data_files
     for entry in change_feed_entries(meta, from_seq, hi, ok_ops):
@@ -7807,12 +7808,16 @@ def table_changes(
         pieces.append(dead.withColumn("_change_type", F.lit("delete")))
     for path, del_seq, cols_eq in sorted(eq_dels):
         # rows alive at the delete commit's PARENT snapshot matching
-        # the key tuples (null-safe) — exactly what the tombstone killed
+        # the key tuples (null-safe) — exactly what the tombstone killed.
+        # Read under the feed's schema, not the parent's older one: a
+        # column added later reads null in the old images
         del_snap = next(
             s for s in meta["snapshots"] if s["sequence-number"] == del_seq
         )
         parent = del_snap.get("parent-snapshot-id")
-        alive = read_iceberg(spark, table, parent)
+        alive = _read_data_files(
+            spark, table, meta, parent, snapshot_files(table, parent), schema_id
+        )
         keys = spark.read.parquet(path).select(
             *[F.col(c).alias(f"__k_{c}") for c in cols_eq]
         )

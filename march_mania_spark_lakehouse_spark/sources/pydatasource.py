@@ -609,15 +609,39 @@ def _iceberg_types(meta: dict) -> dict:
     return {f["name"]: f["type"] for f in schema["fields"]}
 
 
-def _iceberg_rows(path: str, types: dict, part: dict, dead=(), want=None, extra=()):
-    """`_file_rows` of one Iceberg data file with identity columns filled
-    from its manifest partition tuple ``part``."""
+def _iceberg_rows(path: str, meta: dict, part: dict, dead=(), want=None, extra=()):
+    """`_file_rows` of one Iceberg data file under the current schema,
+    with identity columns filled from its manifest partition tuple
+    ``part``. Each column reads under the name the file's footer carries
+    for its field id (`iceberg._field_name_history`, the batch reader's
+    rename rule), so files written before a rename keep their values."""
+    import pyarrow.parquet as pq
+
+    from march_mania_spark_lakehouse_spark.sources import iceberg
+
+    types = _iceberg_types(meta)
     fills = {
         c: _iceberg_partition_value(part[c], ty)
         for c, ty in types.items()
         if c in part
     }
-    return _file_rows(path, list(types) + list(extra), fills, dead=dead, want=want)
+    id_of = {
+        n: fid
+        for fid, names in iceberg._field_name_history(meta).items()
+        for n in names
+    }
+    name_of = {
+        f["id"]: f["name"]
+        for f in meta["schemas"][meta["current-schema-id"]]["fields"]
+    }
+    phys = {
+        name_of[id_of[pn]]: pn
+        for pn in pq.read_schema(path).names
+        if id_of.get(pn) in name_of
+    }
+    return _file_rows(
+        path, list(types) + list(extra), fills, phys, dead=dead, want=want
+    )
 
 
 def _iceberg_schema(path: str, *extra):
@@ -699,11 +723,11 @@ class _IcebergTableStreamReader:
     def _batch(self, lo: int, hi: int) -> list:
         from march_mania_spark_lakehouse_spark.sources import iceberg
 
-        types = _iceberg_types(iceberg.current_metadata(self.table))
+        meta = iceberg.current_metadata(self.table)
         return [
             vals
             for path, part in self._added_files(lo, hi)
-            for _, vals in _iceberg_rows(path, types, part)
+            for _, vals in _iceberg_rows(path, meta, part)
         ]
 
     def read(self, start: dict):
@@ -800,8 +824,7 @@ class _IcebergTableCdcStreamReader:
         yields None)."""
         from march_mania_spark_lakehouse_spark.sources import avro_ocf, iceberg
 
-        types = _iceberg_types(meta)
-        ix = {c: i for i, c in enumerate(types)}
+        ix = {c: i for i, c in enumerate(_iceberg_types(meta))}
         by_fid = {
             f["id"]: f["name"]
             for f in meta["schemas"][meta["current-schema-id"]]["fields"]
@@ -844,7 +867,7 @@ class _IcebergTableCdcStreamReader:
         for fp in sorted(datafiles):
             dseq, fseq, first, part = datafiles[fp]
             for pos, vals in _iceberg_rows(
-                fp, types, part, tomb.get(fp, ()),
+                fp, meta, part, tomb.get(fp, ()),
                 extra=("_row_id", "_last_updated_sequence_number"),
             ):
                 vals, (rid, lus) = vals[:-2], vals[-2:]
@@ -965,7 +988,6 @@ class _IcebergTableCdcStreamReader:
 
         meta = iceberg.current_metadata(self.table)
         snap = iceberg._snapshot(meta, meta["current-snapshot-id"])
-        types = _iceberg_types(meta)
         by_fid = {
             f["id"]: f["name"]
             for f in meta["schemas"][meta["current-schema-id"]]["fields"]
@@ -1010,7 +1032,7 @@ class _IcebergTableCdcStreamReader:
         rows = [
             vals + ("insert",)
             for path in sorted(added)
-            for _, vals in _iceberg_rows(path, types, part_of.get(path) or {})
+            for _, vals in _iceberg_rows(path, meta, part_of.get(path) or {})
         ]
         tomb = _position_deletes(pos_dels, {})
         # v3 deletion vectors: this commit's kills are the new DV's
@@ -1044,7 +1066,7 @@ class _IcebergTableCdcStreamReader:
             rows.extend(
                 vals + ("delete",)
                 for _, vals in _iceberg_rows(
-                    fp, types, part_of.get(fp) or {}, want=sorted(tomb[fp])
+                    fp, meta, part_of.get(fp) or {}, want=sorted(tomb[fp])
                 )
             )
         for s in sorted(eq_by_seq):
